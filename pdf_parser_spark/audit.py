@@ -15,14 +15,17 @@ Design (Iceberg-commit emulation over plain parquet — swap the two
   appended. A crash between the two leaves an uncommitted bucket that
   is simply re-done (output overwrite is idempotent per bucket).
 - resume = read the audit table, prune committed buckets from the
-  input BY BUCKET ID (partition pruning — cheaper than the row-level
-  anti-join, which is also provided for mixed-grain recovery).
+  input BY BUCKET ID (partition pruning — cheaper than a row-level
+  anti-join).
 - metrics aggregate map-side (groupBy on the small (run, bucket,
-  partition) key) — negligible shuffle at any scale.
+  partition) key) — negligible shuffle at any scale. The handful of
+  audit rows is collected once: the driver appends them and sums them
+  into the call's returned metrics.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 from typing import List, Optional
 
@@ -108,43 +111,17 @@ def committed_buckets(spark: SparkSession, audit_path: str) -> List[int]:
     return [r["bucket"] for r in audit.select("bucket").distinct().collect()]
 
 
-def resume_pending(pages: DataFrame, done_urls: DataFrame) -> DataFrame:
-    """Row-grain resume: anti-join out already-committed urls — the
-    only semi/anti join in the system (SURVEY §4 'Checkpoint/resume')."""
-    return pages.join(done_urls.select("url"), "url", "left_anti")
-
-
-def _bucket_markers(spark: SparkSession, run_id: str, buckets: List[int]) -> DataFrame:
+def _bucket_markers(run_id: str, buckets: List[int]) -> List[tuple]:
     """Zero-row commit markers (partition_id = -1, all counters 0): a
     bucket with NO input rows still has to land in the audit table, or
     every later run would put it back in ``todo`` and re-scan the input
     for it forever. One marker per processed bucket also makes the
     committed set independent of whether data rows existed."""
-    rows = spark.createDataFrame([(int(b),) for b in buckets], "bucket int")
-    return rows.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(-1).alias("partition_id"),
-        *[F.lit(0).cast("long").alias(c) for c in
-          ("docs", "bytes", "failures", "decode_fallbacks", "decrypted_docs",
-           "pdf_docs", "html_docs")],
-        F.current_timestamp().alias("committed_at"),
-        F.col("bucket"),
-    )
+    now = datetime.datetime.now()
+    return [(run_id, -1, 0, 0, 0, 0, 0, 0, 0, now, int(b)) for b in buckets]
 
 
-def _totals_of(reread: DataFrame) -> dict:
-    agg = reread.agg(
-        F.count("*").alias("docs"),
-        F.sum(F.col("error_code").isNotNull().cast("long")).alias("failures"),
-        F.sum("decode_fallbacks").alias("fb"),
-        F.sum("n_bytes").alias("bytes"),
-    ).collect()[0]
-    return {
-        "docs": agg["docs"],
-        "failures": agg["failures"] or 0,
-        "decode_fallbacks": agg["fb"] or 0,
-        "bytes": agg["bytes"] or 0,
-    }
+_METRICS = ("docs", "failures", "decode_fallbacks", "bytes")
 
 
 def run_extraction_with_audit(
@@ -157,59 +134,29 @@ def run_extraction_with_audit(
     decrypt: bool = False,
     password: bytes = b"",
     buckets: Optional[List[int]] = None,
-    recovery: bool = False,
 ) -> dict:
     """Extract every pending bucket in ONE pass, then commit.
 
     Returns {"processed": [...], "skipped": [...], "metrics": {...}}.
     Already-committed buckets (per the audit table) are pruned BEFORE
-    any work — a restart touches only unfinished buckets.
+    any work — a restart touches only unfinished buckets, and
+    ``buckets=[b]`` re-runs just bucket ``b``.
 
-    Default path: one job scans the input ONCE (pending buckets only),
-    writes ``partitionBy(bucket)`` with dynamic partition overwrite
+    One job scans the input ONCE (pending buckets only), writes
+    ``partitionBy(bucket)`` with dynamic partition overwrite
     (idempotent per partition — a crashed batch simply rewrites its
     pending partitions), then appends ALL audit rows in one pass. The
     round-1 shape — filter(bucket==b) inside a loop — re-scanned the
     unpartitioned input once per bucket plus one driver round-trip per
     bucket: thousands of full scans at the 4096-bucket grain.
-
-    ``recovery=True`` keeps the fine-grained commit-per-bucket loop
-    (commit unit = one bucket, durable after each append) for surgical
-    re-runs of individual buckets after repeated batch crashes.
+    ``metrics`` is the sum of the audit rows this call appended.
     """
     data_path = os.path.join(out_dir, "extracted")
     audit_path = os.path.join(out_dir, "audit")
     done = set(committed_buckets(spark, audit_path))
     todo = [b for b in (buckets or range(n_buckets)) if b not in done]
     if not todo:
-        return {
-            "processed": [],
-            "skipped": sorted(done),
-            "metrics": {"docs": 0, "failures": 0, "decode_fallbacks": 0, "bytes": 0},
-        }
-
-    if recovery:
-        bucketed = with_bucket(pages, n_buckets)
-        totals = {"docs": 0, "failures": 0, "decode_fallbacks": 0, "bytes": 0}
-        for b in todo:
-            part = bucketed.filter(F.col(BUCKET_COL) == b)
-            ext = extract_documents(
-                part.select("url", "warc_ts", "html", "text", "lang"), mode=mode,
-                decrypt=decrypt,
-                password=password,
-            )
-            # 1) data commit (idempotent per-bucket overwrite)
-            ext.write.mode("overwrite").parquet(os.path.join(data_path, f"bucket={b}"))
-            # 2) audit commit — the bucket is durable only after this append
-            reread = spark.read.parquet(os.path.join(data_path, f"bucket={b}")).withColumn(
-                BUCKET_COL, F.lit(b)
-            )
-            partition_metrics(reread, run_id).unionByName(
-                _bucket_markers(spark, run_id, [b])
-            ).write.mode("append").parquet(audit_path)
-            for k, v in _totals_of(reread).items():
-                totals[k] += v
-        return {"processed": todo, "skipped": sorted(done), "metrics": totals}
+        return {"processed": [], "skipped": sorted(done), "metrics": dict.fromkeys(_METRICS, 0)}
 
     pending = with_bucket(pages, n_buckets).filter(
         F.col(BUCKET_COL).isin([int(b) for b in todo])
@@ -237,10 +184,13 @@ def run_extraction_with_audit(
         .filter(F.col("bucket").isin([int(b) for b in todo]))
         .withColumnRenamed("bucket", BUCKET_COL)
     )
-    # real per-partition lineage UNION one zero-row marker per bucket —
+    # real per-partition lineage plus one zero-row marker per bucket —
     # empty buckets must commit too (else they re-run forever); both
     # land in ONE append so the commit stays atomic per batch
-    partition_metrics(reread, run_id).unionByName(
-        _bucket_markers(spark, run_id, todo)
-    ).write.mode("append").parquet(audit_path)
-    return {"processed": todo, "skipped": sorted(done), "metrics": _totals_of(reread)}
+    lineage = partition_metrics(reread, run_id).collect()
+    markers = _bucket_markers(run_id, todo)
+    spark.createDataFrame(lineage + markers, AUDIT_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(audit_path)
+    metrics = {k: sum(r[k] or 0 for r in lineage) for k in _METRICS}
+    return {"processed": todo, "skipped": sorted(done), "metrics": metrics}

@@ -11,7 +11,7 @@ native Catalyst). Replaces the reference's per-file browser pipeline
 Scale design (north rule):
 - salting: callers repartition on ``xxhash64(url)`` before this stage
   so oversized documents spread across tasks (see job.py);
-- Arrow batches are row-capped (session.py arrow_batch_rows) because a
+- Arrow batches are row-capped (session.py ARROW_BATCH_ROWS) because a
   batch of binaries can be GBs;
 - failures NEVER throw: they become ``error_code`` rows, mirroring the
   page-loop error swallowing of the reference (``index.ts:65-68``);

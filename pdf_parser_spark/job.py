@@ -11,10 +11,11 @@ Package and launch:
         --buckets 4096                   # commit granularity \\
         --mode first_valid               # or: legacy, stream
 
-On a real cluster the session comes from spark-submit conf; everything
-here only *adds* app-level conf (AQE, Arrow batch size, LAST_WIN).
-``--bench`` prints a one-line docs/sec JSON after the run — the same
-number bench.py / scripts/scaling_bench.py report locally.
+The session comes from ``session.get_spark``. On a real cluster the
+master and shuffle partitions come from spark-submit conf; ``get_spark``
+only *adds* app-level conf (AQE, Arrow batch size, LAST_WIN).
+``--local N`` runs on ``local[N]`` with N shuffle partitions instead.
+``--bench`` prints a one-line docs/sec JSON after the run.
 """
 
 from __future__ import annotations
@@ -23,25 +24,6 @@ import argparse
 import json
 import sys
 import time
-
-
-def build_session(parallelism: int | None, app: str = "pdf-parser-spark-job"):
-    from pyspark.sql import SparkSession
-
-    b = SparkSession.builder.appName(app)
-    if parallelism:  # local/bench mode; cluster mode leaves master to spark-submit
-        b = b.master(f"local[{parallelism}]").config(
-            "spark.sql.shuffle.partitions", str(parallelism)
-        )
-    return (
-        b.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .getOrCreate()
-    )
 
 
 def main(argv=None) -> int:
@@ -53,12 +35,6 @@ def main(argv=None) -> int:
     p.add_argument("--buckets", type=int, default=64, help="commit granularity")
     p.add_argument("--local", type=int, default=None, help="local[N] master (bench/dev)")
     p.add_argument(
-        "--recovery",
-        action="store_true",
-        help="fine-grained commit-per-bucket loop (surgical re-runs); "
-        "default is the one-pass dynamic-partition-overwrite batch",
-    )
-    p.add_argument(
         "--decrypt-password",
         default="",
         help="password for standard-security-handler PDFs (tried as user, "
@@ -68,14 +44,20 @@ def main(argv=None) -> int:
         "--decrypt",
         action="store_true",
         help="open standard-security-handler PDFs (RC4/AESV2/AESV3, empty "
-        "user password) instead of emitting typed 'encrypted' rows",
+        "or --decrypt-password) instead of emitting typed 'encrypted' rows",
     )
     p.add_argument("--bench", action="store_true", help="print docs/sec JSON line")
     args = p.parse_args(argv)
 
-    spark = build_session(args.local)
     from pdf_parser_spark.audit import run_extraction_with_audit
+    from pdf_parser_spark.session import get_spark
     from pdf_parser_spark.streaming import stream_extract
+
+    spark = get_spark(
+        "pdf-parser-spark-job",
+        master=f"local[{args.local}]" if args.local else None,
+        shuffle_partitions=args.local,
+    )
 
     t0 = time.time()
     if args.mode == "stream":
@@ -99,9 +81,8 @@ def main(argv=None) -> int:
             run_id=args.run_id,
             n_buckets=args.buckets,
             mode=args.mode,
-            recovery=args.recovery,
             decrypt=args.decrypt,
-            password=args.decrypt_password.encode("latin-1"),
+            password=args.decrypt_password.encode("utf-8"),
         )
         docs = result["metrics"]["docs"]
     wall = time.time() - t0

@@ -156,7 +156,10 @@ class ToUnicodeCMap:
                             elif isinstance(dst, bytes):
                                 base = int.from_bytes(dst, "big")
                                 width = max(1, len(dst))
-                                for k in range(hi_i - lo_i + 1):
+                                # a destination that would overflow its
+                                # byte width ends the range there
+                                span = min(hi_i - lo_i + 1, (1 << (8 * width)) - base)
+                                for k in range(span):
                                     cm.single[lo_i + k] = _utf16be_to_str(
                                         (base + k).to_bytes(width, "big")
                                     )

@@ -1,24 +1,27 @@
-"""ISO 32000 §7.6 standard security handler (empty user password) —
-pure stdlib + the repo's own AES (:mod:`.aes`).
+"""ISO 32000 §7.6 standard security handler (empty or caller-supplied
+user/owner password) — pure stdlib + the repo's own AES (:mod:`.aes`).
 
 The reference relies on vendored pdf.js for this (its worker decrypts
 RC4/AES transparently); crawled corpora routinely contain PDFs that are
 "encrypted" with an EMPTY user password (owner-restricted printing
-etc.), whose text a crawler should still extract. This implements:
+etc.), whose text a crawler should still extract, and a caller may hold
+the password of the rest. This implements:
 
 - Algorithm 2 (compute encryption key from the padded password, /O,
   /P, ID[0]; 50×MD5 strengthening for R≥3; /EncryptMetadata=false
   FFFFFFFF suffix for R4),
-- Algorithms 4/5 (verify the empty USER password against /U),
+- Algorithms 4/5 (verify the USER password against /U) and Algorithm
+  7 (recover the user password from the OWNER password via /O),
 - per-object keys (MD5 of key + objnum[3] + gen[2] [+ sAlT for AES],
   §7.6.2),
 - V4 crypt filters (/CF /StdCF with /CFM AESV2 or V2),
-- V5 R5/R6 AESV3 (SHA-2 family: Algorithm 2.B hardened hash, /UE
-  file-key unwrap with a zero-IV AES-256-CBC).
+- V5 R5/R6 AESV3 (SHA-2 family: Algorithm 2.B hardened hash, /UE or
+  /OE file-key unwrap with a zero-IV AES-256-CBC; Algorithms 11/12
+  check the UTF-8 password, truncated to 127 bytes, as user then owner).
 
 Out of scope (typed :class:`CryptError` → the extraction stage keeps
-its typed ``encrypted`` row): non-empty passwords, per-stream crypt
-filters / Identity-mixed StmF/StrF, public-key (PKCS#7) handlers.
+its typed ``encrypted`` row): a missing or wrong password, per-stream
+crypt filters / Identity-mixed StmF/StrF, public-key (PKCS#7) handlers.
 RC4 is the textbook KSA+PRGA — fine at these key sizes for DEcryption
 of legacy documents (nothing here protects anything new)."""
 
@@ -97,14 +100,15 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes) -> bytes:
 
 class StandardSecurityHandler:
     """Validated handler for one document; raises CryptError('password')
-    if the EMPTY user password does not open the document.
+    if ``password`` (default empty) opens it as neither the user nor the
+    owner password.
 
     Supported envelopes → ``self.cipher``:
     - V1/V2, R2/R3 → ``rc4`` (40..128-bit)
     - V4, R4 with /CF /StdCF /CFM AESV2 → ``aes128`` (/CFM /V2 → rc4)
     - V5, R5/R6 (/CFM AESV3) → ``aes256``
-    Anything else (crypt filters per stream, Identity StmF mixed modes,
-    non-empty passwords) raises a typed CryptError."""
+    Anything else (crypt filters per stream, Identity StmF mixed modes)
+    raises a typed CryptError."""
 
     def __init__(self, encrypt: dict, file_id0: bytes, password: bytes = b""):
         filt = str(encrypt.get("Filter", ""))

@@ -126,20 +126,3 @@ VALIDATION_ERROR_TYPE = StructType(
         StructField("message", StringType(), True),
     ]
 )
-
-# ----------------------------------------------------------------------
-# audit table (per-partition lineage + metrics, north rule)
-# ----------------------------------------------------------------------
-AUDIT_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("docs", LongType(), True),
-        StructField("bytes", LongType(), True),
-        StructField("failures", LongType(), True),
-        StructField("decode_fallbacks", LongType(), True),
-        StructField("pdf_docs", LongType(), True),
-        StructField("html_docs", LongType(), True),
-        StructField("committed_at", TimestampType(), True),
-    ]
-)

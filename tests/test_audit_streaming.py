@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from pdf_parser_spark import audit
 from pdf_parser_spark.streaming import draft_upsert_stream, stream_extract, windowed_event_counts
 
+_METRICS = ("docs", "failures", "decode_fallbacks", "bytes")
+
 
 @pytest.fixture()
 def pages_df(spark, pages_parquet):
@@ -48,10 +50,17 @@ def test_audit_commit_and_resume(spark, pages_df, tmp_path):
     assert adf.select("run_id").distinct().count() >= 2
 
 
+def _run_totals(spark, out, run_id):
+    """The audit table's counters summed over one call's rows."""
+    adf = spark.read.parquet(os.path.join(out, "audit")).filter(F.col("run_id") == run_id)
+    row = adf.agg(*[F.sum(k).alias(k) for k in _METRICS]).collect()[0]
+    return {k: row[k] or 0 for k in _METRICS}
+
+
 def test_audit_one_pass_single_extraction(spark, pages_df, tmp_path, monkeypatch):
-    """The default path must build ONE extraction plan over the input
-    for any number of pending buckets (round-1 re-scanned per bucket);
-    recovery mode keeps the per-bucket loop."""
+    """ONE extraction plan over the input for any number of pending
+    buckets (round-1 re-scanned per bucket); the returned metrics are
+    the sum of the audit rows the call appended."""
     calls = []
     real = audit.extract_documents
 
@@ -66,28 +75,29 @@ def test_audit_one_pass_single_extraction(spark, pages_df, tmp_path, monkeypatch
     assert len(calls) == 1  # six buckets, one input scan
     extracted = spark.read.parquet(os.path.join(out, "extracted"))
     assert extracted.count() == pages_df.count()
-
-    out2 = str(tmp_path / "out2")
-    r2 = audit.run_extraction_with_audit(
-        spark, pages_df, out2, run_id="r1", n_buckets=3, recovery=True
-    )
-    assert r2["processed"] == [0, 1, 2]
-    assert len(calls) == 1 + 3  # fine-grained mode: one plan per bucket
+    assert r["metrics"] == _run_totals(spark, out, "r1")
+    assert r["metrics"]["docs"] == pages_df.count()
+    assert r["metrics"]["failures"] > 0 and r["metrics"]["bytes"] > 0
 
 
 def test_audit_mixed_mode_resume(spark, pages_df, tmp_path):
-    """Buckets committed by recovery mode are honored by the one-pass
-    path (shared layout + audit table), and vice versa."""
+    """A partial commit (``buckets=[1]``, the surgical re-run of one
+    bucket) is honored by the full resume that follows; each call's
+    metrics cover exactly its own buckets."""
     out = str(tmp_path / "out")
     r1 = audit.run_extraction_with_audit(
-        spark, pages_df, out, run_id="r1", n_buckets=4, buckets=[1], recovery=True
+        spark, pages_df, out, run_id="r1", n_buckets=4, buckets=[1]
     )
-    assert r1["processed"] == [1]
+    assert r1["processed"] == [1] and r1["skipped"] == []
     r2 = audit.run_extraction_with_audit(spark, pages_df, out, run_id="r2", n_buckets=4)
     assert r2["processed"] == [0, 2, 3] and r2["skipped"] == [1]
     extracted = spark.read.parquet(os.path.join(out, "extracted"))
     assert extracted.count() == pages_df.count()
     assert extracted.select("url").distinct().count() == pages_df.count()
+    assert r1["metrics"] == _run_totals(spark, out, "r1")
+    assert r2["metrics"] == _run_totals(spark, out, "r2")
+    assert r1["metrics"]["docs"] == extracted.filter(F.col("bucket") == 1).count()
+    assert r1["metrics"]["docs"] + r2["metrics"]["docs"] == pages_df.count()
 
 
 def test_audit_empty_pending_input(spark, tmp_path):
@@ -101,17 +111,11 @@ def test_audit_empty_pending_input(spark, tmp_path):
     r = audit.run_extraction_with_audit(spark, empty, out, run_id="r0", n_buckets=4)
     assert r["processed"] == [0, 1, 2, 3]
     assert r["metrics"] == {"docs": 0, "failures": 0, "decode_fallbacks": 0, "bytes": 0}
+    assert r["metrics"] == _run_totals(spark, out, "r0")
     # empty buckets COMMIT (zero-row markers): a second run skips them
     # instead of re-scanning the input forever
     r2 = audit.run_extraction_with_audit(spark, empty, out, run_id="r1", n_buckets=4)
     assert r2["processed"] == [] and r2["skipped"] == [0, 1, 2, 3]
-
-
-
-def test_audit_row_grain_resume(spark, pages_df):
-    done = pages_df.select("url").limit(50)
-    pending = audit.resume_pending(pages_df, done)
-    assert pending.count() == pages_df.count() - 50
 
 
 def test_stream_extract_checkpoint_resume(spark, tmp_path):
