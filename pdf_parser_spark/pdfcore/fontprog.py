@@ -407,8 +407,9 @@ def cff_tounicode(data: bytes) -> Optional[Dict[int, str]]:
     code → gid via the Encoding table (format 0/1 + supplements;
     encoding offset 0 = Standard: code → SID c-31 → charset inverse),
     gid → SID via the charset (formats 0/1/2), SID → name → unicode.
-    CIDFonts (ROS present) and parse failures return None (caller
-    falls back to the standard table)."""
+    CIDFonts (ROS present), the predefined Expert encoding and Expert
+    charsets, and parse failures return None (caller falls back to the
+    standard table)."""
     try:
         if len(data) < 4 or data[0] != 1:  # CFF major version 1
             return None
@@ -468,8 +469,14 @@ def cff_tounicode(data: bytes) -> Optional[Dict[int, str]]:
         # encoding: code → gid
         enc_off = int(top.get(16, [0])[0]) if top.get(16) else 0
         code_to_gid: Dict[int, int] = {}
-        if enc_off in (0, 1):
-            # Standard/Expert predefined: code → standard SID → gid via
+        if enc_off == 1:
+            # predefined Expert encoding: its codes name expert glyphs
+            # (oldstyle figures, small caps), so the Standard SID path
+            # would decode WRONG characters → unsupported, as for the
+            # Expert charsets above
+            return None
+        if enc_off == 0:
+            # Standard predefined: code → standard SID → gid via
             # charset inverse (ASCII block only, the load-bearing part)
             sid_to_gid = {s: g for g, s in gid_to_sid.items()}
             for c in range(32, 127):

@@ -50,7 +50,10 @@ def _hash64(s: Column) -> Column:
 
 
 def word_shingles(words: Column, k: int) -> Column:
-    """All k-word shingles as strings (empty array if < k words)."""
+    """All k-word shingles as strings (empty array if < k words).
+
+    ``words`` should be a materialized column: the shingle lambda reads
+    it once per shingle, so an expression would re-run per shingle."""
     n = F.size(words)
     return F.when(n < k, F.array().cast("array<string>")).otherwise(
         F.transform(
@@ -123,36 +126,32 @@ def minhash_signatures(
     explode, no shuffle, and an exact DuckDB oracle from the same
     literal (a_i, b_i, p).
     """
-    words = norm_words(F.col(text_col))
-    # materialize the int digests as a physical column FIRST: a Column
-    # closure referenced inside a HOF lambda is inlined per reference,
-    # so the md5 pass would otherwise re-run once per hash index
-    hashed = df.select(
+    # materialize the word array, then the int digests, as physical
+    # columns FIRST: a Column closure referenced inside a HOF lambda is
+    # inlined per reference, so the tokenizer would otherwise re-run once
+    # per shingle and the md5 pass once per hash index
+    hashed = df.select(F.col(id_col), norm_words(F.col(text_col)).alias("_w")).select(
         F.col(id_col),
-        F.transform(word_shingles(words, shingle_k), lambda s: _hash64(s) % MINHASH_P).alias("_mh"),
-    )
-    coeffs = minhash_coeffs(n_hashes)
-
-    def _h(a: int, b: int):
-        # factory so the lambda stays 1-ary (PySpark derives the HOF
-        # lambda-variable count from the Python signature) and a/b bind
-        # by value, not by loop-variable reference
-        return lambda m: (F.lit(a) * m + F.lit(b)) % F.lit(MINHASH_P)
-
-    sig = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("hash_idx"),
-                F.array_min(F.transform(F.col("_mh"), _h(a, b))).alias("min_hash"),
-            )
-            for i, (a, b) in enumerate(coeffs)
-        ]
+        F.transform(word_shingles(F.col("_w"), shingle_k), lambda s: _hash64(s) % MINHASH_P).alias("_mh"),
     )
     return (
-        hashed.select(F.col(id_col), F.explode(sig).alias("h"))
+        hashed.select(F.col(id_col), F.explode(F.expr(_minhash_sig_sql(n_hashes))).alias("h"))
         .select(id_col, F.col("h.hash_idx").alias("hash_idx"), F.col("h.min_hash").alias("min_hash"))
         .filter(F.col("min_hash").isNotNull())
     )
+
+
+@lru_cache(maxsize=16)
+def _minhash_sig_sql(n_hashes: int) -> str:
+    """The ``n_hashes`` (hash_idx, min_hash) structs over ``_mh`` as one
+    SQL string: one py4j call per plan, where a Column tree costs a
+    round trip per node (CLAUDE.md). Every literal fits an INT, so the
+    types are those of the ``F.lit`` form: int index, bigint min."""
+    return "array(" + ", ".join(
+        f"named_struct('hash_idx', {i}, 'min_hash', "
+        f"array_min(transform(_mh, m -> ({a} * m + {b}) % {MINHASH_P})))"
+        for i, (a, b) in enumerate(minhash_coeffs(n_hashes))
+    ) + ")"
 
 
 def lsh_band_pairs(
@@ -235,9 +234,10 @@ def ngram_jaccard_pairs(
     missed (that overlap is boilerplate by definition — standard
     stop-shingle practice). The frequency agg is map-side combinable and
     shares the shingle shuffle key with the join. ``None`` disables."""
-    words = norm_words(F.col(text_col))
-    sh = df.select(
-        F.col(id_col), F.explode(F.array_distinct(word_shingles(words, shingle_k))).alias("sh")
+    # the word array is a physical column before word_shingles' lambda
+    # reads it (CLAUDE.md: an inlined closure re-tokenizes per shingle)
+    sh = df.select(F.col(id_col), norm_words(F.col(text_col)).alias("_w")).select(
+        F.col(id_col), F.explode(F.array_distinct(word_shingles(F.col("_w"), shingle_k))).alias("sh")
     )
     if max_doc_freq is not None:
         keep = (
@@ -276,35 +276,33 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     Pure array algebra (transform + aggregate), no explode.
     """
     words = norm_words(F.col(text_col))
-    # materialize the hash array once — the 32 bit-count aggregates each
-    # reference it, and inlined Column closures would re-hash every word
-    # 32 times
+    # materialize the hash array once — every bit count reads it, and an
+    # inlined Column closure would re-hash every word once per bit
     hashed = df.select(
         F.col(id_col),
         F.transform(words, lambda w: _hash64(w)).alias("_hs"),
         F.size(words).alias("n_words"),
     )
-    hashes = F.col("_hs")
-    n = F.col("n_words")
-    # bit indices are static Python ints (F.shiftright requires a
-    # literal shift), so the per-bit majority vote unrolls at plan time
-    # — still a single pass over the hash array per bit
-    def bit_count(j: int) -> Column:
-        # factory so the aggregate lambda stays 2-ary (PySpark derives
-        # lambda-variable count from the Python signature) and j binds
-        # by value, not by loop-variable reference
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + F.shiftright(h, j).bitwiseAND(F.lit(1)),
-        )
+    return hashed.select(F.col(id_col), F.expr(_simhash_vote_sql(bits)).alias("simhash"), F.col("n_words"))
 
-    sim = F.lit(0).cast("long")
-    for j in range(bits):
-        sim = sim + F.when(bit_count(j) * 2 > n, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(
-            F.lit(0).cast("long")
-        )
-    return hashed.select(F.col(id_col), sim.alias("simhash"), F.col("n_words"))
+
+@lru_cache(maxsize=16)
+def _simhash_vote_sql(bits: int) -> str:
+    """The majority vote over ``_hs`` for every bit as one SQL string:
+    one py4j call per plan, where a Column tree costs ~150 round trips
+    per bit (CLAUDE.md). Bit j is set iff its count among the word
+    hashes exceeds half their number; a null array votes 0.
+
+    ``size(_hs)`` stands in for ``n_words`` (equal, null included) so
+    the string reads ``_hs`` twice and nothing else: Catalyst's
+    CollapseProject inlines a producer read once — into the lambda, once
+    per bit — and a caller that prunes ``n_words`` would otherwise leave
+    ``_hs`` with that one read."""
+    count = "aggregate(_hs, 0L, (c, h) -> c + (shiftright(h, j) & 1))"
+    return (
+        f"aggregate(sequence(0, {bits - 1}), 0L, (acc, j) -> "
+        f"acc + IF({count} * 2 > size(_hs), shiftleft(1L, j), 0L))"
+    )
 
 
 def simhash_pairs(
@@ -379,6 +377,10 @@ def connected_components(
     truncates the iterative lineage so the plan does not grow per round
     (the classic iterative-Spark blowup).
 
+    Termination: the loop stops at the first round whose edges form a
+    star forest (each member points at exactly one root, no root points
+    anywhere) — the contraction's fixpoint, tested by one job per round.
+
     Returns one row per node that appears in ≥1 edge, including roots:
     ``(node_id, cluster_id)``.
 
@@ -408,7 +410,7 @@ def connected_components(
     )
     n_part = max(spark.sparkContext.defaultParallelism, 8)
     e = _cc_loop(e, n_part, max_iter)
-    # at the fixpoint every edge is (member, root); roots have no u-row
+    # a star forest: every edge is (member, root); roots have no u-row
     roots = e.select(F.col("v").alias("node_id")).distinct()
     return (
         e.select(F.col("u").alias("node_id"), F.col("v").alias("cluster_id"))
@@ -417,23 +419,45 @@ def connected_components(
 
 
 def _cc_loop(e: DataFrame, n_part: int, max_iter: int) -> DataFrame:
-    """Alternating large-star/small-star rounds until the edge set is
-    stable; every round's result is eagerly checkpointed.  All loop
-    shuffles hash-partition by their operation key into ``n_part``
-    partitions via explicit repartition — HashPartitioning(key, n_part)
-    satisfies the ClusteredDistribution of every downstream
-    groupBy/join/distinct keyed on (a superset of) that key, so
-    EnsureRequirements inserts no further exchange and the session's
-    ``spark.sql.shuffle.partitions`` never applies inside the loop."""
-    prev, prev_n = None, -1
+    """Alternating large-star/small-star rounds until the edge set is a
+    star forest; every round's result is eagerly checkpointed.
+
+    A star forest (every ``u`` has exactly one ``v``, and no ``v`` is
+    also a ``u``) is the contraction's fixpoint — a round maps it to
+    itself — and the state it converges to (Kiveris et al. 2014), so the
+    first round that reaches it ends the loop, with the same edges as
+    running until the edge set stops changing: per round one checkpoint
+    job and one :func:`_cc_not_star` ``isEmpty`` job.
+
+    All loop shuffles hash-partition by their operation key into
+    ``n_part`` partitions via explicit repartition —
+    HashPartitioning(key, n_part) satisfies the ClusteredDistribution of
+    every downstream groupBy/join/distinct keyed on (a superset of) that
+    key, so EnsureRequirements inserts no further exchange and the
+    session's ``spark.sql.shuffle.partitions`` never applies inside the
+    loop."""
     for _ in range(max_iter):
         e = _cc_round(e, n_part).localCheckpoint(eager=True)
-        n = e.count()
-        if prev is not None and n == prev_n and e.exceptAll(prev).isEmpty():
+        if _cc_not_star(e, n_part).isEmpty():
             return e
-        prev, prev_n = e, n
     raise ValueError(
         f"connected_components did not converge in {max_iter} rounds"
+    )
+
+
+def _cc_not_star(e: DataFrame, n_part: int) -> DataFrame:
+    """Nodes that keep ``e`` from being a star forest: a node with more
+    than one out-edge (``u`` → two hubs), or with both an out-edge and
+    an in-edge (a ``v`` that is also a ``u``).  ``e`` holds distinct
+    edges, so counting out-edges counts distinct hubs.  One exchange,
+    REPARTITION_BY_NUM on ``n_part``; the groupBy reuses it."""
+    return (
+        e.select(F.col("u").alias("node"), F.lit(1).alias("n_out"), F.lit(0).alias("n_in"))
+        .union(e.select(F.col("v").alias("node"), F.lit(0), F.lit(1)))
+        .repartition(n_part, "node")
+        .groupBy("node")
+        .agg(F.sum("n_out").alias("n_out"), F.max("n_in").alias("n_in"))
+        .filter((F.col("n_out") > 1) | ((F.col("n_out") == 1) & (F.col("n_in") == 1)))
     )
 
 
@@ -647,14 +671,19 @@ def fingerprint(
 
     The classic document-fingerprint sketch (Broder/Manber style):
     deterministic, locality-insensitive to small edits."""
-    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    # the normalized string is a physical column before the k-gram
+    # lambda reads it (an inlined closure re-normalizes per k-gram)
+    normed = df.select(
+        F.col(id_col), F.lower(F.regexp_replace(F.col(text_col), r"\s+", " ")).alias("_n")
+    )
+    norm = F.col("_n")
     n = F.length(norm)
     grams = F.when(n < char_k, F.array().cast("array<string>")).otherwise(
-        F.transform(F.sequence(F.lit(1), n - char_k + 1), lambda i: F.substring(norm, 1, char_k) if False else norm.substr(i, F.lit(char_k)))
+        F.transform(F.sequence(F.lit(1), n - char_k + 1), lambda i: norm.substr(i, F.lit(char_k)))
     )
     hashes = F.transform(grams, lambda g: _hash64(g))
     selected = F.array_sort(F.array_distinct(F.filter(hashes, lambda h: h % mod_p == 0)))
-    return df.select(F.col(id_col), selected.alias("fingerprint"), F.size(selected).alias("fp_size"))
+    return normed.select(F.col(id_col), selected.alias("fingerprint"), F.size(selected).alias("fp_size"))
 
 
 # ----------------------------------------------------------------------
@@ -706,11 +735,11 @@ def repetition_signals(df: DataFrame, text_col: str = "text", id_col: str = "doc
         F.transform(F.split(F.col(text_col), "\n"), lambda l: F.trim(l)),
         lambda l: l != "",
     )
+    # the word array is a physical column before word_shingles' lambda
+    # reads it (an inlined closure re-tokenizes per bigram)
     base = df.select(
-        F.col(id_col),
-        lines.alias("_ln"),
-        word_shingles(norm_words(F.col(text_col)), 2).alias("_bg"),
-    )
+        F.col(id_col), lines.alias("_ln"), norm_words(F.col(text_col)).alias("_w")
+    ).select(F.col(id_col), F.col("_ln"), word_shingles(F.col("_w"), 2).alias("_bg"))
     n_lines = F.size(F.col("_ln"))
     n_dl = F.size(F.array_distinct(F.col("_ln")))
     dup_line_frac = F.when(n_lines > 0, 1.0 - n_dl / n_lines).otherwise(F.lit(0.0))

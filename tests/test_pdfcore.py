@@ -655,8 +655,10 @@ def test_cff_charset_and_encoding_range_formats():
 
 
 def test_cff_cidfont_and_expert_charset_gated():
-    """ROS (CIDFont) and predefined Expert charsets must yield None
-    (standard-table fallback), never wrong text."""
+    """ROS (CIDFont), the predefined Expert encoding and the predefined
+    Expert charsets must yield None (standard-table fallback), never
+    wrong text."""
+    import re
     import struct
 
     from pdf_parser_spark.pdfcore.fontprog import cff_tounicode
@@ -672,10 +674,26 @@ def test_cff_cidfont_and_expert_charset_gated():
     ros = (struct.pack(">Bi", 29, 391) + struct.pack(">Bi", 29, 391)
            + struct.pack(">Bi", 29, 0) + bytes([12, 30]))
     assert cff_tounicode(rebuild_with_top(ros)) is None
-    # Expert predefined charset (offset 1) -> None
     ok = build_cff_font()
     m = cff_tounicode(ok)
     assert m is not None
+
+    # the synth top DICT: charset (15), Encoding (16), CharStrings (17),
+    # each an int32 operand (29 xx xx xx xx) then its operator
+    top = re.search(rb"\x1d.{4}\x0f\x1d.{4}\x10\x1d.{4}\x11", ok, re.DOTALL)
+    assert top is not None
+
+    def with_predefined(blob, operator, off):
+        # point one operator at a predefined table, in place
+        i = top.start() + 6 * (operator - 15) + 1
+        return blob[:i] + struct.pack(">i", off) + blob[i + 4 :]
+
+    # Standard predefined encoding (offset 0) decodes the ASCII block
+    std = cff_tounicode(with_predefined(ok, 16, 0))
+    assert std and std[ord("A")] == "A"
+    # Expert predefined encoding (offset 1) and charset (offset 1) -> None
+    assert cff_tounicode(with_predefined(ok, 16, 1)) is None
+    assert cff_tounicode(with_predefined(ok, 15, 1)) is None
     # corrupt: truncate mid-INDEX -> None, never an exception
     assert cff_tounicode(ok[:30]) is None
     assert cff_tounicode(b"\x02\x00\x04\x02") is None  # wrong major version

@@ -172,6 +172,22 @@ def test_cc_round_clamped_exchanges_only(spark):
     assert "SinglePartition" not in p
 
 
+def test_cc_convergence_check_clamped_exchange_only(spark):
+    """The per-round star-forest check shuffles once, on the clamp
+    count, like the round itself (its groupBy reuses the repartition)."""
+    from pdf_parser_spark import textops
+
+    e = spark.range(100).select(
+        (F.col("id") % 37).alias("u"), (F.col("id") % 11).alias("v")
+    ).localCheckpoint(eager=True)
+    p = plan_of(textops._cc_not_star(e, 8))
+    detail = [l for l in p.splitlines() if l.startswith("Arguments: hashpartitioning")]
+    assert len(detail) == 1, f"expected the one clamp exchange:\n{p}"
+    assert "REPARTITION_BY_NUM" in detail[0] and ", 8)," in detail[0], detail[0]
+    assert "ENSURE_REQUIREMENTS" not in p
+    assert "SinglePartition" not in p
+
+
 def test_connected_components_checkpointed_no_conf_mutation(spark):
     """The iterative lineage must be truncated (result reads from the
     checkpoint RDD, not a round-over-round join tower) and the session
@@ -210,3 +226,94 @@ def test_top_k_per_key_two_stage_window(spark):
     assert "SinglePartition" not in p
     # stage-1 partitions by (key, salt); stage-2 by key alone
     assert any("hashpartitioning(domain" in l and "_salt" in l for l in p.splitlines())
+
+
+def _lambda_bodies(plan: str):
+    """Every ``lambdafunction(...)`` call in a plan string, parentheses
+    matched (nested lambdas also appear inside their parent's body)."""
+    key = "lambdafunction("
+    i = plan.find(key)
+    while i >= 0:
+        depth, j = 0, i + len(key) - 1
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            if depth == 0:
+                break
+            j += 1
+        yield plan[i : j + 1]
+        i = plan.find(key, i + 1)
+
+
+def test_textops_lambdas_never_retokenize(spark):
+    """Near-dup and shingle operators materialize their word array (or
+    normalized string) as a column BEFORE a higher-order lambda reads
+    it: a Column closure inside a lambda is inlined per element, which
+    re-runs the tokenizer over the whole text once per shingle, k-gram
+    or bit. The pruned simhash projection is the downstream shape of
+    simhash_pairs (n_words dropped)."""
+    from pdf_parser_spark import textops
+
+    df = spark.createDataFrame(
+        [(1, "a b  c d e\nf g")], "doc_id long, text string"
+    )
+    frames = {
+        "minhash_signatures": textops.minhash_signatures(df),
+        "simhash": textops.simhash(df, bits=64),
+        "simhash pruned": textops.simhash(df, bits=64).select("doc_id", "simhash"),
+        "ngram_jaccard_pairs": textops.ngram_jaccard_pairs(df),
+        "fingerprint": textops.fingerprint(df),
+        "repetition_signals": textops.repetition_signals(df),
+    }
+    for name, frame in frames.items():
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        bodies = list(_lambda_bodies(plan))
+        assert bodies, f"{name}: no lambda in the plan"
+        for body in bodies:
+            assert "regexp_replace" not in body, f"{name} re-tokenizes in a lambda: {body}"
+
+
+def _plan_build_commands(build) -> int:
+    """py4j commands this thread sends while only BUILDING a DataFrame
+    (no job). The first build warms the caches, and gc is held off
+    during the count. Other threads do not count: py4j's finalizer
+    worker sends the deletes of collected JVM references (a burst after
+    the gc.collect() here) in the background."""
+    import gc
+    import threading
+
+    import py4j.clientserver as cs
+
+    keep = [build()]
+    n = [0]
+    me = threading.get_ident()
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        n[0] += threading.get_ident() == me
+        return send(self, command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    cs.ClientServerConnection.send_command = counting
+    try:
+        keep.append(build())
+    finally:
+        cs.ClientServerConnection.send_command = send
+        gc.enable()
+    return n[0]
+
+
+def test_signature_plan_cost_flat_in_width(spark):
+    """SimHash bits and MinHash hash functions are one SQL expression
+    each, not an unrolled Column tree: widening the signature must not
+    add py4j round trips per bit / per hash (an unrolled 64-bit simhash
+    cost ~9,700 commands, an unrolled 24-hash minhash ~3,000)."""
+    from pdf_parser_spark import textops
+
+    df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    sim8 = _plan_build_commands(lambda: textops.simhash(df, bits=8))
+    sim64 = _plan_build_commands(lambda: textops.simhash(df, bits=64))
+    assert sim64 <= sim8 + 100, (sim8, sim64)
+    mh3 = _plan_build_commands(lambda: textops.minhash_signatures(df, n_hashes=3))
+    mh24 = _plan_build_commands(lambda: textops.minhash_signatures(df, n_hashes=24))
+    assert mh24 <= mh3 + 100, (mh3, mh24)

@@ -363,6 +363,67 @@ def test_connected_components_empty(spark):
     assert _cc_spark(spark, []) == {}
 
 
+def _jobs_of(spark, fn):
+    """(fn(), number of Spark jobs fn ran) via a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"cc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_star_forest_stops_after_one_round(spark):
+    """Edges that already form a star forest are the fixpoint: the loop
+    returns after ONE round (so max_iter=1 suffices), and its jobs are
+    exactly those of the input checkpoint, one round checkpoint and one
+    convergence check — no count, no set difference, no confirming
+    round."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (10, 11)], "id_a long, id_b long"
+    )
+    cc, n_jobs = _jobs_of(
+        spark, lambda: textops.connected_components(pairs, max_iter=1)
+    )
+    # replay the same three actions one by one
+    n_part = max(spark.sparkContext.defaultParallelism, 8)
+    e, n_input = _jobs_of(
+        spark,
+        lambda: pairs.select(
+            F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint(eager=True),
+    )
+    r, n_round = _jobs_of(
+        spark, lambda: textops._cc_round(e, n_part).localCheckpoint(eager=True)
+    )
+    empty, n_check = _jobs_of(spark, lambda: textops._cc_not_star(r, n_part).isEmpty())
+    assert empty
+    assert n_jobs == n_input + n_round + n_check
+    got = {(x.node_id, x.cluster_id) for x in cc.collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
+
+
+def test_cc_two_hub_edges_are_not_a_fixpoint(spark):
+    """A node pointing at two hubs is not a star, even when no hub is
+    itself a member. One round over the chain 0-2-3-4-1 yields exactly
+    that: 2 -> {0, 1} with hubs 0 and 1 pointing nowhere; stopping there
+    would split the chain's component in two."""
+    n_part = max(spark.sparkContext.defaultParallelism, 8)
+    two_hub = spark.createDataFrame([(5, 1), (5, 2)], "u long, v long")
+    assert not textops._cc_not_star(two_hub, n_part).isEmpty()
+    assert _cc_spark(spark, [(5, 1), (5, 2)]) == {1: 1, 2: 1, 5: 1}
+    chain = [(2, 0), (4, 1), (3, 2), (4, 3)]
+    assert _cc_spark(spark, chain) == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0}
+
+
 def test_dedup_clusters_with_singletons(spark):
     docs = spark.createDataFrame([(i,) for i in range(8)], ["doc_id"])
     pairs = spark.createDataFrame([(1, 3), (3, 5), (2, 6)], ["id_a", "id_b"])
