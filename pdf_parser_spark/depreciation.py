@@ -3,10 +3,16 @@
 Reimplements ``cost_seg/cost_seg_calculator.py`` + ``cost_seg/
 macrs_tables.py`` (D1–D11 of SURVEY §2.10) Spark-first:
 
-- MACRS tables become LITERAL array expressions indexed by
-  ``element_at`` — zero joins, zero shuffles; the whole engine is one
-  ``select`` + one ``explode(sequence(...))``, partition-local at any
-  scale (each document's schedule derives only from its own row).
+- every MACRS lookup, per-class year/accumulated value, CapEx pool fold
+  and the bonus schedule is built as Spark-SQL TEXT (``_sql_*``,
+  :func:`capex_total_sql`) and applied with one ``F.expr`` each, so a
+  plan costs a few py4j round trips instead of one per expression node.
+  The DuckDB oracles mirror these functions (``sqlgen.py``,
+  ``queries_capex.py``) in the same association order.
+- MACRS tables become LITERAL arrays indexed by ``element_at`` — zero
+  joins, zero shuffles; the whole engine is one ``select`` + one
+  ``explode(sequence(...))``, partition-local at any scale (each
+  document's schedule derives only from its own row).
 - the reference's O(N²) ``get_accumulated_depreciation`` re-summation
   (``macrs_tables.py:119-134``) becomes precomputed prefix-sum
   literals (SURVEY §4 "Common-subexpression reuse").
@@ -15,9 +21,9 @@ macrs_tables.py`` (D1–D11 of SURVEY §2.10) Spark-first:
   the reference's two engine instantiations.
 - ADS (D8): the reference snapshot has no 30/40yr tables and raises
   ``ValueError: Unknown asset class: 30yr`` which the endpoint degrades
-  to an empty schedule. Default mode reproduces that (null schedule);
-  ``ads_tables=True`` enables real straight-line mid-month 30/40yr
-  tables.
+  to an empty schedule. Default mode reproduces that (``engine_error``
+  set, no schedule rows); ``ads_tables=True`` enables real
+  straight-line mid-month 30/40yr tables.
 
 A broadcast MACRS dim (:func:`macrs_table_df`) is also exposed for the
 J4 oracle-checked query in ``__spark_entry__.py``.
@@ -27,11 +33,10 @@ from __future__ import annotations
 
 import datetime
 from functools import lru_cache
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, Iterable, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .functions.rounding import py_round
 
@@ -81,7 +86,7 @@ MACRS_MM: Dict[str, List[List[float]]] = {
 HY_TABLES: Dict[str, List[float]] = {"5yr": MACRS_5YR, "7yr": MACRS_7YR, "15yr": MACRS_15YR}
 
 # Bonus Depreciation Schedule (cost_seg_calculator.py:11-17) — ordered
-# first-match semantics preserved as a when-chain (J3)
+# first-match semantics preserved as a CASE (J3)
 BONUS_SCHEDULE = [
     (datetime.date(2025, 1, 20), None, 100),
     (datetime.date(2025, 1, 1), datetime.date(2025, 1, 19), 40),
@@ -104,89 +109,6 @@ def _prefix(vals: List[float]) -> List[float]:
     return out
 
 
-@lru_cache(maxsize=None)
-def _lit_array_cached(vals: Tuple[float, ...]) -> Column:
-    # ONE py4j call (SQL-parsed JVM-side) instead of len(vals) F.lit
-    # round-trips, memoized per table — building these literal tables
-    # element-wise dominated DataFrame CONSTRUCTION time (14s at one
-    # point; execution was 1-4s)
-    return F.expr("array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")")
-
-
-@lru_cache(maxsize=None)
-def _lit_array2_cached(rows: Tuple[Tuple[float, ...], ...]) -> Column:
-    """2-D double-table literal as ~3 expression nodes, not thousands.
-
-    ``F.expr("array(array(...)...)")`` parses into one node PER ELEMENT
-    and these tables are inlined per reference through the engine's
-    expression trees — Column build + eager analysis over them was the
-    dominant share of `capex_481a`'s 17 s cold start (round-4 finding).
-    ``from_json`` of a string literal is a single JsonToStructs node at
-    analysis time and ConstantFolding collapses it to ONE array Literal
-    before execution, so runtime plans and looked-up doubles are
-    bit-identical (json.dumps emits shortest-repr floats, which parse
-    back exactly)."""
-    import json
-
-    return F.from_json(
-        F.lit(json.dumps([list(map(float, r)) for r in rows])),
-        "array<array<double>>",
-    )
-
-
-@lru_cache(maxsize=None)
-def _lit_array3_cached(tables: Tuple[Tuple[Tuple[float, ...], ...], ...]) -> Column:
-    """3-D twin of :func:`_lit_array2_cached` (the 4×41×12 MM tables)."""
-    import json
-
-    return F.from_json(
-        F.lit(json.dumps([[list(map(float, r)) for r in rows] for rows in tables])),
-        "array<array<array<double>>>",
-    )
-
-
-def _lit_array(vals: List[float]) -> Column:
-    return _lit_array_cached(tuple(float(v) for v in vals))
-
-
-def _lit_array2(rows: List[List[float]]) -> Column:
-    return _lit_array2_cached(tuple(tuple(float(v) for v in r) for r in rows))
-
-
-# ----------------------------------------------------------------------
-# scalar expression builders
-# ----------------------------------------------------------------------
-def bonus_rate_expr(acq: Column) -> Column:
-    """F5/J3: first matching interval's rate else 0 (list order wins)."""
-    expr = None
-    for start, end, rate in BONUS_SCHEDULE:
-        if end is None:
-            cond = acq >= F.lit(start)
-        else:
-            cond = (acq >= F.lit(start)) & (acq <= F.lit(end))
-        expr = F.when(cond, F.lit(float(rate))) if expr is None else expr.when(cond, F.lit(float(rate)))
-    return expr.otherwise(F.lit(0.0))
-
-
-def age_adjustment_expr(year_built: Column, current_year: Column) -> Column:
-    """F6: 0.5 / (1 + e^(-0.01*age)) (cost_seg_calculator.py:37-58)."""
-    age = (current_year - year_built).cast("double")
-    return F.lit(0.5) / (F.lit(1.0) + F.exp(F.lit(-0.01) * age))
-
-
-def _hy_pct(asset_class: str, year: Column, accumulated: bool) -> Column:
-    """MACRS % (or prefix-summed %) for a HY class at ``year`` — literal
-    array indexing; out-of-range years → 0 for annual, table-total for
-    accumulated (dict .get(year, 0.0) semantics of macrs_tables.py:90-117)."""
-    vals = HY_TABLES[asset_class]
-    arr = _prefix(vals) if accumulated else vals
-    got = F.element_at(_lit_array(arr), year.cast("int"))
-    if accumulated:
-        beyond = F.lit(float(_prefix(vals)[-1]))
-        return F.when(year <= 0, F.lit(0.0)).when(year > len(vals), beyond).otherwise(got)
-    return F.coalesce(F.when(year.between(1, len(vals)), got), F.lit(0.0))
-
-
 _MM_CLASSES = list(MACRS_MM)  # dispatch order: 27.5yr, 39yr, 30yr, 40yr
 
 
@@ -199,49 +121,223 @@ def _mm_rows(cls: str, accumulated: bool) -> List[List[float]]:
     return rows
 
 
-def _mm_class_case(building_class: Column, vals: List) -> Column:
-    expr = None
-    for cls, v in zip(_MM_CLASSES, vals):
-        cond = building_class == F.lit(cls)
-        expr = F.when(cond, F.lit(v)) if expr is None else expr.when(cond, F.lit(v))
-    return expr  # no otherwise → unknown class = null
+# ----------------------------------------------------------------------
+# SQL text: the _sql_* functions are the one way this module writes a
+# MACRS lookup, a per-class year or accumulated value, a CapEx pool fold
+# or the bonus schedule. Each returns Spark-SQL text, and callers apply
+# it with one F.expr: one py4j round trip, parsed JVM-side. A Column tree costs
+# several round trips per node on every plan (the audited_quotes chain
+# built as Column trees sent ~12,000 commands; as text, ~1,400).
+# Arguments are SQL text too: column names, or expressions such as
+# "(years_elapsed + 1)". To keep every double identical to the DuckDB
+# mirrors (sqlgen.py, queries_capex.py):
+# - double literals carry the D suffix (a bare 1.0 parses as DECIMAL);
+# - sums and products follow the mirrors' association order;
+# - literal tables are from_json of a string literal: one node at
+#   analysis, constant-folded to one array literal before execution
+#   (array(...) parses into a node per element, and these tables sit
+#   inside higher-order-function lambdas).
+# ----------------------------------------------------------------------
+def _sqld(v: float) -> str:
+    return repr(float(v)) + "D"
 
 
-def _mm_pct(building_class: Column, year: Column, month: Column, accumulated: bool) -> Column:
-    """MACRS % for MM building classes, dispatching on class column.
+def _sql_bonus_rate(pis: str) -> str:
+    """F5/J3: the first matching interval's rate, else 0 (list order
+    wins)."""
+    arms = []
+    for start, end, rate in BONUS_SCHEDULE:
+        if end is None:
+            cond = f"{pis} >= DATE'{start.isoformat()}'"
+        else:
+            cond = (
+                f"({pis} >= DATE'{start.isoformat()}'"
+                f" AND {pis} <= DATE'{end.isoformat()}')"
+            )
+        arms.append(f"WHEN {cond} THEN {_sqld(rate)}")
+    return "(CASE " + " ".join(arms) + " ELSE 0.0D END)"
 
-    ONE padded 3-D literal array indexed by (class idx, year, month)
-    instead of a when-chain where every branch embedded its own 41×12
-    table: the old form put 4 full tables in the tree PER CALL, and
-    calls inside higher-order-function lambdas are inlined per
-    reference — the dominant share of `capex_481a`'s 1.3 MiB task
-    binary and its plan-analysis wall time (round-3 finding). Values,
-    guards, and per-class bounds are unchanged, so every looked-up
-    double (and thus every downstream float association) is
-    bit-identical.  Padding rows are unreachable: the per-class
-    ``n_years`` guard evaluates lazily before any ``element_at``, which
-    also keeps ANSI mode from seeing an out-of-range index."""
-    n_years = _mm_class_case(building_class, [len(MACRS_MM[c]) for c in _MM_CLASSES])
+
+@lru_cache(maxsize=None)
+def _hy_json(accumulated: bool) -> str:
+    import json
+
+    max_len = max(len(t) for t in HY_TABLES.values())
+    tables = [
+        (_prefix(HY_TABLES[c]) if accumulated else list(HY_TABLES[c]))
+        + [0.0] * (max_len - len(HY_TABLES[c]))
+        for c in SHORT_CLASSES
+    ]
+    return json.dumps(tables)
+
+
+@lru_cache(maxsize=None)
+def _mm_json(accumulated: bool) -> str:
+    import json
+
     max_rows = max(len(MACRS_MM[c]) for c in _MM_CLASSES)
     pad = [[0.0] * 12]
-    tables = tuple(
-        tuple(
-            tuple(r)
-            for r in _mm_rows(c, accumulated) + pad * (max_rows - len(MACRS_MM[c]))
-        )
+    tables = [
+        _mm_rows(c, accumulated) + pad * (max_rows - len(MACRS_MM[c]))
         for c in _MM_CLASSES
+    ]
+    return json.dumps(tables)
+
+
+def _sql_hy_pct(idx: str, ny: str, year: str, accumulated: bool) -> str:
+    """MACRS % (or prefix-summed %) at ``year`` of the HY class whose
+    1-based index in SHORT_CLASSES is ``idx`` and whose table has ``ny``
+    years. ONE padded 2-D table serves every class, so a pool fold can
+    pass class-dependent CASE expressions; padding is unreachable behind
+    the ``ny`` bounds. Out-of-range years give 0 for annual and the table
+    total for accumulated (the dict ``.get(year, 0.0)`` of
+    macrs_tables.py:90-117)."""
+    tab = (
+        f"element_at(from_json('{_hy_json(accumulated)}',"
+        f" 'array<array<double>>'), {idx})"
     )
-    idx = _mm_class_case(building_class, list(range(1, len(_MM_CLASSES) + 1)))
-    tab = F.element_at(_lit_array3_cached(tables), idx)
-    got = F.element_at(F.element_at(tab, year.cast("int")), month.cast("int"))
+    got = f"element_at({tab}, CAST({year} AS INT))"
     if accumulated:
-        beyond = F.element_at(F.element_at(tab, n_years), month.cast("int"))
-        val = F.when(year <= 0, F.lit(0.0)).when(year > n_years, beyond).otherwise(got)
+        beyond = f"element_at({tab}, {ny})"
+        return (
+            f"(CASE WHEN {year} <= 0 THEN 0.0D WHEN {year} > {ny}"
+            f" THEN {beyond} ELSE {got} END)"
+        )
+    return f"coalesce((CASE WHEN {year} BETWEEN 1 AND {ny} THEN {got} END), 0.0D)"
+
+
+def _sql_hy_pct_cls(cls: str, year: str, accumulated: bool) -> str:
+    """:func:`_sql_hy_pct` for the fixed class ``cls``."""
+    idx = SHORT_CLASSES.index(cls) + 1
+    return _sql_hy_pct(str(idx), str(len(HY_TABLES[cls])), year, accumulated)
+
+
+def _sql_mm_pct(cls: str, year: str, month: str, accumulated: bool) -> str:
+    """MACRS % for the mid-month building classes, dispatching on the
+    class expression ``cls``.
+
+    ONE padded 3-D table indexed by (class index, year, month), not a
+    CASE whose every arm embeds its own 41×12 table: four full tables
+    per call, inlined per reference inside lambdas, made most of
+    `capex_481a`'s 1.3 MiB task binary (round-3 finding). Padding rows
+    are unreachable: the per-class ``n_years`` guard is evaluated before
+    any ``element_at``, which also keeps ANSI mode from seeing an
+    out-of-range index. An unknown class gives null (D8)."""
+
+    def mm_case(vals: List) -> str:
+        arms = " ".join(
+            f"WHEN {cls} = '{c}' THEN {v}" for c, v in zip(_MM_CLASSES, vals)
+        )
+        return f"(CASE {arms} END)"
+
+    n_years = mm_case([len(MACRS_MM[c]) for c in _MM_CLASSES])
+    idxm = mm_case(list(range(1, len(_MM_CLASSES) + 1)))
+    tab = (
+        f"element_at(from_json('{_mm_json(accumulated)}',"
+        f" 'array<array<array<double>>>'), {idxm})"
+    )
+    got = f"element_at(element_at({tab}, CAST({year} AS INT)), CAST({month} AS INT))"
+    if accumulated:
+        beyond = f"element_at(element_at({tab}, {n_years}), CAST({month} AS INT))"
+        val = (
+            f"(CASE WHEN {year} <= 0 THEN 0.0D WHEN {year} > {n_years}"
+            f" THEN {beyond} ELSE {got} END)"
+        )
     else:
-        val = F.coalesce(F.when(year.between(1, n_years), got), F.lit(0.0))
-    # unknown class → null (D8); without this wrap the annual-branch
-    # coalesce would turn the null lookup into a wrong 0.0
-    return F.when(idx.isNull(), F.lit(None).cast("double")).otherwise(val)
+        val = (
+            f"coalesce((CASE WHEN {year} BETWEEN 1 AND {n_years}"
+            f" THEN {got} END), 0.0D)"
+        )
+    # the null wrap keeps the annual branch's coalesce from turning an
+    # unknown class into a wrong 0.0
+    return (
+        f"(CASE WHEN {idxm} IS NULL THEN CAST(NULL AS DOUBLE) ELSE {val} END)"
+    )
+
+
+def _sql_short_year_dep(amt: str, bonus: str, cls: str, year: str) -> str:
+    """D5 for one short class: year-``year`` depreciation."""
+    b = f"({bonus} / 100.0D)"
+    year1 = (
+        f"({amt} * {b} + {amt} * (1.0D - {b})"
+        f" * {_sql_hy_pct_cls(cls, '1', False)} / 100.0D)"
+    )
+    later = (
+        f"({amt} * (1.0D - {b})"
+        f" * {_sql_hy_pct_cls(cls, year, False)} / 100.0D)"
+    )
+    return (
+        f"(CASE WHEN {amt} = 0.0D THEN 0.0D"
+        f" WHEN {bonus} = 100.0D THEN (CASE WHEN {year} = 1 THEN {amt} ELSE 0.0D END)"
+        f" WHEN {year} = 1 THEN {year1}"
+        f" ELSE {later} END)"
+    )
+
+
+def _sql_short_acc_dep(amt: str, bonus: str, cls: str, years: str) -> str:
+    """D3 for one short class: accumulated through ``years``."""
+    b = f"({bonus} / 100.0D)"
+    acc = (
+        f"({amt} * {b} + {amt} * (1.0D - {b})"
+        f" * {_sql_hy_pct_cls(cls, years, True)} / 100.0D)"
+    )
+    return (
+        f"(CASE WHEN ({amt} = 0.0D OR {years} = 0) THEN 0.0D"
+        f" WHEN {bonus} = 100.0D THEN {amt} ELSE {acc} END)"
+    )
+
+
+def _sql_bldg_year_dep(amt: str, cls: str, year: str, month: str) -> str:
+    return (
+        f"(CASE WHEN {amt} = 0.0D THEN 0.0D ELSE"
+        f" ({amt} * {_sql_mm_pct(cls, year, month, False)} / 100.0D) END)"
+    )
+
+
+def _sql_bldg_acc_dep(amt: str, cls: str, years: str, month: str) -> str:
+    return (
+        f"(CASE WHEN ({amt} = 0.0D OR {years} = 0) THEN 0.0D ELSE"
+        f" ({amt} * {_sql_mm_pct(cls, years, month, True)} / 100.0D) END)"
+    )
+
+
+def _sql_standard_dep(years: str) -> str:
+    """D4: straight-line building-class table over the FULL basis
+    (cost_seg_calculator.py:244-262)."""
+    mm = _sql_mm_pct("building_class", years, "pis_month", True)
+    return f"(total_depreciable * {mm} / 100.0D)"
+
+
+def _class_sqls(year: str, bonus: str, accumulated: bool) -> Dict[str, str]:
+    """Per-class depreciation in year ``year`` (D5, ``dep_*``) or
+    accumulated through ``year`` (D3, ``acc_*``), keyed by column name;
+    reads the with_engine_inputs columns."""
+    if accumulated:
+        short, bldg, pre = _sql_short_acc_dep, _sql_bldg_acc_dep, "acc"
+    else:
+        short, bldg, pre = _sql_short_year_dep, _sql_bldg_year_dep, "dep"
+    out = {f"{pre}_{c}": short(f"amt_{c}", bonus, c, year) for c in SHORT_CLASSES}
+    out[f"{pre}_bldg"] = bldg("amt_bldg", "building_class", year, "pis_month")
+    return out
+
+
+def _sql_sum(terms: Iterable[str]) -> str:
+    """Left-to-right sum, e.g. ``((d5 + d7) + d15) + db``."""
+    return "(" + " + ".join(terms) + ")"
+
+
+# ----------------------------------------------------------------------
+# scalar expressions
+# ----------------------------------------------------------------------
+def bonus_rate_expr(acq: str) -> Column:
+    """F5/J3 bonus rate of the date expression ``acq`` (SQL text)."""
+    return F.expr(_sql_bonus_rate(acq))
+
+
+def age_adjustment_expr(year_built: Column, current_year: Column) -> Column:
+    """F6: 0.5 / (1 + e^(-0.01*age)) (cost_seg_calculator.py:37-58)."""
+    age = (current_year - year_built).cast("double")
+    return F.lit(0.5) / (F.lit(1.0) + F.exp(F.lit(-0.01) * age))
 
 
 # ----------------------------------------------------------------------
@@ -277,7 +373,7 @@ def with_engine_inputs(
     yb = F.coalesce(F.col(year_built).cast("int"), F.year(acq))
 
     total_dep = pp - lv + cx - pd_ - dg
-    bonus = bonus_rate_expr(acq)
+    bonus = bonus_rate_expr(f"CAST(`{acquisition_date}` AS DATE)")
     if bonus_override:
         bonus = F.coalesce(F.col(bonus_override).cast("double"), bonus)
 
@@ -331,93 +427,56 @@ def with_engine_inputs(
     )
 
 
-def _short_year_dep(amt: Column, bonus: Column, cls: str, year: Column) -> Column:
-    """D5 for one short class: year-k depreciation."""
-    b = bonus / 100.0
-    year1 = amt * b + amt * (1.0 - b) * _hy_pct(cls, F.lit(1), False) / 100.0
-    later = amt * (1.0 - b) * _hy_pct(cls, year, False) / 100.0
-    return (
-        F.when(amt == 0.0, F.lit(0.0))
-        .when(bonus == 100.0, F.when(year == 1, amt).otherwise(F.lit(0.0)))
-        .when(year == 1, year1)
-        .otherwise(later)
-    )
+def _with_481a_cols(df: DataFrame, pools_col: Optional[str]) -> DataFrame:
+    """D6 481(a) columns, shared by :func:`with_481a` and
+    :func:`with_481a_capex`. With pools, should-have adds the pools'
+    accumulation through the PRIOR calendar year and current-year adds
+    their CSS-year depreciation.
 
+    Each lookup and fold is staged as a physical column first: inlined,
+    its tree (MACRS tables included) would be copied into every output
+    that reads it (round-3 plan-size finding)."""
+    staged = {
+        "_should_base": _sql_sum(_class_sqls("years_elapsed", "bonus_rate", True).values()),
+        "_did_take": _sql_standard_dep("years_elapsed"),
+        "_cur_base": _sql_sum(_class_sqls("(years_elapsed + 1)", "bonus_rate", False).values()),
+        "_y1_base": _sql_sum(_class_sqls("1", "bonus_rate", False).values()),
+    }
+    should, cur, y1 = "_should_base", "_cur_base", "_y1_base"
+    if pools_col:
+        pools = f"`{pools_col}`"
+        staged["_capex_acc_prior"] = capex_total_sql(
+            pools, "(acq_year + years_elapsed - 1)", accumulated=True
+        )
+        staged["_capex_cur"] = capex_total_sql(
+            pools, "(acq_year + years_elapsed)", accumulated=False
+        )
+        should = "(_should_base + _capex_acc_prior)"
+        cur = "(_cur_base + _capex_cur)"
+        y1 = "(_y1_base + _capex_cur)"
 
-def _short_acc_dep(amt: Column, bonus: Column, cls: str, years: Column) -> Column:
-    """D3 for one short class: accumulated through N years."""
-    b = bonus / 100.0
-    acc = amt * b + amt * (1.0 - b) * _hy_pct(cls, years, True) / 100.0
-    return (
-        F.when((amt == 0.0) | (years == 0), F.lit(0.0))
-        .when(bonus == 100.0, amt)
-        .otherwise(acc)
-    )
+    def if_same_year(then: str, other: str) -> str:
+        return f"(CASE WHEN years_elapsed = 0 THEN {then} ELSE {other} END)"
 
-
-def _bldg_year_dep(amt: Column, cls: Column, year: Column, month: Column) -> Column:
-    return F.when(amt == 0.0, F.lit(0.0)).otherwise(
-        amt * _mm_pct(cls, year, month, False) / 100.0
-    )
-
-
-def _bldg_acc_dep(amt: Column, cls: Column, years: Column, month: Column) -> Column:
-    return F.when((amt == 0.0) | (years == 0), F.lit(0.0)).otherwise(
-        amt * _mm_pct(cls, years, month, True) / 100.0
-    )
-
-
-def year_depreciation_cols(year: Column, bonus: Column) -> Dict[str, Column]:
-    """Per-class year-``year`` depreciation columns (D5)."""
     out = {
-        "dep_5yr": _short_year_dep(F.col("amt_5yr"), bonus, "5yr", year),
-        "dep_7yr": _short_year_dep(F.col("amt_7yr"), bonus, "7yr", year),
-        "dep_15yr": _short_year_dep(F.col("amt_15yr"), bonus, "15yr", year),
-        "dep_bldg": _bldg_year_dep(F.col("amt_bldg"), F.col("building_class"), year, F.col("pis_month")),
+        "should_have_taken": if_same_year("0.0D", should),
+        "did_take": if_same_year("0.0D", "_did_take"),
+        "catch_up_adjustment": if_same_year("0.0D", f"({should} - _did_take)"),
+        "current_year_total": if_same_year(y1, cur),
+        "total_current_year_benefit": if_same_year(
+            y1, f"({should} - _did_take + {cur})"
+        ),
     }
-    return out
-
-
-def accumulated_cols(years: Column, bonus: Column) -> Dict[str, Column]:
-    """Per-class accumulated-through-``years`` columns (D3)."""
-    return {
-        "acc_5yr": _short_acc_dep(F.col("amt_5yr"), bonus, "5yr", years),
-        "acc_7yr": _short_acc_dep(F.col("amt_7yr"), bonus, "7yr", years),
-        "acc_15yr": _short_acc_dep(F.col("amt_15yr"), bonus, "15yr", years),
-        "acc_bldg": _bldg_acc_dep(F.col("amt_bldg"), F.col("building_class"), years, F.col("pis_month")),
-    }
-
-
-def standard_depreciation(years: Column) -> Column:
-    """D4: straight-line building-class table over the FULL basis
-    (cost_seg_calculator.py:244-262)."""
-    return F.col("total_depreciable") * _mm_pct(
-        F.col("building_class"), years, F.col("pis_month"), True
-    ) / 100.0
+    return (
+        df.select("*", *[F.expr(v).alias(k) for k, v in staged.items()])
+        .select("*", *[F.expr(v).alias(k) for k, v in out.items()])
+        .drop(*staged)
+    )
 
 
 def with_481a(df: DataFrame) -> DataFrame:
     """D6: 481(a) catch-up columns (cost_seg_calculator.py:264-309)."""
-    ye = F.col("years_elapsed")
-    bonus = F.col("bonus_rate")
-    acc = accumulated_cols(ye, bonus)
-    should_have = acc["acc_5yr"] + acc["acc_7yr"] + acc["acc_15yr"] + acc["acc_bldg"]
-    did_take = standard_depreciation(ye)
-    cur = year_depreciation_cols(ye + 1, bonus)
-    current_total = cur["dep_5yr"] + cur["dep_7yr"] + cur["dep_15yr"] + cur["dep_bldg"]
-    zero = ye == 0
-    y1 = year_depreciation_cols(F.lit(1), bonus)
-    y1_total = y1["dep_5yr"] + y1["dep_7yr"] + y1["dep_15yr"] + y1["dep_bldg"]
-    return df.select(
-        "*",
-        F.when(zero, 0.0).otherwise(should_have).alias("should_have_taken"),
-        F.when(zero, 0.0).otherwise(did_take).alias("did_take"),
-        F.when(zero, 0.0).otherwise(should_have - did_take).alias("catch_up_adjustment"),
-        F.when(zero, y1_total).otherwise(current_total).alias("current_year_total"),
-        F.when(zero, y1_total).otherwise(should_have - did_take + current_total).alias(
-            "total_current_year_benefit"
-        ),
-    )
+    return _with_481a_cols(df, None)
 
 
 def depreciation_schedule(
@@ -429,46 +488,43 @@ def depreciation_schedule(
     per-year values are literal-array lookups. ``years=None`` with
     ``full_horizon`` picks 29/41 by building class
     (RCGV .../service/api.py:503-506); default 10
-    (cost_seg_calculator.py:352).
+    (cost_seg_calculator.py:352). A row with an ``engine_error`` (D8)
+    gets no rows: the reference's endpoint returns an empty schedule.
     """
     if years is not None:
-        n_years = F.lit(years)
+        n_years = str(int(years))
     elif full_horizon:
-        expr = None
-        for cls, n in FULL_HORIZON.items():
-            cond = F.col("building_class") == cls
-            expr = F.when(cond, n) if expr is None else expr.when(cond, n)
-        n_years = expr.otherwise(10)
+        arms = " ".join(
+            f"WHEN building_class = '{c}' THEN {n}" for c, n in FULL_HORIZON.items()
+        )
+        n_years = f"(CASE {arms} ELSE 10 END)"
     else:
-        n_years = F.lit(10)
+        n_years = "10"
+    grid_years = f"sequence(1, {n_years})"
+    if "engine_error" in df.columns:
+        grid_years = f"(CASE WHEN engine_error IS NULL THEN {grid_years} END)"
+    grid = df.select("*", F.explode(F.expr(grid_years)).alias("year"))
 
-    grid = df.select("*", F.explode(F.sequence(F.lit(1), n_years)).alias("year"))
-    bonus = F.col("bonus_rate")
-    year = F.col("year")
-    dep = year_depreciation_cols(year, bonus)
-    acc = accumulated_cols(year, bonus)
-    dep_total = dep["dep_5yr"] + dep["dep_7yr"] + dep["dep_15yr"] + dep["dep_bldg"]
-    acc_total = acc["acc_5yr"] + acc["acc_7yr"] + acc["acc_15yr"] + acc["acc_bldg"]
-    # D10 dual schedule in one pass: trad = bonus_override 0
-    trad_dep = year_depreciation_cols(year, F.lit(0.0))
-    trad_total = trad_dep["dep_5yr"] + trad_dep["dep_7yr"] + trad_dep["dep_15yr"] + trad_dep["dep_bldg"]
+    dep = _class_sqls("`year`", "bonus_rate", accumulated=False)
+    acc = _class_sqls("`year`", "bonus_rate", accumulated=True)
+    dep_total = _sql_sum(dep.values())
     # W3/D4: std_dep = acc_std(y) − acc_std(y−1), computed analytically
     # (no window needed — the lag of a closed form is a closed form)
-    std_acc = standard_depreciation(year)
-    std_prev = standard_depreciation(year - 1)
-    return grid.select(
-        "*",
-        (F.col("acq_year") + year - 1).alias("calendar_year"),  # W4
-        *[v.alias(k) for k, v in dep.items()],
-        dep_total.alias("depreciation_total"),
-        *[v.alias(k) for k, v in acc.items()],
-        acc_total.alias("accumulated_total"),
-        trad_total.alias("trad_cost_seg"),
-        dep_total.alias("bonus_dep"),
-        dep_total.alias("cost_seg_est"),
-        (std_acc - std_prev).alias("std_dep"),
-        std_acc.alias("std_acc"),
-    )
+    std_acc = _sql_standard_dep("`year`")
+    cols = {
+        "calendar_year": "(acq_year + `year` - 1)",  # W4
+        **dep,
+        "depreciation_total": dep_total,
+        **acc,
+        "accumulated_total": _sql_sum(acc.values()),
+        # D10 dual schedule in one pass: trad = bonus_override 0
+        "trad_cost_seg": _sql_sum(_class_sqls("`year`", "0.0D", accumulated=False).values()),
+        "bonus_dep": dep_total,
+        "cost_seg_est": dep_total,
+        "std_dep": f"({std_acc} - {_sql_standard_dep('(`year` - 1)')})",
+        "std_acc": std_acc,
+    }
+    return grid.select("*", *[F.expr(v).alias(k) for k, v in cols.items()])
 
 
 def schedule_totals(schedule: DataFrame, keys: List[str]) -> DataFrame:
@@ -562,34 +618,30 @@ def with_cent_allocations(df: DataFrame) -> DataFrame:
 TOTAL_LIFE = {"5yr": 6, "7yr": 8, "15yr": 16, "27.5yr": 29, "39yr": 40}
 
 
-def remaining_basis_cols(year: Column, bonus: Column) -> Dict[str, Column]:
+def remaining_basis_cols(year: str, bonus: str) -> Dict[str, Column]:
     """max(0, allocated − accumulated(year)) per class."""
-    acc = accumulated_cols(year, bonus)
+    acc = _class_sqls(year, bonus, accumulated=True)
     return {
-        "rem_5yr": F.greatest(F.lit(0.0), F.col("amt_5yr") - acc["acc_5yr"]),
-        "rem_7yr": F.greatest(F.lit(0.0), F.col("amt_7yr") - acc["acc_7yr"]),
-        "rem_15yr": F.greatest(F.lit(0.0), F.col("amt_15yr") - acc["acc_15yr"]),
-        "rem_bldg": F.greatest(F.lit(0.0), F.col("amt_bldg") - acc["acc_bldg"]),
+        f"rem_{k[4:]}": F.expr(f"greatest(0.0D, amt_{k[4:]} - {v})")
+        for k, v in acc.items()
     }
 
 
-def life_remaining_cols(year: Column, bonus: Column) -> Dict[str, Column]:
+def life_remaining_cols(year: str, bonus: str) -> Dict[str, Column]:
     """Remaining life as strings — short classes report 'Complete' once
     a 100% bonus has expensed them (`:505-516`)."""
-    out = {}
-    for cls in SHORT_CLASSES:
-        total = TOTAL_LIFE[cls]
-        rem = F.greatest(F.lit(0), F.lit(total) - year)
-        out[f"life_{cls.replace('yr', '')}yr"] = (
-            F.when((bonus == 100.0) & (year >= 1), F.lit("Complete"))
-            .otherwise(rem.cast("string"))
+    out = {
+        f"life_{cls}": F.expr(
+            f"(CASE WHEN {bonus} = 100.0D AND {year} >= 1 THEN 'Complete'"
+            f" ELSE CAST(greatest(0, {TOTAL_LIFE[cls]} - {year}) AS STRING) END)"
         )
+        for cls in SHORT_CLASSES
+    }
     bldg_total = (
-        F.when(F.col("building_class") == "27.5yr", TOTAL_LIFE["27.5yr"])
-        .when(F.col("building_class") == "39yr", TOTAL_LIFE["39yr"])
-        .otherwise(0)
+        f"(CASE WHEN building_class = '27.5yr' THEN {TOTAL_LIFE['27.5yr']}"
+        f" WHEN building_class = '39yr' THEN {TOTAL_LIFE['39yr']} ELSE 0 END)"
     )
-    out["life_bldg"] = F.greatest(F.lit(0), bldg_total - year).cast("string")
+    out["life_bldg"] = F.expr(f"CAST(greatest(0, {bldg_total} - {year}) AS STRING)")
     return out
 
 
@@ -604,180 +656,12 @@ CAPEX_CLASS_MAP = {
 CAPEX_CLASSES = ["5yr", "7yr", "15yr", "27.5yr", "39yr"]
 
 
-def _pool_class(p: Column) -> Column:
-    expr = None
-    for k, v in CAPEX_CLASS_MAP.items():
-        cond = p["classification"] == k
-        expr = F.when(cond, v) if expr is None else expr.when(cond, v)
-    return expr.otherwise(F.lit("5yr"))  # default (`:142-143`)
-
-
-def _pool_bonus(p: Column) -> Column:
-    return F.coalesce(p["bonus_override"], bonus_rate_expr(p["pis_date"]))
-
-
-def _hy_class_case(cls: Column, vals: List) -> Column:
-    expr = None
-    for c, v in zip(SHORT_CLASSES, vals):
-        cond = cls == F.lit(c)
-        expr = F.when(cond, F.lit(v)) if expr is None else expr.when(cond, F.lit(v))
-    return expr  # no otherwise → long-life class = null
-
-
-def _hy_pct_by_idx(idx: Column, n_years: Column, year: Column, accumulated: bool) -> Column:
-    """HY MACRS % via ONE padded 2-D literal array indexed by (class
-    idx, year) — the per-class-chain twin of :func:`_mm_pct`'s 3-D
-    form, same bit-identical-values / lazy-bounds argument.  The
-    accumulated ``beyond`` value is the prefix table's own last entry
-    (``element_at(tab, n_years)``), the identical double the old
-    per-class scalar literal held."""
-    max_len = max(len(t) for t in HY_TABLES.values())
-    tables = tuple(
-        tuple(
-            (_prefix(HY_TABLES[c]) if accumulated else HY_TABLES[c])
-            + [0.0] * (max_len - len(HY_TABLES[c]))
-        )
-        for c in SHORT_CLASSES
-    )
-    tab = F.element_at(_lit_array2_cached(tables), idx)
-    got = F.element_at(tab, year.cast("int"))
-    if accumulated:
-        beyond = F.element_at(tab, n_years)
-        return F.when(year <= 0, F.lit(0.0)).when(year > n_years, beyond).otherwise(got)
-    return F.coalesce(F.when(year.between(1, n_years), got), F.lit(0.0))
-
-
-def _pool_year_dep(p: Column, target_year: Column) -> Column:
-    """One pool's depreciation in calendar ``target_year`` (`:520-566`).
-
-    Quirk preserved: a ZERO-bonus short-life pool takes nothing in its
-    first year (the reference's elif-chain has no bonus==0 year-1 arm).
-
-    The short-class dispatch is an index into one 2-D table rather than
-    a 3-branch when-chain each re-embedding its arithmetic + table: the
-    branch arithmetic was class-independent, only the looked-up pct
-    differed, so collapsing it is float-exact (round-3 plan-size
-    finding; see :func:`_mm_pct`)."""
-    dy = target_year - F.year(p["pis_date"]) + 1
-    amt = p["amount"]
-    b = _pool_bonus(p)
-    bf = b / 100.0
-    cls = _pool_class(p)
-    idx = _hy_class_case(cls, list(range(1, len(SHORT_CLASSES) + 1)))
-    ny = _hy_class_case(cls, [len(HY_TABLES[c]) for c in SHORT_CLASSES])
-    y1 = amt * bf + amt * (1.0 - bf) * _hy_pct_by_idx(idx, ny, F.lit(1), False) / 100.0
-    later = amt * (1.0 - bf) * _hy_pct_by_idx(idx, ny, dy, False) / 100.0
-    short_val = (
-        F.when((b == 100.0) & (dy == 1), amt)
-        .when((b > 0.0) & (dy == 1), y1)
-        .when((b < 100.0) & (dy > 1), later)
-        .otherwise(F.lit(0.0))
-    )
-    long_dep = amt * _mm_pct(cls, dy, F.month(p["pis_date"]), False) / 100.0
-    return F.when(dy < 1, F.lit(0.0)).otherwise(
-        F.when(idx.isNotNull(), short_val).otherwise(long_dep)
-    )
-
-
-def _pool_acc_dep(p: Column, target_year: Column) -> Column:
-    """One pool's accumulated depreciation through ``target_year``
-    (`:568-600`); same 2-D short-class indexing as
-    :func:`_pool_year_dep`."""
-    dyc = target_year - F.year(p["pis_date"]) + 1
-    amt = p["amount"]
-    b = _pool_bonus(p)
-    bf = b / 100.0
-    cls = _pool_class(p)
-    idx = _hy_class_case(cls, list(range(1, len(SHORT_CLASSES) + 1)))
-    ny = _hy_class_case(cls, [len(HY_TABLES[c]) for c in SHORT_CLASSES])
-    acc = amt * bf + amt * (1.0 - bf) * _hy_pct_by_idx(idx, ny, dyc, True) / 100.0
-    short_val = F.when(b == 100.0, amt).otherwise(acc)
-    long_acc = amt * _mm_pct(cls, dyc, F.month(p["pis_date"]), True) / 100.0
-    return F.when(dyc < 1, F.lit(0.0)).otherwise(
-        F.when(idx.isNotNull(), short_val).otherwise(long_acc)
-    )
-
-
-def capex_class_totals(pools: Column, target_year: Column, accumulated: bool = False) -> Dict[str, Column]:
-    """A3: per-class sums over the pool array — explode-free
-    ``aggregate(filter(...))``, partition-local at any scale."""
-    fn = _pool_acc_dep if accumulated else _pool_year_dep
-    out = {}
-    for c in CAPEX_CLASSES:
-        sel = F.filter(pools, lambda p: _pool_class(p) == c)
-        out[c] = F.aggregate(sel, F.lit(0.0), lambda acc, p: acc + fn(p, target_year))
-    return out
-
-
-def capex_total(pools: Column, target_year: Column, accumulated: bool = False) -> Column:
-    """``sum(capex_class_totals(...).values(), F.lit(0.0))`` as ONE
-    aggregate — bit-identical value, ~10× smaller plan.
-
-    The per-class form builds 5 ``filter``+``aggregate`` pairs whose
-    per-pool fn each embeds the full MACRS literal tables and class
-    dispatch; its ANALYSIS cost dominated `capex_481a` wall time (~10s
-    plan build at sf0.001, round-3 finding). Here the accumulator is a
-    5-slot array of per-class partial sums — each pool adds fn(p) to
-    exactly its class's slot (other slots pass through UNCHANGED, so
-    each slot's float association order is identical to the filtered
-    per-class fold), and the final left fold over the 5 slots matches
-    ``F.lit(0.0) + s_5yr + s_7yr + ...`` exactly."""
-    fn = _pool_acc_dep if accumulated else _pool_year_dep
-
-    def idx_of(p: Column) -> Column:
-        expr = None
-        for k, v in CAPEX_CLASS_MAP.items():
-            cond = p["classification"] == k
-            i = F.lit(CAPEX_CLASSES.index(v))
-            expr = F.when(cond, i) if expr is None else expr.when(cond, i)
-        return expr.otherwise(F.lit(0))  # default 5yr (_pool_class)
-
-    zeros = F.array(*[F.lit(0.0) for _ in CAPEX_CLASSES])
-    per_class = F.aggregate(
-        pools,
-        zeros,
-        lambda acc, p: F.transform(
-            acc,
-            lambda x, i: F.when(i == idx_of(p), x + fn(p, target_year)).otherwise(x),
-        ),
-    )
-    return F.aggregate(per_class, F.lit(0.0), lambda a, x: a + x)
-
-
-# ----------------------------------------------------------------------
-# Spark-SQL text twin of capex_total: ONE F.expr → ONE py4j round trip.
-# Building the fold Column-wise costs thousands of py4j calls (the
-# when-chains and lookups each make a socket round trip) — 9 s of the
-# capex_481a cold start was DataFrame CONSTRUCTION (round-4 finding).
-# The text form parses JVM-side into the SAME expression tree (each
-# builder mirrors its Column twin arm for arm, fully parenthesized, all
-# double literals D-suffixed), so every float association is identical;
-# test_depreciation_capex asserts Column-vs-SQL equality directly.
-# ----------------------------------------------------------------------
-def _sqld(v: float) -> str:
-    return repr(float(v)) + "D"
-
-
-def _sql_bonus_rate(pis: str) -> str:
-    arms = []
-    for start, end, rate in BONUS_SCHEDULE:
-        if end is None:
-            cond = f"{pis} >= DATE'{start.isoformat()}'"
-        else:
-            cond = (
-                f"({pis} >= DATE'{start.isoformat()}'"
-                f" AND {pis} <= DATE'{end.isoformat()}')"
-            )
-        arms.append(f"WHEN {cond} THEN {_sqld(rate)}")
-    return "(CASE " + " ".join(arms) + " ELSE 0.0D END)"
-
-
 def _sql_pool_class(p: str) -> str:
     arms = " ".join(
         f"WHEN {p}.classification = '{k}' THEN '{v}'"
         for k, v in CAPEX_CLASS_MAP.items()
     )
-    return f"(CASE {arms} ELSE '5yr' END)"
+    return f"(CASE {arms} ELSE '5yr' END)"  # default (`:142-143`)
 
 
 def _sql_hy_case(cls: str, vals: List) -> str:
@@ -787,203 +671,45 @@ def _sql_hy_case(cls: str, vals: List) -> str:
     return f"(CASE {arms} END)"  # no else → long-life class = null
 
 
-@lru_cache(maxsize=None)
-def _hy_json(accumulated: bool) -> str:
-    import json
-
-    max_len = max(len(t) for t in HY_TABLES.values())
-    tables = [
-        (_prefix(HY_TABLES[c]) if accumulated else list(HY_TABLES[c]))
-        + [0.0] * (max_len - len(HY_TABLES[c]))
-        for c in SHORT_CLASSES
-    ]
-    return json.dumps(tables)
-
-
-@lru_cache(maxsize=None)
-def _mm_json(accumulated: bool) -> str:
-    import json
-
-    max_rows = max(len(MACRS_MM[c]) for c in _MM_CLASSES)
-    pad = [[0.0] * 12]
-    tables = [
-        _mm_rows(c, accumulated) + pad * (max_rows - len(MACRS_MM[c]))
-        for c in _MM_CLASSES
-    ]
-    return json.dumps(tables)
-
-
-def _sql_hy_pct(idx: str, ny: str, year: str, accumulated: bool) -> str:
-    tab = (
-        f"element_at(from_json('{_hy_json(accumulated)}',"
-        f" 'array<array<double>>'), {idx})"
-    )
-    got = f"element_at({tab}, CAST({year} AS INT))"
-    if accumulated:
-        beyond = f"element_at({tab}, {ny})"
-        return (
-            f"(CASE WHEN {year} <= 0 THEN 0.0D WHEN {year} > {ny}"
-            f" THEN {beyond} ELSE {got} END)"
-        )
-    return f"coalesce((CASE WHEN {year} BETWEEN 1 AND {ny} THEN {got} END), 0.0D)"
-
-
-def _sql_mm_pct(cls: str, year: str, month: str, accumulated: bool) -> str:
-    def mm_case(vals: List) -> str:
-        arms = " ".join(
-            f"WHEN {cls} = '{c}' THEN {v}" for c, v in zip(_MM_CLASSES, vals)
-        )
-        return f"(CASE {arms} END)"
-
-    n_years = mm_case([len(MACRS_MM[c]) for c in _MM_CLASSES])
-    idxm = mm_case(list(range(1, len(_MM_CLASSES) + 1)))
-    tab = (
-        f"element_at(from_json('{_mm_json(accumulated)}',"
-        f" 'array<array<array<double>>>'), {idxm})"
-    )
-    got = f"element_at(element_at({tab}, CAST({year} AS INT)), CAST({month} AS INT))"
-    if accumulated:
-        beyond = f"element_at(element_at({tab}, {n_years}), CAST({month} AS INT))"
-        val = (
-            f"(CASE WHEN {year} <= 0 THEN 0.0D WHEN {year} > {n_years}"
-            f" THEN {beyond} ELSE {got} END)"
-        )
-    else:
-        val = (
-            f"coalesce((CASE WHEN {year} BETWEEN 1 AND {n_years}"
-            f" THEN {got} END), 0.0D)"
-        )
-    return (
-        f"(CASE WHEN {idxm} IS NULL THEN CAST(NULL AS DOUBLE) ELSE {val} END)"
-    )
-
-
-def _sql_hy_pct_cls(cls: str, year: str, accumulated: bool) -> str:
-    """Text twin of :func:`_hy_pct` (fixed class, 1-D table)."""
-    import json
-
-    vals = HY_TABLES[cls]
-    arr = _prefix(vals) if accumulated else list(vals)
-    tab = f"from_json('{json.dumps([float(v) for v in arr])}', 'array<double>')"
-    got = f"element_at({tab}, CAST({year} AS INT))"
-    if accumulated:
-        beyond = _sqld(_prefix(vals)[-1])
-        return (
-            f"(CASE WHEN {year} <= 0 THEN 0.0D WHEN {year} > {len(vals)}"
-            f" THEN {beyond} ELSE {got} END)"
-        )
-    return (
-        f"coalesce((CASE WHEN {year} BETWEEN 1 AND {len(vals)}"
-        f" THEN {got} END), 0.0D)"
-    )
-
-
-def _sql_short_year_dep(amt: str, bonus: str, cls: str, year: str) -> str:
-    """Text twin of :func:`_short_year_dep`."""
-    b = f"({bonus} / 100.0D)"
-    year1 = (
-        f"({amt} * {b} + {amt} * (1.0D - {b})"
-        f" * {_sql_hy_pct_cls(cls, '1', False)} / 100.0D)"
-    )
-    later = (
-        f"({amt} * (1.0D - {b})"
-        f" * {_sql_hy_pct_cls(cls, year, False)} / 100.0D)"
-    )
-    return (
-        f"(CASE WHEN {amt} = 0.0D THEN 0.0D"
-        f" WHEN {bonus} = 100.0D THEN (CASE WHEN {year} = 1 THEN {amt} ELSE 0.0D END)"
-        f" WHEN {year} = 1 THEN {year1}"
-        f" ELSE {later} END)"
-    )
-
-
-def _sql_short_acc_dep(amt: str, bonus: str, cls: str, years: str) -> str:
-    """Text twin of :func:`_short_acc_dep`."""
-    b = f"({bonus} / 100.0D)"
-    acc = (
-        f"({amt} * {b} + {amt} * (1.0D - {b})"
-        f" * {_sql_hy_pct_cls(cls, years, True)} / 100.0D)"
-    )
-    return (
-        f"(CASE WHEN ({amt} = 0.0D OR {years} = 0) THEN 0.0D"
-        f" WHEN {bonus} = 100.0D THEN {amt} ELSE {acc} END)"
-    )
-
-
-def _sql_bldg_year_dep(amt: str, cls: str, year: str, month: str) -> str:
-    """Text twin of :func:`_bldg_year_dep`."""
-    return (
-        f"(CASE WHEN {amt} = 0.0D THEN 0.0D ELSE"
-        f" ({amt} * {_sql_mm_pct(cls, year, month, False)} / 100.0D) END)"
-    )
-
-
-def _sql_bldg_acc_dep(amt: str, cls: str, years: str, month: str) -> str:
-    """Text twin of :func:`_bldg_acc_dep`."""
-    return (
-        f"(CASE WHEN ({amt} = 0.0D OR {years} = 0) THEN 0.0D ELSE"
-        f" ({amt} * {_sql_mm_pct(cls, years, month, True)} / 100.0D) END)"
-    )
-
-
-def _sql_standard_dep(years: str) -> str:
-    """Text twin of :func:`standard_depreciation`."""
-    mm = _sql_mm_pct("building_class", years, "pis_month", True)
-    return f"(total_depreciable * {mm} / 100.0D)"
-
-
-def _sql_class_sum(fn, year: str) -> str:
-    """Left-assoc per-class sum matching ``d5 + d7 + d15 + db``."""
-    d5 = fn("amt_5yr", "bonus_rate", "5yr", year)
-    d7 = fn("amt_7yr", "bonus_rate", "7yr", year)
-    d15 = fn("amt_15yr", "bonus_rate", "15yr", year)
-    if fn is _sql_short_year_dep:
-        db = _sql_bldg_year_dep("amt_bldg", "building_class", year, "pis_month")
-    else:
-        db = _sql_bldg_acc_dep("amt_bldg", "building_class", year, "pis_month")
-    return f"({d5} + {d7} + {d15} + {db})"
-
-
 def _sql_pool_fn(p: str, target_year: str, accumulated: bool) -> str:
-    """Text twin of :func:`_pool_year_dep` / :func:`_pool_acc_dep`."""
+    """One pool's depreciation in calendar ``target_year`` (`:520-566`),
+    or its accumulation through it (`:568-600`).
+
+    Quirk preserved: a ZERO-bonus short-life pool takes nothing in its
+    first year (the reference's elif-chain has no bonus==0 year-1 arm).
+    The short classes share one arithmetic and differ only in the
+    looked-up pct, so the class is an index into one 2-D table rather
+    than a CASE arm per class (round-3 plan-size finding)."""
     amt = f"{p}.amount"
     b = f"coalesce({p}.bonus_override, {_sql_bonus_rate(f'{p}.pis_date')})"
     bf = f"({b} / 100.0D)"
     cls = _sql_pool_class(p)
     idx = _sql_hy_case(cls, list(range(1, len(SHORT_CLASSES) + 1)))
     ny = _sql_hy_case(cls, [len(HY_TABLES[c]) for c in SHORT_CLASSES])
+    dy = f"({target_year} - year({p}.pis_date) + 1)"
     if accumulated:
-        dyc = f"({target_year} - year({p}.pis_date) + 1)"
         acc = (
             f"({amt} * {bf} + {amt} * (1.0D - {bf})"
-            f" * {_sql_hy_pct(idx, ny, dyc, True)} / 100.0D)"
+            f" * {_sql_hy_pct(idx, ny, dy, True)} / 100.0D)"
         )
         short_val = f"(CASE WHEN {b} = 100.0D THEN {amt} ELSE {acc} END)"
-        long_v = (
-            f"({amt} * {_sql_mm_pct(cls, dyc, f'month({p}.pis_date)', True)}"
-            f" / 100.0D)"
+    else:
+        y1 = (
+            f"({amt} * {bf} + {amt} * (1.0D - {bf})"
+            f" * {_sql_hy_pct(idx, ny, '1', False)} / 100.0D)"
         )
-        return (
-            f"(CASE WHEN {dyc} < 1 THEN 0.0D ELSE (CASE WHEN {idx} IS NOT NULL"
-            f" THEN {short_val} ELSE {long_v} END) END)"
+        later = (
+            f"({amt} * (1.0D - {bf})"
+            f" * {_sql_hy_pct(idx, ny, dy, False)} / 100.0D)"
         )
-    dy = f"({target_year} - year({p}.pis_date) + 1)"
-    y1 = (
-        f"({amt} * {bf} + {amt} * (1.0D - {bf})"
-        f" * {_sql_hy_pct(idx, ny, '1', False)} / 100.0D)"
-    )
-    later = (
-        f"({amt} * (1.0D - {bf})"
-        f" * {_sql_hy_pct(idx, ny, dy, False)} / 100.0D)"
-    )
-    short_val = (
-        f"(CASE WHEN {b} = 100.0D AND {dy} = 1 THEN {amt}"
-        f" WHEN {b} > 0.0D AND {dy} = 1 THEN {y1}"
-        f" WHEN {b} < 100.0D AND {dy} > 1 THEN {later}"
-        f" ELSE 0.0D END)"
-    )
+        short_val = (
+            f"(CASE WHEN {b} = 100.0D AND {dy} = 1 THEN {amt}"
+            f" WHEN {b} > 0.0D AND {dy} = 1 THEN {y1}"
+            f" WHEN {b} < 100.0D AND {dy} > 1 THEN {later}"
+            f" ELSE 0.0D END)"
+        )
     long_v = (
-        f"({amt} * {_sql_mm_pct(cls, dy, f'month({p}.pis_date)', False)}"
+        f"({amt} * {_sql_mm_pct(cls, dy, f'month({p}.pis_date)', accumulated)}"
         f" / 100.0D)"
     )
     return (
@@ -992,14 +718,36 @@ def _sql_pool_fn(p: str, target_year: str, accumulated: bool) -> str:
     )
 
 
+def capex_class_totals(pools: str, target_year: str, accumulated: bool = False) -> Dict[str, Column]:
+    """A3: per-class sums over the pool array ``pools`` — explode-free
+    ``aggregate(filter(...))``, partition-local at any scale."""
+    fn = _sql_pool_fn("p", target_year, accumulated)
+    cls = _sql_pool_class("p")
+    return {
+        c: F.expr(
+            f"aggregate(filter({pools}, p -> {cls} = '{c}'), 0.0D,"
+            f" (acc, p) -> acc + {fn})"
+        )
+        for c in CAPEX_CLASSES
+    }
+
+
 def capex_total_sql(pools: str, target_year: str, accumulated: bool = False) -> str:
-    """:func:`capex_total` as one Spark-SQL string (same tree, same
-    5-slot array-accumulator fold, same per-slot float association)."""
+    """The sum of :func:`capex_class_totals` over all classes, as ONE
+    aggregate with a ~10× smaller plan and the same value.
+
+    Five ``filter``+``aggregate`` pairs, each embedding the MACRS tables
+    and the class dispatch, made the analysis cost dominate `capex_481a`
+    (round-3 finding). Here the accumulator is a 5-slot array of
+    per-class partial sums: each pool adds its value to its class's slot
+    and passes the others through unchanged, so each slot folds in the
+    same order as the filtered per-class fold, and the final left fold
+    over the slots matches ``0.0 + s_5yr + s_7yr + ...`` exactly."""
     arms = " ".join(
         f"WHEN p.classification = '{k}' THEN {CAPEX_CLASSES.index(v)}"
         for k, v in CAPEX_CLASS_MAP.items()
     )
-    idx0 = f"(CASE {arms} ELSE 0 END)"
+    idx0 = f"(CASE {arms} ELSE 0 END)"  # default 5yr (_sql_pool_class)
     fn = _sql_pool_fn("p", target_year, accumulated)
     zeros = "array(" + ", ".join(["0.0D"] * len(CAPEX_CLASSES)) + ")"
     per_class = (
@@ -1013,87 +761,38 @@ def with_481a_capex(df: DataFrame, pools_col: str = "capex_items") -> DataFrame:
     """D6 CapEx-pool-aware 481(a) (`:622-690`): should-have adds pool
     accumulation through the PRIOR calendar year, current-year adds the
     pools' CSS-year depreciation."""
-    ye = F.col("years_elapsed")
-
-    # stage every fold/lookup tree as a physical column FIRST: their
-    # trees (each inlining the MACRS lookup tables) would otherwise be
-    # copied into every output expression that references them — 2-3
-    # copies each through should/cur_total/y1_total (round-3 plan-size
-    # finding).  All six staged columns are built as SQL TEXT (one py4j
-    # round trip each, parsed JVM-side) rather than Column-by-Column —
-    # DataFrame CONSTRUCTION was 9-17 s of the capex_481a cold start
-    # (round-4 judge finding); the text twins mirror the Column
-    # builders arm for arm and are equality-tested against them
-    # (tests/test_depreciation_capex.py), so every float association is
-    # bit-identical.
-    staged = df.select(
-        "*",
-        F.expr(
-            capex_total_sql(
-                f"`{pools_col}`", "(acq_year + years_elapsed - 1)",
-                accumulated=True,
-            )
-        ).alias("_capex_acc_prior"),
-        F.expr(
-            capex_total_sql(
-                f"`{pools_col}`", "(acq_year + years_elapsed)",
-                accumulated=False,
-            )
-        ).alias("_capex_cur"),
-        F.expr(_sql_class_sum(_sql_short_acc_dep, "years_elapsed")).alias(
-            "_should_base"
-        ),
-        F.expr(_sql_standard_dep("years_elapsed")).alias("_did_take"),
-        F.expr(_sql_class_sum(_sql_short_year_dep, "(years_elapsed + 1)")).alias(
-            "_cur_base"
-        ),
-        F.expr(_sql_class_sum(_sql_short_year_dep, "1")).alias("_y1_base"),
-    )
-
-    should = F.col("_should_base") + F.col("_capex_acc_prior")
-    did_take = F.col("_did_take")
-    capex_cur_total = F.col("_capex_cur")
-    cur_total = F.col("_cur_base") + capex_cur_total
-    y1_total = F.col("_y1_base") + capex_cur_total
-
-    zero = ye == 0
-    return staged.select(
-        "*",
-        F.when(zero, 0.0).otherwise(should).alias("should_have_taken"),
-        F.when(zero, 0.0).otherwise(did_take).alias("did_take"),
-        F.when(zero, 0.0).otherwise(should - did_take).alias("catch_up_adjustment"),
-        F.when(zero, y1_total).otherwise(cur_total).alias("current_year_total"),
-        F.when(zero, y1_total).otherwise(should - did_take + cur_total).alias(
-            "total_current_year_benefit"
-        ),
-    ).drop(
-        "_capex_acc_prior", "_capex_cur", "_should_base", "_did_take",
-        "_cur_base", "_y1_base",
-    )
+    return _with_481a_cols(df, pools_col)
 
 
 # ----------------------------------------------------------------------
 # A5 + D11: lifetime totals (closed form) and reconciliation invariant
 # (`:760-807`; RCGV .../service/api.py:647-707)
 # ----------------------------------------------------------------------
+def _sql_lifetime(pools_col: Optional[str]) -> Tuple[str, str]:
+    """``basis − SL through the prior year`` and the pools' summed
+    amount (0 without pools), as SQL text."""
+    sl_prior = (
+        f"(CASE WHEN years_elapsed > 0 THEN {_sql_standard_dep('years_elapsed')}"
+        f" ELSE 0.0D END)"
+    )
+    capex = (
+        f"aggregate(`{pools_col}`, 0.0D, (acc, p) -> acc + p.amount)"
+        if pools_col
+        else "0.0D"
+    )
+    return f"(total_depreciable - {sl_prior})", capex
+
+
 def with_lifetime_totals(df: DataFrame, pools_col: Optional[str] = None) -> DataFrame:
     """Closed-form lifetime totals from CSS year forward: standard
     depreciates only the base; traditional/bonus add CapEx."""
-    basis = F.col("total_depreciable")
-    ye = F.col("years_elapsed")
-    sl_prior = F.when(ye > 0, standard_depreciation(ye)).otherwise(F.lit(0.0))
-    capex_total = (
-        F.aggregate(F.col(pools_col), F.lit(0.0), lambda acc, p: acc + p["amount"])
-        if pools_col
-        else F.lit(0.0)
-    )
-    std = basis - sl_prior
-    trad = basis - sl_prior + capex_total
+    std, capex = _sql_lifetime(pools_col)
+    trad = f"round({std} + {capex}, 2)"
     return df.select(
         "*",
-        F.round(std, 2).alias("lifetime_standard"),
-        F.round(trad, 2).alias("lifetime_traditional"),
-        F.round(trad, 2).alias("lifetime_bonus"),
+        F.expr(f"round({std}, 2)").alias("lifetime_standard"),
+        F.expr(trad).alias("lifetime_traditional"),
+        F.expr(trad).alias("lifetime_bonus"),
     )
 
 
@@ -1109,26 +808,20 @@ def with_reconciliation(df: DataFrame, pools_col: Optional[str] = None, toleranc
     contract; :func:`reconcile_schedule` adds the stronger check the
     reference lacks. Requires with_lifetime_totals columns.
     """
-    basis = F.col("total_depreciable")
-    ye = F.col("years_elapsed")
-    sl_prior = F.when(ye > 0, standard_depreciation(ye)).otherwise(F.lit(0.0))
-    capex_total = (
-        F.aggregate(F.col(pools_col), F.lit(0.0), lambda acc, p: acc + p["amount"])
-        if pools_col
-        else F.lit(0.0)
-    )
-    exp_std = F.round(basis - sl_prior, 2)
-    exp_trad = exp_std + capex_total
+    std, capex = _sql_lifetime(pools_col)
+    exp_std = f"round({std}, 2)"
+    exp_trad = f"({exp_std} + {capex})"
+    tol = _sqld(tolerance)
     ok = (
-        (F.abs(F.col("lifetime_standard") - exp_std) <= tolerance)
-        & (F.abs(F.col("lifetime_traditional") - exp_trad) <= tolerance)
-        & (F.abs(F.col("lifetime_bonus") - exp_trad) <= tolerance)
+        f"(abs(lifetime_standard - {exp_std}) <= {tol}"
+        f" AND abs(lifetime_traditional - {exp_trad}) <= {tol}"
+        f" AND abs(lifetime_bonus - {exp_trad}) <= {tol})"
     )
     return df.select(
         "*",
-        exp_std.alias("expected_standard"),
-        F.round(exp_trad, 2).alias("expected_traditional"),
-        ok.alias("is_reconciled"),
+        F.expr(exp_std).alias("expected_standard"),
+        F.expr(f"round({exp_trad}, 2)").alias("expected_traditional"),
+        F.expr(ok).alias("is_reconciled"),
     )
 
 
@@ -1151,23 +844,16 @@ def reconcile_schedule(schedule: DataFrame, keys: List[str], tolerance: float = 
         F.max("accumulated_total").alias("acc_at_horizon"),
         F.max("year").alias("horizon"),
     )
-    h = F.col("horizon")
-    std_at_horizon = F.col("total_depreciable") * _mm_pct(
-        F.col("building_class"), h, F.col("pis_month"), True
-    ) / 100.0
-    trad_acc = accumulated_cols(h, F.lit(0.0))
-    trad_at_horizon = (
-        trad_acc["acc_5yr"] + trad_acc["acc_7yr"] + trad_acc["acc_15yr"] + trad_acc["acc_bldg"]
-    )
+    tol = _sqld(tolerance)
+    trad_at_horizon = _sql_sum(_class_sqls("horizon", "0.0D", accumulated=True).values())
     return tot.select(
         *keys,
         F.round(F.col("sum_bonus"), 2).alias("sum_bonus"),
         F.round(F.col("acc_at_horizon"), 2).alias("acc_at_horizon"),
-        (F.abs(F.col("sum_bonus") - F.col("acc_at_horizon")) <= tolerance).alias("bonus_reconciled"),
-        (F.abs(F.col("sum_std") - std_at_horizon) <= tolerance).alias("std_reconciled"),
-        (F.abs(F.col("sum_trad") - trad_at_horizon) <= tolerance).alias("trad_reconciled"),
+        F.expr(f"abs(sum_bonus - acc_at_horizon) <= {tol}").alias("bonus_reconciled"),
+        F.expr(f"abs(sum_std - {_sql_standard_dep('horizon')}) <= {tol}").alias("std_reconciled"),
+        F.expr(f"abs(sum_trad - {trad_at_horizon}) <= {tol}").alias("trad_reconciled"),
     )
-
 
 # ----------------------------------------------------------------------
 # RCGV engine variant stage-1 (RCGV .../cost_seg_calculator.py:146-292)
@@ -1219,7 +905,7 @@ def with_engine_inputs_rcgv(
 
     is_mf = F.col(property_type) == "multi-family"
     building_class = F.when(is_mf, F.lit("27.5yr")).otherwise(F.lit("39yr"))
-    bonus = bonus_rate_expr(acq)
+    bonus = bonus_rate_expr(f"CAST(`{acquisition_date}` AS DATE)")
 
     adj = age_adjustment_expr(yb, F.year(css)) * F.lit(0.22)
     mf, co = RCGV_BASES["multi-family"], RCGV_BASES["commercial"]

@@ -140,7 +140,7 @@ pool_rows AS (
 
 
 def _sql_pool_dep(amt: str, b: str, cls: str, dy: str, month: str) -> str:
-    """Mirror depreciation._pool_year_dep."""
+    """Mirror of depreciation._sql_pool_fn (annual)."""
     bf = f"({b} / 100.0)"
     shorts = []
     for c in dep.SHORT_CLASSES:
@@ -161,7 +161,7 @@ def _sql_pool_dep(amt: str, b: str, cls: str, dy: str, month: str) -> str:
 
 
 def _sql_pool_acc(amt: str, b: str, cls: str, dyc: str, month: str) -> str:
-    """Mirror depreciation._pool_acc_dep."""
+    """Mirror of depreciation._sql_pool_fn (accumulated)."""
     bf = f"({b} / 100.0)"
     shorts = []
     for c in dep.SHORT_CLASSES:
@@ -277,9 +277,8 @@ FROM agg
 def q_remaining_basis_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _rcgv_base(spark, sf_dir, _MOD, 1)
     staged = dep.with_engine_inputs_rcgv(base)
-    year = F.col("years_elapsed") + 1
-    rem = dep.remaining_basis_cols(year, F.col("bonus_rate"))
-    life = dep.life_remaining_cols(year, F.col("bonus_rate"))
+    rem = dep.remaining_basis_cols("(years_elapsed + 1)", "bonus_rate")
+    life = dep.life_remaining_cols("(years_elapsed + 1)", "bonus_rate")
     return staged.select(
         "o_orderkey",
         *[F.round(v, 2).alias(k) for k, v in rem.items()],

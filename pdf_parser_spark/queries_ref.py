@@ -722,12 +722,11 @@ FROM orders WHERE o_orderkey % 5 = 0
 # J3 bonus interval join
 # ----------------------------------------------------------------------
 def q_bonus_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _read(spark, sf_dir, "orders")
-    acq = _acq_col()
+    o = _read(spark, sf_dir, "orders").select("o_orderkey", _acq_col().alias("_acq"))
     return o.select(
         "o_orderkey",
-        acq.cast("string").alias("acq_date"),
-        dep.bonus_rate_expr(acq).alias("bonus_rate"),
+        F.col("_acq").cast("string").alias("acq_date"),
+        dep.bonus_rate_expr("_acq").alias("bonus_rate"),
     )
 
 

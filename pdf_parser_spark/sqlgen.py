@@ -89,7 +89,8 @@ def sql_logistic_bid(bv: str) -> str:
 
 
 # ----------------------------------------------------------------------
-# MACRS tables as SQL list literals (mirror depreciation._hy_pct/_mm_pct)
+# MACRS tables as SQL list literals (mirror depreciation._sql_hy_pct_cls
+# and _sql_mm_pct)
 # ----------------------------------------------------------------------
 def _sql_list(vals: List[float]) -> str:
     return "CAST([" + ", ".join(repr(float(v)) for v in vals) + "] AS DOUBLE[])"
@@ -104,7 +105,8 @@ def _sql_list2(rows: List[List[float]]) -> str:
 
 
 def sql_hy_pct(asset_class: str, year: str, accumulated: bool) -> str:
-    """list_extract mirror of depreciation._hy_pct (same prefix floats)."""
+    """list_extract mirror of depreciation._sql_hy_pct_cls (same prefix
+    floats)."""
     vals = dep.HY_TABLES[asset_class]
     arr = dep._prefix(vals) if accumulated else vals
     got = f"list_extract({_sql_list(arr)}, CAST({year} AS INT))"
@@ -128,7 +130,7 @@ def _mm_rows(cls: str, accumulated: bool) -> List[List[float]]:
 
 
 def sql_mm_pct(building_class: str, year: str, month: str, accumulated: bool) -> str:
-    """CASE-per-class mirror of depreciation._mm_pct."""
+    """CASE-per-class mirror of depreciation._sql_mm_pct."""
     branches = []
     for cls in ("27.5yr", "39yr", "30yr", "40yr"):
         rows = _mm_rows(cls, accumulated)
@@ -148,7 +150,7 @@ def sql_mm_pct(building_class: str, year: str, month: str, accumulated: bool) ->
 
 
 def sql_bonus_rate(acq: str) -> str:
-    """Mirror of depreciation.bonus_rate_expr (ordered first-match)."""
+    """Mirror of depreciation._sql_bonus_rate (ordered first-match)."""
     whens = []
     for start, end, rate in dep.BONUS_SCHEDULE:
         if end is None:
@@ -160,8 +162,9 @@ def sql_bonus_rate(acq: str) -> str:
 
 
 # ----------------------------------------------------------------------
-# depreciation engine per-class expressions (mirror _short_year_dep /
-# _short_acc_dep / _bldg_* exactly, same association order)
+# depreciation engine per-class expressions (mirror depreciation's
+# _sql_short_year_dep / _sql_short_acc_dep / _sql_bldg_* / _sql_standard_dep
+# exactly, same association order)
 # ----------------------------------------------------------------------
 def sql_short_year_dep(amt: str, bonus: str, cls: str, year: str) -> str:
     b = f"({bonus} / 100.0)"

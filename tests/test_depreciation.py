@@ -240,6 +240,9 @@ def test_ads_reproduces_reference_error(spark):
     assert got[0]["engine_error"] == "Unknown asset class: 30yr"
     assert got[1]["engine_error"] == "Unknown asset class: 40yr"
     assert got[0]["bonus_rate"] == 0.0
+    # the error rows get an empty schedule, as in the reference endpoint
+    for kw in ({}, {"years": 10}, {"full_horizon": True}):
+        assert depreciation_schedule(with_481a(df), **kw).count() == 0, kw
     # ads_tables=True enables real SL tables instead
     df2 = with_engine_inputs(spark.createDataFrame(rows), use_ads="use_ads", ads_tables=True)
     sched = depreciation_schedule(df2, full_horizon=True)

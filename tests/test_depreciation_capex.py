@@ -111,9 +111,8 @@ def test_stage1_matches_rcgv(refmod, staged):
 
 def test_capex_pool_totals_match_rcgv(refmod, spark, staged):
     """D7/A3: per-class pool depreciation (year + accumulated)."""
-    tax_year = F.col("acq_year") + F.col("years_elapsed")
-    cur = dep.capex_class_totals(F.col("capex_items"), tax_year, accumulated=False)
-    acc = dep.capex_class_totals(F.col("capex_items"), tax_year - 1, accumulated=True)
+    cur = dep.capex_class_totals("capex_items", "(acq_year + years_elapsed)", accumulated=False)
+    acc = dep.capex_class_totals("capex_items", "(acq_year + years_elapsed - 1)", accumulated=True)
     out = staged.select(
         "case_id",
         *[v.alias(f"cur_{c.replace('.', '_')}") for c, v in cur.items()],
@@ -152,9 +151,8 @@ def test_481a_with_pools_matches_rcgv(refmod, spark, staged):
 
 
 def test_remaining_basis_and_life_match_rcgv(refmod, spark, staged):
-    year = F.col("years_elapsed") + 1
-    rem = dep.remaining_basis_cols(year, F.col("bonus_rate"))
-    life = dep.life_remaining_cols(year, F.col("bonus_rate"))
+    rem = dep.remaining_basis_cols("(years_elapsed + 1)", "bonus_rate")
+    life = dep.life_remaining_cols("(years_elapsed + 1)", "bonus_rate")
     out = staged.select(
         "case_id",
         *[v.alias(k) for k, v in rem.items()],
@@ -237,63 +235,135 @@ def test_reference_table_gap_documented(refmod):
     assert abs(s27 - 101.657) < 0.01
 
 
-def test_sql_text_twins_exactly_match_column_builders(spark):
-    """Round-5: with_481a_capex stages its folds/lookups as SQL TEXT
-    (one py4j round trip each — DataFrame construction was 9-17 s of
-    the cold start).  Every text builder must produce bit-identical
-    doubles to its Column twin, pool folds included."""
-    rows = [
-        (i, [(1000.0 + i * 37.3,
-              datetime.date(2015 + (i * 3) % 12, 1 + (i * 5) % 12, 1 + (i * 7) % 28),
-              c, (None if i % 3 else 80.0))
-             for c in ["QIP", "5_year", "7_year", "15_year", "27_5_year",
-                       "39_year", "junk"][: 1 + i % 7]])
+
+
+def test_engine_matches_duckdb_mirrors_on_edge_grid(spark):
+    """The engine's 481(a) values, per-class year and accumulated values
+    and CapEx pool totals agree to the cent with their DuckDB mirrors
+    (sqlgen, queries_capex) on an edge grid: 27.5/39/30/40yr and an
+    unknown building class, every pool classification plus an unknown
+    one, null or 80% pool bonus overrides."""
+    import duckdb
+
+    from pdf_parser_spark import queries_capex as qc
+    from pdf_parser_spark import sqlgen
+
+    kinds = ["QIP", "5_year", "7_year", "15_year", "27_5_year", "39_year", "junk"]
+    buildings = ["27.5yr", "39yr", "30yr", "40yr", "junk"]
+    grid = [
+        (i, 2015 + i % 10, i % 7, i % 4 * 20.0, i * 991.7, i * 313.1, i * 77.3,
+         i * 5011.9, i * 6393.0, buildings[i % 5], i % 12 + 1)
         for i in range(40)
     ]
-    sdf = spark.createDataFrame(
-        rows,
-        "id long, capex_items array<struct<amount:double,pis_date:date,"
-        "classification:string,bonus_override:double>>",
-    ).select(
-        "*",
-        (F.col("id") % 10 + 2015).cast("int").alias("acq_year"),
-        (F.col("id") % 7).cast("int").alias("years_elapsed"),
-        (F.col("id") % 4 * 20.0).alias("bonus_rate"),
-        (F.col("id") * 991.7).alias("amt_5yr"),
-        (F.col("id") * 313.1).alias("amt_7yr"),
-        (F.col("id") * 77.3).alias("amt_15yr"),
-        (F.col("id") * 5011.9).alias("amt_bldg"),
-        (F.col("id") * 6393.0).alias("total_depreciable"),
-        F.when(F.col("id") % 5 == 0, "27.5yr").when(F.col("id") % 5 == 1, "39yr")
-        .when(F.col("id") % 5 == 2, "30yr").when(F.col("id") % 5 == 3, "40yr")
-        .otherwise("junk").alias("building_class"),
-        (F.col("id") % 12 + 1).cast("int").alias("pis_month"),
-    )
-    ye = F.col("years_elapsed")
-    bonus = F.col("bonus_rate")
-    acc = dep.accumulated_cols(ye, bonus)
-    cur = dep.year_depreciation_cols(ye + 1, bonus)
-    y1 = dep.year_depreciation_cols(F.lit(1), bonus)
-    pairs = [
-        (dep.capex_total(F.col("capex_items"),
-                         F.col("acq_year") + ye - 1, accumulated=True),
-         dep.capex_total_sql("capex_items", "(acq_year + years_elapsed - 1)",
-                             accumulated=True)),
-        (dep.capex_total(F.col("capex_items"),
-                         F.col("acq_year") + ye, accumulated=False),
-         dep.capex_total_sql("capex_items", "(acq_year + years_elapsed)",
-                             accumulated=False)),
-        (acc["acc_5yr"] + acc["acc_7yr"] + acc["acc_15yr"] + acc["acc_bldg"],
-         dep._sql_class_sum(dep._sql_short_acc_dep, "years_elapsed")),
-        (dep.standard_depreciation(ye), dep._sql_standard_dep("years_elapsed")),
-        (cur["dep_5yr"] + cur["dep_7yr"] + cur["dep_15yr"] + cur["dep_bldg"],
-         dep._sql_class_sum(dep._sql_short_year_dep, "(years_elapsed + 1)")),
-        (y1["dep_5yr"] + y1["dep_7yr"] + y1["dep_15yr"] + y1["dep_bldg"],
-         dep._sql_class_sum(dep._sql_short_year_dep, "1")),
+    pools = [
+        (i, k, 1000.0 + i * 37.3,
+         datetime.date(2015 + (i * 3) % 12, 1 + (i * 5) % 12, 1 + (i * 7) % 28),
+         c, None if i % 3 else 80.0)
+        for i in range(40)
+        for k, c in enumerate(kinds[: 1 + i % 7])
     ]
-    sel = []
-    for j, (col_form, sql_text) in enumerate(pairs):
-        sel += [col_form.alias(f"c{j}"), F.expr(sql_text).alias(f"s{j}")]
-    for r in sdf.select(*sel).collect():
-        for j in range(len(pairs)):
-            assert r[f"c{j}"] == r[f"s{j}"], (j, dict(r.asDict()))
+    cols = ["id", "acq_year", "years_elapsed", "bonus_rate", "amt_5yr", "amt_7yr",
+            "amt_15yr", "amt_bldg", "total_depreciable", "building_class", "pis_month"]
+    sdf = spark.createDataFrame(
+        [(*g, [p[2:] for p in pools if p[0] == g[0]]) for g in grid],
+        "id long, acq_year int, years_elapsed int, bonus_rate double, amt_5yr double,"
+        " amt_7yr double, amt_15yr double, amt_bldg double, total_depreciable double,"
+        " building_class string, pis_month int, capex_items array<struct<amount:double,"
+        "pis_date:date,classification:string,bonus_override:double>>",
+    )
+
+    years = {"acc": "years_elapsed", "cur": "(years_elapsed + 1)", "y1": "1"}
+    engine = {
+        f"{t}_{k[4:]}": v
+        for t, y in years.items()
+        for k, v in dep._class_sqls(y, "bonus_rate", accumulated=t == "acc").items()
+    }
+    engine["capex_acc"] = dep.capex_total_sql(
+        "capex_items", "(acq_year + years_elapsed - 1)", accumulated=True
+    )
+    engine["capex_cur"] = dep.capex_total_sql(
+        "capex_items", "(acq_year + years_elapsed)", accumulated=False
+    )
+    outs = ["should_have_taken", "did_take", "catch_up_adjustment",
+            "current_year_total", "total_current_year_benefit"]
+    got = dep.with_481a_capex(sdf).select(
+        "id",
+        *[F.round(F.expr(v), 2).alias(k) for k, v in engine.items()],
+        *[F.round(c, 2).alias(c) for c in outs],
+    )
+
+    mirror = {}
+    for t, y in years.items():
+        for c in dep.SHORT_CLASSES:
+            fn = sqlgen.sql_short_acc_dep if t == "acc" else sqlgen.sql_short_year_dep
+            mirror[f"{t}_{c}"] = fn(f"amt_{c}", "bonus_rate", c, y)
+        fn = sqlgen.sql_bldg_acc_dep if t == "acc" else sqlgen.sql_bldg_year_dep
+        mirror[f"{t}_bldg"] = fn("amt_bldg", "building_class", y, "pis_month")
+    mirror["capex_acc"] = "capex_acc"
+    mirror["capex_cur"] = "capex_cur"
+
+    def total(t, capex):
+        terms = " + ".join(mirror[f"{t}_{c}"] for c in [*dep.SHORT_CLASSES, "bldg"])
+        return f"(({terms}) + {capex})"
+
+    should, cur, y1 = total("acc", "capex_acc"), total("cur", "capex_cur"), total("y1", "capex_cur")
+    did = sqlgen.sql_standard_dep("total_depreciable", "building_class", "years_elapsed", "pis_month")
+    zero = sqlgen.flit(0.0)
+    mirror.update(
+        should_have_taken=f"CASE WHEN years_elapsed = 0 THEN {zero} ELSE {should} END",
+        did_take=f"CASE WHEN years_elapsed = 0 THEN {zero} ELSE {did} END",
+        catch_up_adjustment=f"CASE WHEN years_elapsed = 0 THEN {zero} ELSE {should} - {did} END",
+        current_year_total=f"CASE WHEN years_elapsed = 0 THEN {y1} ELSE {cur} END",
+        total_current_year_benefit=(
+            f"CASE WHEN years_elapsed = 0 THEN {y1} ELSE {should} - {did} + {cur} END"
+        ),
+    )
+    cls = " ".join(f"WHEN classification = '{k}' THEN '{v}'" for k, v in dep.CAPEX_CLASS_MAP.items())
+    cur_dep = qc._sql_pool_dep(
+        "amount", "pb", "cls", "(acq_year + years_elapsed - year(pis_date) + 1)", "month(pis_date)"
+    )
+    acc_dep = qc._sql_pool_acc(
+        "amount", "pb", "cls", "((acq_year + years_elapsed - 1) - year(pis_date) + 1)",
+        "month(pis_date)",
+    )
+
+    def fold(expr):
+        # per-class left fold in pool-array order, then the classes in
+        # CAPEX_CLASSES order: capex_total_sql's association
+        return " + ".join(
+            f"coalesce(list_reduce(list({expr} ORDER BY k) FILTER (WHERE cls = '{c}'),"
+            f" (x, y) -> x + y), {zero})"
+            for c in dep.CAPEX_CLASSES
+        )
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE g (id BIGINT, acq_year INT, years_elapsed INT, bonus_rate DOUBLE,"
+        " amt_5yr DOUBLE, amt_7yr DOUBLE, amt_15yr DOUBLE, amt_bldg DOUBLE,"
+        " total_depreciable DOUBLE, building_class VARCHAR, pis_month INT)"
+    )
+    con.executemany(f"INSERT INTO g VALUES ({', '.join('?' * len(cols))})", grid)
+    con.execute(
+        "CREATE TABLE pools (id BIGINT, k INT, amount DOUBLE, pis_date DATE,"
+        " classification VARCHAR, bonus_override DOUBLE)"
+    )
+    con.executemany("INSERT INTO pools VALUES (?, ?, ?, ?, ?, ?)", pools)
+    selected = ", ".join(f"{sqlgen.sql_round2(v)} AS {k}" for k, v in mirror.items())
+    rows = con.execute(f"""
+WITH pr AS (
+  SELECT p.*, g.acq_year, g.years_elapsed,
+         (CASE {cls} ELSE '5yr' END) AS cls,
+         coalesce(p.bonus_override, {sqlgen.sql_bonus_rate('p.pis_date')}) AS pb
+  FROM pools p JOIN g USING (id)
+),
+pa AS (
+  SELECT id, {fold(acc_dep)} AS capex_acc, {fold(cur_dep)} AS capex_cur
+  FROM pr GROUP BY id
+)
+SELECT id, {selected} FROM g JOIN pa USING (id)
+""").fetchall()
+    want = {r[0]: dict(zip(mirror, r[1:])) for r in rows}
+    assert len(want) == len(grid)
+    for r in got.collect():
+        g = r.asDict()
+        assert {k: g[k] for k in mirror} == want[g["id"]], g["id"]

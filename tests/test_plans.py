@@ -317,3 +317,18 @@ def test_signature_plan_cost_flat_in_width(spark):
     mh3 = _plan_build_commands(lambda: textops.minhash_signatures(df, n_hashes=3))
     mh24 = _plan_build_commands(lambda: textops.minhash_signatures(df, n_hashes=24))
     assert mh24 <= mh3 + 100, (mh3, mh24)
+
+
+def test_depreciation_plan_cost_is_sql_text(spark):
+    """The depreciation chain the audited_quotes workload runs builds its
+    MACRS lookups as SQL text: building the plan takes a few thousand
+    py4j commands at most (as Column trees it took ~12,000)."""
+    from pdf_parser_spark import depreciation as dep
+
+    inp = qr._depr_inputs(spark, SF, 101, 0)
+    n = _plan_build_commands(
+        lambda: dep.depreciation_schedule(
+            dep.with_481a(dep.with_engine_inputs(inp)), full_horizon=True
+        )
+    )
+    assert n <= 3000, n
