@@ -7,11 +7,14 @@ designed for scale:
 - exact dedup            — hash-groupBy on content digest (one shuffle
                            on the digest, AQE-coalesced);
 - MinHash + LSH dedup    — shingle → per-hash min (digest-based, no
-                           UDF) → band keys → bucket self-join; the
-                           shuffle key is the band hash, so candidate
-                           generation is O(bucket²) not O(n²);
+                           UDF) → sorted signature slices as band keys →
+                           one window per bucket hands each member its
+                           later members, exploded into pairs (no
+                           self-join); the shuffle key is the band, so
+                           candidate generation is O(bucket²) not O(n²);
 - SimHash                — 64-bit sign-aggregated digest, hamming
-                           ball candidate pairs;
+                           ball candidate pairs, blocked on quarters
+                           through the same bucket window;
 - n-gram Jaccard         — exact verification on candidate pairs (or
                            full self-join at small scale);
 - language id            — stopword-hit scoring over 7 languages;
@@ -33,6 +36,7 @@ from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from .functions.hashing import splitmix64 as _splitmix
 
@@ -97,6 +101,42 @@ def exact_duplicates(
 
 
 # ----------------------------------------------------------------------
+# bucket → candidate pairs (shared by MinHash-LSH and SimHash)
+# ----------------------------------------------------------------------
+def _bucket_pairs(
+    keyed: DataFrame, keys: List[str], item: Column, max_size: Optional[int],
+) -> DataFrame:
+    """Distinct pairs ``(a, b)`` of the ``item`` structs that share a
+    bucket, with ``a.id < b.id``; each caller projects its own columns.
+
+    One window per bucket, ordered by ``item``, hands every member the
+    list of the members after it, and one ``explode`` of that list emits
+    the member's pairs. Every row stays O(bucket size), and the window
+    buffers a bucket's rows where they can spill, so a large bucket
+    streams its pairs. Two shapes that look equivalent are not: one
+    array of all of a bucket's pairs is O(bucket²) in a single row, and
+    a codegen'd generator over a grouped member list copies the whole
+    list into each row it emits, all of them buffered at once.
+
+    ``max_size`` drops buckets with more members before any list is
+    built: a count over the same window, so the lists reuse its
+    partitioning and sort (no second exchange) and no task ever holds
+    an over-full bucket's list."""
+    # one column for both windows to order by, so they share one sort
+    members = keyed.select(*keys, item.alias("a"))
+    bucket = Window.partitionBy(*keys).orderBy("a")
+    if max_size is not None:
+        whole = bucket.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        members = members.withColumn("_n", F.count("*").over(whole)).filter(F.col("_n") <= max_size)
+    later = F.collect_list("a").over(bucket.rowsBetween(1, Window.unboundedFollowing))
+    return (
+        members.select("a", later.alias("_later"))
+        .select("a", F.explode(F.expr("filter(_later, y -> y.id > a.id)")).alias("b"))
+        .distinct()
+    )
+
+
+# ----------------------------------------------------------------------
 # MinHash + LSH
 # ----------------------------------------------------------------------
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (prime): products stay < 2^62
@@ -112,46 +152,66 @@ def minhash_coeffs(n_hashes: int) -> List[tuple]:
     ]
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n_hashes: int = 12, shingle_k: int = 3,
+def _shingle_digests(
+    df: DataFrame, text_col: str, id_col: str, shingle_k: int,
 ) -> DataFrame:
-    """(id, hash_idx, min_hash): minhash via a universal hash family.
-
-    Base digest: md5 → 60-bit int ONCE per shingle, then
-    ``h_i(m) = (a_i·(m mod p) + b_i) mod p`` per hash index — n_hashes
-    cheap integer passes over a materialized int array instead of the
-    round-1 n_hashes **md5** passes over the shingle strings (md5 was
-    ~the whole minhash cost). Still ``array_min``/``transform`` — no
-    explode, no shuffle, and an exact DuckDB oracle from the same
-    literal (a_i, b_i, p).
-    """
+    """(id, _mh): the md5 → 60-bit int digest of every shingle, reduced
+    mod p ONCE per shingle; each minhash is then one cheap integer pass
+    over this array (:func:`_minhash_sig_sql`)."""
     # materialize the word array, then the int digests, as physical
     # columns FIRST: a Column closure referenced inside a HOF lambda is
     # inlined per reference, so the tokenizer would otherwise re-run once
     # per shingle and the md5 pass once per hash index
-    hashed = df.select(F.col(id_col), norm_words(F.col(text_col)).alias("_w")).select(
+    return df.select(F.col(id_col), norm_words(F.col(text_col)).alias("_w")).select(
         F.col(id_col),
         F.transform(word_shingles(F.col("_w"), shingle_k), lambda s: _hash64(s) % MINHASH_P).alias("_mh"),
-    )
-    return (
-        hashed.select(F.col(id_col), F.explode(F.expr(_minhash_sig_sql(n_hashes))).alias("h"))
-        .select(id_col, F.col("h.hash_idx").alias("hash_idx"), F.col("h.min_hash").alias("min_hash"))
-        .filter(F.col("min_hash").isNotNull())
     )
 
 
 @lru_cache(maxsize=16)
 def _minhash_sig_sql(n_hashes: int) -> str:
-    """The ``n_hashes`` (hash_idx, min_hash) structs over ``_mh`` as one
-    SQL string: one py4j call per plan, where a Column tree costs a
-    round trip per node (CLAUDE.md). Every literal fits an INT, so the
-    types are those of the ``F.lit`` form: int index, bigint min."""
-    return "array(" + ", ".join(
-        f"named_struct('hash_idx', {i}, 'min_hash', "
-        f"array_min(transform(_mh, m -> ({a} * m + {b}) % {MINHASH_P})))"
-        for i, (a, b) in enumerate(minhash_coeffs(n_hashes))
-    ) + ")"
+    """The signature over ``_mh`` as one SQL string: one py4j call per
+    plan, where a Column tree costs a round trip per node. Every
+    literal fits an INT, so each minhash is a bigint.
+
+    "No shingles" is a NULL array, not a filter: ``posexplode(NULL)``
+    emits no rows, while a filter on ``_mh`` is pushed below the
+    projections that build it and re-inlines the tokenizer into the
+    shingle lambda."""
+    mins = ", ".join(
+        f"array_min(transform(_mh, m -> ({a} * m + {b}) % {MINHASH_P}))"
+        for a, b in minhash_coeffs(n_hashes)
+    )
+    return f"IF(size(_mh) > 0, array({mins}), NULL)"
+
+
+def minhash_signatures(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+    n_hashes: int = 12, shingle_k: int = 3,
+) -> DataFrame:
+    """(id, hash_idx, min_hash): minhash via a universal hash family
+    ``h_i(m) = (a_i·(m mod p) + b_i) mod p``, one row per hash of each
+    document that has at least one shingle. No UDF, no shuffle, and an
+    exact DuckDB oracle from the same literal (a_i, b_i, p).
+
+    The generator reads the signature expression, not a column: over a
+    bare column Catalyst infers a ``size(col) > 0`` filter below the
+    ``posexplode`` and pushes it into the tokenizing projections."""
+    return _shingle_digests(df, text_col, id_col, shingle_k).select(
+        F.col(id_col), F.posexplode(F.expr(_minhash_sig_sql(n_hashes))).alias("hash_idx", "min_hash")
+    )
+
+
+@lru_cache(maxsize=16)
+def _lsh_bands_sql(n_hashes: int, rows: int) -> str:
+    """The band keys of ``_sig`` as one SQL array: band b is the sorted
+    slice of hashes ``b*rows .. b*rows+rows-1``, so when ``rows`` does
+    not divide ``n_hashes`` the last band is short. NULL when ``_sig``
+    is (a document without shingles gets no band rows)."""
+    keys = ", ".join(
+        f"array_sort(slice(_sig, {start + 1}, {rows}))" for start in range(0, n_hashes, rows)
+    )
+    return f"IF(_sig IS NULL, NULL, array({keys}))"
 
 
 def lsh_band_pairs(
@@ -161,56 +221,31 @@ def lsh_band_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any LSH band bucket.
 
-    Band key = md5 of the band's concatenated minhashes. The self-join
-    shuffles on (band_idx, band_key) — bucket-local, never all-pairs.
+    Band key = the band's sorted slice of the signature array (exact
+    equality, no digest), emitted by one ``posexplode``; band index =
+    hash index // (n_hashes // bands). Each bucket is one window whose
+    members are expanded into pairs (:func:`_bucket_pairs`): one
+    shuffle on (band_idx, band_key), bucket-local, never all-pairs, and
+    no self-join (which would compute the signatures twice, once per
+    side).
 
-    ``max_bucket_size`` drops buckets with more members before the
-    self-join: one mega-cluster (10^6 boilerplate copies) makes its
-    bucket quadratic (10^12 pairs). Members of dropped buckets are
-    byte-near-identical en masse — exact dedup (:func:`exact_duplicates`)
-    is the right operator for them, not pairwise LSH; the cap bounds
-    every bucket's pair count to max_bucket_size² by construction. The
-    frequency agg is map-side combinable on the same (band_idx,
-    band_key) key the join shuffles on."""
-    rows = n_hashes // bands
-    sigs = minhash_signatures(df, text_col, id_col, n_hashes, shingle_k)
-    banded = (
-        sigs.withColumn("band_idx", (F.col("hash_idx") / rows).cast("int"))
-        .groupBy(id_col, "band_idx")
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.transform(
-                        F.sort_array(F.collect_list("min_hash")), lambda m: m.cast("string")
-                    ),
-                )
-            ).alias("band_key")
-        )
+    ``max_bucket_size`` drops buckets with more members before any
+    member list is built: one mega-cluster (10^6 boilerplate copies)
+    makes its bucket quadratic (10^12 pairs). Members of dropped buckets
+    are byte-near-identical en masse — exact dedup
+    (:func:`exact_duplicates`) is the right operator for them, not
+    pairwise LSH; the cap bounds every bucket's pair count to
+    max_bucket_size² by construction. The bucket count is a window over
+    the same (band_idx, band_key) partitioning and sort the pairs reuse."""
+    keyed = _shingle_digests(df, text_col, id_col, shingle_k).select(
+        F.col(id_col), F.expr(_minhash_sig_sql(n_hashes)).alias("_sig")
+    ).select(
+        F.col(id_col),
+        F.posexplode(F.expr(_lsh_bands_sql(n_hashes, n_hashes // bands))).alias("band_idx", "band_key"),
     )
-    if max_bucket_size is not None:
-        keep = (
-            banded.groupBy("band_idx", "band_key")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= max_bucket_size)
-            .select("band_idx", "band_key")
-        )
-        banded = banded.join(keep, ["band_idx", "band_key"], "left_semi")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    item = F.struct(F.col(id_col).alias("id"))
+    pairs = _bucket_pairs(keyed, ["band_idx", "band_key"], item, max_bucket_size)
+    return pairs.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
 
 
 def ngram_jaccard_pairs(
@@ -312,45 +347,34 @@ def simhash_pairs(
     """Near-dup candidates: simhash hamming distance ≤ max_hamming.
 
     Scale path: block on 4 simhash quarters (pigeonhole — any pair
-    within hamming 3 agrees on ≥1 quarter), join per block.
-    ``max_block_size`` drops over-full blocks before the self-join (the
-    mega-cluster guard, same rationale as
-    :func:`lsh_band_pairs.max_bucket_size`).
+    within hamming 3 agrees on ≥1 quarter), emitted by one
+    ``posexplode``; each block is one window whose members are paired
+    (:func:`_bucket_pairs`), no self-join; Catalyst pushes the Hamming
+    filter below the pairs' ``distinct``. ``max_block_size`` drops
+    over-full blocks before any member list is built (the mega-cluster
+    guard, same rationale as :func:`lsh_band_pairs.max_bucket_size`).
     """
-    sims = df
-    quarter = bits // 4
-    blocks = []
-    for q in range(4):
-        key = F.shiftright(F.col("simhash"), q * quarter).bitwiseAND(F.lit((1 << quarter) - 1))
-        blocks.append(sims.select(id_col, "simhash", F.lit(q).alias("block_q"), key.alias("block_key")))
-    blocked = blocks[0]
-    for b in blocks[1:]:
-        blocked = blocked.unionByName(b)
-    if max_block_size is not None:
-        keep = (
-            blocked.groupBy("block_q", "block_key")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= max_block_size)
-            .select("block_q", "block_key")
-        )
-        blocked = blocked.join(keep, ["block_q", "block_key"], "left_semi")
-    a, b = blocked.alias("a"), blocked.alias("b")
-    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    return (
-        a.join(
-            b,
-            (F.col("a.block_q") == F.col("b.block_q"))
-            & (F.col("a.block_key") == F.col("b.block_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(xor).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    keyed = df.select(
+        F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh")).alias("_it"),
+        F.posexplode(F.expr(_simhash_quarters_sql(bits))).alias("block_q", "block_key"),
     )
+    hamming = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
+    return (
+        _bucket_pairs(keyed, ["block_q", "block_key"], F.col("_it"), max_block_size)
+        .filter(hamming <= max_hamming)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), hamming.alias("hamming"))
+    )
+
+
+@lru_cache(maxsize=16)
+def _simhash_quarters_sql(bits: int) -> str:
+    """The four block keys of ``simhash`` (its ``bits // 4``-bit
+    quarters, low quarter first) as one SQL array."""
+    quarter = bits // 4
+    mask = (1 << quarter) - 1
+    return "array(" + ", ".join(
+        f"shiftright(simhash, {q * quarter}) & {mask}" for q in range(4)
+    ) + ")"
 
 
 # ----------------------------------------------------------------------
@@ -398,19 +422,8 @@ def connected_components(
     SparkSession are unaffected. The clamp tracks cluster size
     (defaultParallelism = total cores), so it is not a local-mode hack.
     """
-    spark = pairs.sparkSession
-    e = (
-        pairs.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
-            F.least(F.col(id_a), F.col(id_b)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_part = max(spark.sparkContext.defaultParallelism, 8)
-    e = _cc_loop(e, n_part, max_iter)
-    # a star forest: every edge is (member, root); roots have no u-row
+    e = _star_forest(pairs, id_a, id_b, max_iter)
+    # every edge is (member, root); roots have no u-row
     roots = e.select(F.col("v").alias("node_id")).distinct()
     return (
         e.select(F.col("u").alias("node_id"), F.col("v").alias("cluster_id"))
@@ -418,9 +431,20 @@ def connected_components(
     )
 
 
-def _cc_loop(e: DataFrame, n_part: int, max_iter: int) -> DataFrame:
-    """Alternating large-star/small-star rounds until the edge set is a
-    star forest; every round's result is eagerly checkpointed.
+def _star_forest(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataFrame:
+    """The converged star forest over ``pairs``: distinct (u, v) edges,
+    one per non-root node ``u``, pointing at its component's minimum
+    node ``v``.
+
+    The input step normalizes every edge to u > v, drops self-loops and
+    eagerly checkpoints the result, duplicates included: the first
+    round's ``distinct`` removes them, so a separate one would be one
+    more exchange for nothing. The checkpoint stays, because each round
+    references its input more than once, and an unmaterialized input
+    would re-run the whole candidate-generation plan once per reference.
+
+    Then alternating large-star/small-star rounds until the edge set is
+    a star forest; every round's result is eagerly checkpointed.
 
     A star forest (every ``u`` has exactly one ``v``, and no ``v`` is
     also a ``u``) is the contraction's fixpoint — a round maps it to
@@ -436,6 +460,15 @@ def _cc_loop(e: DataFrame, n_part: int, max_iter: int) -> DataFrame:
     key, so EnsureRequirements inserts no further exchange and the
     session's ``spark.sql.shuffle.partitions`` never applies inside the
     loop."""
+    n_part = max(pairs.sparkSession.sparkContext.defaultParallelism, 8)
+    e = (
+        pairs.select(
+            F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
+            F.least(F.col(id_a), F.col(id_b)).alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .localCheckpoint(eager=True)
+    )
     for _ in range(max_iter):
         e = _cc_round(e, n_part).localCheckpoint(eager=True)
         if _cc_not_star(e, n_part).isEmpty():
@@ -518,17 +551,17 @@ def dedup_clusters(
     only — exactly what :func:`exact_duplicates`'s ``canonical_id``
     already provides for byte-identical dups, extended to fuzzy.
     """
-    cc = connected_components(pairs, id_a=id_a, id_b=id_b, max_iter=max_iter)
-    labels = cc.withColumnRenamed("node_id", id_col)
+    forest = _star_forest(pairs, id_a, id_b, max_iter)
+    # a document outside every edge, or a root (no u-row), is its own
+    # cluster's canonical
+    cluster = F.coalesce(F.col("v"), F.col(id_col))
     return (
         df.select(id_col)
-        .join(labels, id_col, "left")
+        .join(forest.withColumnRenamed("u", id_col), id_col, "left")
         .select(
             F.col(id_col),
-            F.coalesce(F.col("cluster_id"), F.col(id_col)).alias("cluster_id"),
-            (F.coalesce(F.col("cluster_id"), F.col(id_col)) == F.col(id_col)).alias(
-                "is_canonical"
-            ),
+            cluster.alias("cluster_id"),
+            (cluster == F.col(id_col)).alias("is_canonical"),
         )
     )
 
@@ -855,8 +888,6 @@ def top_k_per_key(
     ``order_cols`` MUST be made total by including ``tiebreak_col``
     (unique), or tied rows get engine-dependent ranks (the repo's
     ROWS/RANGE lesson). The result is independent of ``n_salt``."""
-    from pyspark.sql.window import Window
-
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(tiebreak_col)), F.lit(n_salt))
     )

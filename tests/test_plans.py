@@ -258,6 +258,9 @@ def test_textops_lambdas_never_retokenize(spark):
     )
     frames = {
         "minhash_signatures": textops.minhash_signatures(df),
+        "lsh_band_pairs": textops.lsh_band_pairs(df),
+        "lsh_band_pairs capped": textops.lsh_band_pairs(df, max_bucket_size=2),
+        "simhash_pairs": textops.simhash_pairs(textops.simhash(df)),
         "simhash": textops.simhash(df, bits=64),
         "simhash pruned": textops.simhash(df, bits=64).select("doc_id", "simhash"),
         "ngram_jaccard_pairs": textops.ngram_jaccard_pairs(df),
@@ -270,6 +273,38 @@ def test_textops_lambdas_never_retokenize(spark):
         assert bodies, f"{name}: no lambda in the plan"
         for body in bodies:
             assert "regexp_replace" not in body, f"{name} re-tokenizes in a lambda: {body}"
+
+
+def test_near_dup_candidates_compute_signatures_once(spark):
+    """Candidate generation expands each bucket in one window instead
+    of self-joining the bucketed relation: a self-join over the band
+    ``Generate`` gets no exchange reuse, so each side re-ran shingling,
+    md5 and every minhash. So: no Join, the md5 shingle digest appears
+    once in each LSH plan, and the bucket cap filters rows before any
+    member list (``collect_list``) is built, never after it."""
+    import re
+
+    from pdf_parser_spark import textops
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d e"), (3, "x y")], "doc_id long, text string"
+    )
+    plans = {
+        "lsh": textops.lsh_band_pairs(df),
+        "lsh capped": textops.lsh_band_pairs(df, max_bucket_size=2),
+        "simhash": textops.simhash_pairs(textops.simhash(df)),
+    }
+    for name, frame in plans.items():
+        p = frame._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in p, f"{name} plan joins:\n{p}"
+        if name.startswith("lsh"):
+            assert p.count("md5(") == 1, f"{name} digests shingles more than once:\n{p}"
+        if name == "lsh capped":
+            lines = p.splitlines()
+            cap = [i for i, l in enumerate(lines) if re.search(r"Filter \(_n#\d+L <= 2\)", l)]
+            collect = [i for i, l in enumerate(lines) if "collect_list" in l]
+            assert len(cap) == 1 and collect, p
+            assert cap[0] > max(collect), f"cap filter above the member lists:\n{p}"
 
 
 def _plan_build_commands(build) -> int:

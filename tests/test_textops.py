@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -203,6 +207,88 @@ def test_lsh_mega_bucket_cap(spark):
     assert len(uncapped) == 30 * 29 // 2 + 1  # quadratic without the cap
 
 
+_LARGE_BUCKET = """
+from pyspark.sql import functions as F
+from pdf_parser_spark import textops
+from pdf_parser_spark.session import get_spark
+
+spark = get_spark("large-bucket", master="local[2]", shuffle_partitions=4)
+df = spark.range(5000).select(F.col("id").alias("doc_id"), F.lit("one boilerplate page").alias("text"))
+print(textops.lsh_band_pairs(df, n_hashes=4, bands=1).count())
+spark.stop()
+"""
+
+
+def test_one_large_bucket_streams_its_pairs():
+    """An uncapped bucket of 5,000 identical documents yields all of its
+    12,497,500 pairs on a 512 MB driver heap, in a subprocess with its
+    own session. The pairs must stream as rows: one array holding a
+    bucket's pairs, or a member list copied into each of a bucket's
+    rows, is O(bucket²) memory in one task, and both shapes run out of
+    heap here."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _LARGE_BUCKET],
+        cwd=repo, capture_output=True, text=True, timeout=600,
+        env={**os.environ, "SPARK_DRIVER_MEMORY": "512m"},
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.split()[-1] == str(5000 * 4999 // 2)
+
+
+def _lsh_reference(sig_rows, rows, max_bucket_size):
+    """Driver-side LSH: bucket each document by (hash_idx // rows,
+    sorted band tuple) from its minhash rows, drop buckets over the cap,
+    list every pair with a < b (tests only)."""
+    bands = {}
+    for r in sig_rows:
+        bands.setdefault((r["doc_id"], r["hash_idx"] // rows), []).append(r["min_hash"])
+    buckets = {}
+    for (doc, band), mins in bands.items():
+        buckets.setdefault((band, tuple(sorted(mins))), set()).add(doc)
+    return {
+        (a, b)
+        for members in buckets.values()
+        if max_bucket_size is None or len(members) <= max_bucket_size
+        for a in members
+        for b in members
+        if a < b
+    }
+
+
+def test_lsh_band_pairs_match_driver_reference(spark):
+    """lsh_band_pairs equals the driver-side banding of its own minhash
+    rows for several band layouts, including a short last band (12
+    hashes in 5 bands of 2 rows is 6 bands), with and without the bucket
+    cap. Empty, null and under-k-word texts have no shingles, so they
+    get no signature and never pair, even with each other."""
+    rows = [(i, "identical boilerplate text repeated across the whole cluster") for i in range(8)]
+    rows += [
+        (20, "the quick brown fox jumps over the lazy dog and runs away fast"),
+        (21, "the quick brown fox jumps over the lazy dog and runs away fast today"),
+        (22, "the quick brown fox jumps over the lazy dog and walks away slowly"),
+        (23, "completely different content about database engines and query planners"),
+        (30, ""), (31, None), (32, "one"), (33, "one two"), (34, "one two"), (35, None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    no_shingles = {30, 31, 32, 33, 34, 35}
+    for n_hashes, bands in [(12, 4), (12, 6), (12, 5)]:
+        sig_rows = textops.minhash_signatures(df, n_hashes=n_hashes).collect()
+        assert not no_shingles & {r["doc_id"] for r in sig_rows}
+        for cap in (None, 5):
+            got = {
+                (r["id_a"], r["id_b"])
+                for r in textops.lsh_band_pairs(
+                    df, n_hashes=n_hashes, bands=bands, max_bucket_size=cap
+                ).collect()
+            }
+            want = _lsh_reference(sig_rows, n_hashes // bands, cap)
+            assert got == want, (n_hashes, bands, cap)
+            assert not no_shingles & {d for pair in got for d in pair}
+            # the 8-copy cluster pairs fully without the cap, not at all with it
+            assert ((0, 7) in got) == (cap is None), (n_hashes, bands, cap)
+
+
 def test_exact_duplicates_without_ids(spark, docs):
     groups = textops.exact_duplicates(docs, with_ids=False).collect()
     assert len(groups) == 1
@@ -398,7 +484,6 @@ def test_connected_components_star_forest_stops_after_one_round(spark):
             F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
         .localCheckpoint(eager=True),
     )
     r, n_round = _jobs_of(
