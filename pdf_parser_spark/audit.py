@@ -5,8 +5,8 @@ rule requires every stage to write per-partition lineage + extraction
 metrics (docs, bytes, failures, decode fallbacks) to an audit table so
 runs RESUME from the last committed checkpoint.
 
-Design (Iceberg-commit emulation over plain parquet — swap the two
-``_write``/``_read`` helpers for an Iceberg catalog in production):
+Design (Iceberg-commit emulation over plain parquet — ``_append_audit``
+is the table's one write and the swap point for an Iceberg append):
 
 - the input is split into ``n_buckets`` deterministic url-hash buckets
   (``pmod(xxhash64(url), n_buckets)``) — the commit unit. A bucket is
@@ -14,23 +14,39 @@ Design (Iceberg-commit emulation over plain parquet — swap the two
   ``out/bucket=K/`` and ONLY THEN the audit rows for that bucket are
   appended. A crash between the two leaves an uncommitted bucket that
   is simply re-done (output overwrite is idempotent per bucket).
-- resume = read the audit table, prune committed buckets from the
-  input BY BUCKET ID (partition pruning — cheaper than a row-level
-  anti-join).
-- metrics aggregate map-side (groupBy on the small (run, bucket,
-  partition) key) — negligible shuffle at any scale. The handful of
-  audit rows is collected once: the driver appends them and sums them
-  into the call's returned metrics.
+- lineage: Spark's file writer names each data file
+  ``part-<task partition id>-…``, so the re-read of the written output
+  takes each row's producing task from ``_metadata.file_name``. An
+  audit row's ``partition_id`` is the extraction task that wrote the
+  rows, whatever split reads them back; the data schema is unchanged.
+- metrics aggregate in one distributed job over that re-read (groupBy
+  on the small (bucket, task) key). The handful of audit rows is
+  collected once: the driver appends them and sums them into the
+  call's returned metrics.
+- the append is a driver-side pyarrow write of one parquet file under a
+  hidden name, renamed into view (atomic). Spark and
+  ``committed_buckets`` skip names starting with ``.`` or ``_``, so a
+  crash mid-append commits nothing. Every row of one append carries one
+  UTC ``committed_at``, taken after the data commit.
+- resume = read the ``bucket`` column of the visible audit files with
+  pyarrow (no Spark job), prune committed buckets from the input BY
+  BUCKET ID (partition pruning — cheaper than a row-level anti-join).
 """
 
 from __future__ import annotations
 
 import datetime
 import os
+import uuid
 from typing import List, Optional
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from pyspark.sql.types import (
     IntegerType,
@@ -44,6 +60,8 @@ from pyspark.sql.types import (
 from .extract import extract_documents
 
 BUCKET_COL = "_bucket"
+# the task that wrote a row, when known from the written file's name
+_TASK_COL = "_task"
 
 # explicit schema for the audit table: reads never depend on parquet
 # schema inference, so an all-empty (or not-yet-written) table behaves
@@ -63,6 +81,12 @@ AUDIT_SCHEMA = StructType(
         StructField("bucket", IntegerType()),
     ]
 )
+# the same layout for the driver-side append: timestamp[us, tz=UTC],
+# int32 ids, int64 counters
+_ARROW_SCHEMA = to_arrow_schema(AUDIT_SCHEMA)
+_COUNTERS = (
+    "docs", "bytes", "failures", "decode_fallbacks", "decrypted_docs", "pdf_docs", "html_docs"
+)
 
 
 def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
@@ -72,10 +96,15 @@ def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
-    """AUDIT_SCHEMA rows: one per (bucket, task partition) — lineage of
-    which task produced which slice, with the north rule's counters."""
+    """AUDIT_SCHEMA rows without ``committed_at`` (the append stamps it):
+    one per (bucket, task) — lineage of which task produced which slice,
+    with the north rule's counters. The task is ``extracted``'s
+    ``_task`` column when it has one (a re-read of written files), else
+    the frame's own partition, which is the producing task when
+    ``extracted`` is the extraction itself."""
+    task = F.col(_TASK_COL) if _TASK_COL in extracted.columns else F.spark_partition_id()
     return (
-        extracted.withColumn("_pid", F.spark_partition_id())
+        extracted.withColumn("_pid", task)
         .groupBy(BUCKET_COL, "_pid")
         .agg(
             F.count("*").alias("docs"),
@@ -91,34 +120,57 @@ def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
         .select(
             F.lit(run_id).alias("run_id"),
             F.col("_pid").alias("partition_id"),
-            "docs",
-            "bytes",
-            "failures",
-            "decode_fallbacks",
-            "decrypted_docs",
-            "pdf_docs",
-            "html_docs",
-            F.current_timestamp().alias("committed_at"),
+            *_COUNTERS,
             F.col(BUCKET_COL).alias("bucket"),
         )
     )
 
 
-def committed_buckets(spark: SparkSession, audit_path: str) -> List[int]:
-    if not os.path.exists(audit_path):
+def committed_buckets(audit_path: str) -> List[int]:
+    """Buckets with a committed audit row, read from the ``bucket``
+    column of the audit files with pyarrow — no Spark job. Hidden
+    ``.``/``_`` names (an in-flight append, Spark's ``_SUCCESS``) are
+    skipped, as Spark's reader skips them."""
+    try:
+        names = os.listdir(audit_path)
+    except FileNotFoundError:
         return []
-    audit = spark.read.schema(AUDIT_SCHEMA).parquet(audit_path)
-    return [r["bucket"] for r in audit.select("bucket").distinct().collect()]
+    files = [
+        os.path.join(audit_path, n)
+        for n in names
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    ]
+    if not files:
+        return []
+    buckets = pq.read_table(files, columns=["bucket"]).column("bucket")
+    return sorted(pc.unique(buckets).to_pylist())
 
 
-def _bucket_markers(run_id: str, buckets: List[int]) -> List[tuple]:
+def _bucket_markers(run_id: str, buckets: List[int]) -> List[dict]:
     """Zero-row commit markers (partition_id = -1, all counters 0): a
     bucket with NO input rows still has to land in the audit table, or
     every later run would put it back in ``todo`` and re-scan the input
     for it forever. One marker per processed bucket also makes the
     committed set independent of whether data rows existed."""
-    now = datetime.datetime.now()
-    return [(run_id, -1, 0, 0, 0, 0, 0, 0, 0, now, int(b)) for b in buckets]
+    zero = dict.fromkeys(_COUNTERS, 0)
+    return [dict(zero, run_id=run_id, partition_id=-1, bucket=int(b)) for b in buckets]
+
+
+def _append_audit(audit_path: str, rows: List[dict]) -> None:
+    """Append ``rows`` to the audit table as ONE parquet file, every row
+    stamped with one UTC ``committed_at``. This is the table's only
+    write: an Iceberg append replaces this body and nothing else.
+
+    Written on the driver with pyarrow under a hidden name, then renamed
+    into view — the rename is atomic, so readers see all of the rows or
+    none. A Spark write of a few driver rows would cost a whole job."""
+    now = datetime.datetime.now(datetime.timezone.utc)
+    table = pa.Table.from_pylist([dict(r, committed_at=now) for r in rows], schema=_ARROW_SCHEMA)
+    os.makedirs(audit_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(audit_path, "." + name)
+    pq.write_table(table, tmp, compression="zstd")
+    os.replace(tmp, os.path.join(audit_path, name))
 
 
 _METRICS = ("docs", "failures", "decode_fallbacks", "bytes")
@@ -145,15 +197,16 @@ def run_extraction_with_audit(
     One job scans the input ONCE (pending buckets only), writes
     ``partitionBy(bucket)`` with dynamic partition overwrite
     (idempotent per partition — a crashed batch simply rewrites its
-    pending partitions), then appends ALL audit rows in one pass. The
-    round-1 shape — filter(bucket==b) inside a loop — re-scanned the
+    pending partitions); one more job aggregates the written output
+    into the audit rows, which are appended in one file. The round-1
+    shape — filter(bucket==b) inside a loop — re-scanned the
     unpartitioned input once per bucket plus one driver round-trip per
     bucket: thousands of full scans at the 4096-bucket grain.
     ``metrics`` is the sum of the audit rows this call appended.
     """
     data_path = os.path.join(out_dir, "extracted")
     audit_path = os.path.join(out_dir, "audit")
-    done = set(committed_buckets(spark, audit_path))
+    done = set(committed_buckets(audit_path))
     todo = [b for b in (buckets or range(n_buckets)) if b not in done]
     if not todo:
         return {"processed": [], "skipped": sorted(done), "metrics": dict.fromkeys(_METRICS, 0)}
@@ -166,31 +219,30 @@ def run_extraction_with_audit(
         decrypt=decrypt,
         password=password,
     ).withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # 1) data commit: one job, one input scan, only pending
-        # partitions overwritten (committed buckets untouched)
-        ext.write.partitionBy("bucket").mode("overwrite").parquet(data_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # 2) audit commit for ALL newly-written buckets in one append —
-    # partition pruning on the re-read keeps this to the new output.
-    # Explicit schema: an all-empty batch writes zero data files, and
-    # schema inference over a _SUCCESS-only directory would throw
+    # 1) data commit: one job, one input scan, only pending partitions
+    # overwritten (committed buckets untouched); the overwrite mode is
+    # this write's option, never the session's
+    ext.write.partitionBy("bucket").mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(data_path)
+    # 2) audit rows for ALL newly-written buckets — partition pruning on
+    # the re-read keeps this to the new output. Explicit schema: an
+    # all-empty batch writes zero data files, and schema inference over
+    # a _SUCCESS-only directory would throw
     reread_schema = ext.drop("bucket").schema.add("bucket", IntegerType())
     reread = (
         spark.read.schema(reread_schema).parquet(data_path)
+        .withColumn(
+            _TASK_COL,
+            F.regexp_extract("_metadata.file_name", r"^part-(\d+)-", 1).cast("int"),
+        )
         .filter(F.col("bucket").isin([int(b) for b in todo]))
         .withColumnRenamed("bucket", BUCKET_COL)
     )
-    # real per-partition lineage plus one zero-row marker per bucket —
-    # empty buckets must commit too (else they re-run forever); both
-    # land in ONE append so the commit stays atomic per batch
-    lineage = partition_metrics(reread, run_id).collect()
-    markers = _bucket_markers(run_id, todo)
-    spark.createDataFrame(lineage + markers, AUDIT_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(audit_path)
+    # real per-task lineage plus one zero-row marker per bucket — empty
+    # buckets must commit too (else they re-run forever); both land in
+    # ONE append so the commit stays atomic per batch
+    lineage = [r.asDict() for r in partition_metrics(reread, run_id).collect()]
+    _append_audit(audit_path, lineage + _bucket_markers(run_id, todo))
     metrics = {k: sum(r[k] or 0 for r in lineage) for k in _METRICS}
     return {"processed": todo, "skipped": sorted(done), "metrics": metrics}

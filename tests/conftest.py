@@ -23,3 +23,18 @@ def pages_parquet(tmp_path_factory):
     path = str(tmp_path_factory.mktemp("pages") / "pages.parquet")
     write_pages_parquet(path, 240)
     return path
+
+
+def _jobs_of(spark, fn):
+    """(fn(), number of Spark jobs fn ran) via a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

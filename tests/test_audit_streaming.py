@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import _jobs_of
 from pdf_parser_spark import audit
 from pdf_parser_spark.streaming import draft_upsert_stream, stream_extract, windowed_event_counts
 
@@ -83,7 +84,11 @@ def test_audit_one_pass_single_extraction(spark, pages_df, tmp_path, monkeypatch
 def test_audit_mixed_mode_resume(spark, pages_df, tmp_path):
     """A partial commit (``buckets=[1]``, the surgical re-run of one
     bucket) is honored by the full resume that follows; each call's
-    metrics cover exactly its own buckets."""
+    metrics cover exactly its own buckets. The dynamic partition
+    overwrite that keeps bucket 1 is the write's own option: the
+    session's overwrite mode is left as it was."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(conf, "static")  # only the write's own option keeps bucket 1
     out = str(tmp_path / "out")
     r1 = audit.run_extraction_with_audit(
         spark, pages_df, out, run_id="r1", n_buckets=4, buckets=[1]
@@ -91,6 +96,7 @@ def test_audit_mixed_mode_resume(spark, pages_df, tmp_path):
     assert r1["processed"] == [1] and r1["skipped"] == []
     r2 = audit.run_extraction_with_audit(spark, pages_df, out, run_id="r2", n_buckets=4)
     assert r2["processed"] == [0, 2, 3] and r2["skipped"] == [1]
+    assert spark.conf.get(conf) == "static"
     extracted = spark.read.parquet(os.path.join(out, "extracted"))
     assert extracted.count() == pages_df.count()
     assert extracted.select("url").distinct().count() == pages_df.count()
@@ -116,6 +122,127 @@ def test_audit_empty_pending_input(spark, tmp_path):
     # instead of re-scanning the input forever
     r2 = audit.run_extraction_with_audit(spark, empty, out, run_id="r1", n_buckets=4)
     assert r2["processed"] == [] and r2["skipped"] == [0, 1, 2, 3]
+
+
+@pytest.fixture(scope="module")
+def two_file_pages(tmp_path_factory):
+    """60 synthesized pages written as two parquet files."""
+    from pdf_parser_spark.synth.pages import write_pages_parquet
+
+    d = tmp_path_factory.mktemp("two_file_pages")
+    write_pages_parquet(str(d / "a.parquet"), 30)
+    write_pages_parquet(str(d / "b.parquet"), 30, start=30)
+    return str(d)
+
+
+def _audit_rows(spark, out):
+    return spark.read.schema(audit.AUDIT_SCHEMA).parquet(os.path.join(out, "audit")).collect()
+
+
+def test_audit_lineage_is_the_writing_task(spark, two_file_pages, tmp_path):
+    """Each audit row's ``partition_id`` is the extraction task that
+    wrote the rows: the audit's (bucket, partition_id, docs) equal the
+    extraction grouped by bucket and ``spark_partition_id()`` on the
+    same two-partition input, not the split of a later re-read."""
+    from pdf_parser_spark.extract import extract_documents
+
+    pages = spark.read.parquet(two_file_pages)
+    assert pages.rdd.getNumPartitions() == 2
+    out = str(tmp_path / "out")
+    r = audit.run_extraction_with_audit(spark, pages, out, run_id="r1", n_buckets=2)
+    assert r["processed"] == [0, 1]
+    emitted = (
+        audit.with_bucket(extract_documents(pages.select("url", "warc_ts", "html", "text", "lang")), 2)
+        .groupBy(audit.BUCKET_COL, F.spark_partition_id().alias("task"))
+        .count()
+        .collect()
+    )
+    want = {(e[audit.BUCKET_COL], e["task"], e["count"]) for e in emitted}
+    assert len({t for _, t, _ in want}) == 2  # both tasks emitted rows
+    got = {(a["bucket"], a["partition_id"], a["docs"]) for a in _audit_rows(spark, out)}
+    assert {g for g in got if g[1] >= 0} == want
+    assert {g for g in got if g[1] < 0} == {(0, -1, 0), (1, -1, 0)}  # one marker per bucket
+
+
+def test_audit_one_commit_time_per_append(spark, two_file_pages, tmp_path):
+    """Every row of one append — lineage and markers alike — carries the
+    same UTC ``committed_at``; a later call's append comes later."""
+    pages = spark.read.parquet(two_file_pages)
+    out = str(tmp_path / "out")
+    audit.run_extraction_with_audit(spark, pages, out, run_id="r1", n_buckets=4, buckets=[0, 1])
+    audit.run_extraction_with_audit(spark, pages, out, run_id="r2", n_buckets=4)
+    times = {}
+    for a in _audit_rows(spark, out):
+        times.setdefault(a["run_id"], set()).add(a["committed_at"])
+    assert {k: len(v) for k, v in times.items()} == {"r1": 1, "r2": 1}
+    assert None not in times["r1"] and times["r1"] != times["r2"]
+    assert max(times["r1"]) < min(times["r2"])
+
+
+def test_audit_hidden_temp_file_is_not_committed(spark, two_file_pages, tmp_path):
+    """A crash mid-append leaves only a hidden temp file: neither
+    ``committed_buckets`` nor a Spark read of the audit table sees it, so
+    its buckets run again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pages = spark.read.parquet(two_file_pages)
+    out = str(tmp_path / "out")
+    audit_path = os.path.join(out, "audit")
+    audit.run_extraction_with_audit(spark, pages, out, run_id="r1", n_buckets=2, buckets=[0])
+    leftover = pa.Table.from_pylist(audit._bucket_markers("crashed", [1]), schema=audit._ARROW_SCHEMA)
+    pq.write_table(leftover, os.path.join(audit_path, ".part-crashed.parquet"))
+    assert audit.committed_buckets(audit_path) == [0]
+    assert {a["bucket"] for a in _audit_rows(spark, out)} == {0}
+    r = audit.run_extraction_with_audit(spark, pages, out, run_id="r2", n_buckets=2)
+    assert r["processed"] == [1] and r["skipped"] == [0]
+    assert r["metrics"]["docs"] + _run_totals(spark, out, "r1")["docs"] == pages.count()
+
+
+def test_audit_resumes_a_spark_written_table(spark, two_file_pages, tmp_path):
+    """An audit table whose rows were appended by a Spark write (the
+    earlier commit path) still resumes, and the mixed table reads in
+    Spark both with the explicit schema and with schema inference."""
+    import shutil
+
+    pages = spark.read.parquet(two_file_pages)
+    out = str(tmp_path / "out")
+    audit_path = os.path.join(out, "audit")
+    audit.run_extraction_with_audit(spark, pages, out, run_id="r1", n_buckets=2, buckets=[0])
+    rows = _audit_rows(spark, out)
+    shutil.rmtree(audit_path)
+    spark.createDataFrame(rows, audit.AUDIT_SCHEMA).write.parquet(audit_path)
+    assert audit.committed_buckets(audit_path) == [0]
+    r = audit.run_extraction_with_audit(spark, pages, out, run_id="r2", n_buckets=2)
+    assert r["processed"] == [1] and r["skipped"] == [0]
+    assert audit.committed_buckets(audit_path) == [0, 1]
+    for table in (
+        spark.read.schema(audit.AUDIT_SCHEMA).parquet(audit_path),
+        spark.read.parquet(audit_path),
+    ):
+        got = table.groupBy("run_id").agg(
+            F.sum("docs").alias("docs"), F.count("committed_at").alias("stamped"), F.count("*").alias("n")
+        ).collect()
+        assert sum(g["docs"] for g in got) == pages.count()
+        assert {g["run_id"] for g in got} == {"r1", "r2"}
+        assert all(g["stamped"] == g["n"] for g in got)
+
+
+def test_audit_lookup_and_append_start_no_spark_job(spark, two_file_pages, tmp_path):
+    """The resume lookup and the audit append run on the driver: neither
+    starts a Spark job."""
+    pages = spark.read.parquet(two_file_pages)
+    out = str(tmp_path / "out")
+    audit_path = os.path.join(out, "audit")
+    audit.run_extraction_with_audit(spark, pages, out, run_id="r1", n_buckets=2, buckets=[0])
+    done, n_lookup = _jobs_of(spark, lambda: audit.committed_buckets(audit_path))
+    assert done == [0] and n_lookup == 0
+    _, n_append = _jobs_of(
+        spark, lambda: audit._append_audit(audit_path, audit._bucket_markers("r2", [1]))
+    )
+    assert n_append == 0
+    assert audit.committed_buckets(audit_path) == [0, 1]
+    assert audit.committed_buckets(str(tmp_path / "missing")) == []
 
 
 def test_stream_extract_checkpoint_resume(spark, tmp_path):

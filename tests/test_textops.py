@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import _jobs_of
 from pdf_parser_spark import textops
 
 DOCS = [
@@ -447,21 +448,6 @@ def test_connected_components_random_graphs(spark):
 
 def test_connected_components_empty(spark):
     assert _cc_spark(spark, []) == {}
-
-
-def _jobs_of(spark, fn):
-    """(fn(), number of Spark jobs fn ran) via a fresh job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"cc-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_connected_components_star_forest_stops_after_one_round(spark):
