@@ -24,10 +24,15 @@ is the table's one write and the swap point for an Iceberg append):
   collected once: the driver appends them and sums them into the
   call's returned metrics.
 - the append is a driver-side pyarrow write of one parquet file under a
-  hidden name, renamed into view (atomic). Spark and
-  ``committed_buckets`` skip names starting with ``.`` or ``_``, so a
-  crash mid-append commits nothing. Every row of one append carries one
-  UTC ``committed_at``, taken after the data commit.
+  hidden name, moved into view. Spark and ``committed_buckets`` skip
+  names starting with ``.`` or ``_``, so a crash mid-append commits
+  nothing. Every row of one append carries one UTC ``committed_at``,
+  taken after the data commit.
+- the audit table lives in the same store as the data: ``out_dir`` is
+  first qualified the way Spark's writer resolves it (a scheme-less
+  path lands on Hadoop's default filesystem), and the resulting URI
+  opens a ``pyarrow.fs`` filesystem. A store pyarrow cannot open is a
+  ``ValueError`` before any work.
 - resume = read the ``bucket`` column of the visible audit files with
   pyarrow (no Spark job), prune committed buckets from the input BY
   BUCKET ID (partition pruning — cheaper than a row-level anti-join).
@@ -42,9 +47,10 @@ from typing import List, Optional
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -60,8 +66,6 @@ from pyspark.sql.types import (
 from .extract import extract_documents
 
 BUCKET_COL = "_bucket"
-# the task that wrote a row, when known from the written file's name
-_TASK_COL = "_task"
 
 # explicit schema for the audit table: reads never depend on parquet
 # schema inference, so an all-empty (or not-yet-written) table behaves
@@ -95,16 +99,17 @@ def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
+def partition_metrics(
+    extracted: DataFrame, run_id: str, task: Optional[Column] = None
+) -> DataFrame:
     """AUDIT_SCHEMA rows without ``committed_at`` (the append stamps it):
     one per (bucket, task) — lineage of which task produced which slice,
-    with the north rule's counters. The task is ``extracted``'s
-    ``_task`` column when it has one (a re-read of written files), else
-    the frame's own partition, which is the producing task when
-    ``extracted`` is the extraction itself."""
-    task = F.col(_TASK_COL) if _TASK_COL in extracted.columns else F.spark_partition_id()
+    with the north rule's counters. ``task`` defaults to the frame's own
+    partition, which is the producing task when ``extracted`` is the
+    extraction itself; a re-read of written files passes the writer's
+    task instead."""
     return (
-        extracted.withColumn("_pid", task)
+        extracted.withColumn("_pid", F.spark_partition_id() if task is None else task)
         .groupBy(BUCKET_COL, "_pid")
         .agg(
             F.count("*").alias("docs"),
@@ -126,23 +131,44 @@ def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     )
 
 
+def _qualified(spark: SparkSession, path: str) -> str:
+    """``path`` as the (percent-encoded) URI Spark's writer resolves it
+    to: a scheme-less path lands on Hadoop's default filesystem — HDFS
+    on a cluster, the local disk in ``local[N]``."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.makeQualified(jpath).toUri().toString()
+
+
+def _audit_fs(audit_path: str):
+    """(pyarrow filesystem, path inside it) for the audit table. An
+    absolute local path or any URI pyarrow knows (``file``, ``s3``,
+    ``gs``, ``hdfs``, ``abfs``) opens; anything else is a ValueError."""
+    try:
+        return pafs.FileSystem.from_uri(audit_path)
+    except pa.ArrowInvalid as e:
+        raise ValueError(
+            f"audit table {audit_path!r}: pyarrow cannot open this filesystem ({e})"
+        ) from None
+
+
 def committed_buckets(audit_path: str) -> List[int]:
     """Buckets with a committed audit row, read from the ``bucket``
     column of the audit files with pyarrow — no Spark job. Hidden
     ``.``/``_`` names (an in-flight append, Spark's ``_SUCCESS``) are
-    skipped, as Spark's reader skips them."""
-    try:
-        names = os.listdir(audit_path)
-    except FileNotFoundError:
-        return []
+    skipped, as Spark's reader skips them. A missing table is no
+    buckets."""
+    fs, path = _audit_fs(audit_path)
     files = [
-        os.path.join(audit_path, n)
-        for n in names
-        if n.endswith(".parquet") and not n.startswith((".", "_"))
+        f.path
+        for f in fs.get_file_info(pafs.FileSelector(path, allow_not_found=True))
+        if f.type == pafs.FileType.File
+        and f.base_name.endswith(".parquet")
+        and not f.base_name.startswith((".", "_"))
     ]
     if not files:
         return []
-    buckets = pq.read_table(files, columns=["bucket"]).column("bucket")
+    buckets = pq.read_table(files, columns=["bucket"], filesystem=fs).column("bucket")
     return sorted(pc.unique(buckets).to_pylist())
 
 
@@ -161,16 +187,20 @@ def _append_audit(audit_path: str, rows: List[dict]) -> None:
     stamped with one UTC ``committed_at``. This is the table's only
     write: an Iceberg append replaces this body and nothing else.
 
-    Written on the driver with pyarrow under a hidden name, then renamed
-    into view — the rename is atomic, so readers see all of the rows or
-    none. A Spark write of a few driver rows would cost a whole job."""
+    Written on the driver with pyarrow under a hidden name, then moved
+    into view, so readers see all of the rows or none. On a local disk
+    or HDFS the move is an atomic rename; on an object store (S3) it is
+    a copy and a delete, and a crash between the two leaves only the
+    hidden copy, which readers skip. A Spark write of a few driver rows
+    would cost a whole job."""
     now = datetime.datetime.now(datetime.timezone.utc)
     table = pa.Table.from_pylist([dict(r, committed_at=now) for r in rows], schema=_ARROW_SCHEMA)
-    os.makedirs(audit_path, exist_ok=True)
+    fs, path = _audit_fs(audit_path)
+    fs.create_dir(path, recursive=True)
     name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(audit_path, "." + name)
-    pq.write_table(table, tmp, compression="zstd")
-    os.replace(tmp, os.path.join(audit_path, name))
+    tmp = f"{path}/.{name}"
+    pq.write_table(table, tmp, filesystem=fs, compression="zstd")
+    fs.move(tmp, f"{path}/{name}")
 
 
 _METRICS = ("docs", "failures", "decode_fallbacks", "bytes")
@@ -205,7 +235,7 @@ def run_extraction_with_audit(
     ``metrics`` is the sum of the audit rows this call appended.
     """
     data_path = os.path.join(out_dir, "extracted")
-    audit_path = os.path.join(out_dir, "audit")
+    audit_path = _qualified(spark, os.path.join(out_dir, "audit"))
     done = set(committed_buckets(audit_path))
     todo = [b for b in (buckets or range(n_buckets)) if b not in done]
     if not todo:
@@ -232,17 +262,15 @@ def run_extraction_with_audit(
     reread_schema = ext.drop("bucket").schema.add("bucket", IntegerType())
     reread = (
         spark.read.schema(reread_schema).parquet(data_path)
-        .withColumn(
-            _TASK_COL,
-            F.regexp_extract("_metadata.file_name", r"^part-(\d+)-", 1).cast("int"),
-        )
         .filter(F.col("bucket").isin([int(b) for b in todo]))
         .withColumnRenamed("bucket", BUCKET_COL)
     )
+    # the writer's task, from the data file's name part-<task id>-…
+    writer = F.regexp_extract("_metadata.file_name", r"^part-(\d+)-", 1).cast("int")
     # real per-task lineage plus one zero-row marker per bucket — empty
     # buckets must commit too (else they re-run forever); both land in
     # ONE append so the commit stays atomic per batch
-    lineage = [r.asDict() for r in partition_metrics(reread, run_id).collect()]
+    lineage = [r.asDict() for r in partition_metrics(reread, run_id, writer).collect()]
     _append_audit(audit_path, lineage + _bucket_markers(run_id, todo))
     metrics = {k: sum(r[k] or 0 for r in lineage) for k in _METRICS}
     return {"processed": todo, "skipped": sorted(done), "metrics": metrics}

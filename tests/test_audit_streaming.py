@@ -245,6 +245,34 @@ def test_audit_lookup_and_append_start_no_spark_job(spark, two_file_pages, tmp_p
     assert audit.committed_buckets(str(tmp_path / "missing")) == []
 
 
+def test_audit_table_follows_a_uri_out_dir(spark, two_file_pages, tmp_path, monkeypatch):
+    """A ``file://`` URI ``out_dir`` (here with a space, which the URI
+    percent-encodes) puts the audit table next to the data, where Spark
+    wrote it — not in a local directory named after the URI — and the
+    next call resumes from it."""
+    pages = spark.read.parquet(two_file_pages)
+    monkeypatch.chdir(tmp_path)
+    local = tmp_path / "out dir"
+    out = "file://" + str(local)
+    r1 = audit.run_extraction_with_audit(spark, pages, out, run_id="r1", n_buckets=2, buckets=[0])
+    assert [p.name for p in tmp_path.iterdir()] == ["out dir"]
+    assert [p.suffix for p in (local / "audit").iterdir()] == [".parquet"]
+    assert audit.committed_buckets(str(local / "audit")) == [0]
+    r2 = audit.run_extraction_with_audit(spark, pages, out, run_id="r2", n_buckets=2)
+    assert r2["processed"] == [1] and r2["skipped"] == [0]
+    assert r1["metrics"]["docs"] + r2["metrics"]["docs"] == pages.count()
+    assert sum(a["docs"] for a in _audit_rows(spark, out)) == pages.count()
+
+
+def test_audit_store_pyarrow_cannot_open_is_a_clear_error():
+    """An audit location pyarrow has no filesystem for fails with a
+    ValueError naming it, instead of writing somewhere else."""
+    with pytest.raises(ValueError, match="nosuchfs://b/audit"):
+        audit.committed_buckets("nosuchfs://b/audit")
+    with pytest.raises(ValueError, match="nosuchfs://b/audit"):
+        audit._append_audit("nosuchfs://b/audit", audit._bucket_markers("r", [0]))
+
+
 def test_stream_extract_checkpoint_resume(spark, tmp_path):
     """availableNow drains the backlog; a restart with the same
     checkpoint skips already-processed files."""
