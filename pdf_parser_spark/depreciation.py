@@ -538,21 +538,6 @@ def schedule_totals(schedule: DataFrame, keys: List[str]) -> DataFrame:
     )
 
 
-def renest_schedule(schedule: DataFrame, keys: List[str]) -> DataFrame:
-    """Re-nest (doc, year) rows into an ordered array-of-structs column —
-    the document-assembly shape of §3.3 step 8."""
-    row = F.struct(
-        F.col("year"), F.col("calendar_year"), F.col("std_dep"),
-        F.col("trad_cost_seg"), F.col("bonus_dep"), F.col("cost_seg_est"),
-        F.col("accumulated_total"),
-    )
-    return (
-        schedule.groupBy(*keys)
-        .agg(F.sort_array(F.collect_list(F.struct(F.col("year").alias("y"), row.alias("r")))).alias("_s"))
-        .select(*keys, F.transform(F.col("_s"), lambda x: x["r"]).alias("schedule"))
-    )
-
-
 # ----------------------------------------------------------------------
 # J4 as a broadcast dim (for the oracle-checked query)
 # ----------------------------------------------------------------------

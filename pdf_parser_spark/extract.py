@@ -6,7 +6,7 @@ native Catalyst). Replaces the reference's per-file browser pipeline
 (``src/services/pdfParser/index.ts:7-91``) with a distributed stage:
 
     read parquet/iceberg → repartition(xxhash64(url)) → mapInPandas →
-    native field extraction → sinks + audit
+    native field extraction → audit
 
 Scale design (north rule):
 - salting: callers repartition on ``xxhash64(url)`` before this stage
@@ -233,39 +233,3 @@ def salted(pages: DataFrame, parallelism: int, factor: int = 2) -> DataFrame:
     """
     n = max(1, parallelism * factor)
     return pages.repartition(n, F.xxhash64("url"))
-
-
-def size_routed_extract(
-    pages: DataFrame,
-    parallelism: int,
-    jumbo_bytes: int = 1_000_000,
-    jumbo_factor: int = 8,
-    mode: str = "first_valid",
-    output: str = "full",
-) -> DataFrame:
-    """Skew mitigation for oversized documents (SURVEY §4 'Spill/memory').
-
-    A single multi-GB document inside an Arrow batch can stall a task
-    for minutes while its 63 batch-mates wait. Route by size:
-
-    - normal rows → the standard salted path;
-    - rows with ``length(html) >= jumbo_bytes`` → their own sub-job with
-      ``jumbo_factor``× more partitions than documents-per-partition
-      would suggest (→ ≈1 jumbo per task) and row-capped Arrow batches.
-
-    Both legs are the same mapInPandas stage; ``unionByName`` of two
-    map-only legs stays map-only (no extra shuffle beyond the two
-    repartitions, which replace the single salting exchange).
-    """
-    is_jumbo = F.length("html") >= jumbo_bytes
-    normal = extract_documents(
-        salted(pages.filter(~is_jumbo), parallelism), mode=mode, output=output
-    )
-    jumbo = extract_documents(
-        pages.filter(is_jumbo).repartition(
-            max(1, parallelism * jumbo_factor), F.xxhash64("url")
-        ),
-        mode=mode,
-        output=output,
-    )
-    return normal.unionByName(jumbo)

@@ -9,7 +9,7 @@ Package and launch:
         --output s3://.../extracted/ \\
         --run-id nightly-2026-08-16 \\
         --buckets 4096                   # commit granularity \\
-        --mode first_valid               # or: legacy, stream
+        --mode first_valid               # or: legacy
 
 The session comes from ``session.get_spark``. On a real cluster the
 master and shuffle partitions come from spark-submit conf; ``get_spark``
@@ -31,7 +31,7 @@ def main(argv=None) -> int:
     p.add_argument("--input", required=True, help="pages table path (parquet/Iceberg)")
     p.add_argument("--output", required=True, help="output root (extracted/ + audit/)")
     p.add_argument("--run-id", default="run")
-    p.add_argument("--mode", default="first_valid", choices=["first_valid", "legacy", "stream"])
+    p.add_argument("--mode", default="first_valid", choices=["first_valid", "legacy"])
     p.add_argument("--buckets", type=int, default=64, help="commit granularity")
     p.add_argument("--local", type=int, default=None, help="local[N] master (bench/dev)")
     p.add_argument(
@@ -51,7 +51,6 @@ def main(argv=None) -> int:
 
     from pdf_parser_spark.audit import run_extraction_with_audit
     from pdf_parser_spark.session import get_spark
-    from pdf_parser_spark.streaming import stream_extract
 
     spark = get_spark(
         "pdf-parser-spark-job",
@@ -60,31 +59,18 @@ def main(argv=None) -> int:
     )
 
     t0 = time.time()
-    if args.mode == "stream":
-        q = stream_extract(
-            spark,
-            args.input,
-            checkpoint_dir=f"{args.output}/checkpoint",
-            output_dir=f"{args.output}/extracted",
-            available_now=True,
-        )
-        q.awaitTermination()
-        result = {"mode": "stream"}
-        docs = spark.read.parquet(f"{args.output}/extracted").count()
-        result["docs"] = docs
-    else:
-        pages = spark.read.parquet(args.input)
-        result = run_extraction_with_audit(
-            spark,
-            pages,
-            out_dir=args.output,
-            run_id=args.run_id,
-            n_buckets=args.buckets,
-            mode=args.mode,
-            decrypt=args.decrypt,
-            password=args.decrypt_password.encode("utf-8"),
-        )
-        docs = result["metrics"]["docs"]
+    pages = spark.read.parquet(args.input)
+    result = run_extraction_with_audit(
+        spark,
+        pages,
+        out_dir=args.output,
+        run_id=args.run_id,
+        n_buckets=args.buckets,
+        mode=args.mode,
+        decrypt=args.decrypt,
+        password=args.decrypt_password.encode("utf-8"),
+    )
+    docs = result["metrics"]["docs"]
     wall = time.time() - t0
     if args.bench:
         print(

@@ -428,21 +428,3 @@ def parse_object_at(data: bytes, offset: int) -> Tuple[int, int, Any]:
     lx.expect_keyword(b"obj")
     val = lx.read_object()
     return int(num), int(gen), val
-
-
-def resolve_stream_length(stream: StreamObj, resolver) -> StreamObj:
-    """Re-slice a stream whose /Length was an indirect reference."""
-    length = stream.dict.get("Length")
-    if isinstance(length, Ref):
-        real = resolver(length)
-        if isinstance(real, int) and real <= len(stream.raw):
-            return StreamObj(stream.dict, stream.raw[:real])
-    return stream
-
-
-def read_object_with_resolver(data: bytes, offset: int, resolver) -> Tuple[int, int, Any]:
-    """Like :func:`parse_object_at` but fixes indirect /Length streams."""
-    num, gen, val = parse_object_at(data, offset)
-    if isinstance(val, StreamObj):
-        val = resolve_stream_length(val, resolver)
-    return num, gen, val

@@ -192,8 +192,9 @@ FROM (SELECT n_nationkey, unnest(generate_series(1, 3 + n_nationkey % 5)) AS yea
 # streaming analogs on events (§2.11)
 # ----------------------------------------------------------------------
 def q_events_hour_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregation (batch form of the
-    readStream→window→agg pipeline in streaming.py)."""
+    """Tumbling 1-hour window aggregation: events bucketed by the hour
+    of their UTC timestamp, with event count, distinct users and value
+    sum per hour."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = _read(spark, sf_dir, "events")
     bucket = F.floor(F.unix_timestamp(F.col("ts").cast("timestamp")) / 3600).cast("long")

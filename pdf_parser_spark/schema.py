@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -18,19 +17,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
-)
-
-# ----------------------------------------------------------------------
-# input: Common-Crawl-style pages table (BASELINE.json input_hint)
-# ----------------------------------------------------------------------
-PAGES_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), True),
-        StructField("html", BinaryType(), True),
-        StructField("text", StringType(), True),  # golden expected text
-        StructField("lang", StringType(), True),
-    ]
 )
 
 # positioned text run — shape of the reference's TextItem

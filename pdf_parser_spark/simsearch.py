@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .functions.hashing import splitmix64 as _splitmix
+from .textops import _bucket_pairs
 
 
 # ----------------------------------------------------------------------
@@ -384,46 +385,28 @@ def lsh_near_dup_pairs(
     Recall < 1 by design (collision prob per table = (1−θ/π)^bits for
     angle θ); at 10^12 rows the corpus shuffles once on (table, bucket).
 
-    ``max_bucket_size`` drops over-full buckets before the self-join —
-    a mega-cluster of identical embeddings otherwise makes its bucket
-    quadratic; route such clusters through exact (digest) dedup first.
+    Each bucket is one window whose members are expanded into pairs
+    (``textops._bucket_pairs``), so the signature kernel runs once per
+    row; a self-join over the exploded buckets would run it once per
+    side. ``max_bucket_size`` drops over-full buckets before any member
+    list is built — a mega-cluster of identical embeddings otherwise
+    makes its bucket quadratic; route such clusters through exact
+    (digest) dedup first.
     """
     keyed = with_rp_buckets(
         corpus.select(
-            F.col(id_col).alias("vec_id"),
+            F.col(id_col).alias("id"),
             F.col(vec_col).alias("vec"),
             l2_norm(F.col(vec_col)).alias("norm"),
         ),
         dim, bits, tables, seed, vec_col="vec",
     )
-    if max_bucket_size is not None:
-        keep = (
-            keyed.groupBy("table", "bucket")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= max_bucket_size)
-            .select("table", "bucket")
-        )
-        keyed = keyed.join(keep, ["table", "bucket"], "left_semi")
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .groupBy(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-        .agg(
-            F.first(F.col("a.vec")).alias("va"),
-            F.first(F.col("b.vec")).alias("vb"),
-            F.first(F.col("a.norm")).alias("na"),
-            F.first(F.col("b.norm")).alias("nb"),
-        )
-    )
-    sim = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return cand.select("id_a", "id_b", sim.alias("cosine_sim")).filter(
-        F.col("cosine_sim") >= threshold
-    )
+    item = F.struct("id", "vec", "norm")
+    pairs = _bucket_pairs(keyed, ["table", "bucket"], item, max_bucket_size)
+    sim = dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.norm") * F.col("b.norm"))
+    return pairs.select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), sim.alias("cosine_sim")
+    ).filter(F.col("cosine_sim") >= threshold)
 
 
 # ----------------------------------------------------------------------
@@ -481,7 +464,7 @@ def with_rp_buckets(
             out.append([int(x) for x in row])
         return pd.Series(out)
 
-    keyed = df.withColumn("_bk", buckets(F.col(vec_col)))
-    return keyed.select(
-        "*", F.posexplode("_bk").alias("table", "bucket")
-    ).drop("_bk")
+    # explode the UDF call, not a column holding it: over a column
+    # Catalyst infers a ``size(_bk) > 0`` filter below the generator,
+    # and that filter evaluates the kernel a second time
+    return df.select("*", F.posexplode(buckets(F.col(vec_col))).alias("table", "bucket"))

@@ -1,137 +1,22 @@
-"""Structured Streaming surfaces (SURVEY §2.11).
+"""Gap-based sessions over a timestamped event stream (SURVEY §2.11).
 
-The reference is request/response; its two stateful behaviors map to
-Structured Streaming:
+- :func:`session_window_counts` — per-user session aggregation with the
+  native ``F.session_window``; the same operator runs on a batch frame
+  and on a stream, where a session is emitted once the watermark
+  passes its end.
+- :func:`sessionize` — the batch form: one session id per event, from a
+  lag and a running sum over one (user, ts) sort.
 
-- :func:`stream_extract` — the extraction pipeline as a file stream:
-  ``readStream(parquet) → mapInPandas(parse) → writeStream`` with a
-  checkpoint location. This is the native-Spark form of the north
-  rule's resumability: kill the query, restart with the same
-  checkpoint dir, and only unprocessed files are read.
-- :func:`draft_upsert_stream` — the draft KV store
-  (``service/api.py:34-49`` ``CURRENT_DRAFT.update(payload)``) as a
-  keyed last-write-wins state machine via ``applyInPandasWithState``:
-  one state row per session id, merged dict semantics, emitted on
-  every update.
-- :func:`windowed_event_counts` — watermarked tumbling-window counts
-  over a timestamped event stream (late data dropped after the
-  watermark) — the streaming twin of queries_data.q_events_hour_window.
+The reference's other stateful behaviours have one path each elsewhere:
+resumable extraction is the audited bucket commit (``audit.py``), and
+the draft store's last write wins is the ``draft_last_write_wins``
+query.
 """
 
 from __future__ import annotations
 
-import json
-from typing import Iterator, Tuple
-
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-from .extract import _make_mapper
-from .schema import EXTRACT_SCHEMA, PAGES_SCHEMA
-
-
-def stream_extract(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    output_dir: str,
-    mode: str = "first_valid",
-    available_now: bool = True,
-):
-    """File-stream extraction with exactly-once file tracking.
-
-    ``available_now=True`` drains the current backlog then stops — the
-    batch-with-checkpoint shape; ``False`` runs continuously picking up
-    new files. Restart with the same ``checkpoint_dir`` to resume.
-    """
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
-    ext = pages.select("url", "warc_ts", "html", "lang").mapInPandas(
-        _make_mapper(mode), schema=EXTRACT_SCHEMA
-    )
-    writer = (
-        ext.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# ----------------------------------------------------------------------
-# S12: draft KV store as keyed streaming state
-# ----------------------------------------------------------------------
-DRAFT_STATE_SCHEMA = StructType([StructField("draft_json", StringType())])
-DRAFT_OUT_SCHEMA = StructType(
-    [
-        StructField("session_id", StringType()),
-        StructField("draft_json", StringType()),
-        StructField("n_updates", LongType()),
-    ]
-)
-
-
-def _merge_drafts(
-    key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Last-write-wins dict merge per session — the exact semantics of
-    ``CURRENT_DRAFT.update(payload)`` (service/api.py:37-45), keyed."""
-    draft = json.loads(state.get[0]) if state.exists else {}
-    n = 0
-    for pdf in pdfs:
-        ordered = pdf.sort_values("ts") if "ts" in pdf.columns else pdf
-        for payload in ordered["payload_json"]:
-            draft.update(json.loads(payload))
-            n += 1
-    state.update((json.dumps(draft, sort_keys=True),))
-    yield pd.DataFrame(
-        {"session_id": [key[0]], "draft_json": [json.dumps(draft, sort_keys=True)], "n_updates": [n]}
-    )
-
-
-def draft_upsert_stream(updates: DataFrame) -> DataFrame:
-    """updates(session_id, ts, payload_json) → per-session merged draft.
-
-    Works on a streaming DataFrame (applyInPandasWithState) — state
-    lives in the checkpoint, sized O(sessions), hash-partitioned by
-    session id.
-    """
-    return updates.groupBy("session_id").applyInPandasWithState(
-        _merge_drafts,
-        outputStructType=DRAFT_OUT_SCHEMA,
-        stateStructType=DRAFT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def windowed_event_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window aggregation over (ts, user_id, value)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-            F.approx_count_distinct("user_id").alias("approx_users"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "sum_value", "approx_users")
-    )
 
 
 def session_window_counts(

@@ -1,9 +1,8 @@
-"""audit: commit-per-bucket resume; streaming: checkpointed extraction
-and last-write-wins keyed state."""
+"""audit: commit-per-bucket resume; streaming: native session windows
+on a real stream."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -12,7 +11,6 @@ from pyspark.sql import functions as F
 
 from conftest import _jobs_of
 from pdf_parser_spark import audit
-from pdf_parser_spark.streaming import draft_upsert_stream, stream_extract, windowed_event_counts
 
 _METRICS = ("docs", "failures", "decode_fallbacks", "bytes")
 
@@ -271,122 +269,6 @@ def test_audit_store_pyarrow_cannot_open_is_a_clear_error():
         audit.committed_buckets("nosuchfs://b/audit")
     with pytest.raises(ValueError, match="nosuchfs://b/audit"):
         audit._append_audit("nosuchfs://b/audit", audit._bucket_markers("r", [0]))
-
-
-def test_stream_extract_checkpoint_resume(spark, tmp_path):
-    """availableNow drains the backlog; a restart with the same
-    checkpoint skips already-processed files."""
-    from pdf_parser_spark.synth.pages import write_pages_parquet
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    write_pages_parquet(str(in_dir / "part1.parquet"), 40)
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    q = stream_extract(spark, str(in_dir), ckpt, out)
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(out).count()
-    assert n1 == 40
-
-    # new file arrives (fresh url range); restart from the same checkpoint
-    write_pages_parquet(str(in_dir / "part2.parquet"), 24, start=40)
-    q2 = stream_extract(spark, str(in_dir), ckpt, out)
-    q2.awaitTermination(120)
-    ext = spark.read.parquet(out)
-    assert ext.count() == 64  # 40 old (not reprocessed) + 24 new
-    assert ext.select("url").distinct().count() == 64
-
-
-def test_draft_upsert_last_write_wins(spark, tmp_path):
-    """S12 semantics through a real stream: per-session dict merge,
-    later payloads overwrite earlier keys."""
-    import pandas as pd
-
-    rows = [
-        ("s1", 1, json.dumps({"name": "A", "price": 1})),
-        ("s1", 2, json.dumps({"price": 2})),
-        ("s2", 1, json.dumps({"zip": "85260"})),
-        ("s1", 3, json.dumps({"rush": "No Rush"})),
-    ]
-    src_dir = tmp_path / "updates"
-    src_dir.mkdir()
-    pd.DataFrame(rows, columns=["session_id", "ts", "payload_json"]).to_parquet(
-        src_dir / "u1.parquet"
-    )
-    updates = (
-        spark.readStream.schema("session_id string, ts long, payload_json string")
-        .parquet(str(src_dir))
-    )
-    out = draft_upsert_stream(updates)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("drafts")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["session_id"]: json.loads(r["draft_json"]) for r in spark.sql("select * from drafts").collect()}
-    assert got["s1"] == {"name": "A", "price": 2, "rush": "No Rush"}
-    assert got["s2"] == {"zip": "85260"}
-
-
-def test_windowed_event_counts_batch(spark):
-    """Window aggregation shape (batch-mode check of the streaming agg)."""
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        (base + dt.timedelta(minutes=m), m % 3, float(m)) for m in range(0, 150, 10)
-    ]
-    df = spark.createDataFrame(rows, "ts timestamp, user_id long, value double")
-    out = windowed_event_counts(df, window="1 hour", watermark="2 hours").collect()
-    assert len(out) == 3  # 150 minutes → 3 hour-buckets
-    assert sum(r["n_events"] for r in out) == 15
-
-
-def test_windowed_event_counts_streaming_mode(spark, tmp_path):
-    """The same windowed agg as a real stream: file source → watermark →
-    append-mode sink (windows emit on close)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0, tzinfo=dt.timezone.utc)
-    rows = [(base + dt.timedelta(minutes=m), m % 3, float(m)) for m in range(0, 180, 10)]
-    src = tmp_path / "events_stream"
-    src.mkdir()
-    # tz-aware parquet → Spark TIMESTAMP (watermarks reject NTZ)
-    table = pa.Table.from_pylist(
-        [{"ts": r[0], "user_id": r[1], "value": r[2]} for r in rows],
-        schema=pa.schema(
-            [("ts", pa.timestamp("us", tz="UTC")), ("user_id", pa.int64()), ("value", pa.float64())]
-        ),
-    )
-    pq.write_table(table, src / "e1.parquet")
-    stream = spark.readStream.schema("ts timestamp, user_id long, value double").parquet(
-        str(src)
-    )
-    out = windowed_event_counts(stream, window="1 hour", watermark="30 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("winagg")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_win"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from winagg").collect()
-    # append mode emits only CLOSED windows (watermark passed): the last
-    # hour stays open, the first two close
-    assert len(got) == 2
-    assert sum(r["n_events"] for r in got) == 12
 
 
 def test_session_window_streaming_mode(spark, tmp_path):

@@ -83,3 +83,50 @@ def test_query_matches_oracle(spark, duck, name):
     assert sorted(sdf.columns) == sorted(ocols)
     assert len(srows) == len(orows)
     assert _norm(sdf.columns, srows) == _norm(ocols, orows)
+
+
+def _imported_modules(path, module: str, is_pkg: bool) -> set:
+    """Every dotted module name the file imports (parents included),
+    relative imports resolved against ``module``."""
+    import ast
+    import importlib.util
+
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    package = module if is_pkg else module.rpartition(".")[0]
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = importlib.util.resolve_name("." * node.level + (node.module or ""), package)
+            names = [base] + [f"{base}.{a.name}" for a in node.names]
+        else:
+            continue
+        for name in names:
+            parts = name.split(".")
+            out.update(".".join(parts[: i + 1]) for i in range(len(parts)))
+    return out
+
+
+def test_every_package_module_has_an_importer():
+    """A package module nothing imports is a second path no query,
+    workload or script reaches. Every ``pdf_parser_spark`` module but
+    the ``job`` entrypoint must be imported by another package module,
+    ``__spark_entry__.py``, ``perfbench/`` or ``scripts/``."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+
+    def dotted(path):
+        parts = path.relative_to(root).with_suffix("").parts
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    modules = {dotted(p): p for p in (root / "pdf_parser_spark").rglob("*.py")}
+    importers = dict(modules, __spark_entry__=root / "__spark_entry__.py")
+    importers.update({dotted(p): p for d in ("perfbench", "scripts") for p in (root / d).glob("*.py")})
+    imported = set()
+    for name, path in importers.items():
+        imported |= _imported_modules(path, name, path.name == "__init__.py") - {name}
+    orphans = sorted(set(modules) - imported - {"pdf_parser_spark", "pdf_parser_spark.job"})
+    assert not orphans, f"package modules without an importer: {orphans}"

@@ -10,6 +10,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # job.main, with the session's confs printed as one JSON line just
@@ -106,3 +108,14 @@ def test_job_decrypt_password_is_utf8(tmp_path):
     row = pq.read_table(out / "extracted").to_pylist()[0]
     assert row["error_code"] is None, row["error_message"]
     assert row["decrypted"] and row["text"] == "Euro-locked body"
+
+
+def test_job_mode_is_first_valid_or_legacy(capsys):
+    """The CLI resumes through the audited bucket commit alone: any other
+    ``--mode`` is an argparse error before a session starts."""
+    from pdf_parser_spark import job
+
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--input", "in", "--output", "out", "--mode", "stream"])
+    assert exc.value.code == 2
+    assert "invalid choice: 'stream'" in capsys.readouterr().err

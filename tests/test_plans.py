@@ -307,6 +307,25 @@ def test_near_dup_candidates_compute_signatures_once(spark):
             assert cap[0] > max(collect), f"cap filter above the member lists:\n{p}"
 
 
+def test_embedding_lsh_runs_its_signature_kernel_once(spark):
+    """Embedding LSH pairs each bucket in one window too: the capped plan
+    has one ``ArrowEvalPython`` (the ``with_rp_buckets`` kernel) and no
+    join. A self-join over the exploded buckets, plus a count joined
+    back for the cap, ran the kernel once per branch, and exploding a
+    column that holds the kernel's output adds an inferred
+    ``size(col) > 0`` filter that runs it once more."""
+    from pdf_parser_spark import simsearch
+
+    df = spark.createDataFrame(
+        [(i, [float(i % 5), 1.0, float(i % 3), 0.5]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    frame = simsearch.lsh_near_dup_pairs(df, dim=4, bits=4, tables=3, max_bucket_size=5)
+    p = frame._jdf.queryExecution().executedPlan().toString()
+    assert p.count("ArrowEvalPython") == 1, p
+    assert "Join" not in p, p
+
+
 def _plan_build_commands(build) -> int:
     """py4j commands this thread sends while only BUILDING a DataFrame
     (no job). The first build warms the caches, and gc is held off

@@ -1,5 +1,5 @@
-"""Scale-path operators: size-routed extraction, LSH near-dup recall,
-gap sessionization."""
+"""Scale-path operators: LSH near-dup recall, gap sessionization, and
+the mega-bucket caps."""
 
 from __future__ import annotations
 
@@ -7,27 +7,8 @@ import datetime as dt
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from pdf_parser_spark import simsearch
-from pdf_parser_spark.extract import extract_documents, salted, size_routed_extract
 from pdf_parser_spark.streaming import sessionize
-
-
-def test_size_routed_matches_plain(spark, pages_parquet):
-    """Routing must be a pure physical optimization: identical rows."""
-    pages = spark.read.parquet(pages_parquet)
-    # threshold chosen so BOTH legs are non-empty on the 240-row fixture
-    threshold = 1_900  # fixture blobs are 139..2221 bytes
-    plain = extract_documents(salted(pages, 4)).select("url", "n_pages", "n_bytes", "error_code")
-    routed = size_routed_extract(pages, 4, jumbo_bytes=threshold).select(
-        "url", "n_pages", "n_bytes", "error_code"
-    )
-    a = sorted(map(tuple, plain.collect()))
-    b = sorted(map(tuple, routed.collect()))
-    assert a == b
-    big = pages.filter(F.length("html") >= threshold).count()
-    assert 0 < big < pages.count()  # both legs exercised
 
 
 def test_lsh_near_dup_recall(spark):

@@ -1,12 +1,14 @@
 """S4/S5 against the REAL reference workbook, no openpyxl: the stdlib
 zip+XML reader (xlsxlite) feeds header-pair discovery, and the engine's
-executed _ladder_lookup verifies the broadcast range-join equivalent."""
+executed _ladder_lookup verifies the broadcast range-join equivalent.
+The csv twin of the loader and a corrupt workbook are checked too."""
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
 
+from pdf_parser_spark import pricing
 from pdf_parser_spark.pricing import (
     COST_BASIS_V2,
     ladder_dim_from_table,
@@ -136,3 +138,41 @@ def test_synthetic_xlsx_attr_order_and_entities(tmp_path):
         assert grid[3][1] == 250000.0
         assert grid[3][2] == 1.01              # cached formula value
         assert grid[4][2] == "1.02"            # inline string stays str
+
+
+# ----------------------------------------------------------------------
+# S4/S5 ladder loading
+# ----------------------------------------------------------------------
+def test_ladder_csv_discovery(tmp_path, spark):
+    csv = tmp_path / "vlookup.csv"
+    csv.write_text(
+        ",,,\n"
+        ",,,\n"
+        "Cost Basis,Cost Basis Factor,Zip Code,Zip Code Factor\n"
+        "0,1.0,0,1.11\n"
+        "250000,1.01,10000,1.1\n"
+        "500000,1.02,20000,1.05\n"
+        "notanumber,x,30000,1.0\n"
+    )
+    tables = pricing.load_ladder_tables(
+        str(csv),
+        [("Cost Basis", "Cost Basis Factor"), ("Zip Code", "Zip Code Factor")],
+    )
+    assert tables["Cost Basis"] == [(0.0, 1.0), (250000.0, 1.01), (500000.0, 1.02)]
+    assert len(tables["Zip Code"]) == 4
+    # feed the discovered ladder through the broadcast range join
+    dim = pricing.ladder_dim_from_table(spark, tables["Cost Basis"], name="cb_factor")
+    df = spark.createDataFrame([(1, 100.0), (2, 260000.0), (3, 9e9)], "id long, x double")
+    got = {r["id"]: r["cb_factor"] for r in pricing.ladder_join(df, "x", dim).collect()}
+    assert got == {1: 1.0, 2: 1.01, 3: 1.02}
+
+
+def test_ladder_xlsx_corrupt_file(tmp_path):
+    """.xlsx now loads via the stdlib reader (no openpyxl gate);
+    non-zip bytes fail loudly, not silently."""
+    import zipfile
+
+    fake = tmp_path / "wb.xlsx"
+    fake.write_bytes(b"not really xlsx")
+    with pytest.raises(zipfile.BadZipFile):
+        pricing.load_ladder_tables(str(fake), [("A", "B")])
