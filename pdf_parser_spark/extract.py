@@ -1,4 +1,4 @@
-"""The extraction stage: ``pages`` → extracted text + items + metrics.
+"""The extraction stage: ``pages`` → text + spans + metadata string + metrics.
 
 One ``mapInPandas`` over Arrow batches of the binary ``html`` column —
 the ONLY Python hot path in the engine (everything downstream is
@@ -24,7 +24,7 @@ from typing import Iterator, List, Optional
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .htmlcore import extract_main_text
@@ -33,10 +33,11 @@ from pyspark.sql.types import StructType
 
 from .schema import EXTRACT_SCHEMA
 
-# pages whose white-text concat contains this marker are metadata
-# candidates (both reference parsers key on it: `metadata.ts:57` splits
-# on '||'; `pdfParser.ts:109` finds '||Name_of_Prospect:')
+# the first page whose white-text concat contains this marker holds the
+# record (`metadata.ts:57` splits on it); the legacy parser instead takes
+# the first last-page item containing `_LEGACY_MARKER` (`pdfParser.ts:109`)
 _META_MARKER = "||"
+_LEGACY_MARKER = "||Name_of_Prospect:"
 
 
 def sniff_doc_type(blob: Optional[bytes]) -> str:
@@ -56,7 +57,7 @@ def _extract_one(blob: Optional[bytes], mode: str, want_text: bool = True,
     """Extract a single document. Never raises.
 
     ``want_text=False`` skips assembling the heavy output fields
-    (text/spans/meta_items) — the PARSE work is identical, but nothing
+    (text/spans/meta_string) — the PARSE work is identical, but nothing
     string-shaped is built or shipped. Used by the ``meta`` output mode
     for metrics/audit-only scans.
     """
@@ -66,7 +67,7 @@ def _extract_one(blob: Optional[bytes], mode: str, want_text: bool = True,
         "spans": None,
         "n_pages": 0,
         "n_items": 0,
-        "meta_items": None,
+        "meta_string": None,
         "error_code": None,
         "error_message": None,
         "decode_fallbacks": 0,
@@ -87,52 +88,31 @@ def _extract_one(blob: Optional[bytes], mode: str, want_text: bool = True,
         out["n_pages"] = doc.num_pages
         out["decode_fallbacks"] = doc.decode_fallbacks
         out["decrypted"] = doc.decrypted
+        out["n_items"] = sum(len(p.items) for p in doc.pages)
         if not want_text:
-            out["n_items"] = sum(len(p.items) for p in doc.pages)
             return out
-        # doc text + per-item spans (character offsets into doc text),
-        # PACKED [s0,e0,s1,e1,...] — see schema.SPAN_ARRAY_TYPE.
-        # Separators are tracked per STRUCTURE, not per item: every page
-        # boundary contributes its '\f' (EMPTY degraded pages included —
-        # the old per-item +1 silently shifted every later span by one
-        # char per empty page), every within-page item boundary its '\n'
+        # per-item spans (character offsets into doc.text()), PACKED
+        # [s0,e0,s1,e1,...] — see schema.SPAN_ARRAY_TYPE. Every item is
+        # followed by one separator ('\n', or '\f' after a page's last
+        # item), and an EMPTY page still has its own '\f'
         spans: List[int] = []
-        offset = 0
-        n_items = 0
-        for pi, page in enumerate(doc.pages):
-            if pi:
-                offset += 1  # the '\f' between pages, even empty ones
-            for j, it in enumerate(page.items):
-                if j:
-                    offset += 1  # '\n' between items within a page
-                end = offset + len(it.str)
-                spans.append(offset)
-                spans.append(end)
-                offset = end
-                n_items += 1
-        # reassemble with the same separators as PdfDocument.text()
-        text_parts: List[str] = []
-        for pi, page in enumerate(doc.pages):
-            if pi:
-                text_parts.append("\f")
-            text_parts.append(page.text())
-        out["text"] = "".join(text_parts)
+        pos = 0
+        for page in doc.pages:
+            for it in page.items:
+                spans += (pos, pos + len(it.str))
+                pos += len(it.str) + 1
+            pos += not page.items
+        out["text"] = doc.text()
         out["spans"] = spans
-        out["n_items"] = n_items
-        # metadata candidate page
         if mode == "legacy":
-            pages = [doc.pages[-1]]
-        else:  # first page containing a '||' white-text run (index.ts:34-64)
-            pages = [p for p in doc.pages if _META_MARKER in p.whitetext_metadata()][:1]
-        if pages:
-            out["meta_items"] = [
-                {
-                    "str": it.str,
-                    "transform": [float(x) for x in it.transform],
-                    "font_name": it.font_name,
-                }
-                for it in pages[0].items
-            ]
+            # P2: the first item on the LAST page holding the marker
+            # (pdfParser.ts:104-116)
+            metas = (it.str for p in doc.pages[-1:] for it in p.items if _LEGACY_MARKER in it.str)
+        else:
+            # P1/T1: the white-text concat of the first page holding a
+            # '||' run (index.ts:34-64, metadata.ts:37-51)
+            metas = (m for m in (p.whitetext_metadata() for p in doc.pages) if _META_MARKER in m)
+        out["meta_string"] = next(metas, None)
     elif out["doc_type"] == "html":
         try:
             text, spans = extract_main_text(blob.decode("utf-8", errors="replace"))
@@ -151,7 +131,7 @@ def _extract_one(blob: Optional[bytes], mode: str, want_text: bool = True,
 
 _OUT_COLS = [f.name for f in EXTRACT_SCHEMA.fields]
 # the heavy output fields the 'meta' mode neither builds nor ships
-_HEAVY_COLS = {"text", "spans", "meta_items"}
+_HEAVY_COLS = {"text", "spans", "meta_string"}
 _META_COLS = [c for c in _OUT_COLS if c not in _HEAVY_COLS]
 META_SCHEMA = StructType([f for f in EXTRACT_SCHEMA.fields if f.name in _META_COLS])
 
@@ -163,7 +143,7 @@ def _make_mapper(mode: str, want_text: bool = True, decrypt: bool = False,
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf_batch in batches:
             # columnar assembly: list-of-dicts → pd.DataFrame re-infers
-            # every cell (slow with nested spans/meta_items); building
+            # every cell (slow with nested spans); building
             # per-column lists keeps batch overhead flat
             cols = {name: [] for name in out_cols}
             for url, warc_ts, blob, lang in zip(
@@ -199,7 +179,7 @@ def extract_documents(
     marker path, ``src/services/pdfParser.ts:104-114``).
 
     ``output``: ``full`` (everything) or ``meta`` (parse identically but
-    neither build nor ship text/spans/meta_items). Catalyst cannot prune
+    neither build nor ship text/spans/meta_string). Catalyst cannot prune
     columns THROUGH mapInPandas — a downstream select still pays Python
     assembly + Arrow transfer of every field — so metrics/audit-only
     scans must push the projection into the mapper, which is what

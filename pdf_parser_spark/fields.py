@@ -1,20 +1,22 @@
 """White-text record extraction as native Catalyst expressions.
 
-Operators P1, T1–T4 and scalar functions F1–F4 of SURVEY.md §2 — NO
+Operators T2–T4 and scalar functions F1–F4 of SURVEY.md §2 — NO
 Python UDFs. Everything here is a Column expression over the
-``meta_items`` array produced by the extraction stage, so Catalyst
-folds, prunes, and codegens it.
+``meta_string`` column of the extraction stage, so Catalyst folds,
+prunes, and codegens it. The parser decides that string once
+(``extract.py``): the white-text filter and concat (P1/T1,
+``PdfPage.whitetext_metadata``) in typed mode, the marker item (P2)
+in legacy mode.
 
 Two reference-faithful modes:
 
 - ``typed``  — the current parser (``src/services/pdfParser/
-  metadata.ts:35-95`` + ``formatters.ts``): white-text filter
-  (transform[0] == 0), ``||`` split, ``:`` KV fold (last-wins,
-  colon-in-value truncated), typed formatters, empty/zero → NULL
-  (JS ``|| undefined``).
+  metadata.ts:35-95`` + ``formatters.ts``): ``||`` split, ``:`` KV
+  fold (last-wins, colon-in-value truncated, JS ``trim()``), typed
+  formatters, empty/zero → NULL (JS ``|| undefined``).
 - ``legacy`` — the parser the app actually calls
-  (``src/services/pdfParser.ts:31-70``): marker-substring item locate,
-  JS ``parseFloat`` prefix semantics (commas NOT stripped), missing →
+  (``src/services/pdfParser.ts:31-70``): no-trim KV fold, JS
+  ``parseFloat`` prefix semantics (commas NOT stripped), missing →
   0 / '' defaults.
 
 Quirks preserved on purpose (each cited):
@@ -34,6 +36,18 @@ from .schema import RECORD_FIELDS
 
 # JS parseFloat: longest valid numeric prefix (after leading whitespace)
 _FLOAT_PREFIX = r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?"
+
+# what JS trim() and parseFloat strip (WhiteSpace + LineTerminator);
+# Spark's one-argument trim strips only ' '
+JS_WHITESPACE = (
+    "\t\n\x0b\x0c\r \xa0\u1680\u2000\u2001\u2002\u2003\u2004\u2005"
+    "\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000\ufeff"
+)
+
+
+def js_trim(value: Column) -> Column:
+    """JS ``String.prototype.trim``."""
+    return F.trim(value, F.lit(JS_WHITESPACE))
 
 
 # ----------------------------------------------------------------------
@@ -80,27 +94,9 @@ def format_date(value: Column) -> Column:
 def js_parsefloat_or_zero(value: Column) -> Column:
     """Legacy numeric: ``parseFloat(value) || 0`` (pdfParser.ts:63) —
     longest numeric prefix, commas terminate the parse, NaN→0."""
-    num = F.regexp_extract(F.ltrim(value), _FLOAT_PREFIX, 0).try_cast("double")
+    lead_trimmed = F.ltrim(value, F.lit(JS_WHITESPACE))
+    num = F.regexp_extract(lead_trimmed, _FLOAT_PREFIX, 0).try_cast("double")
     return F.coalesce(F.nullif(num, F.lit(0.0)), F.lit(0.0))
-
-
-# ----------------------------------------------------------------------
-# P1 + T1: white-text filter and concat (metadata.ts:37-51)
-# ----------------------------------------------------------------------
-def whitetext_concat(items: Column) -> Column:
-    filtered = F.filter(
-        items,
-        lambda x: (F.trim(x["str"]) != "")
-        & (F.element_at(x["transform"], 1) == F.lit(0.0)),
-    )
-    return F.array_join(F.transform(filtered, lambda x: x["str"]), "")
-
-
-def marker_item_str(items: Column) -> Column:
-    """P2: legacy marker locate (pdfParser.ts:108-116) — the FIRST item
-    whose str contains '||Name_of_Prospect:'."""
-    found = F.filter(items, lambda x: x["str"].contains("||Name_of_Prospect:"))
-    return F.when(F.size(found) > 0, found.getItem(0)["str"])
 
 
 # ----------------------------------------------------------------------
@@ -113,8 +109,8 @@ def record_map_typed(meta: Column) -> Column:
     entries = F.transform(
         fields,
         lambda f: F.struct(
-            F.trim(F.split(f, ":").getItem(0)).alias("key"),
-            F.trim(F.coalesce(F.split(f, ":").getItem(1), F.lit(""))).alias("value"),
+            js_trim(F.split(f, ":").getItem(0)).alias("key"),
+            js_trim(F.coalesce(F.split(f, ":").getItem(1), F.lit(""))).alias("value"),
         ),
     )
     entries = F.filter(entries, lambda e: e["key"] != "")
@@ -172,24 +168,20 @@ def legacy_field(fmap: Column, key: str, kind: str) -> Column:
     missing → '' / 0 defaults (the pre-seeded record at :78-101)."""
     value = F.element_at(fmap, F.lit(key))
     if key in _LEGACY_TEXT_KEYS:
-        return F.coalesce(F.trim(value), F.lit(""))
+        return F.coalesce(js_trim(value), F.lit(""))
     return F.when(value.isNull(), F.lit(0.0)).otherwise(js_parsefloat_or_zero(value))
 
 
 def extract_record(extracted: DataFrame, mode: str = "typed") -> DataFrame:
-    """EXTRACT_SCHEMA rows → + ``meta_string`` + the 22 record columns.
+    """EXTRACT_SCHEMA rows → + the 22 record columns, folded from the
+    ``meta_string`` the extraction stage chose for ``mode``.
 
-    Pure select over ``meta_items``; no shuffle, no Python.
+    Pure select; no shuffle, no Python.
     """
-    items = F.col("meta_items")
+    meta = F.col("meta_string")
     if mode == "legacy":
-        meta = marker_item_str(items)
-        fmap = record_map_legacy(meta)
-        cols = [legacy_field(F.col("_fmap"), k, kind).alias(k) for k, kind in RECORD_FIELDS]
+        fmap, field = record_map_legacy(meta), legacy_field
     else:
-        meta = whitetext_concat(items)
-        fmap = record_map_typed(meta)
-        cols = [typed_field(F.col("_fmap"), k, kind).alias(k) for k, kind in RECORD_FIELDS]
-    base = extracted.withColumn("meta_string", meta).withColumn("_fmap", fmap)
-    out = base.select("*", *cols).drop("_fmap")
-    return out
+        fmap, field = record_map_typed(meta), typed_field
+    cols = [field(F.col("_fmap"), k, kind).alias(k) for k, kind in RECORD_FIELDS]
+    return extracted.withColumn("_fmap", fmap).select("*", *cols).drop("_fmap")

@@ -11,7 +11,7 @@ Operator coverage (SURVEY.md §2 ids in brackets):
 
 - extract_pdf_roundtrip  [S1-S3,T5]  flagship byte-identical gate
 - extract_html_roundtrip [north-rule webtext path]
-- whitetext_record       [P1,T1-T4,F1-F4]
+- whitetext_record       [T2-T4,F1-F4]
 - field_formatters       [F1-F4]
 - validation_battery     [P6,P7]
 - regex_fields           [P9]
@@ -1070,15 +1070,15 @@ def ref_oracle_sql():
 
 
 # ----------------------------------------------------------------------
-# legacy parser path (P2 marker locate + legacy KV fold + parseFloat)
+# legacy parser path (legacy KV fold + parseFloat) over a marker string
 # ----------------------------------------------------------------------
 def q_whitetext_record_legacy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The parser the app actually ships (src/services/pdfParser.ts):
-    marker-substring item locate on the item ARRAY, no-trim KV fold,
-    JS parseFloat prefix semantics (comma TERMINATES the number —
+    """The parser the app actually ships (src/services/pdfParser.ts)
+    over a synthesized marker item string: no-trim KV fold, JS
+    parseFloat prefix semantics (comma TERMINATES the number —
     '123,500' parses as 123), missing → ''/0 defaults."""
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    from .fields import legacy_field, marker_item_str, record_map_legacy
+    from .fields import legacy_field, record_map_legacy
 
     c = _read(spark, sf_dir, "customer").filter(F.col("c_custkey") % 6 == 0)
     k = F.col("c_custkey")
@@ -1089,15 +1089,7 @@ def q_whitetext_record_legacy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("||Zip_Code: 85260"),
         F.lit("||Acres_Land: 2.5x"),
     )
-    mk = lambda s, a: F.struct(  # noqa: E731
-        s.alias("str"),
-        F.array(*[F.lit(float(x)) for x in a]).alias("transform"),
-        F.lit("F1").alias("font_name"),
-    )
-    items = F.array(mk(F.lit("visible decoy text"), [1, 0, 0, 1, 72, 720]), mk(marker, [0, 0, 0, 1, 10, 5]))
-    base = c.select(
-        k.alias("c_custkey"), record_map_legacy(marker_item_str(items)).alias("_m")
-    )
+    base = c.select(k.alias("c_custkey"), record_map_legacy(marker).alias("_m"))
     m = F.col("_m")
     return base.select(
         "c_custkey",

@@ -19,16 +19,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-# positioned text run — shape of the reference's TextItem
-# (src/services/pdfParser/types.ts:4-7 + fontName of pdfParser.ts:8-15)
-TEXT_ITEM_TYPE = StructType(
-    [
-        StructField("str", StringType(), True),
-        StructField("transform", ArrayType(DoubleType()), True),
-        StructField("font_name", StringType(), True),
-    ]
-)
-
 # Character spans ship PACKED: one flat int array [s0,e0,s1,e1,...]
 # (item i covers text[spans[2i]:spans[2i+1]]). A per-item
 # struct<start,end> array costs a Python dict + an Arrow struct cell
@@ -50,10 +40,11 @@ EXTRACT_SCHEMA = StructType(
         StructField("spans", SPAN_ARRAY_TYPE, True),
         StructField("n_pages", IntegerType(), True),
         StructField("n_items", IntegerType(), True),
-        # text items of the metadata candidate page (first page containing
-        # a '||' white-text run; legacy mode: the last page) — input to the
-        # native white-text record extraction (fields.py)
-        StructField("meta_items", ArrayType(TEXT_ITEM_TYPE), True),
+        # the record's input string, decided by the parser (extract.py):
+        # the white-text concat of the first page holding a '||' run, or
+        # in legacy mode the last page's first '||Name_of_Prospect:' item
+        # — folded into the 22 record fields by fields.py
+        StructField("meta_string", StringType(), True),
         StructField("error_code", StringType(), True),
         StructField("error_message", StringType(), True),
         StructField("decode_fallbacks", IntegerType(), True),

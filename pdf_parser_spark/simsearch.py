@@ -404,9 +404,8 @@ def lsh_near_dup_pairs(
     item = F.struct("id", "vec", "norm")
     pairs = _bucket_pairs(keyed, ["table", "bucket"], item, max_bucket_size)
     sim = dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.norm") * F.col("b.norm"))
-    return pairs.select(
-        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), sim.alias("cosine_sim")
-    ).filter(F.col("cosine_sim") >= threshold)
+    pairs = pairs.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), sim.alias("cosine_sim"))
+    return pairs.filter(F.col("cosine_sim") >= threshold).distinct()
 
 
 # ----------------------------------------------------------------------

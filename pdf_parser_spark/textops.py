@@ -106,8 +106,10 @@ def exact_duplicates(
 def _bucket_pairs(
     keyed: DataFrame, keys: List[str], item: Column, max_size: Optional[int],
 ) -> DataFrame:
-    """Distinct pairs ``(a, b)`` of the ``item`` structs that share a
-    bucket, with ``a.id < b.id``; each caller projects its own columns.
+    """Pairs ``(a, b)`` of the ``item`` structs that share a bucket, with
+    ``a.id < b.id``, one row per bucket they share. Each caller projects
+    its own columns and then takes ``distinct``, so the dedup exchange
+    carries the projected ids rather than both whole structs.
 
     One window per bucket, ordered by ``item``, hands every member the
     list of the members after it, and one ``explode`` of that list emits
@@ -132,7 +134,6 @@ def _bucket_pairs(
     return (
         members.select("a", later.alias("_later"))
         .select("a", F.explode(F.expr("filter(_later, y -> y.id > a.id)")).alias("b"))
-        .distinct()
     )
 
 
@@ -245,7 +246,7 @@ def lsh_band_pairs(
     )
     item = F.struct(F.col(id_col).alias("id"))
     pairs = _bucket_pairs(keyed, ["band_idx", "band_key"], item, max_bucket_size)
-    return pairs.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+    return pairs.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")).distinct()
 
 
 def ngram_jaccard_pairs(
@@ -349,8 +350,8 @@ def simhash_pairs(
     Scale path: block on 4 simhash quarters (pigeonhole — any pair
     within hamming 3 agrees on ≥1 quarter), emitted by one
     ``posexplode``; each block is one window whose members are paired
-    (:func:`_bucket_pairs`), no self-join; Catalyst pushes the Hamming
-    filter below the pairs' ``distinct``. ``max_block_size`` drops
+    (:func:`_bucket_pairs`), no self-join; the Hamming filter runs
+    before the pairs' ``distinct``. ``max_block_size`` drops
     over-full blocks before any member list is built (the mega-cluster
     guard, same rationale as :func:`lsh_band_pairs.max_bucket_size`).
     """
@@ -363,6 +364,7 @@ def simhash_pairs(
         _bucket_pairs(keyed, ["block_q", "block_key"], F.col("_it"), max_block_size)
         .filter(hamming <= max_hamming)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), hamming.alias("hamming"))
+        .distinct()
     )
 
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .fields import format_zipcode
+
 # JS-falsy test per field type: strings '' / null, numbers 0 / null
 _REQUIRED_TYPED = [
     "Name_of_Prospect",
@@ -79,10 +81,9 @@ def validation_errors(mode: str = "typed", strict_quirk: bool = True) -> Column:
             )
         # validateFieldFormats (validators.ts:28-77)
         zip_col = F.col("Zip_Code")
-        zip_clean = F.lpad(F.substring(F.regexp_replace(zip_col, r"\D", ""), 1, 5), 5, "0")
         errs.append(
             F.when(
-                zip_col.isNotNull() & (zip_col != "") & (zip_clean != zip_col),
+                zip_col.isNotNull() & (zip_col != "") & (format_zipcode(zip_col) != zip_col),
                 F.array(_err("Zip_Code", "Invalid zip code format")),
             ).otherwise(F.array().cast("array<struct<field:string,message:string>>"))
         )

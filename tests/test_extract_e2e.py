@@ -227,7 +227,7 @@ def test_no_python_udf_outside_extract_stage(spark, extracted):
 
 def test_meta_output_mode_matches_full(spark, pages_parquet):
     """output='meta' must agree with the full pipeline on every light
-    column — identical parse, just no text/spans/meta_items assembly or
+    column — identical parse, just no text/spans/meta_string assembly or
     Arrow transfer (Catalyst can't prune through mapInPandas)."""
     from pdf_parser_spark.extract import extract_documents
 
@@ -247,7 +247,7 @@ def test_meta_output_mode_matches_full(spark, pages_parquet):
             elif c != "n_items":
                 assert mr[c] == fr[c], (url, c)
     schema_names = {f.name for f in extract_documents(pages, output="meta").schema.fields}
-    assert schema_names.isdisjoint({"text", "spans", "meta_items"})
+    assert schema_names.isdisjoint({"text", "spans", "meta_string"})
 
 
 def test_spans_align_across_empty_pages(spark):
@@ -274,3 +274,53 @@ def test_spans_align_across_empty_pages(spark):
     for s, e in zip(sp[0::2], sp[1::2]):
         assert text[s:e] in ("first page text", "third page text")
     assert text[sp[2]:sp[3]] == "third page text"
+
+
+def _one_pdf_pages(spark, blob):
+    return spark.createDataFrame(
+        [("u://1", None, blob, None, "en")],
+        "url string, warc_ts timestamp_ntz, html binary, text string, lang string",
+    )
+
+
+def test_whitespace_only_white_item_is_dropped(spark):
+    """The white-text filter keeps only items with a non-whitespace str
+    (JS ``trim()``, ``metadata.ts:41``): an item holding just a no-break
+    space inside a value is dropped, so 'A' and 'LLC' join directly."""
+    from pdf_parser_spark.pdfcore import parse_pdf
+    from pdf_parser_spark.synth.pdfgen import PdfBuilder
+
+    b = PdfBuilder()
+    pg = b.new_page()
+    pg.text(72, 720, "Quote")
+    pg.white_text("Name_of_Prospect: A")
+    pg.white_text("\xa0")
+    pg.white_text("LLC||Zip_Code: 85260||Purchase_Price: 1,000")
+    blob = b.build()
+    assert [it.str for it in parse_pdf(blob).pages[0].items][2] == "\xa0"
+    row = extract_record(extract_documents(_one_pdf_pages(spark, blob)), mode="typed").collect()[0]
+    assert row["meta_string"] == "Name_of_Prospect: ALLC||Zip_Code: 85260||Purchase_Price: 1,000"
+    assert row["Name_of_Prospect"] == "ALLC"
+    assert row["Zip_Code"] == "85260"
+    assert row["Purchase_Price"] == 1000.0
+
+
+def test_record_fold_trims_js_whitespace(spark):
+    """Keys and values are trimmed of JS whitespace (``metadata.ts:60-62``,
+    legacy text keys ``pdfParser.ts:38-65``, and ``parseFloat``'s leading
+    whitespace), no-break spaces included; Spark's one-argument trim
+    strips only ' '."""
+    from pdf_parser_spark.synth.pdfgen import PdfBuilder
+
+    b = PdfBuilder()
+    pg = b.new_page()
+    pg.text(72, 720, "Quote")
+    pg.white_text("||Name_of_Prospect: \xa0A LLC\xa0||\xa0Zip_Code\xa0: 85260||Purchase_Price:\xa012,500")
+    pages = _one_pdf_pages(spark, b.build())
+    typed = extract_record(extract_documents(pages), mode="typed").collect()[0]
+    assert typed["Name_of_Prospect"] == "A LLC"
+    assert typed["Zip_Code"] == "85260"
+    assert typed["Purchase_Price"] == 12500.0
+    legacy = extract_record(extract_documents(pages, mode="legacy"), mode="legacy").collect()[0]
+    assert legacy["Name_of_Prospect"] == "A LLC"
+    assert legacy["Purchase_Price"] == 12.0

@@ -313,7 +313,8 @@ def test_embedding_lsh_runs_its_signature_kernel_once(spark):
     join. A self-join over the exploded buckets, plus a count joined
     back for the cap, ran the kernel once per branch, and exploding a
     column that holds the kernel's output adds an inferred
-    ``size(col) > 0`` filter that runs it once more."""
+    ``size(col) > 0`` filter that runs it once more. No aggregate keys
+    on the vectors."""
     from pdf_parser_spark import simsearch
 
     df = spark.createDataFrame(
@@ -324,6 +325,11 @@ def test_embedding_lsh_runs_its_signature_kernel_once(spark):
     p = frame._jdf.queryExecution().executedPlan().toString()
     assert p.count("ArrowEvalPython") == 1, p
     assert "Join" not in p, p
+    # the pairs' distinct keys on the projected ids and cosine: an
+    # aggregate over the member structs ships both vectors of every pair
+    keys = [ln.split("keys=", 1)[1].split(", functions=", 1)[0]
+            for ln in p.splitlines() if "HashAggregate(keys=" in ln]
+    assert keys and not any("vec" in k for k in keys), p
 
 
 def _plan_build_commands(build) -> int:
