@@ -15,6 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import REFERENCE, reference_path
 from pdf_parser_spark.depreciation import (
     depreciation_schedule,
     macrs_table_df,
@@ -27,7 +28,7 @@ from pdf_parser_spark.depreciation import (
 @pytest.fixture(scope="module")
 def refcs(tmp_path_factory):
     pkg_dir = tmp_path_factory.mktemp("refpkg")
-    shutil.copytree("/root/reference/cost_seg", pkg_dir / "refcs")
+    shutil.copytree(reference_path("cost_seg"), pkg_dir / "refcs")
     (pkg_dir / "refcs" / "__init__.py").touch()
     sys.path.insert(0, str(pkg_dir))
     import refcs.cost_seg_calculator as mod
@@ -261,7 +262,7 @@ def test_ads_reproduces_reference_error(spark):
 
 def test_macrs_dim_matches_reference_tables(refcs, spark):
     """J4 broadcast dim carries the exact macrs_tables.py values."""
-    sys.path.insert(0, "/root/reference")
+    sys.path.insert(0, REFERENCE)
     from refcs.macrs_tables import get_macrs_percentage
 
     dim = {(r["asset_class"], r["year"], r["month"]): r["pct"] for r in macrs_table_df(spark).collect()}

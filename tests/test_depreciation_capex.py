@@ -15,16 +15,17 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import reference_path
 from pdf_parser_spark import depreciation as dep
-
-RCGV = "/root/reference/Claude_Code/RCGV_Quote_Assistant-main/cost_seg"
 
 
 @pytest.fixture(scope="module")
 def refmod(tmp_path_factory):
     pkg = tmp_path_factory.mktemp("rcgvpkg")
-    shutil.copytree(RCGV, pkg / "rcgvcs")
-    shutil.copy("/root/reference/cost_seg/macrs_tables.py", pkg / "rcgvcs")
+    shutil.copytree(
+        reference_path("Claude_Code/RCGV_Quote_Assistant-main/cost_seg"), pkg / "rcgvcs"
+    )
+    shutil.copy(reference_path("cost_seg/macrs_tables.py"), pkg / "rcgvcs")
     (pkg / "rcgvcs" / "__init__.py").touch()
     sys.path.insert(0, str(pkg))
     import rcgvcs.cost_seg_calculator as mod

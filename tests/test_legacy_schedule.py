@@ -16,7 +16,6 @@ round-2 transcription oracle masked.
 
 from __future__ import annotations
 
-import importlib.util
 import sys
 import types
 
@@ -24,29 +23,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import load_reference, reference_engine
 from pdf_parser_spark.depreciation import legacy_building_value, legacy_schedule
-
-
-def _load_engine():
-    had = "openpyxl" in sys.modules
-    if not had:
-        stub = types.ModuleType("openpyxl")
-        stub.load_workbook = None
-        sys.modules["openpyxl"] = stub
-    try:
-        spec = importlib.util.spec_from_file_location(
-            "ref_engine_quote_d12", "/root/reference/engine/quote_calc.py"
-        )
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules["ref_engine_quote_d12"] = mod
-        spec.loader.exec_module(mod)
-        return mod
-    finally:
-        if not had:
-            del sys.modules["openpyxl"]
-
-
-REF_ENGINE = _load_engine()
 
 CASES = [
     dict(case_id=0, purchase_price=1_000_000.0, land_value=10.0, known_land_value=False,
@@ -74,12 +52,13 @@ def legacy_df(spark):
 
 def test_legacy_v1_parity_vs_engine(spark, legacy_df):
     out = legacy_schedule(legacy_df, variant="legacy_v1", rounding="python")
+    engine = reference_engine()
     got = {}
     for r in out.collect():
         got.setdefault(r["case_id"], {})[r["year"]] = r
     for case in CASES:
-        exp_rows = REF_ENGINE.QuoteCalculator.calculate_depreciation_schedule(
-            REF_ENGINE.QuoteCalculator.__new__(REF_ENGINE.QuoteCalculator), dict(case)
+        exp_rows = engine.QuoteCalculator.calculate_depreciation_schedule(
+            engine.QuoteCalculator.__new__(engine.QuoteCalculator), dict(case)
         )
         assert len(got[case["case_id"]]) == len(exp_rows), f"case {case['case_id']} row count"
         for exp in exp_rows:
@@ -90,19 +69,11 @@ def test_legacy_v1_parity_vs_engine(spark, legacy_df):
                 )
 
 
-def _load_service_api():
-    """Import /root/reference/service/api.py for real, stubbing only
-    the absent web-framework deps (fastapi/pydantic/openai). Returns
-    (api_module, QuoteInputs). Stubs are removed afterwards."""
-    stubbed = []
-
-    def _stub(name):
-        m = types.ModuleType(name)
-        sys.modules[name] = m
-        stubbed.append(name)
-        return m
-
-    fastapi = _stub("fastapi")
+def _web_framework_stubs():
+    """Stand-ins for the web-framework packages service/api.py imports
+    (fastapi/pydantic/openai): identity route decorators and an
+    attribute-bag BaseModel; the schedule arithmetic never touches them."""
+    fastapi = types.ModuleType("fastapi")
 
     class _FastAPI:
         def __init__(self, *a, **k):
@@ -120,10 +91,10 @@ def _load_service_api():
             self.status_code = status_code
 
     fastapi.FastAPI, fastapi.HTTPException = _FastAPI, _HTTPException
-    _stub("fastapi.middleware")
-    _stub("fastapi.middleware.cors").CORSMiddleware = object
+    cors = types.ModuleType("fastapi.middleware.cors")
+    cors.CORSMiddleware = object
 
-    pyd = _stub("pydantic")
+    pyd = types.ModuleType("pydantic")
 
     class _BaseModel:
         def __init__(self, **kw):
@@ -136,27 +107,9 @@ def _load_service_api():
     pyd.BaseModel = _BaseModel
     pyd.Field = lambda default=None, **k: default
     pyd.field_validator = lambda *a, **k: (lambda f: f)
-    _stub("openai").OpenAI = object
-
-    try:
-        pkg = types.ModuleType("ref_service_d12")
-        pkg.__path__ = ["/root/reference/service"]
-        sys.modules["ref_service_d12"] = pkg
-        stubbed.append("ref_service_d12")
-        spec = importlib.util.spec_from_file_location(
-            "ref_service_d12.api", "/root/reference/service/api.py"
-        )
-        api = importlib.util.module_from_spec(spec)
-        sys.modules["ref_service_d12.api"] = api
-        spec.loader.exec_module(api)
-        schemas = sys.modules["ref_service_d12.schemas"]
-        return api, schemas.QuoteInputs
-    finally:
-        for name in stubbed:
-            sys.modules.pop(name, None)
-
-
-REF_API, REF_QUOTE_INPUTS = _load_service_api()
+    openai = types.ModuleType("openai")
+    openai.OpenAI = object
+    return [fastapi, types.ModuleType("fastapi.middleware"), cors, pyd, openai]
 
 
 @pytest.fixture(scope="module")
@@ -175,15 +128,17 @@ def legacy_df_api(spark):
 
 def test_legacy_v2_parity_vs_executed_api(spark, legacy_df_api):
     out = legacy_schedule(legacy_df_api, variant="legacy_v2", rounding="python")
+    api = load_reference("service/api.py", "ref_service.api", stubs=_web_framework_stubs())
+    quote_inputs = sys.modules["ref_service.schemas"].QuoteInputs
     got = {}
     for r in out.collect():
         got.setdefault(r["case_id"], {})[r["year"]] = r
     for case in CASES:
-        inp = REF_QUOTE_INPUTS(
+        inp = quote_inputs(
             zip_code=85250,
             **{k: v for k, v in case.items() if k != "case_id"},
         )
-        doc = REF_API.quote_document(inp)  # the REAL reference body
+        doc = api.quote_document(inp)  # the REAL reference body
         exp_rows = doc["schedule"]
         assert len(got[case["case_id"]]) == 27 == len(exp_rows)
         # the executed api's own building value must match the Spark one

@@ -5,31 +5,20 @@ variant) are imported from /root/reference and run as ORACLES over a
 structured input grid; our Catalyst expressions must match bid-for-bid.
 """
 
-import importlib.util
-import sys
-
 import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import load_reference, reference_engine
 from pdf_parser_spark.pricing import apply_adjustments, compute_pricing, ladder_dim, ladder_join
 
 F_lit = F.lit
 
-
-def _load(path, name):
-    spec = importlib.util.spec_from_file_location(name, path)
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules[name] = mod
-    spec.loader.exec_module(mod)
-    return mod
-
-
-REF_V1 = _load("/root/reference/tools/pricing_calculator.py", "ref_pricing_v1")
-REF_V2 = _load(
-    "/root/reference/Claude_Code/RCGV_Quote_Assistant-main/tools/pricing_calculator.py",
-    "ref_pricing_v2",
-)
+# each pricing version's reference calculator, under the snapshot root
+REF_PRICING = {
+    "v1": "tools/pricing_calculator.py",
+    "v2": "Claude_Code/RCGV_Quote_Assistant-main/tools/pricing_calculator.py",
+}
 
 # structured grid over every tier boundary (FIXTURES.md §4)
 PRICES = [100_000, 250_000, 500_000, 750_000, 1_000_000, 1_250_000, 2_550_000,
@@ -74,8 +63,9 @@ def grid_df(spark):
     return spark.createDataFrame(_grid()).cache()
 
 
-@pytest.mark.parametrize("version,ref", [("v1", REF_V1), ("v2", REF_V2)])
-def test_pricing_parity_vs_reference(spark, grid_df, version, ref):
+@pytest.mark.parametrize("version", ["v1", "v2"])
+def test_pricing_parity_vs_reference(spark, grid_df, version):
+    ref = load_reference(REF_PRICING[version], f"ref_pricing_{version}")
     out = {r["case_id"]: r for r in compute_pricing(grid_df, version=version).collect()}
     for row in _grid():
         exp = ref.calculate_quote_pricing(
@@ -180,28 +170,7 @@ def test_ladder_join_matches_chain(spark, grid_df):
 
 # ----------------------------------------------------------------------
 # engine/quote_calc.py forks: F13 land coercion + F10 0.909 payments
-# (the module imports openpyxl at top-level for its xlsx ctor path —
-# stubbed here; the methods under test never touch the workbook)
 # ----------------------------------------------------------------------
-def _load_engine():
-    import types
-
-    had = "openpyxl" in sys.modules
-    if not had:
-        stub = types.ModuleType("openpyxl")
-        stub.load_workbook = None
-        sys.modules["openpyxl"] = stub
-    try:
-        return _load("/root/reference/engine/quote_calc.py", "ref_engine_quote")
-    finally:
-        # drop the spec-less stub so importlib.util.find_spec stays sane
-        # (the engine bound load_workbook at import; no later lookups)
-        if not had:
-            del sys.modules["openpyxl"]
-
-
-REF_ENGINE = _load_engine()
-
 LAND_CASES = [
     # (purchase_price, land_value, known)
     (1_000_000.0, 150_000.0, True),   # known ⇒ dollars verbatim
@@ -221,6 +190,7 @@ def test_land_coercion_parity_vs_engine(spark):
 
     from pdf_parser_spark.pricing import coerce_land
 
+    engine = reference_engine()
     rows = [
         dict(case_id=i, pp=pp, land=land, known=known)
         for i, (pp, land, known) in enumerate(LAND_CASES)
@@ -233,14 +203,15 @@ def test_land_coercion_parity_vs_engine(spark):
         ).collect()
     }
     for i, (pp, land, known) in enumerate(LAND_CASES):
-        exp = REF_ENGINE.QuoteCalculator._coerce_land_amount(pp, land, known)
+        exp = engine.QuoteCalculator._coerce_land_amount(pp, land, known)
         assert got[i] == pytest.approx(exp, abs=0.0), f"case {i}"
 
 
 def test_payment_block_parity_vs_engine(spark):
     from pdf_parser_spark.pricing import with_payment_block
 
-    calc = REF_ENGINE.QuoteCalculator.__new__(REF_ENGINE.QuoteCalculator)
+    engine = reference_engine()
+    calc = engine.QuoteCalculator.__new__(engine.QuoteCalculator)
     quotes = [1908.19, 2235.0, 100.0, 999.99, 1736.45, 12345.67, 333.33, 0.01]
     df = spark.createDataFrame(
         [dict(case_id=i, final_quote=q, rush_fee=float(i % 3) * 500.0) for i, q in enumerate(quotes)]
@@ -276,6 +247,7 @@ def test_land_coercion_in_compute_pricing_vs_engine_quote(spark):
     """nat_log-style land handling end to end: the coerced land amount
     feeds the logistic bid's building value, matching the engine's
     build_quote_doc land math (engine/quote_calc.py:289-296)."""
+    engine = reference_engine()
     rows = [
         dict(case_id=0, purchase_price=1_000_000.0, land_value=10.0, known_land=False),
         dict(case_id=1, purchase_price=1_000_000.0, land_value=150_000.0, known_land=True),
@@ -299,7 +271,7 @@ def test_land_coercion_in_compute_pricing_vs_engine_quote(spark):
         for r in compute_pricing(df, version="v1", known_land_value="known_land").collect()
     }
     for row in rows:
-        exp_land = REF_ENGINE.QuoteCalculator._coerce_land_amount(
+        exp_land = engine.QuoteCalculator._coerce_land_amount(
             row["purchase_price"], row["land_value"], row["known_land"]
         )
         assert out[row["case_id"]]["land_amount"] == pytest.approx(exp_land, abs=0.0)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from conftest import reference_engine, reference_path
 from pdf_parser_spark import pricing
 from pdf_parser_spark.pricing import (
     COST_BASIS_V2,
@@ -17,12 +18,17 @@ from pdf_parser_spark.pricing import (
 )
 from pdf_parser_spark.xlsxlite import read_sheet
 
-XLSX = "/root/reference/Base Pricing27.1_Pro_SMART_RCGV.xlsx"
 PAIRS = [("Cost Basis", "Cost Basis Factor"), ("Zip Code", "Zip Code Factor")]
 
 
-def test_read_sheet_grid_shape():
-    grid = read_sheet(XLSX, "VLOOKUP Tables")
+@pytest.fixture
+def xlsx():
+    """The reference's pricing workbook."""
+    return reference_path("Base Pricing27.1_Pro_SMART_RCGV.xlsx")
+
+
+def test_read_sheet_grid_shape(xlsx):
+    grid = read_sheet(xlsx, "VLOOKUP Tables")
     assert len(grid) > 10 and len(grid[0]) > 10
     # engine/quote_calc.py:60 reads headers at row index 2
     row2 = [x for x in grid[2] if x is not None]
@@ -30,13 +36,13 @@ def test_read_sheet_grid_shape():
     assert row2.index("Cost Basis Factor") == row2.index("Cost Basis") + 1
 
 
-def test_read_sheet_unknown_sheet():
+def test_read_sheet_unknown_sheet(xlsx):
     with pytest.raises(KeyError):
-        read_sheet(XLSX, "No Such Sheet")
+        read_sheet(xlsx, "No Such Sheet")
 
 
-def test_ladder_discovery_from_real_workbook():
-    tabs = load_ladder_tables(XLSX, PAIRS)
+def test_ladder_discovery_from_real_workbook(xlsx):
+    tabs = load_ladder_tables(xlsx, PAIRS)
     cb = tabs["Cost Basis"]
     # the workbook IS the source of the hard-coded v2 tiers — every
     # (threshold, factor) of COST_BASIS_V2 appears verbatim
@@ -49,18 +55,17 @@ def test_ladder_discovery_from_real_workbook():
     assert len(zips) >= 10 and zips == sorted(zips)
 
 
-def test_ladder_join_matches_executed_engine_lookup(spark):
+def test_ladder_join_matches_executed_engine_lookup(spark, xlsx):
     """J1 parity: our broadcast range join == the engine's executed
     _ladder_lookup over the SAME workbook-discovered table."""
-    from tests.test_legacy_schedule import REF_ENGINE
-
-    tabs = load_ladder_tables(XLSX, PAIRS)
+    engine = reference_engine()
+    tabs = load_ladder_tables(xlsx, PAIRS)
     cb = tabs["Cost Basis"]
     ref_table = pd.DataFrame(cb, columns=["threshold", "factor"])
     probes = [0.0, 1.0, 249_999.0, 250_000.0, 750_001.0, 999_999.99,
               1_000_000.0, 2_500_000.0, 9_999_999.0, 10_000_000.0, 50_000_000.0]
     expected = {
-        x: REF_ENGINE.QuoteCalculator._ladder_lookup(x, ref_table) for x in probes
+        x: engine.QuoteCalculator._ladder_lookup(x, ref_table) for x in probes
     }
     df = spark.createDataFrame([(i, x) for i, x in enumerate(probes)], "i int, x double")
     dim = ladder_dim_from_table(spark, cb, name="factor")
