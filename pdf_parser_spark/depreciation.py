@@ -559,44 +559,6 @@ def macrs_table_df(spark: SparkSession) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# F15: Decimal-faithful basis allocation with cent reconciliation
-# (RCGV .../cost_seg_calculator.py:307-365)
-# ----------------------------------------------------------------------
-def with_cent_allocations(df: DataFrame) -> DataFrame:
-    """Adds alloc-cent columns (camt_5yr..camt_bldg) such that the
-    amounts are cent-quantized and sum EXACTLY to the basis:
-
-    - percent-or-fraction normalization (pct>1 ⇒ /100, §1.2 idiom),
-    - residual percentage dumped into building (`:350-353`),
-    - per-class rounding to cents (ROUND_HALF_UP ≙ F.round),
-    - final cent-fix: building absorbs ``basis − Σ amounts`` (`:360-363`).
-
-    Requires with_engine_inputs columns (amt_* are the float-engine
-    allocations; percentages are re-derived from them).
-    """
-    basis = F.col("total_depreciable")
-    safe = F.when(basis == 0.0, F.lit(1.0)).otherwise(basis)
-    p5 = F.col("amt_5yr") / safe
-    p7 = F.col("amt_7yr") / safe
-    p15 = F.col("amt_15yr") / safe
-    # building absorbs the normalization residual
-    pb = F.lit(1.0) - (p5 + p7 + p15)
-    a5 = F.round(basis * p5, 2)
-    a7 = F.round(basis * p7, 2)
-    a15 = F.round(basis * p15, 2)
-    ab = F.round(basis * pb, 2)
-    diff = F.round(basis, 2) - (a5 + a7 + a15 + ab)
-    ab_fixed = F.round(ab + diff, 2)
-    return df.select(
-        "*",
-        a5.alias("camt_5yr"),
-        a7.alias("camt_7yr"),
-        a15.alias("camt_15yr"),
-        ab_fixed.alias("camt_bldg"),
-    )
-
-
-# ----------------------------------------------------------------------
 # D9: remaining basis / remaining life per class
 # (RCGV .../cost_seg_calculator.py:461-518)
 # ----------------------------------------------------------------------
@@ -703,31 +665,19 @@ def _sql_pool_fn(p: str, target_year: str, accumulated: bool) -> str:
     )
 
 
-def capex_class_totals(pools: str, target_year: str, accumulated: bool = False) -> Dict[str, Column]:
-    """A3: per-class sums over the pool array ``pools`` — explode-free
-    ``aggregate(filter(...))``, partition-local at any scale."""
-    fn = _sql_pool_fn("p", target_year, accumulated)
-    cls = _sql_pool_class("p")
-    return {
-        c: F.expr(
-            f"aggregate(filter({pools}, p -> {cls} = '{c}'), 0.0D,"
-            f" (acc, p) -> acc + {fn})"
-        )
-        for c in CAPEX_CLASSES
-    }
-
-
 def capex_total_sql(pools: str, target_year: str, accumulated: bool = False) -> str:
-    """The sum of :func:`capex_class_totals` over all classes, as ONE
-    aggregate with a ~10× smaller plan and the same value.
+    """The pools' depreciation summed over all classes, as ONE
+    aggregate.
 
-    Five ``filter``+``aggregate`` pairs, each embedding the MACRS tables
-    and the class dispatch, made the analysis cost dominate `capex_481a`
-    (round-3 finding). Here the accumulator is a 5-slot array of
-    per-class partial sums: each pool adds its value to its class's slot
-    and passes the others through unchanged, so each slot folds in the
-    same order as the filtered per-class fold, and the final left fold
-    over the slots matches ``0.0 + s_5yr + s_7yr + ...`` exactly."""
+    One ``filter``+``aggregate`` pair per class, each embedding the
+    MACRS tables and the class dispatch, made the analysis cost dominate
+    `capex_481a` (round-3 finding). Here the accumulator is a 5-slot
+    array of per-class partial sums: each pool adds its value to its
+    class's slot and passes the others through unchanged, so each slot
+    folds in the same order as a filtered per-class fold, and the final
+    left fold over the slots matches ``0.0 + s_5yr + s_7yr + ...``
+    exactly. ``tests/test_depreciation_capex.py`` checks the per-class
+    folds against the reference and their sum against this one."""
     arms = " ".join(
         f"WHEN p.classification = '{k}' THEN {CAPEX_CLASSES.index(v)}"
         for k, v in CAPEX_CLASS_MAP.items()
@@ -790,8 +740,10 @@ def with_reconciliation(df: DataFrame, pools_col: Optional[str] = None, toleranc
     Note the reference compares its CLOSED-FORM lifetime totals against
     the same closed form re-derived — an identity check that only
     catches Decimal drift, NOT schedule-sum errors. We reproduce that
-    contract; :func:`reconcile_schedule` adds the stronger check the
-    reference lacks. Requires with_lifetime_totals columns.
+    contract; ``tests/test_depreciation_capex.py`` checks the stronger
+    schedule invariant the reference lacks (per-year sums telescope to
+    the accumulated value at the horizon). Requires
+    with_lifetime_totals columns.
     """
     std, capex = _sql_lifetime(pools_col)
     exp_std = f"round({std}, 2)"
@@ -809,36 +761,6 @@ def with_reconciliation(df: DataFrame, pools_col: Optional[str] = None, toleranc
         F.expr(ok).alias("is_reconciled"),
     )
 
-
-def reconcile_schedule(schedule: DataFrame, keys: List[str], tolerance: float = 0.01) -> DataFrame:
-    """Schedule-assembly invariant (stronger than the reference's D11):
-    each column's sum over the horizon must equal the engine's OWN
-    accumulated value at the horizon — i.e. the per-year decomposition
-    telescopes. Deliberately NOT checked against the raw basis: the
-    reference's MM tables (reproduced verbatim for parity) sum to
-    99.893% (39yr) / 101.657% (27.5yr), so full-basis recovery is not a
-    property of this data — see tests/test_depreciation_capex.py.
-    """
-    tot = schedule.groupBy(
-        *keys, "total_depreciable", "building_class", "pis_month", "bonus_rate",
-        "amt_5yr", "amt_7yr", "amt_15yr", "amt_bldg",
-    ).agg(
-        F.sum("bonus_dep").alias("sum_bonus"),
-        F.sum("trad_cost_seg").alias("sum_trad"),
-        F.sum("std_dep").alias("sum_std"),
-        F.max("accumulated_total").alias("acc_at_horizon"),
-        F.max("year").alias("horizon"),
-    )
-    tol = _sqld(tolerance)
-    trad_at_horizon = _sql_sum(_class_sqls("horizon", "0.0D", accumulated=True).values())
-    return tot.select(
-        *keys,
-        F.round(F.col("sum_bonus"), 2).alias("sum_bonus"),
-        F.round(F.col("acc_at_horizon"), 2).alias("acc_at_horizon"),
-        F.expr(f"abs(sum_bonus - acc_at_horizon) <= {tol}").alias("bonus_reconciled"),
-        F.expr(f"abs(sum_std - {_sql_standard_dep('horizon')}) <= {tol}").alias("std_reconciled"),
-        F.expr(f"abs(sum_trad - {trad_at_horizon}) <= {tol}").alias("trad_reconciled"),
-    )
 
 # ----------------------------------------------------------------------
 # RCGV engine variant stage-1 (RCGV .../cost_seg_calculator.py:146-292)

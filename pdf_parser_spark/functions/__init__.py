@@ -1,3 +1,1 @@
 """Scalar function catalog (SURVEY §2.9) — shared helpers."""
-
-from .rounding import py_round, decimal_half_up, js_tofixed  # noqa: F401

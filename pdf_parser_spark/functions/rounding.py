@@ -21,7 +21,11 @@ WHICH call site:
 3. JS ``Number(x.toFixed(d))`` (``formatters.ts:32-36``): nearest with
    ties-away on the binary value; ties are only hit at dyadic
    rationals, so ``F.round`` (string HALF_UP) agrees on all realistic
-   parsed-currency inputs — used for the typed formatters.
+   parsed-currency inputs.
+
+Regimes 2 and 3 need no helper: call sites use plain ``F.round``, as
+``pricing.compute_pricing(rounding="half_up")`` does. Only regime 1
+needs :func:`py_round`.
 """
 
 from __future__ import annotations
@@ -66,12 +70,3 @@ def py_round(col: Column, decimals: int = 2) -> Column:
     # beyond 2^52/s the value is already integral at this scale
     return F.when(F.abs(col) >= F.lit(4.5e15) / s, col).otherwise(rounded / s)
 
-
-def decimal_half_up(col: Column, decimals: int = 2) -> Column:
-    """``Decimal(str(x)).quantize(..., ROUND_HALF_UP)`` — F.round is exact."""
-    return F.round(col, decimals)
-
-
-def js_tofixed(col: Column, decimals: int = 2) -> Column:
-    """JS ``Number(x.toFixed(d))`` — F.round agrees on non-dyadic inputs."""
-    return F.round(col, decimals)

@@ -548,23 +548,6 @@ def gif_frame_stats(df: DataFrame, every: int = 1, media_col: str = "media") -> 
     )
 
 
-def media_stage_metrics(stage_out: DataFrame) -> DataFrame:
-    """Per-task lineage for any multimodal stage output carrying an
-    ``error`` column: (partition_id, docs, failures) — the audit-table
-    counters that make dropped-vs-failed reconcilable downstream."""
-    return (
-        stage_out.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.countDistinct("doc_id").alias("docs"),
-            F.countDistinct(
-                F.when(F.col("error").isNotNull(), F.col("doc_id"))
-            ).alias("failures"),
-        )
-        .select(F.col("_pid").alias("partition_id"), "docs", "failures")
-    )
-
-
 # ----------------------------------------------------------------------
 # MP4 metadata (real box-structure walk — ffprobe-lite; frame DECODE
 # still needs real codecs and stays gated)

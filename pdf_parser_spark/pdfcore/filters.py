@@ -186,17 +186,17 @@ def _png_unfilter_vector(data: bytes, nrows: int, row_len: int, bpp: int) -> byt
 # individual filters
 # ----------------------------------------------------------------------
 def flate_decode(data: bytes, params: Optional[dict] = None) -> bytes:
-    try:
-        out = zlib.decompress(data)
-    except zlib.error:
-        # tolerate trailing garbage / missing checksum (raw deflate)
+    # a zlib stream first: a decompressobj ignores trailing garbage and
+    # returns what inflated before a truncated stream or checksum ends;
+    # then raw deflate, for streams written without the zlib header
+    for wbits in (15, -15):
         try:
-            out = zlib.decompressobj().decompress(data)
-        except zlib.error:
-            try:
-                out = zlib.decompressobj(-15).decompress(data)
-            except zlib.error as e:
-                raise FilterError(f"FlateDecode failed: {e}") from None
+            out = zlib.decompressobj(wbits).decompress(data)
+            break
+        except zlib.error as e:
+            err = e
+    else:
+        raise FilterError(f"FlateDecode failed: {err}") from None
     if params:
         out = apply_predictor(out, params)
     return out

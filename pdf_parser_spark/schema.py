@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -84,22 +83,3 @@ RECORD_FIELDS = [
     ("Tax_Year", "number"),
     ("Tax_Deadline_Quote", "text"),
 ]
-
-_TYPE_MAP = {
-    "text": StringType(),
-    "zipcode": StringType(),
-    "date": StringType(),
-    "number": DoubleType(),
-    "currency": DoubleType(),
-}
-
-RECORD_SCHEMA = StructType(
-    [StructField(name, _TYPE_MAP[kind], True) for name, kind in RECORD_FIELDS]
-)
-
-VALIDATION_ERROR_TYPE = StructType(
-    [
-        StructField("field", StringType(), True),
-        StructField("message", StringType(), True),
-    ]
-)

@@ -29,8 +29,6 @@ at scale.
 
 from __future__ import annotations
 
-import math
-from functools import lru_cache
 from typing import List, Optional
 
 import pandas as pd
@@ -77,17 +75,6 @@ def hyperplane(seed: int, dim: int) -> List[float]:
         h = _splitmix(seed * 1_000_003 + j)
         out.append((h / 2**64) * 2.0 - 1.0)
     return out
-
-
-@lru_cache(maxsize=4096)
-def _lit_vec_cached(vals: tuple) -> Column:
-    # one SQL-parsed py4j call per plane instead of dim F.lit round
-    # trips; memoized — plane sets are reused across corpus/query sides
-    return F.expr("array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")")
-
-
-def _lit_vec(vals: List[float]) -> Column:
-    return _lit_vec_cached(tuple(float(v) for v in vals))
 
 
 # ----------------------------------------------------------------------
@@ -148,17 +135,6 @@ def cosine_topk(
 # ----------------------------------------------------------------------
 # random-hyperplane LSH
 # ----------------------------------------------------------------------
-def rp_signature(vec: Column, dim: int, bits: int, table: int, seed: int = 7) -> Column:
-    """b-bit sign signature of ``vec`` against fixed hyperplanes."""
-    sig = F.lit(0).cast("long")
-    for b in range(bits):
-        plane = _lit_vec(hyperplane(seed + table * 10_007 + b, dim))
-        sig = sig + F.when(dot(vec, plane) >= 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sig
-
-
 def rp_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -421,12 +397,12 @@ def with_rp_buckets(
 ) -> DataFrame:
     """Adds exploded (table, bucket) keys per row.
 
-    The native ``rp_signature`` expression evaluates bits×tables
-    interpreted HOF dot products per row (Catalyst doesn't codegen
-    higher-order functions); for signature computation numpy's single
-    ``V @ P.T`` matmul per Arrow batch is ~20× faster — the documented
-    exception to the no-Python rule (hot numeric kernel, Arrow-batched,
-    identical deterministic planes).
+    A native signature would evaluate bits×tables interpreted HOF dot
+    products per row (Catalyst doesn't codegen higher-order functions)
+    and cost py4j round trips per plan node; one numpy ``V @ P.T``
+    matmul per Arrow batch is ~20× faster — the documented exception to
+    the no-Python rule (hot numeric kernel, Arrow-batched, deterministic
+    planes from :func:`hyperplane`).
 
     Cross-engine ulp note (accepted risk, bounded by test): the sign
     bit is an exact ``dot >= 0`` comparison; numpy's einsum and the

@@ -186,23 +186,6 @@ def _minhash_sig_sql(n_hashes: int) -> str:
     return f"IF(size(_mh) > 0, array({mins}), NULL)"
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n_hashes: int = 12, shingle_k: int = 3,
-) -> DataFrame:
-    """(id, hash_idx, min_hash): minhash via a universal hash family
-    ``h_i(m) = (a_i·(m mod p) + b_i) mod p``, one row per hash of each
-    document that has at least one shingle. No UDF, no shuffle, and an
-    exact DuckDB oracle from the same literal (a_i, b_i, p).
-
-    The generator reads the signature expression, not a column: over a
-    bare column Catalyst infers a ``size(col) > 0`` filter below the
-    ``posexplode`` and pushes it into the tokenizing projections."""
-    return _shingle_digests(df, text_col, id_col, shingle_k).select(
-        F.col(id_col), F.posexplode(F.expr(_minhash_sig_sql(n_hashes))).alias("hash_idx", "min_hash")
-    )
-
-
 @lru_cache(maxsize=16)
 def _lsh_bands_sql(n_hashes: int, rows: int) -> str:
     """The band keys of ``_sig`` as one SQL array: band b is the sorted
@@ -382,61 +365,20 @@ def _simhash_quarters_sql(bits: int) -> str:
 # ----------------------------------------------------------------------
 # near-dup cluster resolution (connected components + canonical keeper)
 # ----------------------------------------------------------------------
-def connected_components(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """(node_id, cluster_id) connected components over an edge list, via
-    alternating **large-star / small-star** (Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond").
-
-    The cluster label is the component's minimum node id — fully
-    deterministic regardless of iteration count or partitioning.
-
-    Scale design (the reason this is NOT min-label propagation): a
-    pathological near-dup CHAIN (doc₁~doc₂~…~docₖ) makes label
-    propagation take diameter rounds; star-contraction converges in
-    O(log² n) rounds worst-case and 3-5 rounds on real dedup graphs
-    (dup families are dense). Each round is two groupBy+join passes on
-    the edge key — no driver-side union-find, no collect; the edge set
-    only shrinks toward one star per component. ``localCheckpoint``
-    truncates the iterative lineage so the plan does not grow per round
-    (the classic iterative-Spark blowup).
-
-    Termination: the loop stops at the first round whose edges form a
-    star forest (each member points at exactly one root, no root points
-    anywhere) — the contraction's fixpoint, tested by one job per round.
-
-    Returns one row per node that appears in ≥1 edge, including roots:
-    ``(node_id, cluster_id)``.
-
-    The iteration shuffles are clamped to ``defaultParallelism``
-    partitions via explicit ``repartition(n, key)`` nodes INSIDE the
-    loop plan (Catalyst reuses that hash partitioning for the
-    downstream groupBy/join/distinct on the same key, so each clamp is
-    one exchange, not one extra): the edge set only SHRINKS round over
-    round, so a driver-level ``spark.sql.shuffle.partitions`` sized for
-    the big scan (256 here, thousands on a real cluster) would turn
-    ~6 shuffles × ~4 rounds into a sea of empty tasks — pure scheduler
-    overhead at every scale. Per-plan clamping (rather than mutating
-    ``spark.sql.shuffle.partitions`` for the loop's duration) keeps the
-    session conf untouched, so concurrent queries on the same
-    SparkSession are unaffected. The clamp tracks cluster size
-    (defaultParallelism = total cores), so it is not a local-mode hack.
-    """
-    e = _star_forest(pairs, id_a, id_b, max_iter)
-    # every edge is (member, root); roots have no u-row
-    roots = e.select(F.col("v").alias("node_id")).distinct()
-    return (
-        e.select(F.col("u").alias("node_id"), F.col("v").alias("cluster_id"))
-        .union(roots.select("node_id", F.col("node_id").alias("cluster_id")))
-    )
-
-
 def _star_forest(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataFrame:
     """The converged star forest over ``pairs``: distinct (u, v) edges,
     one per non-root node ``u``, pointing at its component's minimum
-    node ``v``.
+    node ``v``. These are the connected components, found by alternating
+    **large-star / small-star** contraction (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond"); the minimum-id
+    label is deterministic regardless of round count or partitioning.
+
+    Not min-label propagation: a near-dup CHAIN (doc₁~doc₂~…~docₖ) makes
+    label propagation take diameter rounds, while star contraction
+    converges in O(log² n) rounds worst-case and 3-5 rounds on real
+    dedup graphs. Each round is two groupBy+join passes on the edge key,
+    with no driver-side union-find and no collect, and the edge set only
+    shrinks toward one star per component.
 
     The input step normalizes every edge to u > v, drops self-loops and
     eagerly checkpoints the result, duplicates included: the first
@@ -461,7 +403,11 @@ def _star_forest(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataF
     every downstream groupBy/join/distinct keyed on (a superset of) that
     key, so EnsureRequirements inserts no further exchange and the
     session's ``spark.sql.shuffle.partitions`` never applies inside the
-    loop."""
+    loop. The edge set shrinks round over round, so a shuffle width sized
+    for the big scan would be a sea of empty tasks per round; clamping
+    per plan, not by setting the session conf, leaves concurrent queries
+    on the same session unaffected. ``n_part`` tracks the cluster's
+    total cores, so it is not a local-mode setting."""
     n_part = max(pairs.sparkSession.sparkContext.defaultParallelism, 8)
     e = (
         pairs.select(
@@ -476,7 +422,7 @@ def _star_forest(pairs: DataFrame, id_a: str, id_b: str, max_iter: int) -> DataF
         if _cc_not_star(e, n_part).isEmpty():
             return e
     raise ValueError(
-        f"connected_components did not converge in {max_iter} rounds"
+        f"dedup_clusters did not converge in {max_iter} rounds"
     )
 
 

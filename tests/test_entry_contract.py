@@ -4,6 +4,8 @@ scripts/check_oracle.py; this keeps the gate logic under pytest)."""
 
 from __future__ import annotations
 
+import ast
+import importlib.util
 import os
 import sys
 
@@ -85,35 +87,106 @@ def test_query_matches_oracle(spark, duck, name):
     assert _norm(sdf.columns, srows) == _norm(ocols, orows)
 
 
-def _imported_modules(path, module: str, is_pkg: bool) -> set:
-    """Every dotted module name the file imports (parents included),
-    relative imports resolved against ``module``."""
-    import ast
-    import importlib.util
+def _public_names(tree) -> set:
+    """The public top-level defs, classes and assignment targets."""
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name))
+    return {n for n in names if not n.startswith("_")}
 
-    with open(path, encoding="utf-8") as fh:
-        tree = ast.parse(fh.read(), path)
+
+def _references(tree, module: str, is_pkg: bool, modules: set):
+    """What one file reaches: the dotted module names it imports
+    (parents included), the ``(module, name)`` pairs it reads and the
+    names it re-exports. Relative imports resolve against ``module``;
+    ``modules`` are the package's own module names.
+
+    A file reads ``M.name`` by ``from M import name`` or through an
+    attribute chain on a bound module (``M.name``, ``alias.name``,
+    ``a.b.name``); a module also reads its own names wherever they load
+    outside their own top-level def or class. In an ``__init__.py``,
+    ``from .m import name`` re-exports rather than reads: it maps
+    ``(module, name)`` to ``(m, name)``, so a read through the package
+    reaches the defining module."""
     package = module if is_pkg else module.rpartition(".")[0]
-    out = set()
+    imported, reads, reexports, bound = set(), set(), {}, {}
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
             names = [a.name for a in node.names]
+            for a in node.names:
+                local = a.asname or a.name.split(".")[0]
+                bound[local] = a.name if a.asname else local
         elif isinstance(node, ast.ImportFrom):
             base = importlib.util.resolve_name("." * node.level + (node.module or ""), package)
             names = [base] + [f"{base}.{a.name}" for a in node.names]
+            for a in node.names:
+                if f"{base}.{a.name}" in modules:
+                    bound[a.asname or a.name] = f"{base}.{a.name}"
+                elif is_pkg:
+                    reexports[(module, a.name)] = (base, a.name)
+                else:
+                    reads.add((base, a.name))
         else:
             continue
         for name in names:
             parts = name.split(".")
-            out.update(".".join(parts[: i + 1]) for i in range(len(parts)))
-    return out
+            imported.update(".".join(parts[: i + 1]) for i in range(len(parts)))
+    own = _public_names(tree)
+
+    def visit(node, owner):
+        if isinstance(node, ast.Attribute):
+            chain, base = [], node
+            while isinstance(base, ast.Attribute):
+                chain.insert(0, base.attr)
+                base = base.value
+            if isinstance(base, ast.Name) and base.id in bound:
+                parts = bound[base.id].split(".") + chain
+                for i in range(len(parts) - 1, 0, -1):
+                    if ".".join(parts[:i]) in modules:
+                        reads.add((".".join(parts[:i]), parts[i]))
+                        break
+        elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            if node.id in own and node.id != owner:
+                reads.add((module, node.id))
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner)
+
+    for top in tree.body:
+        visit(top, getattr(top, "name", None))
+    return imported, reads, reexports
 
 
-def test_every_package_module_has_an_importer():
-    """A package module nothing imports is a second path no query,
-    workload or script reaches. Every ``pdf_parser_spark`` module but
-    the ``job`` entrypoint must be imported by another package module,
-    ``__spark_entry__.py``, ``perfbench/`` or ``scripts/``."""
+# Public names no package code, entrypoint, workload or script reads,
+# each kept for the reason given.
+READER_EXEMPT = {
+    "pdf_parser_spark.pricing.load_ladder_tables": (
+        "SURVEY S4: the driver-side scan of the reference's Excel ladder "
+        "workbook, checked against that workbook in test_xlsx_source.py"
+    ),
+    "pdf_parser_spark.pricing.ladder_dim_from_table": (
+        "SURVEY S4: broadcasts a scanned ladder table as a Spark dim, "
+        "checked in test_xlsx_source.py"
+    ),
+    "pdf_parser_spark.synth.pages.write_pages_parquet": (
+        "the fixture writer of the test-data generator: writes a seeded "
+        "pages table to parquet for the job and audit tests"
+    ),
+}
+
+
+def test_every_package_name_has_a_reader():
+    """A package module nothing imports, or a public name nothing reads,
+    is a second path no query, workload or script reaches. Every
+    ``pdf_parser_spark`` module but the ``job`` entrypoint must be
+    imported, and every public top-level def, class or assignment must
+    be read, by its own module, another package module,
+    ``__spark_entry__.py``, ``perfbench/`` or ``scripts/``. A re-export
+    in an ``__init__.py`` is not a read. READER_EXEMPT holds the names
+    kept without a reader, each with its reason."""
     from pathlib import Path
 
     root = Path(__file__).resolve().parents[1]
@@ -123,10 +196,27 @@ def test_every_package_module_has_an_importer():
         return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
     modules = {dotted(p): p for p in (root / "pdf_parser_spark").rglob("*.py")}
-    importers = dict(modules, __spark_entry__=root / "__spark_entry__.py")
-    importers.update({dotted(p): p for d in ("perfbench", "scripts") for p in (root / d).glob("*.py")})
-    imported = set()
-    for name, path in importers.items():
-        imported |= _imported_modules(path, name, path.name == "__init__.py") - {name}
+    readers = dict(modules, __spark_entry__=root / "__spark_entry__.py")
+    readers.update({dotted(p): p for d in ("perfbench", "scripts") for p in (root / d).glob("*.py")})
+    trees = {name: ast.parse(path.read_text(encoding="utf-8"), str(path)) for name, path in readers.items()}
+    imported, reads, reexports = set(), set(), {}
+    for name, path in readers.items():
+        i, r, x = _references(trees[name], name, path.name == "__init__.py", set(modules))
+        imported |= i - {name}
+        reads |= r
+        reexports.update(x)
     orphans = sorted(set(modules) - imported - {"pdf_parser_spark", "pdf_parser_spark.job"})
     assert not orphans, f"package modules without an importer: {orphans}"
+
+    def defining(key):
+        while key in reexports:
+            key = reexports[key]
+        return key
+
+    reached = {".".join(defining(key)) for key in reads}
+    public = {f"{m}.{n}" for m in modules for n in _public_names(trees[m])}
+    unread = public - reached
+    missing = sorted(unread - set(READER_EXEMPT))
+    assert not missing, f"package names without a reader: {missing}"
+    stale = sorted(set(READER_EXEMPT) - unread)
+    assert not stale, f"exempt names that are gone or now have a reader: {stale}"

@@ -57,6 +57,29 @@ def test_flate_roundtrip():
     assert flate_decode(zlib.compress(raw)) == raw
 
 
+def test_flate_tolerated_and_corrupt_stream_shapes():
+    """What real-world Flate streams decode to: trailing garbage and a
+    truncated or missing checksum still give the whole text, a stream
+    cut mid-body gives what inflated before the cut, raw deflate (no
+    zlib header) decodes, and a corrupted checksum or non-Flate bytes
+    raise FilterError."""
+    from pdf_parser_spark.pdfcore.filters import FilterError
+
+    raw = b"BT /F1 12 Tf (the quick brown fox) Tj ET\n" * 40
+    z = zlib.compress(raw)
+    assert flate_decode(z + b"\r\nendstream garbage") == raw
+    assert flate_decode(z[:-2]) == raw
+    assert flate_decode(z[:-4]) == raw
+    cut = flate_decode(z[: len(z) // 2])
+    assert cut and raw.startswith(cut) and len(cut) < len(raw)
+    deflate = zlib.compressobj(9, zlib.DEFLATED, -15)
+    assert flate_decode(deflate.compress(raw) + deflate.flush()) == raw
+    bad_check = z[:-1] + bytes([z[-1] ^ 1])
+    for corrupt in (bad_check, b"not a flate stream at all"):
+        with pytest.raises(FilterError, match="FlateDecode failed"):
+            flate_decode(corrupt)
+
+
 def test_png_predictor_up():
     # columns=4, predictor Up: rows of filter-type 2
     row1 = bytes([2, 1, 1, 1, 1])

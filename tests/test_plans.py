@@ -189,22 +189,27 @@ def test_cc_convergence_check_clamped_exchange_only(spark):
 
 
 def test_connected_components_checkpointed_no_conf_mutation(spark):
-    """The iterative lineage must be truncated (result reads from the
-    checkpoint RDD, not a round-over-round join tower) and the session
+    """The iterative lineage must be truncated (the cluster edges read
+    from the checkpoint RDD, not a round-over-round join tower: the one
+    join left is the documents' lookup of their edge) and the session
     shuffle conf must come back untouched."""
+    import re
+
     from pdf_parser_spark import textops
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8), (9, 9)], "id_a long, id_b long"
     )
-    cc = textops.connected_components(pairs)
+    docs = spark.createDataFrame([(n,) for n in (1, 2, 3, 7, 8, 9)], "doc_id long")
+    cc = textops.dedup_clusters(docs, pairs)
     p = plan_of(cc)
-    assert "Scan ExistingRDD" in p  # CC result enters via checkpoint
-    assert ") Join" not in p  # no star-contraction join survives
+    assert "at localCheckpoint" in p  # the edges enter via the checkpoint
+    joins = [l for l in p.splitlines() if re.match(r"\(\d+\) \w*Join", l)]
+    assert len(joins) == 1, p  # no star-contraction join survives
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    got = {(r.node_id, r.cluster_id) for r in cc.collect()}
-    assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    got = {(r.doc_id, r.cluster_id) for r in cc.collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7), (9, 9)}
 
 
 def test_top_k_per_key_two_stage_window(spark):
@@ -257,7 +262,6 @@ def test_textops_lambdas_never_retokenize(spark):
         [(1, "a b  c d e\nf g")], "doc_id long, text string"
     )
     frames = {
-        "minhash_signatures": textops.minhash_signatures(df),
         "lsh_band_pairs": textops.lsh_band_pairs(df),
         "lsh_band_pairs capped": textops.lsh_band_pairs(df, max_bucket_size=2),
         "simhash_pairs": textops.simhash_pairs(textops.simhash(df)),
@@ -367,15 +371,17 @@ def test_signature_plan_cost_flat_in_width(spark):
     """SimHash bits and MinHash hash functions are one SQL expression
     each, not an unrolled Column tree: widening the signature must not
     add py4j round trips per bit / per hash (an unrolled 64-bit simhash
-    cost ~9,700 commands, an unrolled 24-hash minhash ~3,000)."""
+    cost ~9,700 commands, an unrolled 24-hash minhash ~3,000). The
+    minhash width is measured through ``lsh_band_pairs`` at a fixed
+    band count."""
     from pdf_parser_spark import textops
 
     df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
     sim8 = _plan_build_commands(lambda: textops.simhash(df, bits=8))
     sim64 = _plan_build_commands(lambda: textops.simhash(df, bits=64))
     assert sim64 <= sim8 + 100, (sim8, sim64)
-    mh3 = _plan_build_commands(lambda: textops.minhash_signatures(df, n_hashes=3))
-    mh24 = _plan_build_commands(lambda: textops.minhash_signatures(df, n_hashes=24))
+    mh3 = _plan_build_commands(lambda: textops.lsh_band_pairs(df, n_hashes=3, bands=3))
+    mh24 = _plan_build_commands(lambda: textops.lsh_band_pairs(df, n_hashes=24, bands=3))
     assert mh24 <= mh3 + 100, (mh3, mh24)
 
 

@@ -237,6 +237,16 @@ def test_one_large_bucket_streams_its_pairs():
     assert proc.stdout.split()[-1] == str(5000 * 4999 // 2)
 
 
+def _minhash_signatures(df, n_hashes):
+    """(doc_id, hash_idx, min_hash): one row per hash of each document
+    that has at least one shingle, from the same shingle digests and
+    signature SQL ``lsh_band_pairs`` bands."""
+    return textops._shingle_digests(df, "text", "doc_id", 3).select(
+        "doc_id",
+        F.posexplode(F.expr(textops._minhash_sig_sql(n_hashes))).alias("hash_idx", "min_hash"),
+    )
+
+
 def _lsh_reference(sig_rows, rows, max_bucket_size):
     """Driver-side LSH: bucket each document by (hash_idx // rows,
     sorted band tuple) from its minhash rows, drop buckets over the cap,
@@ -274,7 +284,7 @@ def test_lsh_band_pairs_match_driver_reference(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     no_shingles = {30, 31, 32, 33, 34, 35}
     for n_hashes, bands in [(12, 4), (12, 6), (12, 5)]:
-        sig_rows = textops.minhash_signatures(df, n_hashes=n_hashes).collect()
+        sig_rows = _minhash_signatures(df, n_hashes).collect()
         assert not no_shingles & {r["doc_id"] for r in sig_rows}
         for cap in (None, 5):
             got = {
@@ -408,12 +418,19 @@ def _uf_components(edges):
     return {x: find(x) for x in parent}
 
 
-def _cc_spark(spark, edges):
-    df = spark.createDataFrame(edges or [(0, 0)], ["id_a", "id_b"])
+def _edge_docs(spark, edges):
+    """The edges as a pairs frame, and every node in them as a doc."""
+    df = spark.createDataFrame(edges or [(0, 0)], "id_a long, id_b long")
     if not edges:
         df = df.filter(F.lit(False))
-    out = textops.connected_components(df)
-    return {r["node_id"]: r["cluster_id"] for r in out.collect()}
+    nodes = sorted({n for e in edges for n in e})
+    return spark.createDataFrame([(n,) for n in nodes], "doc_id long"), df
+
+
+def _cc_spark(spark, edges):
+    docs, pairs = _edge_docs(spark, edges)
+    out = textops.dedup_clusters(docs, pairs)
+    return {r["doc_id"]: r["cluster_id"] for r in out.collect()}
 
 
 def test_connected_components_basic(spark):
@@ -456,11 +473,9 @@ def test_connected_components_star_forest_stops_after_one_round(spark):
     exactly those of the input checkpoint, one round checkpoint and one
     convergence check — no count, no set difference, no confirming
     round."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (10, 11)], "id_a long, id_b long"
-    )
+    docs, pairs = _edge_docs(spark, [(1, 2), (1, 3), (1, 4), (10, 11)])
     cc, n_jobs = _jobs_of(
-        spark, lambda: textops.connected_components(pairs, max_iter=1)
+        spark, lambda: textops.dedup_clusters(docs, pairs, max_iter=1)
     )
     # replay the same three actions one by one
     n_part = max(spark.sparkContext.defaultParallelism, 8)
@@ -478,7 +493,7 @@ def test_connected_components_star_forest_stops_after_one_round(spark):
     empty, n_check = _jobs_of(spark, lambda: textops._cc_not_star(r, n_part).isEmpty())
     assert empty
     assert n_jobs == n_input + n_round + n_check
-    got = {(x.node_id, x.cluster_id) for x in cc.collect()}
+    got = {(x.doc_id, x.cluster_id) for x in cc.collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
 
 
