@@ -6,17 +6,17 @@ DIFFERENT LZW than the MSB-first early-change PDF flavor in
 
 Scope (typed :class:`GifError` outside it):
 
-- decode: 87a/89a, global/local color tables, the first image frame
-  via decode_gif, and (round 4) FULL animation decode via
-  decode_gif_frames — GIF89a Graphic Control semantics: transparency
-  index, disposal 0/1 (leave) / 2 (restore rect to background color —
-  documented convention, output has no alpha) / 3 (restore to
-  previous canvas), composed RGB canvases per frame,
-  interlaced row order, transparency ignored (bytes are returned as
-  opaque RGB), sub-block stitching.
-- encode: single-frame GIF89a with a caller palette and NON-compressed
-  LZW emission (clear code before every symbol keeps the table empty —
-  legal per the spec, simple, and exercises the real bit unpacker).
+- decode: 87a/89a, global/local color tables, interlaced row order,
+  sub-block stitching. One block walk (``_walk``) serves both
+  decoders: decode_gif decodes the first frame and only counts the
+  rest; decode_gif_frames composes every frame with GIF89a Graphic
+  Control semantics — transparency index, disposal 0/1 (leave) / 2
+  (restore rect to background color — documented convention, output
+  has no alpha) / 3 (restore to previous canvas).
+- encode: single- and multi-frame GIF89a with a caller palette and
+  NON-compressed LZW emission (clear code before every symbol keeps
+  the table empty — legal per the spec, simple, and exercises the
+  real bit unpacker).
 
 The reference consumes images only through browser codecs; this exists
 so the multimodal pipeline covers the last common crawl image format
@@ -25,6 +25,7 @@ natively (PNG/JPEG already decode for real)."""
 from __future__ import annotations
 
 import struct
+from functools import partial
 from typing import Dict, List, Tuple
 
 __all__ = ["GifError", "decode_gif", "encode_gif", "parse_gif_header"]
@@ -110,11 +111,42 @@ def parse_gif_header(data: bytes) -> Dict:
 _INTERLACE = [(0, 8), (4, 8), (2, 4), (1, 2)]
 
 
-def decode_gif(data: bytes) -> Dict:
-    """→ {width, height, channels=3, pixels (RGB), n_frames}: the FIRST
-    frame expanded through its palette; later frames only counted."""
+def _interlace_rows(height: int) -> List[int]:
+    """Image row of each stored row of an interlaced frame."""
+    rows: List[int] = []
+    for start, step in _INTERLACE:
+        rows.extend(range(start, height, step))
+    return rows
+
+
+def _frame_indices(min_code: int, payload: bytes, iw: int, ih: int,
+                   interlaced: bool, palette: bytes) -> bytes:
+    """A frame's palette indices in image row order."""
+    if not palette:
+        raise GifError("no_palette", "image without global or local color table")
+    idx = _lzw_decode_gif(min_code, payload, iw * ih)
+    if len(idx) < iw * ih:
+        raise GifError("truncated", "LZW data shorter than frame")
+    if interlaced:
+        ordered = bytearray(iw * ih)
+        for src_row, dst_row in enumerate(_interlace_rows(ih)):
+            ordered[dst_row * iw : (dst_row + 1) * iw] = idx[
+                src_row * iw : (src_row + 1) * iw
+            ]
+        idx = bytes(ordered)
+    return idx
+
+
+def _walk(data: bytes):
+    """→ (width, height, global palette, background index, images): the
+    one walk of the block structure both decoders share.  ``images``
+    yields ``(rect, palette, gce, indices)`` per image descriptor:
+    ``rect`` = (x, y, w, h); ``palette`` = its local color table, else
+    the global one; ``gce`` = (disposal, transparent index or None,
+    delay) of the Graphic Control Extension before it, None without
+    one; ``indices()`` LZW-decodes and de-interlaces the frame on
+    demand, so a frame that is only counted is never decoded."""
     hdr = parse_gif_header(data)
-    w, h = hdr["width"], hdr["height"]
     packed = data[10]
     pos = 13
     gct = b""
@@ -122,16 +154,24 @@ def decode_gif(data: bytes) -> Dict:
         n = 2 << (packed & 0x07)
         gct = data[pos : pos + 3 * n]
         pos += 3 * n
-    pixels = None
-    n_frames = 0
+    return hdr["width"], hdr["height"], gct, data[11], _images(data, pos, gct)
+
+
+def _images(data: bytes, pos: int, gct: bytes):
+    gce = None
     while pos < len(data):
         b0 = data[pos]
         if b0 == 0x3B:  # trailer
-            break
+            return
         if b0 == 0x21:  # extension: label + sub-blocks
             if pos + 2 > len(data):
                 raise GifError("truncated", "extension overruns file")
-            _body, pos = _sub_blocks(data, pos + 2)
+            label = data[pos + 1]
+            body, pos = _sub_blocks(data, pos + 2)
+            if label == 0xF9 and len(body) >= 4:  # Graphic Control
+                flags = body[0]
+                tidx = body[3] if flags & 1 else None
+                gce = ((flags >> 2) & 7, tidx, struct.unpack("<H", body[1:3])[0])
             continue
         if b0 != 0x2C:
             raise GifError("corrupt", f"unexpected block 0x{b0:02X}")
@@ -151,27 +191,25 @@ def decode_gif(data: bytes) -> Dict:
         if not (2 <= min_code <= 11):
             raise GifError("lzw", f"bad LZW minimum code size {min_code}")
         payload, pos = _sub_blocks(data, pos + 1)
+        palette = lct or gct
+        yield (ix, iy, iw, ih), palette, gce, partial(
+            _frame_indices, min_code, payload, iw, ih, bool(ipacked & 0x40), palette
+        )
+        gce = None  # a GCE applies to exactly one following image
+
+
+def decode_gif(data: bytes) -> Dict:
+    """→ {width, height, channels=3, pixels (RGB), n_frames}: the FIRST
+    frame on a background-index-0 canvas, expanded through its palette;
+    later frames are only counted."""
+    w, h, _gct, _bg, images = _walk(data)
+    pixels = None
+    n_frames = 0
+    for (ix, iy, iw, ih), palette, _gce, indices in images:
         n_frames += 1
         if pixels is not None:
-            continue  # only the first frame is decoded
-        palette = lct or gct
-        if not palette:
-            raise GifError("no_palette", "image without global or local color table")
-        idx = _lzw_decode_gif(min_code, payload, iw * ih)
-        if len(idx) < iw * ih:
-            raise GifError("truncated", "LZW data shorter than frame")
-        # de-interlace row order if needed
-        if ipacked & 0x40:
-            rows = []
-            for start, step in _INTERLACE:
-                rows.extend(range(start, ih, step))
-            ordered = bytearray(iw * ih)
-            for src_row, dst_row in enumerate(rows):
-                ordered[dst_row * iw : (dst_row + 1) * iw] = idx[
-                    src_row * iw : (src_row + 1) * iw
-                ]
-            idx = bytes(ordered)
-        # frame → full canvas (background 0), palette-expand to RGB
+            continue
+        idx = indices()
         canvas = bytearray(w * h)
         for row in range(ih):
             if iy + row >= h:
@@ -191,127 +229,6 @@ def decode_gif(data: bytes) -> Dict:
             "n_frames": n_frames}
 
 
-def encode_gif(width: int, height: int, indices: bytes, palette: bytes,
-               interlace: bool = False) -> bytes:
-    """Single-frame GIF89a from palette ``indices`` (one byte each) and
-    an RGB ``palette`` (len = 3·2^n). Uncompressed-style LZW: a clear
-    code before every pixel keeps the dictionary empty — valid output
-    that fully exercises the decoder's bit unpacker and reset path."""
-    if len(indices) != width * height:
-        raise GifError("encode_size", "index buffer does not match dimensions")
-    n_colors = len(palette) // 3
-    if n_colors < 2 or n_colors > 256 or (n_colors & (n_colors - 1)):
-        raise GifError("encode_palette", "palette size must be a power of two in 2..256")
-    depth = max(2, n_colors.bit_length() - 1)  # min LZW code size >= 2
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", width, height, 0x80 | (depth - 1), 0, 0)
-    pal = palette + b"\x00" * (3 * ((1 << depth) - n_colors))
-    out += pal
-    ipacked = 0x40 if interlace else 0
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, width, height) + bytes([ipacked])
-    src = indices
-    if interlace:
-        rows = []
-        for start, step in _INTERLACE:
-            rows.extend(range(start, height, step))
-        src = b"".join(indices[r * width : (r + 1) * width] for r in rows)
-    clear = 1 << depth
-    eoi = clear + 1
-    width_bits = depth + 1
-    acc = nacc = 0
-    payload = bytearray()
-
-    def put(code):
-        nonlocal acc, nacc
-        acc |= code << nacc
-        nacc += width_bits
-        while nacc >= 8:
-            payload.append(acc & 0xFF)
-            acc >>= 8
-            nacc -= 8
-
-    for i in src:
-        put(clear)  # keep the table permanently empty
-        put(i)
-    put(eoi)
-    if nacc:
-        payload.append(acc & 0xFF)
-    out += bytes([depth])
-    for i in range(0, len(payload), 255):
-        chunk = payload[i : i + 255]
-        out += bytes([len(chunk)]) + chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-# ----------------------------------------------------------------------
-# animated GIF (round 4): full GIF89a frame decode with GCE semantics
-# ----------------------------------------------------------------------
-def _lzw_clear_style(indices: bytes, depth: int) -> bytes:
-    """Clear-before-every-pixel LZW payload (same scheme encode_gif
-    uses): valid, dictionary-free output."""
-    clear = 1 << depth
-    eoi = clear + 1
-    width_bits = depth + 1
-    acc = nacc = 0
-    payload = bytearray()
-    for i in list(indices) + [None]:
-        for code in ((clear, i) if i is not None else (eoi,)):
-            acc |= code << nacc
-            nacc += width_bits
-            while nacc >= 8:
-                payload.append(acc & 0xFF)
-                acc >>= 8
-                nacc -= 8
-    if nacc:
-        payload.append(acc & 0xFF)
-    return bytes(payload)
-
-
-def encode_gif_animated(
-    width: int,
-    height: int,
-    frames,
-    palette: bytes,
-    rects=None,
-    delays=None,
-    disposals=None,
-    transparent_idx: int = None,
-    background: int = 0,
-) -> bytes:
-    """Multi-frame GIF89a for fixture synthesis: per-frame Graphic
-    Control Extensions (disposal method, delay, optional transparency)
-    and per-frame rects (defaults to the full canvas)."""
-    n_colors = len(palette) // 3
-    if n_colors < 2 or n_colors > 256 or (n_colors & (n_colors - 1)):
-        raise GifError("encode_palette", "palette size must be a power of two in 2..256")
-    depth = max(2, n_colors.bit_length() - 1)
-    rects = rects or [(0, 0, width, height)] * len(frames)
-    delays = delays or [4] * len(frames)
-    disposals = disposals or [0] * len(frames)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", width, height, 0x80 | (depth - 1), background, 0)
-    out += palette + b"\x00" * (3 * ((1 << depth) - n_colors))
-    for idxs, (ix, iy, iw, ih), delay, disp in zip(frames, rects, delays, disposals):
-        if len(idxs) != iw * ih:
-            raise GifError("encode_size", "frame buffer does not match its rect")
-        flags = (disp & 7) << 2
-        tidx = 0
-        if transparent_idx is not None:
-            flags |= 1
-            tidx = transparent_idx
-        out += b"\x21\xf9\x04" + bytes([flags]) + struct.pack("<H", delay) + bytes([tidx, 0])
-        out += b"\x2c" + struct.pack("<HHHH", ix, iy, iw, ih) + b"\x00"
-        payload = _lzw_clear_style(idxs, depth)
-        out += bytes([depth])
-        for i in range(0, len(payload), 255):
-            chunk = payload[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
 def decode_gif_frames(data: bytes, max_frames: int = None) -> Dict:
     """Decode ALL frames of a (possibly animated) GIF with GIF89a
     Graphic Control semantics: transparency index, disposal methods
@@ -323,70 +240,13 @@ def decode_gif_frames(data: bytes, max_frames: int = None) -> Dict:
 
     → {width, height, channels=3, frames: [bytes], delays: [centisec],
        n_frames}."""
-    hdr = parse_gif_header(data)
-    w, h = hdr["width"], hdr["height"]
-    packed, bg_idx = data[10], data[11]
-    pos = 13
-    gct = b""
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = data[pos : pos + 3 * n]
-        pos += 3 * n
+    w, h, gct, bg_idx, images = _walk(data)
     bg_rgb = gct[3 * bg_idx : 3 * bg_idx + 3] if len(gct) >= 3 * bg_idx + 3 else b"\x00\x00\x00"
     canvas = bytearray(bg_rgb * (w * h))
     frames, delays = [], []
-    gce = None  # (disposal, transparent_idx or None, delay)
-    while pos < len(data):
-        b0 = data[pos]
-        if b0 == 0x3B:
-            break
-        if b0 == 0x21:
-            if pos + 2 > len(data):
-                raise GifError("truncated", "extension overruns file")
-            label = data[pos + 1]
-            body, pos = _sub_blocks(data, pos + 2)
-            if label == 0xF9 and len(body) >= 4:
-                flags = body[0]
-                delay = struct.unpack("<H", body[1:3])[0]
-                tidx = body[3] if flags & 1 else None
-                gce = ((flags >> 2) & 7, tidx, delay)
-            continue
-        if b0 != 0x2C:
-            raise GifError("corrupt", f"unexpected block 0x{b0:02X}")
-        if pos + 10 > len(data):
-            raise GifError("truncated", "image descriptor overruns file")
-        ix, iy, iw, ih = struct.unpack("<HHHH", data[pos + 1 : pos + 9])
-        ipacked = data[pos + 9]
-        pos += 10
-        lct = b""
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            lct = data[pos : pos + 3 * n]
-            pos += 3 * n
-        if pos >= len(data):
-            raise GifError("truncated", "missing LZW minimum code size")
-        min_code = data[pos]
-        if not (2 <= min_code <= 11):
-            raise GifError("lzw", f"bad LZW minimum code size {min_code}")
-        payload, pos = _sub_blocks(data, pos + 1)
-        palette = lct or gct
-        if not palette:
-            raise GifError("no_palette", "image without global or local color table")
-        idx = _lzw_decode_gif(min_code, payload, iw * ih)
-        if len(idx) < iw * ih:
-            raise GifError("truncated", "LZW data shorter than frame")
-        if ipacked & 0x40:  # de-interlace
-            rows = []
-            for start, step in _INTERLACE:
-                rows.extend(range(start, ih, step))
-            ordered = bytearray(iw * ih)
-            for src_row, dst_row in enumerate(rows):
-                ordered[dst_row * iw : (dst_row + 1) * iw] = idx[
-                    src_row * iw : (src_row + 1) * iw
-                ]
-            idx = bytes(ordered)
-        disp, tidx, delay = gce if gce else (0, None, 0)
-        gce = None  # a GCE applies to exactly one following image
+    for (ix, iy, iw, ih), palette, gce, indices in images:
+        idx = indices()
+        disp, tidx, delay = gce or (0, None, 0)
         snapshot = bytes(canvas) if disp == 3 else None
         for row in range(ih):
             y = iy + row
@@ -419,3 +279,97 @@ def decode_gif_frames(data: bytes, max_frames: int = None) -> Dict:
         raise GifError("no_image", "no image descriptor found")
     return {"width": w, "height": h, "channels": 3, "frames": frames,
             "delays": delays, "n_frames": len(frames)}
+
+
+# ----------------------------------------------------------------------
+# encoders (fixture synthesis)
+# ----------------------------------------------------------------------
+def _color_table(palette: bytes) -> Tuple[int, bytes]:
+    """→ (LZW minimum code size, palette zero-padded to 2^size entries)."""
+    n_colors = len(palette) // 3
+    if n_colors < 2 or n_colors > 256 or (n_colors & (n_colors - 1)):
+        raise GifError("encode_palette", "palette size must be a power of two in 2..256")
+    depth = max(2, n_colors.bit_length() - 1)  # min LZW code size >= 2
+    return depth, palette + b"\x00" * (3 * ((1 << depth) - n_colors))
+
+
+def _image_data(indices: bytes, depth: int) -> bytes:
+    """LZW minimum code size + the data sub-blocks of a clear-before-
+    every-pixel payload: a clear code before each symbol keeps the
+    dictionary empty — valid output that fully exercises the decoder's
+    bit unpacker and reset path."""
+    clear = 1 << depth
+    eoi = clear + 1
+    width_bits = depth + 1
+    acc = nacc = 0
+    payload = bytearray()
+    for i in list(indices) + [None]:
+        for code in ((clear, i) if i is not None else (eoi,)):
+            acc |= code << nacc
+            nacc += width_bits
+            while nacc >= 8:
+                payload.append(acc & 0xFF)
+                acc >>= 8
+                nacc -= 8
+    if nacc:
+        payload.append(acc & 0xFF)
+    out = bytearray([depth])
+    for i in range(0, len(payload), 255):
+        chunk = payload[i : i + 255]
+        out += bytes([len(chunk)]) + chunk
+    return bytes(out + b"\x00")
+
+
+def encode_gif(width: int, height: int, indices: bytes, palette: bytes,
+               interlace: bool = False) -> bytes:
+    """Single-frame GIF89a from palette ``indices`` (one byte each) and
+    an RGB ``palette`` (len = 3·2^n)."""
+    if len(indices) != width * height:
+        raise GifError("encode_size", "index buffer does not match dimensions")
+    depth, table = _color_table(palette)
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HHBBB", width, height, 0x80 | (depth - 1), 0, 0)
+    out += table
+    ipacked = 0x40 if interlace else 0
+    out += b"\x2c" + struct.pack("<HHHH", 0, 0, width, height) + bytes([ipacked])
+    src = indices
+    if interlace:
+        src = b"".join(indices[r * width : (r + 1) * width] for r in _interlace_rows(height))
+    out += _image_data(src, depth) + b"\x3b"
+    return bytes(out)
+
+
+def encode_gif_animated(
+    width: int,
+    height: int,
+    frames,
+    palette: bytes,
+    rects=None,
+    delays=None,
+    disposals=None,
+    transparent_idx: int = None,
+    background: int = 0,
+) -> bytes:
+    """Multi-frame GIF89a for fixture synthesis: per-frame Graphic
+    Control Extensions (disposal method, delay, optional transparency)
+    and per-frame rects (defaults to the full canvas)."""
+    depth, table = _color_table(palette)
+    rects = rects or [(0, 0, width, height)] * len(frames)
+    delays = delays or [4] * len(frames)
+    disposals = disposals or [0] * len(frames)
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HHBBB", width, height, 0x80 | (depth - 1), background, 0)
+    out += table
+    for idxs, (ix, iy, iw, ih), delay, disp in zip(frames, rects, delays, disposals):
+        if len(idxs) != iw * ih:
+            raise GifError("encode_size", "frame buffer does not match its rect")
+        flags = (disp & 7) << 2
+        tidx = 0
+        if transparent_idx is not None:
+            flags |= 1
+            tidx = transparent_idx
+        out += b"\x21\xf9\x04" + bytes([flags]) + struct.pack("<H", delay) + bytes([tidx, 0])
+        out += b"\x2c" + struct.pack("<HHHH", ix, iy, iw, ih) + b"\x00"
+        out += _image_data(idxs, depth)
+    out += b"\x3b"
+    return bytes(out)

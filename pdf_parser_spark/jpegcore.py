@@ -848,22 +848,23 @@ def _seg(marker: int, body: bytes) -> bytes:
     return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
 
 
-def encode_jpeg(
+def _encode_front(
     width: int,
     height: int,
     pixels: bytes,
-    channels: int = 1,
-    subsampling: str = "444",
-    quant_luma: Optional[List[int]] = None,
-    quant_chroma: Optional[List[int]] = None,
-    restart_interval: int = 0,
-) -> bytes:
-    """Baseline JFIF bytes from 8-bit interleaved ``pixels``.
+    channels: int,
+    subsampling: str,
+    quant_luma: Optional[List[int]],
+    quant_chroma: Optional[List[int]],
+    sof_marker: int,
+    ac_symbols: List[int],
+):
+    """The encoders' shared front end: YCbCr conversion, edge padding,
+    DCT, quantisation and zig-zag, and the SOI/APP0/DQT/SOF/DHT header.
 
-    ``quant_*`` are 64 RASTER-order values (default all ones — the
-    lossless-for-flat-blocks configuration the oracle query relies on).
-    ``subsampling``: '444' or '420' (3-channel only).
-    """
+    → (header bytes, per-component zig-zag coefficients shaped (MCU
+    rows, MCU cols, blocks per MCU, 64), DC encode table, AC encode
+    table built from the uniform table over ``ac_symbols``)."""
     if channels not in (1, 3):
         raise JpegError("encode_channels", "1 or 3 channels only")
     if len(pixels) != width * height * channels:
@@ -923,25 +924,7 @@ def encode_jpeg(
 
     # huffman tables: simple uniform canonical tables, written into DHT
     dc_bits, dc_vals = _uniform_table(_DC_SYMBOLS)
-    ac_bits, ac_vals = _uniform_table(_AC_LUMA_SYMBOLS)
-    dc_enc = _build_encode_table(dc_bits, dc_vals)
-    ac_enc = _build_encode_table(ac_bits, ac_vals)
-
-    wr = _BitWriter()
-    preds = [0] * len(planes)
-    n_rst = 0
-    for mcu in range(mcux * mcuy):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            wr.pad_to_byte()
-            wr.out += bytes([0xFF, 0xD0 + n_rst])
-            n_rst = (n_rst + 1) & 7
-            preds = [0] * len(planes)
-        my, mx = divmod(mcu, mcux)
-        for ci, coefs in enumerate(comp_coefs):
-            for blk in range(coefs.shape[2]):
-                zz = coefs[my, mx, blk]
-                preds[ci] = _encode_block(wr, zz, preds[ci], dc_enc, ac_enc)
-    wr.pad_to_byte()
+    ac_bits, ac_vals = _uniform_table(ac_symbols)
 
     out = bytearray(b"\xff\xd8")  # SOI
     out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")  # APP0
@@ -953,12 +936,54 @@ def encode_jpeg(
     sof = struct.pack(">BHHB", 8, height, width, channels)
     for i, (hs, vs) in enumerate(samp):
         sof += struct.pack(">BBB", i + 1, (hs << 4) | vs, qsel[i])
-    out += _seg(0xC0, sof)
+    out += _seg(sof_marker, sof)
     out += _seg(0xC4, bytes([0x00] + dc_bits + dc_vals))
     out += _seg(0xC4, bytes([0x10] + ac_bits + ac_vals))
     if channels == 3:
         out += _seg(0xC4, bytes([0x01] + dc_bits + dc_vals))
         out += _seg(0xC4, bytes([0x11] + ac_bits + ac_vals))
+    return (bytes(out), comp_coefs, _build_encode_table(dc_bits, dc_vals),
+            _build_encode_table(ac_bits, ac_vals))
+
+
+def encode_jpeg(
+    width: int,
+    height: int,
+    pixels: bytes,
+    channels: int = 1,
+    subsampling: str = "444",
+    quant_luma: Optional[List[int]] = None,
+    quant_chroma: Optional[List[int]] = None,
+    restart_interval: int = 0,
+) -> bytes:
+    """Baseline JFIF bytes from 8-bit interleaved ``pixels``.
+
+    ``quant_*`` are 64 RASTER-order values (default all ones — the
+    lossless-for-flat-blocks configuration the oracle query relies on).
+    ``subsampling``: '444' or '420' (3-channel only).
+    """
+    header, comp_coefs, dc_enc, ac_enc = _encode_front(
+        width, height, pixels, channels, subsampling, quant_luma, quant_chroma,
+        0xC0, _AC_LUMA_SYMBOLS,
+    )
+    mcuy, mcux = comp_coefs[0].shape[:2]
+    wr = _BitWriter()
+    preds = [0] * len(comp_coefs)
+    n_rst = 0
+    for mcu in range(mcux * mcuy):
+        if restart_interval and mcu and mcu % restart_interval == 0:
+            wr.pad_to_byte()
+            wr.out += bytes([0xFF, 0xD0 + n_rst])
+            n_rst = (n_rst + 1) & 7
+            preds = [0] * len(comp_coefs)
+        my, mx = divmod(mcu, mcux)
+        for ci, coefs in enumerate(comp_coefs):
+            for blk in range(coefs.shape[2]):
+                zz = coefs[my, mx, blk]
+                preds[ci] = _encode_block(wr, zz, preds[ci], dc_enc, ac_enc)
+    wr.pad_to_byte()
+
+    out = bytearray(header)
     if restart_interval:
         out += _seg(0xDD, struct.pack(">H", restart_interval))
     sos = bytes([channels])
@@ -1129,64 +1154,16 @@ def encode_jpeg_progressive(
 
     Grayscale or 4:4:4 color (no subsampling — chroma paths are
     exercised by the sequential encoder; this one targets scan logic).
-    The quantized coefficients are computed by the SAME dct/quant code
-    as :func:`encode_jpeg`, so a progressive file must decode
-    pixel-identically to its baseline twin — the cross-mode test
+    The quantized coefficients and the header come from the SAME front
+    end as :func:`encode_jpeg` (:func:`_encode_front`), so a progressive
+    file must decode pixel-identically to its baseline twin — the cross-mode test
     invariant that keeps encoder/decoder bugs from cancelling."""
-    if channels not in (1, 3):
-        raise JpegError("encode_channels", "1 or 3 channels only")
-    if len(pixels) != width * height * channels:
-        raise JpegError("encode_size", "pixel buffer does not match dimensions")
-    ql = np.asarray(quant_luma if quant_luma is not None else [1] * 64,
-                    dtype=np.float64).reshape(8, 8)
-    qc = np.asarray(quant_chroma if quant_chroma is not None else [1] * 64,
-                    dtype=np.float64).reshape(8, 8)
-
-    arr = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width, channels).astype(np.float64)
-    if channels == 1:
-        planes = [arr[:, :, 0]]
-        qsel = [0]
-    else:
-        r, g, b = arr[:, :, 0], arr[:, :, 1], arr[:, :, 2]
-        y = np.clip(np.round(0.299 * r + 0.587 * g + 0.114 * b), 0, 255)
-        cb = np.clip(np.round(-0.168736 * r - 0.331264 * g + 0.5 * b + 128.0), 0, 255)
-        cr = np.clip(np.round(0.5 * r - 0.418688 * g - 0.081312 * b + 128.0), 0, 255)
-        planes = [y, cb, cr]
-        qsel = [0, 1, 1]
-
-    bx = -(-width // 8)
-    by = -(-height // 8)
-    comp_coefs = []
-    for plane, qi in zip(planes, qsel):
-        quant = ql if qi == 0 else qc
-        padded = np.empty((by * 8, bx * 8), dtype=np.float64)
-        padded[:height, :width] = plane
-        padded[height:, :width] = plane[height - 1 : height, :]
-        padded[:, width:] = padded[:, width - 1 : width]
-        grid = padded.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3)
-        blocks = grid.reshape(-1, 8, 8) - 128.0
-        coefs = np.round(_dct2(blocks) / quant).astype(np.int64).reshape(-1, 64)
-        comp_coefs.append(coefs[:, ZIGZAG])
-
-    dc_bits, dc_vals = _uniform_table(_DC_SYMBOLS)
-    ac_bits, ac_vals = _uniform_table(_AC_PROG_SYMBOLS)
-    dc_enc = _build_encode_table(dc_bits, dc_vals)
-    ac_enc = _build_encode_table(ac_bits, ac_vals)
-
-    out = bytearray(b"\xff\xd8")
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += _seg(0xDB, bytes([0x00]) + ql.reshape(64)[ZIGZAG].astype(np.uint8).tobytes())
-    if channels == 3:
-        out += _seg(0xDB, bytes([0x01]) + qc.reshape(64)[ZIGZAG].astype(np.uint8).tobytes())
-    sof = struct.pack(">BHHB", 8, height, width, channels)
-    for i in range(channels):
-        sof += struct.pack(">BBB", i + 1, 0x11, qsel[i])
-    out += _seg(0xC2, sof)  # SOF2: progressive
-    out += _seg(0xC4, bytes([0x00] + dc_bits + dc_vals))
-    out += _seg(0xC4, bytes([0x10] + ac_bits + ac_vals))
-    if channels == 3:
-        out += _seg(0xC4, bytes([0x01] + dc_bits + dc_vals))
-        out += _seg(0xC4, bytes([0x11] + ac_bits + ac_vals))
+    header, comp_coefs, dc_enc, ac_enc = _encode_front(
+        width, height, pixels, channels, "444", quant_luma, quant_chroma,
+        0xC2, _AC_PROG_SYMBOLS,  # SOF2: progressive
+    )
+    comp_coefs = [c.reshape(-1, 64) for c in comp_coefs]  # 1x1 MCUs: one block each
+    out = bytearray(header)
 
     def sos(scan_comps, ss, se, ah, al, body_fn):
         hdr = bytes([len(scan_comps)])

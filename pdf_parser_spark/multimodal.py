@@ -141,56 +141,60 @@ def _px(payload: bytes, i: int) -> int:
     return payload[i % len(payload)] if payload else 0
 
 
-def resize_image(blob: bytes, out_w: int, out_h: int) -> bytes:
-    """Nearest-neighbor resize: REAL pixels for PNG (pngcore) and JPEG
-    (jpegcore, thumb re-encoded as lossless PNG), fake pixels for the
-    FAKE container (same math either way)."""
+def _decoded_image(blob: bytes):
+    """Real pixels of a JPEG, PNG, GIF (first frame) or lossless-WebP
+    blob as a pngcore image dict (``color_type`` included); None for
+    any other container.  Lossy WebP raises the typed
+    ``WebpError('lossy_gate')``."""
     if blob[: len(_JPEG_SIG)] == _JPEG_SIG:
-        from . import jpegcore, pngcore
+        from . import jpegcore
 
         img = jpegcore.decode_jpeg(blob)
         img["color_type"] = 0 if img["channels"] == 1 else 2
-        small = pngcore.resize_nearest(img, out_w, out_h)
-        return pngcore.encode_png(
-            out_w, out_h, small["pixels"], color_type=small["color_type"]
-        )
+        return img
     if blob[: len(_PNG_SIG)] == _PNG_SIG:
         from . import pngcore
 
-        img = pngcore.decode_png(blob)
+        return pngcore.decode_png(blob)
+    if blob[:4] == b"GIF8":
+        from . import gifcore
+
+        img = gifcore.decode_gif(blob)
+        img["color_type"] = 2
+        return img
+    if blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
+        from . import webpcore
+
+        return webpcore.decode_webp(blob)
+    return None
+
+
+def resize_image(blob: bytes, out_w: int, out_h: int) -> bytes:
+    """Nearest-neighbor resize: REAL pixels for JPEG, PNG, GIF and
+    lossless WebP (thumb encoded as lossless PNG), fake pixels for the
+    FAKE container (same math either way)."""
+    img = _decoded_image(blob)
+    if img is not None:
+        from . import pngcore
+
         small = pngcore.resize_nearest(img, out_w, out_h)
         return pngcore.encode_png(
             out_w, out_h, small["pixels"], color_type=small["color_type"]
         )
-    if blob[:4] == b"GIF8":
-        from . import gifcore, pngcore
-
-        img = gifcore.decode_gif(blob)
-        img["color_type"] = 2
-        small = pngcore.resize_nearest(img, out_w, out_h)
-        return pngcore.encode_png(out_w, out_h, small["pixels"], color_type=2)
-    if blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
-        # REAL VP8L (lossless) pixel decode via webpcore; lossy VP8
-        # raises the typed WebpError('lossy_gate') → error row upstream
-        from . import pngcore, webpcore
-
-        img = webpcore.decode_webp(blob)
-        small = pngcore.resize_nearest(img, out_w, out_h)
-        return pngcore.encode_png(out_w, out_h, small["pixels"], color_type=6)
     meta = decode_media(blob)
     if meta["kind"] != "image":
         raise ValueError("not an image")
     if blob[:4] != b"FAKE":
         # any remaining metadata-only image format: dims are real but
-        # pixels need a codec this sandbox can't have (WebP-lossless
-        # now decodes for real above) — typed gate, never fake pixels
+        # pixels need a codec this sandbox can't have — typed gate,
+        # never fake pixels
         raise NotImplementedError("pixel decode not available for this format")
     w, h = meta["width"], meta["height"]
     payload = blob[11:]
     if not payload:
         return encode_fake(0, out_w, out_h, 1, b"\x00" * (out_w * out_h))
-    # Vectorized twin of the old per-pixel loop: same floor/clamp index
-    # math and the same payload[i % len] wraparound as _px().
+    # the floor/clamp index math of pngcore.resize_nearest over the
+    # payload[i % len] wraparound of _px()
     import numpy as np
 
     sy = np.minimum(h - 1, (np.arange(out_h) * h) // out_h) if h else np.zeros(out_h, dtype=np.int64)
@@ -224,21 +228,39 @@ _MAX_GIF_FRAMES = 4096
 
 
 def sample_frames(blob: bytes, every: int) -> List[Tuple[int, int]]:
-    """(frame_index, first_pixel) for every ``every``-th video frame.
+    """(frame_index, first_pixel) for every ``every``-th video frame:
+    REAL decoded pixels for animated GIF and MJPEG-in-AVI
+    (:func:`_decoded_frames`), the payload math for the FAKE container.
+    Every other real codec (H.264 in MP4, non-MJPEG AVI streams) raises
+    the typed gate."""
+    if blob[:4] != b"GIF8":
+        meta = decode_media(blob)
+        if meta["kind"] != "video":
+            raise ValueError("not a video")
+        if blob[:4] == b"FAKE":
+            w, h, n = meta["width"], meta["height"], meta["n_frames"]
+            payload = blob[11:]
+            frame_sz = max(1, w * h)
+            return [(i, _px(payload, i * frame_sz)) for i in range(0, n, every)]
+        if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
+            raise NotImplementedError(
+                "real codec not available in sandbox: video frame decode (install ffmpeg)"
+            )
+    return [(i, px[0] if px else 0) for i, px in _decoded_frames(blob, every)]
 
-    REAL pixel decode for MJPEG-in-AVI (round-4): the RIFF ``movi``
-    chunk walk feeds each sampled frame to :mod:`.jpegcore`, so
-    ``first_pixel`` is the first decoded pixel byte of an actual JPEG
-    frame. Every other real codec (H.264 in MP4, non-MJPEG AVI
-    streams) raises the typed gate — it used to fall through to the
-    FAKE-container payload math and report container bytes as pixels."""
+
+def _decoded_frames(blob: bytes, every: int) -> Iterator[Tuple[int, bytes]]:
+    """(frame index, pixel bytes) of every ``every``-th frame of a GIF
+    or MJPEG-in-AVI blob; the caller gates the container.
+
+    GIF frames are fully COMPOSED canvases per GIF89a disposal and
+    transparency semantics.  Compositing is sequential (disposal
+    state), so every frame up to the last sampled one is decoded, and a
+    GIF past ``_MAX_GIF_FRAMES`` raises a typed error instead of pinning
+    an executor in pure Python.  AVI frames are the ``movi`` chunks of
+    the first video stream, each decoded by :mod:`.jpegcore`; any other
+    stream codec raises the typed gate."""
     if blob[:4] == b"GIF8":
-        # REAL animated-GIF frame decode (round 4): frames are fully
-        # COMPOSED canvases per GIF89a disposal/transparency semantics.
-        # Compositing is sequential (disposal state), so every frame up
-        # to the last sampled one must be decoded — but a pathological
-        # GIF with thousands of frames must not pin an executor in pure
-        # Python: hard-cap the decode and surface a typed error row.
         from . import gifcore
 
         dec = gifcore.decode_gif_frames(blob, max_frames=_MAX_GIF_FRAMES + 1)
@@ -246,23 +268,22 @@ def sample_frames(blob: bytes, every: int) -> List[Tuple[int, int]]:
             raise ValueError(
                 f"animated GIF exceeds the {_MAX_GIF_FRAMES}-frame decode cap"
             )
-        return [
-            (i, dec["frames"][i][0] if dec["frames"][i] else 0)
-            for i in range(0, dec["n_frames"], every)
-        ]
-    meta = decode_media(blob)
-    if meta["kind"] != "video":
-        raise ValueError("not a video")
-    if blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
-        return _sample_avi_frames(blob, every)
-    if blob[:4] != b"FAKE":
+        for i in range(0, dec["n_frames"], every):
+            yield i, dec["frames"][i]
+        return
+    idx, handler = _avi_video_stream(blob)
+    if handler not in (b"MJPG", b"mjpg"):
         raise NotImplementedError(
-            "real codec not available in sandbox: video frame decode (install ffmpeg)"
+            "real codec not available in sandbox: AVI stream "
+            f"{handler.decode('latin-1').strip()!r} (install ffmpeg)"
         )
-    w, h, n = meta["width"], meta["height"], meta["n_frames"]
-    payload = blob[11:]
-    frame_sz = max(1, w * h)
-    return [(i, _px(payload, i * frame_sz)) for i in range(0, n, every)]
+    from . import jpegcore
+
+    frames = _avi_frame_chunks(blob, idx)
+    for i in range(0, len(frames), every):
+        if frames[i][: len(_JPEG_SIG)] != _JPEG_SIG:
+            raise ValueError(f"corrupt AVI: MJPEG frame {i} lacks JPEG SOI")
+        yield i, jpegcore.decode_jpeg(frames[i])["pixels"]
 
 
 def _avi_video_stream(blob: bytes) -> Tuple[int, bytes]:
@@ -300,25 +321,6 @@ def _avi_frame_chunks(blob: bytes, stream_idx: int) -> List[bytes]:
     for ckid, s, e in _walk_riff(blob, 12, len(blob)):
         if ckid == b"LIST" and blob[s : s + 4] == b"movi":
             scan(s + 4, e)
-    return out
-
-
-def _sample_avi_frames(blob: bytes, every: int) -> List[Tuple[int, int]]:
-    idx, handler = _avi_video_stream(blob)
-    if handler not in (b"MJPG", b"mjpg"):
-        raise NotImplementedError(
-            "real codec not available in sandbox: AVI stream "
-            f"{handler.decode('latin-1').strip()!r} (install ffmpeg)"
-        )
-    from . import jpegcore
-
-    frames = _avi_frame_chunks(blob, idx)
-    out = []
-    for i in range(0, len(frames), every):
-        if frames[i][: len(_JPEG_SIG)] != _JPEG_SIG:
-            raise ValueError(f"corrupt AVI: MJPEG frame {i} lacks JPEG SOI")
-        img = jpegcore.decode_jpeg(frames[i])
-        out.append((i, img["pixels"][0] if img["pixels"] else 0))
     return out
 
 
@@ -362,91 +364,88 @@ def encode_avi_mjpeg(width: int, height: int, frames: List[bytes], fps: int = 25
 # ----------------------------------------------------------------------
 # Spark stages
 # ----------------------------------------------------------------------
-def _meta_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for b in batches:
-        cols = {k: [] for k in (
-            "doc_id", "kind", "width", "height", "sample_rate", "channels",
-            "n_frames", "n_bytes", "error",
-        )}
-        for doc_id, blob in zip(b["doc_id"].tolist(), b["media"].tolist()):
-            rec = dict.fromkeys(cols, None)
-            rec["doc_id"] = int(doc_id)
-            try:
-                rec.update(decode_media(bytes(blob)))
-                rec["error"] = None
-            except (NotImplementedError, ValueError) as e:
-                rec.update(kind="unknown", width=0, height=0, sample_rate=0,
-                           channels=0, n_frames=0, n_bytes=0, error=str(e)[:200])
-            for k in cols:
-                cols[k].append(rec[k])
-        yield pd.DataFrame(cols)
+def _media_stage(df: DataFrame, media_col: str, schema: str, rows_of, error_row: tuple) -> DataFrame:
+    """One ``mapInPandas`` stage over (doc_id, media).  ``schema`` is
+    ``doc_id long, <value columns>, error string``; ``rows_of(blob)``
+    gives a document's value rows.  A failure — ``ValueError``, the
+    typed codec errors included, or ``NotImplementedError`` for a gated
+    codec — gives the one row ``error_row + (message,)`` instead, also
+    when it comes part-way through a document's rows.  Failures are
+    rows, not absences: at corpus scale a silently dropped row makes
+    "no output" indistinguishable from a decoder bug in the audit
+    metrics (same principle as extract.py's error_code rows)."""
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            out = []
+            for doc_id, blob in zip(b["doc_id"].tolist(), b["media"].tolist()):
+                try:
+                    rows = [r + (None,) for r in rows_of(bytes(blob))]
+                except (ValueError, NotImplementedError) as e:
+                    rows = [error_row + (str(e)[:200],)]
+                out += [(int(doc_id),) + r for r in rows]
+            yield pd.DataFrame({n: [r[i] for r in out] for i, n in enumerate(names)})
+
+    return df.select("doc_id", F.col(media_col).alias("media")).mapInPandas(
+        mapper, schema=schema
+    )
+
+
+_META_KEYS = [c.split()[0] for c in MEDIA_SCHEMA.split(",")][1:-1]
 
 
 def media_metadata(df: DataFrame, media_col: str = "media") -> DataFrame:
     """binary → typed metadata; decode failures are rows, not errors."""
-    return df.select("doc_id", F.col(media_col).alias("media")).mapInPandas(
-        _meta_mapper, schema=MEDIA_SCHEMA
-    )
+
+    def rows_of(blob):
+        meta = decode_media(blob)
+        return [tuple(meta.get(k) for k in _META_KEYS)]
+
+    return _media_stage(df, media_col, MEDIA_SCHEMA, rows_of,
+                        ("unknown", 0, 0, 0, 0, 0, 0))
 
 
 def resized_thumbnails(df: DataFrame, out_w: int, out_h: int, media_col: str = "media") -> DataFrame:
     """One output row per input row: success → (thumb, pixel_sum,
     error=NULL); undecodable / wrong-kind / gated-codec input → a typed
-    error row (NULL payload, error string).  Failures must be rows, not
-    absences — at corpus scale a silently-dropped row makes "no
-    thumbnail" indistinguishable from a decoder bug in the audit
-    metrics (same principle as extract.py's error_code rows)."""
+    error row (NULL payload, error string)."""
 
-    def mapper(batches):
-        for b in batches:
-            ids, blobs, sums, errs = [], [], [], []
-            for doc_id, blob in zip(b["doc_id"].tolist(), b["media"].tolist()):
-                ids.append(int(doc_id))
-                try:
-                    t = resize_image(bytes(blob), out_w, out_h)
-                    blobs.append(t)
-                    sums.append(thumb_pixel_sum(t))
-                    errs.append(None)
-                except (ValueError, NotImplementedError) as e:
-                    blobs.append(None)
-                    sums.append(None)
-                    errs.append(str(e)[:200])
-            yield pd.DataFrame({"doc_id": ids, "thumb": blobs,
-                                "pixel_sum": sums, "error": errs})
+    def rows_of(blob):
+        thumb = resize_image(blob, out_w, out_h)
+        return [(thumb, thumb_pixel_sum(thumb))]
 
-    return df.select("doc_id", F.col(media_col).alias("media")).mapInPandas(
-        mapper, schema="doc_id long, thumb binary, pixel_sum long, error string"
-    )
+    return _media_stage(df, media_col,
+                        "doc_id long, thumb binary, pixel_sum long, error string",
+                        rows_of, (None, None))
 
 
 def sampled_frames(df: DataFrame, every: int = 10, media_col: str = "media") -> DataFrame:
     """Frame rows per decodable video; every undecodable / wrong-kind
     input contributes exactly ONE typed error row (NULL frame_idx /
     first_pixel) so no document silently disappears from the stage."""
+    return _media_stage(df, media_col,
+                        "doc_id long, frame_idx int, first_pixel int, error string",
+                        lambda blob: sample_frames(blob, every), (None, None))
 
-    def mapper(batches):
-        for b in batches:
-            ids, idxs, pxs, errs = [], [], [], []
-            for doc_id, blob in zip(b["doc_id"].tolist(), b["media"].tolist()):
-                try:
-                    frames = sample_frames(bytes(blob), every)
-                except (ValueError, NotImplementedError) as e:
-                    ids.append(int(doc_id))
-                    idxs.append(None)
-                    pxs.append(None)
-                    errs.append(str(e)[:200])
-                    continue
-                for i, p in frames:
-                    ids.append(int(doc_id))
-                    idxs.append(i)
-                    pxs.append(p)
-                    errs.append(None)
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs,
-                                "first_pixel": pxs, "error": errs})
 
-    return df.select("doc_id", F.col(media_col).alias("media")).mapInPandas(
-        mapper, schema="doc_id long, frame_idx int, first_pixel int, error string"
-    )
+_FRAME_STATS_SCHEMA = (
+    "doc_id long, frame_idx int, first_pixel int, pixel_sum long, error string"
+)
+
+
+def _frame_stats(df: DataFrame, every: int, media_col: str, is_container, not_container: str) -> DataFrame:
+    """(frame_idx, first_pixel, pixel_sum) of every ``every``-th decoded
+    frame; a blob ``is_container`` rejects is a ``not_container`` error
+    row."""
+
+    def rows_of(blob):
+        if not is_container(blob):
+            raise ValueError(not_container)
+        return [(i, px[0] if px else 0, int(sum(px)))
+                for i, px in _decoded_frames(blob, every)]
+
+    return _media_stage(df, media_col, _FRAME_STATS_SCHEMA, rows_of, (None, None, None))
 
 
 def avi_frame_stats(df: DataFrame, every: int = 1, media_col: str = "media") -> DataFrame:
@@ -456,49 +455,9 @@ def avi_frame_stats(df: DataFrame, every: int = 1, media_col: str = "media") -> 
     training pipeline runs per sampled frame. Non-MJPEG streams and
     corrupt containers contribute ONE typed error row each (never
     dropped, same contract as every other multimodal stage)."""
-
-    def mapper(batches):
-        from . import jpegcore
-
-        for b in batches:
-            ids, idxs, pxs, sums, errs = [], [], [], [], []
-            for doc_id, blob in zip(b["doc_id"].tolist(), b["media"].tolist()):
-                blob = bytes(blob)
-                rows = []  # buffered: a mid-stream failure emits ONLY the error row
-                try:
-                    if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-                        raise ValueError("not an AVI container")
-                    idx, handler = _avi_video_stream(blob)
-                    if handler not in (b"MJPG", b"mjpg"):
-                        raise NotImplementedError(
-                            "real codec not available in sandbox: AVI stream "
-                            f"{handler.decode('latin-1').strip()!r} (install ffmpeg)"
-                        )
-                    frames = _avi_frame_chunks(blob, idx)
-                    for i in range(0, len(frames), every):
-                        if frames[i][: len(_JPEG_SIG)] != _JPEG_SIG:
-                            raise ValueError(
-                                f"corrupt AVI: MJPEG frame {i} lacks JPEG SOI"
-                            )
-                        img = jpegcore.decode_jpeg(frames[i])
-                        rows.append((i, img["pixels"][0] if img["pixels"] else 0,
-                                     int(sum(img["pixels"])), None))
-                except (ValueError, NotImplementedError, jpegcore.JpegError) as e:
-                    rows = [(None, None, None, str(e)[:200])]
-                for i, px, ps, err in rows:
-                    ids.append(int(doc_id))
-                    idxs.append(i)
-                    pxs.append(px)
-                    sums.append(ps)
-                    errs.append(err)
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs,
-                                "first_pixel": pxs, "pixel_sum": sums,
-                                "error": errs})
-
-    return df.select("doc_id", F.col(media_col).alias("media")).mapInPandas(
-        mapper,
-        schema="doc_id long, frame_idx int, first_pixel int, pixel_sum long, error string",
-    )
+    return _frame_stats(df, every, media_col,
+                        lambda blob: blob[:4] == b"RIFF" and blob[8:12] == b"AVI ",
+                        "not an AVI container")
 
 
 def gif_frame_stats(df: DataFrame, every: int = 1, media_col: str = "media") -> DataFrame:
@@ -508,44 +467,8 @@ def gif_frame_stats(df: DataFrame, every: int = 1, media_col: str = "media") -> 
     decoder gets wrong), then every ``every``-th composed canvas is
     reduced to (first_pixel, pixel_sum).  Same typed-error-row contract
     and frame cap as :func:`sample_frames`."""
-
-    def mapper(batches):
-        from . import gifcore
-
-        for b in batches:
-            ids, idxs, pxs, sums, errs = [], [], [], [], []
-            for doc_id, blob in zip(b["doc_id"].tolist(), b["media"].tolist()):
-                blob = bytes(blob)
-                rows = []
-                try:
-                    if blob[:4] != b"GIF8":
-                        raise ValueError("not a GIF container")
-                    dec = gifcore.decode_gif_frames(
-                        blob, max_frames=_MAX_GIF_FRAMES + 1
-                    )
-                    if dec["n_frames"] > _MAX_GIF_FRAMES:
-                        raise ValueError(
-                            f"animated GIF exceeds the {_MAX_GIF_FRAMES}-frame decode cap"
-                        )
-                    for i in range(0, dec["n_frames"], every):
-                        fr = dec["frames"][i]
-                        rows.append((i, fr[0] if fr else 0, int(sum(fr)), None))
-                except (ValueError, gifcore.GifError) as e:
-                    rows = [(None, None, None, str(e)[:200])]
-                for i, px, ps, err in rows:
-                    ids.append(int(doc_id))
-                    idxs.append(i)
-                    pxs.append(px)
-                    sums.append(ps)
-                    errs.append(err)
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs,
-                                "first_pixel": pxs, "pixel_sum": sums,
-                                "error": errs})
-
-    return df.select("doc_id", F.col(media_col).alias("media")).mapInPandas(
-        mapper,
-        schema="doc_id long, frame_idx int, first_pixel int, pixel_sum long, error string",
-    )
+    return _frame_stats(df, every, media_col, lambda blob: blob[:4] == b"GIF8",
+                        "not a GIF container")
 
 
 # ----------------------------------------------------------------------

@@ -136,7 +136,7 @@ def _decrypt_block(block: bytes, rks: List[List[int]]) -> bytes:
     return bytes(s)
 
 
-def cbc_decrypt(key: bytes, data: bytes, strip_padding: bool = True) -> bytes:
+def cbc_decrypt(key: bytes, data: bytes) -> bytes:
     """AES-CBC per ISO 32000-1 §7.6.2: ``data`` = 16-byte IV followed by
     ciphertext; PKCS#5 padding stripped (tolerantly: a bad final block
     raises AesError rather than returning garbage silently)."""
@@ -151,8 +151,6 @@ def cbc_decrypt(key: bytes, data: bytes, strip_padding: bool = True) -> bytes:
         pt = _decrypt_block(block, rks)
         out += bytes(a ^ b for a, b in zip(pt, prev))
         prev = block
-    if not strip_padding:
-        return bytes(out)
     if not out:
         return b""
     pad = out[-1]

@@ -331,9 +331,6 @@ class StandardSecurityHandler:
         ).digest()
         return cbc_encrypt(key, data, iv)
 
-    # back-compat alias (pdfgen round-2 used handler.encrypt for RC4)
-    encrypt = encrypt_bytes
-
 
 def build_handler(encrypt: dict, file_id, password: bytes = b"") -> Optional[StandardSecurityHandler]:
     """Encrypt dict + trailer /ID → handler (CryptError on anything

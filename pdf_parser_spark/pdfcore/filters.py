@@ -69,19 +69,8 @@ def apply_predictor(data: bytes, params: dict) -> bytes:
             elif ft == 2:  # Up
                 for i in range(row_len):
                     row[i] = (row[i] + prev[i]) & 0xFF
-            elif ft == 3:  # Average
-                for i in range(row_len):
-                    left = row[i - bpp] if i >= bpp else 0
-                    row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
-            elif ft == 4:  # Paeth
-                for i in range(row_len):
-                    a = row[i - bpp] if i >= bpp else 0
-                    b = prev[i]
-                    c = prev[i - bpp] if i >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    row[i] = (row[i] + pred) & 0xFF
+            elif ft in (3, 4):
+                _unfilter_avg_paeth(ft, row, prev, bpp)
             else:
                 raise FilterError(f"unknown PNG filter type {ft}")
             out[r * row_len : (r + 1) * row_len] = row
@@ -89,6 +78,26 @@ def apply_predictor(data: bytes, params: dict) -> bytes:
         return bytes(out)
 
     raise FilterError(f"unknown predictor {predictor}")
+
+
+def _unfilter_avg_paeth(ft: int, row: bytearray, prev: bytes, bpp: int) -> None:
+    """PNG Average (3) or Paeth (4) row, reconstructed in place against
+    the previous reconstructed row ``prev`` (at least as long as ``row``).
+    Each byte reads its reconstructed left neighbour, so it stays a byte
+    loop on both the scalar and the vector path."""
+    if ft == 3:
+        for i in range(len(row)):
+            left = row[i - bpp] if i >= bpp else 0
+            row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
+        return
+    for i in range(len(row)):
+        a = row[i - bpp] if i >= bpp else 0
+        b = prev[i]
+        c = prev[i - bpp] if i >= bpp else 0
+        p = a + b - c
+        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+        pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+        row[i] = (row[i] + pred) & 0xFF
 
 
 def _tiff_unfilter_vector(data: bytes, row_len: int, bpp: int) -> bytes:
@@ -157,24 +166,7 @@ def _png_unfilter_vector(data: bytes, nrows: int, row_len: int, bpp: int) -> byt
             out[y, :row_len] = raw8[y] + prev[:row_len]  # uint8 wrap
         else:  # Average / Paeth: sequential left dependency → byte loop
             row = bytearray(raw8[y].tobytes())
-            pv = prev.tobytes()  # Python ints, not numpy scalars
-            if f == 3:
-                for i in range(row_len):
-                    left = row[i - bpp] if i >= bpp else 0
-                    row[i] = (row[i] + ((left + pv[i]) >> 1)) & 0xFF
-            else:
-                for i in range(row_len):
-                    a_ = row[i - bpp] if i >= bpp else 0
-                    b_ = pv[i]
-                    c_ = pv[i - bpp] if i >= bpp else 0
-                    p = a_ + b_ - c_
-                    pa, pb, pc = abs(p - a_), abs(p - b_), abs(p - c_)
-                    pred = (
-                        a_
-                        if (pa <= pb and pa <= pc)
-                        else (b_ if pb <= pc else c_)
-                    )
-                    row[i] = (row[i] + pred) & 0xFF
+            _unfilter_avg_paeth(int(f), row, prev.tobytes(), bpp)  # Python ints, not numpy scalars
             out[y, :row_len] = np.frombuffer(bytes(row), dtype=np.uint8)
         prev = out[y]
     if pad:

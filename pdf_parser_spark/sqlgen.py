@@ -119,21 +119,11 @@ def sql_hy_pct(asset_class: str, year: str, accumulated: bool) -> str:
     return f"(CASE WHEN {year} BETWEEN 1 AND {len(vals)} THEN coalesce({got}, 0.0) ELSE 0.0 END)"
 
 
-def _mm_rows(cls: str, accumulated: bool) -> List[List[float]]:
-    table = dep.MACRS_MM[cls]
-    rows = [list(r) for r in table]
-    if accumulated:
-        cols = [[rows[y][m] for y in range(len(rows))] for m in range(12)]
-        acc_cols = [dep._prefix(c) for c in cols]
-        rows = [[acc_cols[m][y] for m in range(12)] for y in range(len(rows))]
-    return rows
-
-
 def sql_mm_pct(building_class: str, year: str, month: str, accumulated: bool) -> str:
     """CASE-per-class mirror of depreciation._sql_mm_pct."""
     branches = []
     for cls in ("27.5yr", "39yr", "30yr", "40yr"):
-        rows = _mm_rows(cls, accumulated)
+        rows = dep._mm_rows(cls, accumulated)
         n_years = len(rows)
         arr = _sql_list2(rows)
         got = f"list_extract(list_extract({arr}, CAST({year} AS INT)), CAST({month} AS INT))"

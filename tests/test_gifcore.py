@@ -183,3 +183,23 @@ def test_animated_single_frame_matches_decode_gif():
     anim = decode_gif_frames(blob)
     assert anim["n_frames"] == 1
     assert anim["frames"][0] == one["pixels"]
+
+
+def test_decode_gif_counts_later_frames_without_decoding_them():
+    """decode_gif decodes only the first frame: a second frame whose LZW
+    payload is corrupt is still counted, while decode_gif_frames, which
+    composes every frame, raises the typed LZW error."""
+    from pdf_parser_spark.gifcore import decode_gif_frames, encode_gif_animated
+
+    f0 = _indices(2, 2, 4)
+    blob = bytearray(encode_gif_animated(2, 2, [f0, bytes(4)], PAL4))
+    second_gce = blob.index(b"\x21\xf9\x04", 6 + 7 + 12 + 1)  # after frame 0's GCE
+    lzw_at = second_gce + 8 + 10  # GCE + image descriptor
+    assert blob[lzw_at] == 2 and blob[lzw_at + 1] > 0  # min code size, sub-block length
+    blob[lzw_at + 2] = 0x07  # first code 7: outside the empty dictionary
+    img = decode_gif(bytes(blob))
+    assert img["n_frames"] == 2
+    assert img["pixels"] == b"".join(PAL4[3 * i : 3 * i + 3] for i in f0)
+    with pytest.raises(GifError) as ei:
+        decode_gif_frames(bytes(blob))
+    assert ei.value.code == "lzw"
