@@ -3,10 +3,11 @@
 Reimplements ``cost_seg/cost_seg_calculator.py`` + ``cost_seg/
 macrs_tables.py`` (D1–D11 of SURVEY §2.10) Spark-first:
 
-- every MACRS lookup, per-class year/accumulated value, CapEx pool fold
-  and the bonus schedule is built as Spark-SQL TEXT (``_sql_*``,
-  :func:`capex_total_sql`) and applied with one ``F.expr`` each, so a
-  plan costs a few py4j round trips instead of one per expression node.
+- every stage input, MACRS lookup, per-class year/accumulated value,
+  CapEx pool fold and the bonus schedule is built as Spark-SQL TEXT
+  (``_sql_*``, :func:`capex_total_sql`), cached per stage on its
+  parameters and applied with one ``selectExpr`` per stage, so a plan
+  costs a few py4j round trips instead of one per expression node.
   The DuckDB oracles mirror these functions (``sqlgen.py``,
   ``queries_capex.py``) in the same association order.
 - MACRS tables become LITERAL arrays indexed by ``element_at`` — zero
@@ -38,7 +39,8 @@ from typing import Dict, Iterable, List, Optional, Tuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.rounding import py_round
+from .functions.rounding import rounder
+from .functions.sqltext import ident, lit, sqld, with_sql
 
 # ----------------------------------------------------------------------
 # tables (exact values of cost_seg/macrs_tables.py:8-88)
@@ -124,10 +126,11 @@ def _mm_rows(cls: str, accumulated: bool) -> List[List[float]]:
 # ----------------------------------------------------------------------
 # SQL text: the _sql_* functions are the one way this module writes a
 # MACRS lookup, a per-class year or accumulated value, a CapEx pool fold
-# or the bonus schedule. Each returns Spark-SQL text, and callers apply
-# it with one F.expr: one py4j round trip, parsed JVM-side. A Column tree costs
-# several round trips per node on every plan (the audited_quotes chain
-# built as Column trees sent ~12,000 commands; as text, ~1,400).
+# or the bonus schedule. Each returns Spark-SQL text, and the stages
+# apply it with one selectExpr (sqltext.with_sql): one py4j round trip
+# per column, parsed JVM-side. A Column tree costs several round trips
+# per node on every plan (the audited_quotes chain built as Column trees
+# sent ~12,000 commands).
 # Arguments are SQL text too: column names, or expressions such as
 # "(years_elapsed + 1)". To keep every double identical to the DuckDB
 # mirrors (sqlgen.py, queries_capex.py):
@@ -138,10 +141,6 @@ def _mm_rows(cls: str, accumulated: bool) -> List[List[float]]:
 #   (array(...) parses into a node per element, and these tables sit
 #   inside higher-order-function lambdas).
 # ----------------------------------------------------------------------
-def _sqld(v: float) -> str:
-    return repr(float(v)) + "D"
-
-
 def _sql_bonus_rate(pis: str) -> str:
     """F5/J3: the first matching interval's rate, else 0 (list order
     wins)."""
@@ -154,7 +153,7 @@ def _sql_bonus_rate(pis: str) -> str:
                 f"({pis} >= DATE'{start.isoformat()}'"
                 f" AND {pis} <= DATE'{end.isoformat()}')"
             )
-        arms.append(f"WHEN {cond} THEN {_sqld(rate)}")
+        arms.append(f"WHEN {cond} THEN {sqld(rate)}")
     return "(CASE " + " ".join(arms) + " ELSE 0.0D END)"
 
 
@@ -334,15 +333,95 @@ def bonus_rate_expr(acq: str) -> Column:
     return F.expr(_sql_bonus_rate(acq))
 
 
-def age_adjustment_expr(year_built: Column, current_year: Column) -> Column:
+def age_adjustment_expr(year_built: str, current_year: str) -> str:
     """F6: 0.5 / (1 + e^(-0.01*age)) (cost_seg_calculator.py:37-58)."""
-    age = (current_year - year_built).cast("double")
-    return F.lit(0.5) / (F.lit(1.0) + F.exp(F.lit(-0.01) * age))
+    age = f"CAST(({current_year} - {year_built}) AS DOUBLE)"
+    return f"(0.5D / (1.0D + exp((-0.01D * {age}))))"
+
+
+def _pct(pct: str) -> str:
+    """The percent-or-fraction idiom (§1.2: pct>1 ⇒ /100) — fractions
+    here, guard kept for parity with cost_seg_calculator.py:166."""
+    return f"(CASE WHEN {pct} > 1.0D THEN ({pct} / 100.0D) ELSE {pct} END)"
 
 
 # ----------------------------------------------------------------------
 # engine stages
 # ----------------------------------------------------------------------
+def _sql_stage1_inputs(
+    purchase_price: str, land_value: str, capex: str, pad: str, deferred_gain: str,
+    acquisition_date: str, year_built: str,
+) -> Tuple[str, ...]:
+    """The input casts both stage-1 variants read: price, land, capex,
+    pad, deferred gain, acquisition date, year built (the acquisition
+    year when missing)."""
+    acq = f"CAST({ident(acquisition_date)} AS DATE)"
+    return (
+        f"CAST({ident(purchase_price)} AS DOUBLE)",
+        f"CAST({ident(land_value)} AS DOUBLE)",
+        *(f"coalesce(CAST({ident(c)} AS DOUBLE), 0.0D)" for c in (capex, pad, deferred_gain)),
+        acq,
+        f"coalesce(CAST({ident(year_built)} AS INT), year({acq}))",
+    )
+
+
+@lru_cache(maxsize=None)
+def _engine_inputs_sql(
+    purchase_price: str, land_value: str, capex: str, pad: str, deferred_gain: str,
+    acquisition_date: str, css_date: str, property_type: str, year_built: str,
+    bonus_override: Optional[str], use_ads: Optional[str], ads_tables: bool,
+) -> Tuple[Tuple[str, str], ...]:
+    pp, lv, cx, pd_, dg, acq, yb = _sql_stage1_inputs(
+        purchase_price, land_value, capex, pad, deferred_gain, acquisition_date, year_built
+    )
+    total_dep = f"(((({pp} - {lv}) + {cx}) - {pd_}) - {dg})"
+    bonus = _sql_bonus_rate(acq)
+    if bonus_override:
+        bonus = f"coalesce(CAST({ident(bonus_override)} AS DOUBLE), {bonus})"
+
+    is_mf = f"({ident(property_type)} = 'multi-family')"
+    ads = f"CAST({ident(use_ads)} AS BOOLEAN)" if use_ads else "false"
+    # F14 _building_key: ADS ? (MF?30:40) : (MF?27.5:39)
+    building_class = (
+        f"(CASE WHEN ({ads} AND {is_mf}) THEN '30yr' WHEN {ads} THEN '40yr'"
+        f" WHEN {is_mf} THEN '27.5yr' ELSE '39yr' END)"
+    )
+    # ADS zeroes bonus (RCGV cost_seg_calculator.py:216-226)
+    bonus = f"(CASE WHEN {ads} THEN 0.0D ELSE {bonus} END)"
+
+    # D8: reference has no 30/40yr tables → ValueError → empty schedule
+    engine_error = (
+        f"(CASE WHEN ({ads} AND (NOT {lit(ads_tables)})) THEN concat('Unknown asset class: ',"
+        f" (CASE WHEN {is_mf} THEN '30yr' ELSE '40yr' END)) ELSE CAST(NULL AS STRING) END)"
+    )
+
+    # F6/F7 age-adjusted allocations
+    adj = f"({age_adjustment_expr(yb, f'year({acq})')} * 0.22D)"
+    base_bldg = (
+        f"(CASE WHEN {is_mf} THEN {sqld(BASE_BUILDING['multi-family'])}"
+        f" ELSE {sqld(BASE_BUILDING['commercial'])} END)"
+    )
+    alloc_bldg = f"({base_bldg} * (1.0D - {adj}))"
+    alloc_15 = f"({sqld(BASE_ALLOCATIONS['15yr'])} + ({adj} * {base_bldg}))"
+
+    def amt(pct: str) -> str:
+        return f"({total_dep} * {_pct(pct)})"
+
+    return (
+        ("total_depreciable", total_dep),
+        ("bonus_rate", bonus),
+        ("building_class", building_class),
+        ("pis_month", f"month({acq})"),
+        ("acq_year", f"year({acq})"),
+        ("years_elapsed", f"(year(CAST({ident(css_date)} AS DATE)) - year({acq}))"),
+        ("amt_5yr", amt(sqld(BASE_ALLOCATIONS["5yr"]))),
+        ("amt_7yr", amt(sqld(BASE_ALLOCATIONS["7yr"]))),
+        ("amt_15yr", amt(alloc_15)),
+        ("amt_bldg", amt(alloc_bldg)),
+        ("engine_error", engine_error),
+    )
+
+
 def with_engine_inputs(
     df: DataFrame,
     purchase_price: str = "purchase_price",
@@ -363,79 +442,18 @@ def with_engine_inputs(
     Adds: total_depreciable, bonus_rate, building_class, month,
     amt_5yr / amt_7yr / amt_15yr / amt_bldg, engine_error.
     """
-    pp = F.col(purchase_price).cast("double")
-    lv = F.col(land_value).cast("double")
-    cx = F.coalesce(F.col(capex).cast("double"), F.lit(0.0))
-    pd_ = F.coalesce(F.col(pad).cast("double"), F.lit(0.0))
-    dg = F.coalesce(F.col(deferred_gain).cast("double"), F.lit(0.0))
-    acq = F.col(acquisition_date).cast("date")
-    ptype = F.col(property_type)
-    yb = F.coalesce(F.col(year_built).cast("int"), F.year(acq))
-
-    total_dep = pp - lv + cx - pd_ - dg
-    bonus = bonus_rate_expr(f"CAST(`{acquisition_date}` AS DATE)")
-    if bonus_override:
-        bonus = F.coalesce(F.col(bonus_override).cast("double"), bonus)
-
-    is_mf = ptype == "multi-family"
-    ads = F.col(use_ads).cast("boolean") if use_ads else F.lit(False)
-    # F14 _building_key: ADS ? (MF?30:40) : (MF?27.5:39)
-    building_class = (
-        F.when(ads & is_mf, F.lit("30yr"))
-        .when(ads, F.lit("40yr"))
-        .when(is_mf, F.lit("27.5yr"))
-        .otherwise(F.lit("39yr"))
-    )
-    # ADS zeroes bonus (RCGV cost_seg_calculator.py:216-226)
-    bonus = F.when(ads, F.lit(0.0)).otherwise(bonus)
-
-    # D8: reference has no 30/40yr tables → ValueError → empty schedule
-    engine_error = (
-        F.when(
-            ads & ~F.lit(ads_tables),
-            F.concat(F.lit("Unknown asset class: "), F.when(is_mf, "30yr").otherwise("40yr")),
-        )
-        .otherwise(F.lit(None).cast("string"))
-    )
-
-    # F6/F7 age-adjusted allocations
-    adj = age_adjustment_expr(yb, F.year(acq)) * F.lit(0.22)
-    base_bldg = F.when(is_mf, F.lit(BASE_BUILDING["multi-family"])).otherwise(
-        F.lit(BASE_BUILDING["commercial"])
-    )
-    alloc_bldg = base_bldg * (F.lit(1.0) - adj)
-    alloc_15 = F.lit(BASE_ALLOCATIONS["15yr"]) + adj * base_bldg
-
-    # percent-or-fraction idiom (§1.2: pct>1 ⇒ /100) — fractions here,
-    # guard kept for parity with cost_seg_calculator.py:166
-    def amt(pct: Column) -> Column:
-        return total_dep * F.when(pct > 1.0, pct / 100.0).otherwise(pct)
-
-    return df.select(
-        "*",
-        total_dep.alias("total_depreciable"),
-        bonus.alias("bonus_rate"),
-        building_class.alias("building_class"),
-        F.month(acq).alias("pis_month"),
-        F.year(acq).alias("acq_year"),
-        (F.year(F.col(css_date).cast("date")) - F.year(acq)).alias("years_elapsed"),
-        amt(F.lit(BASE_ALLOCATIONS["5yr"])).alias("amt_5yr"),
-        amt(F.lit(BASE_ALLOCATIONS["7yr"])).alias("amt_7yr"),
-        amt(alloc_15).alias("amt_15yr"),
-        amt(alloc_bldg).alias("amt_bldg"),
-        engine_error.alias("engine_error"),
-    )
+    return with_sql(df, _engine_inputs_sql(
+        purchase_price, land_value, capex, pad, deferred_gain, acquisition_date,
+        css_date, property_type, year_built, bonus_override or None, use_ads or None,
+        bool(ads_tables),
+    ))
 
 
-def _with_481a_cols(df: DataFrame, pools_col: Optional[str]) -> DataFrame:
-    """D6 481(a) columns, shared by :func:`with_481a` and
-    :func:`with_481a_capex`. With pools, should-have adds the pools'
-    accumulation through the PRIOR calendar year and current-year adds
-    their CSS-year depreciation.
-
-    Each lookup and fold is staged as a physical column first: inlined,
-    its tree (MACRS tables included) would be copied into every output
-    that reads it (round-3 plan-size finding)."""
+@lru_cache(maxsize=None)
+def _481a_sql(
+    pools_col: Optional[str],
+) -> Tuple[Tuple[Tuple[str, str], ...], Tuple[Tuple[str, str], ...]]:
+    """The staged lookups of :func:`_with_481a_cols` and its outputs."""
     staged = {
         "_should_base": _sql_sum(_class_sqls("years_elapsed", "bonus_rate", True).values()),
         "_did_take": _sql_standard_dep("years_elapsed"),
@@ -444,7 +462,7 @@ def _with_481a_cols(df: DataFrame, pools_col: Optional[str]) -> DataFrame:
     }
     should, cur, y1 = "_should_base", "_cur_base", "_y1_base"
     if pools_col:
-        pools = f"`{pools_col}`"
+        pools = ident(pools_col)
         staged["_capex_acc_prior"] = capex_total_sql(
             pools, "(acq_year + years_elapsed - 1)", accumulated=True
         )
@@ -467,16 +485,53 @@ def _with_481a_cols(df: DataFrame, pools_col: Optional[str]) -> DataFrame:
             y1, f"({should} - _did_take + {cur})"
         ),
     }
-    return (
-        df.select("*", *[F.expr(v).alias(k) for k, v in staged.items()])
-        .select("*", *[F.expr(v).alias(k) for k, v in out.items()])
-        .drop(*staged)
-    )
+    return tuple(staged.items()), tuple(out.items())
+
+
+def _with_481a_cols(df: DataFrame, pools_col: Optional[str]) -> DataFrame:
+    """D6 481(a) columns, shared by :func:`with_481a` and
+    :func:`with_481a_capex`. With pools, should-have adds the pools'
+    accumulation through the PRIOR calendar year and current-year adds
+    their CSS-year depreciation.
+
+    Each lookup and fold is staged as a physical column first: inlined,
+    its tree (MACRS tables included) would be copied into every output
+    that reads it (round-3 plan-size finding)."""
+    staged, out = _481a_sql(pools_col or None)
+    return with_sql(with_sql(df, staged), out).drop(*(k for k, _ in staged))
 
 
 def with_481a(df: DataFrame) -> DataFrame:
     """D6: 481(a) catch-up columns (cost_seg_calculator.py:264-309)."""
     return _with_481a_cols(df, None)
+
+
+@lru_cache(maxsize=None)
+def _schedule_sql(n_years: str, has_error: bool) -> Tuple[str, Tuple[Tuple[str, str], ...]]:
+    """The year-grid explode over ``n_years`` and the per-year columns."""
+    grid_years = f"sequence(1, {n_years})"
+    if has_error:
+        grid_years = f"(CASE WHEN engine_error IS NULL THEN {grid_years} END)"
+    dep = _class_sqls("`year`", "bonus_rate", accumulated=False)
+    acc = _class_sqls("`year`", "bonus_rate", accumulated=True)
+    dep_total = _sql_sum(dep.values())
+    # W3/D4: std_dep = acc_std(y) − acc_std(y−1), computed analytically
+    # (no window needed — the lag of a closed form is a closed form)
+    std_acc = _sql_standard_dep("`year`")
+    cols = {
+        "calendar_year": "(acq_year + `year` - 1)",  # W4
+        **dep,
+        "depreciation_total": dep_total,
+        **acc,
+        "accumulated_total": _sql_sum(acc.values()),
+        # D10 dual schedule in one pass: trad = bonus_override 0
+        "trad_cost_seg": _sql_sum(_class_sqls("`year`", "0.0D", accumulated=False).values()),
+        "bonus_dep": dep_total,
+        "cost_seg_est": dep_total,
+        "std_dep": f"({std_acc} - {_sql_standard_dep('(`year` - 1)')})",
+        "std_acc": std_acc,
+    }
+    return f"explode({grid_years}) AS `year`", tuple(cols.items())
 
 
 def depreciation_schedule(
@@ -500,31 +555,8 @@ def depreciation_schedule(
         n_years = f"(CASE {arms} ELSE 10 END)"
     else:
         n_years = "10"
-    grid_years = f"sequence(1, {n_years})"
-    if "engine_error" in df.columns:
-        grid_years = f"(CASE WHEN engine_error IS NULL THEN {grid_years} END)"
-    grid = df.select("*", F.explode(F.expr(grid_years)).alias("year"))
-
-    dep = _class_sqls("`year`", "bonus_rate", accumulated=False)
-    acc = _class_sqls("`year`", "bonus_rate", accumulated=True)
-    dep_total = _sql_sum(dep.values())
-    # W3/D4: std_dep = acc_std(y) − acc_std(y−1), computed analytically
-    # (no window needed — the lag of a closed form is a closed form)
-    std_acc = _sql_standard_dep("`year`")
-    cols = {
-        "calendar_year": "(acq_year + `year` - 1)",  # W4
-        **dep,
-        "depreciation_total": dep_total,
-        **acc,
-        "accumulated_total": _sql_sum(acc.values()),
-        # D10 dual schedule in one pass: trad = bonus_override 0
-        "trad_cost_seg": _sql_sum(_class_sqls("`year`", "0.0D", accumulated=False).values()),
-        "bonus_dep": dep_total,
-        "cost_seg_est": dep_total,
-        "std_dep": f"({std_acc} - {_sql_standard_dep('(`year` - 1)')})",
-        "std_acc": std_acc,
-    }
-    return grid.select("*", *[F.expr(v).alias(k) for k, v in cols.items()])
+    grid, cols = _schedule_sql(n_years, "engine_error" in df.columns)
+    return with_sql(df.selectExpr("*", grid), cols)
 
 
 def schedule_totals(schedule: DataFrame, keys: List[str]) -> DataFrame:
@@ -711,7 +743,7 @@ def _sql_lifetime(pools_col: Optional[str]) -> Tuple[str, str]:
         f" ELSE 0.0D END)"
     )
     capex = (
-        f"aggregate(`{pools_col}`, 0.0D, (acc, p) -> acc + p.amount)"
+        f"aggregate({ident(pools_col)}, 0.0D, (acc, p) -> acc + p.amount)"
         if pools_col
         else "0.0D"
     )
@@ -723,12 +755,11 @@ def with_lifetime_totals(df: DataFrame, pools_col: Optional[str] = None) -> Data
     depreciates only the base; traditional/bonus add CapEx."""
     std, capex = _sql_lifetime(pools_col)
     trad = f"round({std} + {capex}, 2)"
-    return df.select(
-        "*",
-        F.expr(f"round({std}, 2)").alias("lifetime_standard"),
-        F.expr(trad).alias("lifetime_traditional"),
-        F.expr(trad).alias("lifetime_bonus"),
-    )
+    return with_sql(df, (
+        ("lifetime_standard", f"round({std}, 2)"),
+        ("lifetime_traditional", trad),
+        ("lifetime_bonus", trad),
+    ))
 
 
 def with_reconciliation(df: DataFrame, pools_col: Optional[str] = None, tolerance: float = 0.0101) -> DataFrame:
@@ -748,18 +779,17 @@ def with_reconciliation(df: DataFrame, pools_col: Optional[str] = None, toleranc
     std, capex = _sql_lifetime(pools_col)
     exp_std = f"round({std}, 2)"
     exp_trad = f"({exp_std} + {capex})"
-    tol = _sqld(tolerance)
+    tol = sqld(tolerance)
     ok = (
         f"(abs(lifetime_standard - {exp_std}) <= {tol}"
         f" AND abs(lifetime_traditional - {exp_trad}) <= {tol}"
         f" AND abs(lifetime_bonus - {exp_trad}) <= {tol})"
     )
-    return df.select(
-        "*",
-        F.expr(exp_std).alias("expected_standard"),
-        F.expr(f"round({exp_trad}, 2)").alias("expected_traditional"),
-        F.expr(ok).alias("is_reconciled"),
-    )
+    return with_sql(df, (
+        ("expected_standard", exp_std),
+        ("expected_traditional", f"round({exp_trad}, 2)"),
+        ("is_reconciled", ok),
+    ))
 
 
 # ----------------------------------------------------------------------
@@ -770,6 +800,52 @@ RCGV_BASES = {
     "multi-family": {"5yr": 0.08926036, "7yr": 0.0, "15yr": 0.27500630, "bldg": 0.63573334},
     "commercial": {"5yr": 0.07000000, "7yr": 0.01926036, "15yr": 0.27500630, "bldg": 0.63573334},
 }
+
+
+@lru_cache(maxsize=None)
+def _engine_inputs_rcgv_sql(
+    purchase_price: str, land_value: str, capex: str, pad: str, deferred_gain: str,
+    acquisition_date: str, css_date: str, property_type: str, year_built: str,
+    pools_col: Optional[str],
+) -> Tuple[Tuple[str, str], ...]:
+    pp, lv, cx, pd_, dg, acq, yb = _sql_stage1_inputs(
+        purchase_price, land_value, capex, pad, deferred_gain, acquisition_date, year_built
+    )
+    css = f"CAST({ident(css_date)} AS DATE)"
+
+    base = f"((({pp} - {lv}) - {pd_}) - {dg})"
+    if pools_col:
+        has_pools = f"(size(coalesce({ident(pools_col)}, array())) > 0)"
+        total_dep = f"(CASE WHEN {has_pools} THEN {base} ELSE ({base} + {cx}) END)"
+    else:
+        total_dep = f"({base} + {cx})"
+
+    is_mf = f"({ident(property_type)} = 'multi-family')"
+    adj = f"({age_adjustment_expr(yb, f'year({css})')} * 0.22D)"
+    mf, co = RCGV_BASES["multi-family"], RCGV_BASES["commercial"]
+
+    def by_type(k: str) -> str:
+        return f"(CASE WHEN {is_mf} THEN {sqld(mf[k])} ELSE {sqld(co[k])} END)"
+
+    bb = by_type("bldg")
+    alloc_bldg = f"({bb} * (1.0D - {adj}))"
+    alloc_15 = f"({by_type('15yr')} + ({adj} * {bb}))"
+
+    def amt(pct: str) -> str:
+        return f"({total_dep} * {_pct(pct)})"
+
+    return (
+        ("total_depreciable", total_dep),
+        ("bonus_rate", _sql_bonus_rate(acq)),
+        ("building_class", f"(CASE WHEN {is_mf} THEN '27.5yr' ELSE '39yr' END)"),
+        ("pis_month", f"month({acq})"),
+        ("acq_year", f"year({acq})"),
+        ("years_elapsed", f"(year({css}) - year({acq}))"),
+        ("amt_5yr", amt(by_type("5yr"))),
+        ("amt_7yr", amt(by_type("7yr"))),
+        ("amt_15yr", amt(alloc_15)),
+        ("amt_bldg", amt(alloc_bldg)),
+    )
 
 
 def with_engine_inputs_rcgv(
@@ -794,51 +870,10 @@ def with_engine_inputs_rcgv(
     - age adjustment measured at the CSS year, not acquisition year
       (`:270-275`).
     """
-    pp = F.col(purchase_price).cast("double")
-    lv = F.col(land_value).cast("double")
-    cx = F.coalesce(F.col(capex).cast("double"), F.lit(0.0))
-    pd_ = F.coalesce(F.col(pad).cast("double"), F.lit(0.0))
-    dg = F.coalesce(F.col(deferred_gain).cast("double"), F.lit(0.0))
-    acq = F.col(acquisition_date).cast("date")
-    css = F.col(css_date).cast("date")
-    yb = F.coalesce(F.col(year_built).cast("int"), F.year(acq))
-
-    base = pp - lv - pd_ - dg
-    if pools_col:
-        has_pools = F.size(F.coalesce(F.col(pools_col), F.array())) > 0
-        total_dep = F.when(has_pools, base).otherwise(base + cx)
-    else:
-        total_dep = base + cx
-
-    is_mf = F.col(property_type) == "multi-family"
-    building_class = F.when(is_mf, F.lit("27.5yr")).otherwise(F.lit("39yr"))
-    bonus = bonus_rate_expr(f"CAST(`{acquisition_date}` AS DATE)")
-
-    adj = age_adjustment_expr(yb, F.year(css)) * F.lit(0.22)
-    mf, co = RCGV_BASES["multi-family"], RCGV_BASES["commercial"]
-    b5 = F.when(is_mf, F.lit(mf["5yr"])).otherwise(F.lit(co["5yr"]))
-    b7 = F.when(is_mf, F.lit(mf["7yr"])).otherwise(F.lit(co["7yr"]))
-    b15 = F.when(is_mf, F.lit(mf["15yr"])).otherwise(F.lit(co["15yr"]))
-    bb = F.when(is_mf, F.lit(mf["bldg"])).otherwise(F.lit(co["bldg"]))
-    alloc_bldg = bb * (F.lit(1.0) - adj)
-    alloc_15 = b15 + adj * bb
-
-    def amt(pct: Column) -> Column:
-        return total_dep * F.when(pct > 1.0, pct / 100.0).otherwise(pct)
-
-    return df.select(
-        "*",
-        total_dep.alias("total_depreciable"),
-        bonus.alias("bonus_rate"),
-        building_class.alias("building_class"),
-        F.month(acq).alias("pis_month"),
-        F.year(acq).alias("acq_year"),
-        (F.year(css) - F.year(acq)).alias("years_elapsed"),
-        amt(b5).alias("amt_5yr"),
-        amt(b7).alias("amt_7yr"),
-        amt(alloc_15).alias("amt_15yr"),
-        amt(alloc_bldg).alias("amt_bldg"),
-    )
+    return with_sql(df, _engine_inputs_rcgv_sql(
+        purchase_price, land_value, capex, pad, deferred_gain, acquisition_date,
+        css_date, property_type, year_built, pools_col or None,
+    ))
 
 
 # ----------------------------------------------------------------------
@@ -855,19 +890,74 @@ LEGACY_DEP_DEFAULT = 27.5
 
 
 def legacy_building_value(
-    pp: Column, land: Column, known: Column, capex_amount: Column,
-    capex_yes: Optional[Column] = None,
-) -> Column:
-    """building_value = pp − coerced land + capex. The engine gates
-    capex on the 'Yes' flag (engine/quote_calc.py:185); the api path
-    adds it unconditionally (service/api.py:75) — pass ``capex_yes``
-    for the engine form."""
+    pp: str, land: str, known: str, capex_amount: str,
+    capex_yes: Optional[str] = None,
+) -> str:
+    """building_value = pp − coerced land + capex, as SQL text over SQL
+    text. The engine gates capex on the 'Yes' flag
+    (engine/quote_calc.py:185); the api path adds it unconditionally
+    (service/api.py:75) — pass ``capex_yes`` for the engine form."""
     from .pricing import coerce_land
 
-    cx = F.coalesce(capex_amount.cast("double"), F.lit(0.0))
+    cx = f"coalesce(CAST({capex_amount} AS DOUBLE), 0.0D)"
     if capex_yes is not None:
-        cx = F.when(capex_yes == "Yes", cx).otherwise(F.lit(0.0))
-    return pp - coerce_land(pp, land, known) + cx
+        cx = f"(CASE WHEN {capex_yes} = 'Yes' THEN {cx} ELSE 0.0D END)"
+    return f"(({pp} - {coerce_land(pp, land, known)}) + {cx})"
+
+
+@lru_cache(maxsize=None)
+def _legacy_schedule_sql(
+    variant: str, bv_col: str, ptype_col: str, rounding: str
+) -> Tuple[Tuple[str, ...], Tuple[Tuple[str, str], ...]]:
+    """The year-grid select list and the schedule columns over it."""
+    rnd = rounder(rounding)
+    bv = f"CAST({ident(bv_col)} AS DOUBLE)"
+    if variant == "legacy_v1":
+        arms = " ".join(
+            f"WHEN {ident(ptype_col)} = {lit(k)} THEN {lit(v)}"
+            for k, v in LEGACY_DEP_PERIODS.items()
+        )
+        per = f"(CASE {arms} ELSE {lit(LEGACY_DEP_DEFAULT)} END)"
+        grid = (
+            f"{per} AS _dy",
+            f"explode(sequence(1, (CAST(FLOOR({per}) AS INT) + 1))) AS `year`",
+        )
+        five = f"({bv} * 0.15D)"
+        fifteen = f"({bv} * 0.1D)"
+        bldgp = f"({bv} * 0.75D)"
+        std = f"(CASE WHEN `year` <= _dy THEN ({bv} / _dy) ELSE 0.0D END)"
+        trad5 = (
+            f"(CASE WHEN `year` <= 5 THEN ({five} * 0.2D)"
+            f" WHEN `year` = 6 THEN (({five} * 0.2D) * 0.5D) ELSE 0.0D END)"
+        )
+        trad15 = (
+            f"(CASE WHEN `year` <= 15 THEN ({fifteen} * 0.1D)"
+            f" WHEN `year` = 16 THEN (({fifteen} * 0.1D) * 0.5D) ELSE 0.0D END)"
+        )
+        tradb = f"(CASE WHEN `year` <= _dy THEN ({bldgp} / _dy) ELSE 0.0D END)"
+        trad = f"(({trad5} + {trad15}) + {tradb})"
+        bonus = f"(CASE WHEN `year` = 1 THEN (({five} + {fifteen}) + {tradb}) ELSE {tradb} END)"
+        return grid, (
+            ("cost_seg_est", rnd(trad, 2)),
+            ("std_dep", rnd(std, 2)),
+            ("trad_cost_seg", rnd(trad, 2)),
+            ("bonus_dep", rnd(bonus, 2)),
+        )
+    if variant != "legacy_v2":
+        raise ValueError(f"unknown legacy variant {variant!r}")
+    y1_bonus = rnd(f"({bv} * 0.8D)", 2)
+    y1_trad = f"({rnd(f'(({bv} * 0.2D) / 27.5D)', 2)} + {rnd(f'(({bv} * 0.8D) / 5)', 2)})"
+    annual = rnd(f"(({bv} * 0.2D) / 27)", 2)
+
+    def year1(then: str) -> str:
+        return f"(CASE WHEN `year` = 1 THEN {then} ELSE {annual} END)"
+
+    return ("explode(sequence(1, 27)) AS `year`",), (
+        ("cost_seg_est", year1(y1_bonus)),
+        ("std_dep", rnd(f"({bv} / 27.5D)", 2)),
+        ("trad_cost_seg", year1(y1_trad)),
+        ("bonus_dep", year1(y1_bonus)),
+    )
 
 
 def legacy_schedule(
@@ -895,57 +985,6 @@ def legacy_schedule(
     Shuffle-free: explode(sequence) + literal arithmetic, same plan
     shape as depreciation_schedule (test_plans asserts zero Exchange).
     """
-    rnd = py_round if rounding == "python" else F.round
-    bv = F.col(bv_col).cast("double")
-    if variant == "legacy_v1":
-        per = None
-        for k, v in LEGACY_DEP_PERIODS.items():
-            cond = F.col(ptype_col) == k
-            per = F.when(cond, F.lit(v)) if per is None else per.when(cond, F.lit(v))
-        per = per.otherwise(F.lit(LEGACY_DEP_DEFAULT))
-        staged = df.select(
-            "*",
-            per.alias("_dy"),
-            F.explode(F.sequence(F.lit(1), F.floor(per).cast("int") + 1)).alias("year"),
-        )
-        dy = F.col("_dy")
-        y = F.col("year")
-        five = bv * F.lit(0.15)
-        fifteen = bv * F.lit(0.10)
-        bldgp = bv * F.lit(0.75)
-        std = F.when(y <= dy, bv / dy).otherwise(F.lit(0.0))
-        trad5 = (
-            F.when(y <= 5, five * F.lit(0.20))
-            .when(y == 6, five * F.lit(0.20) * F.lit(0.5))
-            .otherwise(F.lit(0.0))
-        )
-        trad15 = (
-            F.when(y <= 15, fifteen * F.lit(0.10))
-            .when(y == 16, fifteen * F.lit(0.10) * F.lit(0.5))
-            .otherwise(F.lit(0.0))
-        )
-        tradb = F.when(y <= dy, bldgp / dy).otherwise(F.lit(0.0))
-        trad = trad5 + trad15 + tradb
-        bonus = F.when(y == 1, five + fifteen + tradb).otherwise(tradb)
-        return staged.select(
-            "*",
-            rnd(trad, 2).alias("cost_seg_est"),
-            rnd(std, 2).alias("std_dep"),
-            rnd(trad, 2).alias("trad_cost_seg"),
-            rnd(bonus, 2).alias("bonus_dep"),
-        ).drop("_dy")
-    if variant != "legacy_v2":
-        raise ValueError(f"unknown legacy variant {variant!r}")
-    staged = df.select("*", F.explode(F.sequence(F.lit(1), F.lit(27))).alias("year"))
-    y = F.col("year")
-    std = rnd(bv / F.lit(27.5), 2)
-    y1_bonus = rnd(bv * F.lit(0.8), 2)
-    y1_trad = rnd(bv * F.lit(0.2) / F.lit(27.5), 2) + rnd(bv * F.lit(0.8) / F.lit(5), 2)
-    annual = rnd(bv * F.lit(0.2) / F.lit(27), 2)
-    return staged.select(
-        "*",
-        F.when(y == 1, y1_bonus).otherwise(annual).alias("cost_seg_est"),
-        std.alias("std_dep"),
-        F.when(y == 1, y1_trad).otherwise(annual).alias("trad_cost_seg"),
-        F.when(y == 1, y1_bonus).otherwise(annual).alias("bonus_dep"),
-    )
+    grid, cols = _legacy_schedule_sql(variant, bv_col, ptype_col, rounding)
+    out = with_sql(df.selectExpr("*", *grid), cols)
+    return out.drop("_dy") if variant == "legacy_v1" else out

@@ -370,7 +370,8 @@ def _media_stage(df: DataFrame, media_col: str, schema: str, rows_of, error_row:
     gives a document's value rows.  A failure — ``ValueError``, the
     typed codec errors included, or ``NotImplementedError`` for a gated
     codec — gives the one row ``error_row + (message,)`` instead, also
-    when it comes part-way through a document's rows.  Failures are
+    when it comes part-way through a document's rows.  A NULL media
+    value is such a failure too.  Failures are
     rows, not absences: at corpus scale a silently dropped row makes
     "no output" indistinguishable from a decoder bug in the audit
     metrics (same principle as extract.py's error_code rows)."""
@@ -381,6 +382,8 @@ def _media_stage(df: DataFrame, media_col: str, schema: str, rows_of, error_row:
             out = []
             for doc_id, blob in zip(b["doc_id"].tolist(), b["media"].tolist()):
                 try:
+                    if blob is None:
+                        raise ValueError("no media: NULL value")
                     rows = [r + (None,) for r in rows_of(bytes(blob))]
                 except (ValueError, NotImplementedError) as e:
                     rows = [error_row + (str(e)[:200],)]
@@ -482,6 +485,8 @@ def _walk_boxes(data: bytes, start: int, end: int):
         btype = data[pos + 4 : pos + 8]
         hdr = 8
         if size == 1:  # 64-bit largesize
+            if pos + 16 > end:
+                raise ValueError("corrupt MP4: truncated largesize header")
             (size,) = struct.unpack(">Q", data[pos + 8 : pos + 16])
             hdr = 16
         elif size == 0:  # box extends to end
@@ -568,14 +573,20 @@ def decode_mp4_metadata(blob: bytes) -> dict:
         found_moov = True
         for b2, s2, e2 in _walk_boxes(blob, s, e):
             if b2 == b"mvhd":
-                ver = blob[s2]
-                if ver == 1:
+                # version, flags, times, then timescale and duration:
+                # 32-bit times and duration in version 0, 64-bit in 1
+                v1 = s2 < e2 and blob[s2] == 1
+                if e2 - s2 < (32 if v1 else 20):
+                    raise ValueError("corrupt MP4: short mvhd")
+                if v1:
                     timescale, duration = struct.unpack(">IQ", blob[s2 + 20 : s2 + 32])
                 else:
                     timescale, duration = struct.unpack(">II", blob[s2 + 12 : s2 + 20])
             elif b2 == b"trak":
                 for b3, s3, e3 in _walk_boxes(blob, s2, e2):
                     if b3 == b"tkhd" and not width:
+                        if e3 - s3 < 8:
+                            raise ValueError("corrupt MP4: short tkhd")
                         # width/height: last 8 bytes, 16.16 fixed point
                         w_fx, h_fx = struct.unpack(">II", blob[e3 - 8 : e3])
                         width, height = w_fx >> 16, h_fx >> 16

@@ -211,20 +211,22 @@ class FontDecoder:
         embedded: Optional[Dict[int, str]] = None,
     ):
         self.tounicode = tounicode
-        self.embedded = embedded
-        table = dict(BASE_ENCODINGS.get(base_encoding or "StandardEncoding", _STANDARD))
-        if differences:
-            table.update(differences)
-        self.table = table
+        if embedded is not None:
+            # symbolic fonts must not fall back to StandardEncoding —
+            # an unmapped code is unknown, not "probably ASCII"
+            codes = embedded
+        else:
+            codes = dict(BASE_ENCODINGS.get(base_encoding or "StandardEncoding", _STANDARD))
+            if differences:
+                codes.update(differences)
+        # the str.translate table of all 256 codes, U+FFFD where unmapped
+        self.table = [codes.get(b, "\ufffd") for b in range(256)]
 
     def decode(self, raw: bytes) -> str:
         if self.tounicode is not None:
             return self.tounicode.decode(raw)
-        if self.embedded is not None:
-            # symbolic fonts must not fall back to StandardEncoding —
-            # an unmapped code is unknown, not "probably ASCII"
-            return "".join(self.embedded.get(b, "�") for b in raw)
-        return "".join(self.table.get(b, "�") for b in raw)
+        # one C call: each byte is the latin-1 char of the same ordinal
+        return raw.decode("latin-1").translate(self.table)
 
 
 def parse_differences(diff_array: list) -> Dict[int, str]:

@@ -12,7 +12,8 @@ reference consumes it via ``getDocument`` at
 
 from __future__ import annotations
 
-from typing import Any, Optional, Tuple
+import re
+from typing import Any, Tuple
 
 WHITESPACE = b"\x00\t\n\x0c\r "
 DELIMITERS = b"()<>[]{}/%"
@@ -340,16 +341,7 @@ class Lexer:
         raw = self._read_regular_run()
         if not raw:
             raise LexError(f"expected number at {self.pos}")
-        try:
-            if b"." in raw or b"e" in raw or b"E" in raw:
-                return float(raw)
-            return int(raw)
-        except ValueError:
-            # PDF tolerates things like '--5' or '.'; salvage leading number
-            try:
-                return float(raw.replace(b"--", b"-"))
-            except ValueError:
-                raise LexError(f"bad number token {raw!r}") from None
+        return _number(raw)
 
     def expect_keyword(self, kw: bytes) -> None:
         self.skip_ws()
@@ -364,47 +356,74 @@ class Keyword(bytes):
     __slots__ = ()
 
 
+def _number(raw: bytes) -> Any:
+    """A number token's value: int, else float."""
+    try:
+        if b"." in raw or b"e" in raw or b"E" in raw:
+            return float(raw)
+        return int(raw)
+    except ValueError:
+        # PDF tolerates things like '--5' or '.'; salvage leading number
+        try:
+            return float(raw.replace(b"--", b"-"))
+        except ValueError:
+            raise LexError(f"bad number token {raw!r}") from None
+
+
+_WS_CLASS = rb"\x00\t\n\x0c\r "
+_REGULAR = rb"[^" + _WS_CLASS + rb"()<>\[\]{}/%]"
+# One step of the content tokenizer: skip whitespace and comments, then
+# match one token. Every byte starts some alternative, so the match
+# never fails, and possessive quantifiers never backtrack. The
+# alternatives cover the plain forms; ``slow`` hands the rest (a name
+# with a #xx escape, a literal string with an escape or nested
+# parentheses, a dict, an array, a malformed hex string) to Lexer.
+_TOKEN = re.compile(
+    rb"(?:[" + _WS_CLASS + rb"]++|%[^\r\n]*+)*+"
+    rb"(?:(?P<num>[+\-.0-9]" + _REGULAR + rb"*+)"
+    rb"|/(?P<name>[^" + _WS_CLASS + rb"()<>\[\]{}/%#]*+)(?!" + _REGULAR + rb")"
+    rb"|\((?P<str>[^()\\]*+)\)"
+    rb"|<(?P<hex>[0-9A-Fa-f" + _WS_CLASS + rb"]*+)>"
+    rb"|(?P<kw>" + _REGULAR + rb"++)"
+    rb"|(?P<slow>[/(<\[])"
+    rb"|(?P<stray>[)>\]{}])"
+    rb"|(?P<end>\Z))"
+)
+
+
+def _skip_inline_image(data: bytes, pos: int) -> int:
+    """The position after the ``EI`` that ends the inline image whose
+    ``BI`` ends at ``pos``: the first ``EI`` with whitespace before it
+    and whitespace or the end of data after it."""
+    n = len(data)
+    idx = data.find(b"EI", pos)
+    while idx > 0 and not (
+        is_ws(data[idx - 1]) and (idx + 2 >= n or is_ws(data[idx + 2]))
+    ):
+        idx = data.find(b"EI", idx + 2)
+    return n if idx < 0 else idx + 2
+
+
 def tokenize_content(data: bytes):
     """Yield tokens from a content stream: operands then Keyword operators.
 
     Content streams use plain COS syntax without indirect references
     (ISO 32000-1 §7.8.2). Inline images (BI..EI) are skipped wholesale.
+    One compiled-pattern match per token; the forms it does not cover
+    are read by Lexer from the same position.
     """
+    match = _TOKEN.match
     lx = Lexer(data)
+    pos = 0
     while True:
-        lx.skip_ws()
-        if lx.pos >= lx.n:
-            return
-        b = lx.data[lx.pos]
-        if b in b"+-.0123456789":
-            yield lx.read_number()
-        elif b == 0x2F:
-            yield lx.read_name()
-        elif b == 0x28:
-            yield lx.read_literal_string()
-        elif b == 0x3C:
-            if lx.data[lx.pos : lx.pos + 2] == b"<<":
-                yield lx.read_dict()
-            else:
-                yield lx.read_hex_string()
-        elif b == 0x5B:
-            yield lx.read_array()
-        else:
-            kw = lx._read_regular_run()
-            if not kw:
-                lx.pos += 1  # skip stray delimiter byte
-                continue
+        m = match(data, pos)
+        kind = m.lastgroup
+        pos = m.end()
+        if kind == "kw":
+            kw = m[kind]
             if kw == b"BI":
-                # inline image: skip to 'EI' delimited by whitespace
-                idx = lx.data.find(b"EI", lx.pos)
-                while idx > 0 and not (
-                    is_ws(lx.data[idx - 1])
-                    and (idx + 2 >= lx.n or is_ws(lx.data[idx + 2]) or idx + 2 == lx.n)
-                ):
-                    idx = lx.data.find(b"EI", idx + 2)
-                lx.pos = lx.n if idx < 0 else idx + 2
-                continue
-            if kw == b"true":
+                pos = _skip_inline_image(data, pos)
+            elif kw == b"true":
                 yield True
             elif kw == b"false":
                 yield False
@@ -412,6 +431,35 @@ def tokenize_content(data: bytes):
                 yield None
             else:
                 yield Keyword(kw)
+        elif kind == "num":
+            yield _number(m[kind])
+        elif kind == "name":
+            yield Name(m[kind].decode("latin-1"))
+        elif kind == "str":
+            yield m[kind]
+        elif kind == "hex":
+            digits = m[kind].translate(None, WHITESPACE)
+            if len(digits) % 2 == 1:
+                digits += b"0"  # odd count: pad with '0'
+            yield bytes.fromhex(digits.decode("ascii"))
+        elif kind == "slow":
+            lx.pos = start = m.start(kind)
+            b = data[start]
+            if b == 0x2F:
+                tok = lx.read_name()
+            elif b == 0x28:
+                tok = lx.read_literal_string()
+            elif b == 0x5B:
+                tok = lx.read_array()
+            elif data[start : start + 2] == b"<<":
+                tok = lx.read_dict()
+            else:
+                tok = lx.read_hex_string()
+            pos = lx.pos
+            yield tok
+        elif kind == "end":
+            return
+        # 'stray': a lone closing delimiter, skipped
 
 
 def parse_object_at(data: bytes, offset: int) -> Tuple[int, int, Any]:

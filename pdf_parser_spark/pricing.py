@@ -2,7 +2,11 @@
 
 Reimplements both reference tier sets as data-driven expression chains
 (constant-folded by Catalyst — the Spark-faithful form of the
-reference's hard-coded if-ladders):
+reference's hard-coded if-ladders). Every builder here returns
+Spark-SQL text over SQL-text arguments (``functions/sqltext.py``);
+the stages cache their select lists on their parameters and apply each
+with one ``selectExpr``. The DuckDB oracle (``sqlgen``) writes its own
+text and shares only the tier data below.
 
 - ``v1`` — ``tools/pricing_calculator.py:23-158`` (top-level): MF
   factor 0.5, single-property factor 0.7, zip factor constant 1.0,
@@ -23,13 +27,14 @@ The adjustment stack (rush/premium/referral/override) follows
 
 from __future__ import annotations
 
-import math
+from functools import lru_cache
 from typing import Dict, List, Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.rounding import py_round
+from .functions.rounding import rounder
+from .functions.sqltext import ident, lit, sqld, with_sql
 
 # ----------------------------------------------------------------------
 # tier data (thresholds descending, mirroring the reference if-chains:
@@ -109,73 +114,126 @@ LINEAR_BASE = 4000.0
 
 
 # ----------------------------------------------------------------------
-# expression builders
+# expression builders: SQL text in, SQL text out
 # ----------------------------------------------------------------------
-def ge_chain(x: Column, tiers: Sequence[Tuple[Optional[float], float]]) -> Column:
+def ge_chain(x: str, tiers: Sequence[Tuple[Optional[float], float]]) -> str:
     """Descending ``x >= t`` chain — first match wins (if/elif ladder)."""
-    expr = None
-    for t, factor in tiers:
-        if t is None:
-            tail = F.lit(float(factor))
-        else:
-            cond = x >= F.lit(float(t))
-            expr = F.when(cond, F.lit(float(factor))) if expr is None else expr.when(cond, F.lit(float(factor)))
-    return expr.otherwise(tail) if expr is not None else tail
+    arms = [f"WHEN {x} >= {sqld(t)} THEN {sqld(f)}" for t, f in tiers if t is not None]
+    tail = sqld(next(f for t, f in tiers if t is None))
+    return f"(CASE {' '.join(arms)} ELSE {tail} END)" if arms else tail
 
 
 def le_chain_with_zero(
-    x: Column, zero_factor: float, le_tiers: Sequence[Tuple[float, float]],
+    x: str, zero_factor: float, le_tiers: Sequence[Tuple[float, float]],
     ge_tail: Tuple[float, float], else_factor: float,
-) -> Column:
+) -> str:
     """The sqft/acres shape: ``==0`` special, ascending ``<=`` chain,
     then a ``>= tail`` override, else default."""
-    expr = F.when(x == 0.0, F.lit(float(zero_factor)))
-    for t, factor in le_tiers:
-        expr = expr.when(x <= F.lit(float(t)), F.lit(float(factor)))
-    expr = expr.when(x >= F.lit(float(ge_tail[0])), F.lit(float(ge_tail[1])))
-    return expr.otherwise(F.lit(float(else_factor)))
+    arms = [f"WHEN {x} = 0.0D THEN {sqld(zero_factor)}"]
+    arms += [f"WHEN {x} <= {sqld(t)} THEN {sqld(f)}" for t, f in le_tiers]
+    arms.append(f"WHEN {x} >= {sqld(ge_tail[0])} THEN {sqld(ge_tail[1])}")
+    return f"(CASE {' '.join(arms)} ELSE {sqld(else_factor)} END)"
 
 
-def map_chain(x: Column, mapping: Dict[str, float], default: float) -> Column:
-    expr = None
-    for k, v in mapping.items():
-        cond = x == F.lit(k)
-        expr = F.when(cond, F.lit(v)) if expr is None else expr.when(cond, F.lit(v))
-    return expr.otherwise(F.lit(default))
+def map_chain(x: str, mapping: Dict[str, float], default: float) -> str:
+    arms = " ".join(f"WHEN {x} = {lit(k)} THEN {lit(v)}" for k, v in mapping.items())
+    return f"(CASE {arms} ELSE {lit(default)} END)"
 
 
-def sqft_factor(x: Column, version: str) -> Column:
+def sqft_factor(x: str, version: str) -> str:
     if version == "v1":
         return le_chain_with_zero(x, SQFT_V1_ZERO, SQFT_V1_LE, SQFT_V1_GE_TAIL, SQFT_V1_ELSE)
-    return F.when(x == 0.0, F.lit(SQFT_V2_ZERO)).otherwise(ge_chain(x, SQFT_V2_GE))
+    return f"(CASE WHEN {x} = 0.0D THEN {sqld(SQFT_V2_ZERO)} ELSE {ge_chain(x, SQFT_V2_GE)} END)"
 
 
-def acres_factor(x: Column) -> Column:
+def acres_factor(x: str) -> str:
     return le_chain_with_zero(x, ACRES_ZERO, ACRES_LE, ACRES_GE_TAIL, ACRES_ELSE)
 
 
-def zip_factor(zip_int: Column, version: str) -> Column:
+def zip_factor(zip_int: str, version: str) -> str:
     if version == "v1":
-        return F.lit(1.0)  # tools/pricing_calculator.py:50
-    return ge_chain(zip_int.cast("double"), ZIP_V2)
+        return "1.0D"  # tools/pricing_calculator.py:50
+    return ge_chain(f"CAST({zip_int} AS DOUBLE)", ZIP_V2)
 
 
-def logistic_bid(building_value: Column) -> Column:
+def logistic_bid(building_value: str) -> str:
     """F8: L / (1 + e^(-K*(bv-X0)*0.001)) (tools/pricing_calculator.py:171-182)."""
-    return F.lit(LOGISTIC_L) / (
-        F.lit(1.0)
-        + F.exp(F.lit(-LOGISTIC_K) * (building_value - F.lit(LOGISTIC_X0)) * F.lit(0.001))
+    return (
+        f"({sqld(LOGISTIC_L)} / (1.0D + exp((({sqld(-LOGISTIC_K)}"
+        f" * ({building_value} - {sqld(LOGISTIC_X0)})) * 0.001D))))"
     )
 
 
-def coerce_land(pp: Column, land: Column, known: Column) -> Column:
+def coerce_land(pp: str, land: str, known: str) -> str:
     """F13 land coercion (engine/quote_calc.py:101-107): known ⇒ the
     value IS dollars; else it's a percent (v > 1 ⇒ v/100) or a fraction
     of the purchase price. Null land → 0.0 (the reference's
     ``float(land_value or 0.0)``)."""
-    v = F.coalesce(land.cast("double"), F.lit(0.0))
-    pct = F.when(v > 1.0, v / 100.0).otherwise(v)
-    return F.when(known, v).otherwise(pp * pct)
+    v = f"coalesce(CAST({land} AS DOUBLE), 0.0D)"
+    pct = f"(CASE WHEN {v} > 1.0D THEN ({v} / 100.0D) ELSE {v} END)"
+    return f"(CASE WHEN {known} THEN {v} ELSE ({pp} * {pct}) END)"
+
+
+@lru_cache(maxsize=None)
+def _pricing_sql(
+    version: str, purchase_price: str, land_value: str, capex: Optional[str],
+    zip_code: Optional[str], property_type: str, sqft_building: str, acres_land: str,
+    floors: str, num_properties: str, rounding: str, known_land_value: Optional[str],
+    upfront_ratio: float,
+) -> Tuple[Tuple[Tuple[str, str], ...], ...]:
+    """:func:`compute_pricing`'s four staged select lists."""
+    rnd = rounder(rounding)
+    pp = f"CAST({ident(purchase_price)} AS DOUBLE)"
+    lv = f"CAST({ident(land_value)} AS DOUBLE)"
+    if known_land_value is not None:
+        lv = coerce_land(pp, lv, f"CAST({ident(known_land_value)} AS BOOLEAN)")
+    cx = f"CAST({ident(capex)} AS DOUBLE)" if capex else "0.0D"
+    total_cost = f"({pp} + {cx})"
+    zip_int = f"coalesce({ident(zip_code)}, 85260)" if zip_code else "85260"
+    nprop = f"CAST({ident(num_properties)} AS DOUBLE)"
+
+    factors = (
+        ("cost_basis_factor", ge_chain(total_cost, COST_BASIS_V1 if version == "v1" else COST_BASIS_V2)),
+        ("zip_code_factor", zip_factor(zip_int, version)),
+        ("sqft_factor", sqft_factor(f"CAST({ident(sqft_building)} AS DOUBLE)", version)),
+        ("acres_factor", acres_factor(f"CAST({ident(acres_land)} AS DOUBLE)")),
+        ("property_type_factor", map_chain(
+            ident(property_type),
+            PROPERTY_TYPE_V1 if version == "v1" else PROPERTY_TYPE_V2,
+            PROPERTY_TYPE_DEFAULT,
+        )),
+        ("floors_factor", ge_chain(f"CAST({ident(floors)} AS DOUBLE)", FLOORS)),
+        ("multi_prop_factor", ge_chain(nprop, MULTI_PROP_V1 if version == "v1" else MULTI_PROP_V2)),
+    )
+    base_cost = f"(({total_cost} * {sqld(LINEAR_RATE)}) + {sqld(LINEAR_BASE)})"
+    linear = base_cost
+    for name, _ in factors:
+        linear = f"({linear} * {name})"
+    land = (("land_amount", lv),) if known_land_value is not None else ()
+    raws = land + (
+        ("_linear_raw", linear),
+        ("_logistic_raw", logistic_bid(f"(({pp} - {lv}) + {cx})")),
+        ("_multi_raw", f"({linear} * {nprop})"),
+    )
+    l, g, m = "_linear_raw", "_logistic_raw", "_multi_raw"
+    if version == "v1":
+        # O2 quirk (tools/pricing_calculator.py:189-194):
+        # min(three) < multi ⇒ take multi — net effect max(min, multi)
+        final = f"greatest(least({l}, {g}, {m}), {m})"
+    else:
+        final = f"least({l}, {g}, {m})"
+    bids = (
+        ("linear_bid", rnd(l, 2)),
+        ("logistic_bid", rnd(g, 2)),
+        ("multi_properties_bid", rnd(m, 2)),
+        ("final_bid", rnd(f"greatest({final}, 100.0D)", 2)),
+    )
+    pays = (
+        ("pay_upfront", rnd(f"(final_bid * {sqld(upfront_ratio)})", 2)),
+        ("pay_50_50", rnd("(final_bid / 2)", 2)),
+        ("pay_over_time", rnd("(final_bid / 4)", 2)),
+    )
+    return factors, raws, bids, pays
 
 
 def compute_pricing(
@@ -194,7 +252,7 @@ def compute_pricing(
     known_land_value: Optional[str] = None,
     upfront_ratio: float = 0.91,
 ) -> DataFrame:
-    """One narrow ``select`` adding factors, bids, final bid, payments.
+    """Four narrow selects adding factors, bids, final bid, payments.
 
     Zero shuffles, zero UDFs, fully whole-stage-codegen'd: the entire
     /quote/compute endpoint (§3.2) as a column expression.
@@ -217,81 +275,37 @@ def compute_pricing(
     tools/pricing_calculator.py:202 and service/api.py:79 (the default),
     0.909 in engine/quote_calc.py:260 (pass 0.909 for engine parity).
     """
-    rnd = py_round if rounding == "python" else F.round
-    pp = F.col(purchase_price).cast("double")
-    lv = F.col(land_value).cast("double")
-    if known_land_value is not None:
-        lv = coerce_land(pp, lv, F.col(known_land_value).cast("boolean"))
-    cx = F.col(capex).cast("double") if capex else F.lit(0.0)
-    total_cost = pp + cx
-
-    cb = ge_chain(total_cost, COST_BASIS_V1 if version == "v1" else COST_BASIS_V2)
-    zf = zip_factor(F.coalesce(F.col(zip_code), F.lit(85260)) if zip_code else F.lit(85260), version)
-    sf = sqft_factor(F.col(sqft_building).cast("double"), version)
-    af = acres_factor(F.col(acres_land).cast("double"))
-    ptf = map_chain(
-        F.col(property_type),
-        PROPERTY_TYPE_V1 if version == "v1" else PROPERTY_TYPE_V2,
-        PROPERTY_TYPE_DEFAULT,
+    factors, raws, bids, pays = _pricing_sql(
+        version, purchase_price, land_value, capex, zip_code, property_type,
+        sqft_building, acres_land, floors, num_properties, rounding,
+        known_land_value, float(upfront_ratio),
     )
-    ff = ge_chain(F.col(floors).cast("double"), FLOORS)
-    mpf = ge_chain(
-        F.col(num_properties).cast("double"),
-        MULTI_PROP_V1 if version == "v1" else MULTI_PROP_V2,
-    )
-
-    base_cost = total_cost * F.lit(LINEAR_RATE) + F.lit(LINEAR_BASE)
-
     # staged selects: name each big subtree ONCE and reference it by
     # column thereafter — py_round references its argument ~10 times,
     # so inlining the factor chains would blow the expression tree up
     # multiplicatively (Catalyst's CollapseProject keeps non-cheap
     # exprs referenced more than once un-inlined, preserving the DAG)
-    stage1 = df.select(
-        "*",
-        cb.alias("cost_basis_factor"),
-        zf.alias("zip_code_factor"),
-        sf.alias("sqft_factor"),
-        af.alias("acres_factor"),
-        ptf.alias("property_type_factor"),
-        ff.alias("floors_factor"),
-        mpf.alias("multi_prop_factor"),
+    out = df
+    for stage in (factors, raws, bids, pays):
+        out = with_sql(out, stage)
+    return out.drop("_linear_raw", "_logistic_raw", "_multi_raw")
+
+
+@lru_cache(maxsize=None)
+def _payment_block_sql(
+    quote: str, rush_fee: Optional[str], upfront_ratio: float, rounding: str
+) -> Tuple[Tuple[str, str], ...]:
+    rnd = rounder(rounding)
+    q = f"CAST({ident(quote)} AS DOUBLE)"
+    rf = f"coalesce(CAST({ident(rush_fee)} AS DOUBLE), 0.0D)" if rush_fee else "0.0D"
+    return (
+        ("originally_quoted", rnd(q, 2)),
+        ("rush_fee_quoted", rnd(rf, 2)),
+        ("pay_upfront_engine", rnd(f"({q} * {sqld(upfront_ratio)})", 2)),
+        ("pay_50_50_engine", rnd(f"({q} / 2)", 2)),
+        ("pay_over_time_amount", rnd(f"({q} / 4)", 2)),
+        ("pay_over_time_note", "'Up to 36 months'"),
     )
-    linear = (
-        base_cost
-        * F.col("cost_basis_factor") * F.col("zip_code_factor") * F.col("sqft_factor")
-        * F.col("acres_factor") * F.col("property_type_factor")
-        * F.col("floors_factor") * F.col("multi_prop_factor")
-    )
-    land_cols = [lv.alias("land_amount")] if known_land_value is not None else []
-    stage2 = stage1.select(
-        "*",
-        *land_cols,
-        linear.alias("_linear_raw"),
-        logistic_bid(pp - lv + cx).alias("_logistic_raw"),
-        (linear * F.col(num_properties).cast("double")).alias("_multi_raw"),
-    )
-    l, g, m = F.col("_linear_raw"), F.col("_logistic_raw"), F.col("_multi_raw")
-    if version == "v1":
-        # O2 quirk (tools/pricing_calculator.py:189-194):
-        # min(three) < multi ⇒ take multi — net effect max(min, multi)
-        final = F.greatest(F.least(l, g, m), m)
-    else:
-        final = F.least(l, g, m)
-    stage3 = stage2.select(
-        "*",
-        rnd(l, 2).alias("linear_bid"),
-        rnd(g, 2).alias("logistic_bid"),
-        rnd(m, 2).alias("multi_properties_bid"),
-        rnd(F.greatest(final, F.lit(100.0)), 2).alias("final_bid"),
-    )
-    fb = F.col("final_bid")
-    return stage3.select(
-        "*",
-        rnd(fb * F.lit(float(upfront_ratio)), 2).alias("pay_upfront"),
-        rnd(fb / 2, 2).alias("pay_50_50"),
-        rnd(fb / 4, 2).alias("pay_over_time"),
-    ).drop("_linear_raw", "_logistic_raw", "_multi_raw")
 
 
 def with_payment_block(
@@ -305,22 +319,32 @@ def with_payment_block(
     originally_quoted / rounded rush fee / pay_upfront (×0.909 — the F10
     fork) / pay_50_50 / pay_over_time_amount + the fixed note. Input
     must not already carry these names (case-insensitive resolver)."""
-    rnd = py_round if rounding == "python" else F.round
-    q = F.col(quote).cast("double")
     # CASE-INSENSITIVE presence test, matching how every other column
     # here resolves (a case-mismatched fee column must not silently
     # become 0.00 in a block whose point is byte-exact engine parity)
     has_rush = bool(rush_fee) and rush_fee.lower() in {c.lower() for c in df.columns}
-    rf = F.coalesce(F.col(rush_fee).cast("double"), F.lit(0.0)) if has_rush else F.lit(0.0)
-    return df.select(
-        "*",
-        rnd(q, 2).alias("originally_quoted"),
-        rnd(rf, 2).alias("rush_fee_quoted"),
-        rnd(q * F.lit(float(upfront_ratio)), 2).alias("pay_upfront_engine"),
-        rnd(q / 2, 2).alias("pay_50_50_engine"),
-        rnd(q / 4, 2).alias("pay_over_time_amount"),
-        F.lit("Up to 36 months").alias("pay_over_time_note"),
+    return with_sql(
+        df, _payment_block_sql(quote, rush_fee if has_rush else None, float(upfront_ratio), rounding)
     )
+
+
+@lru_cache(maxsize=None)
+def _adjustments_sql(
+    base_quote: str, rush: str, premium: str, referral: str,
+    price_override: Optional[str], referral_uplift: float, rounding: str,
+) -> Tuple[Tuple[str, str], ...]:
+    base = ident(base_quote)
+    rush_fee = map_chain(ident(rush), RUSH_FEES, 0.0)
+    premium_amt = f"(CASE WHEN {ident(premium)} = 'Yes' THEN ({base} * 0.05D) ELSE 0.0D END)"
+    referral_amt = (
+        f"(CASE WHEN {ident(referral)} = 'No' THEN 0.0D"
+        f" ELSE ({base} * {sqld(referral_uplift)}) END)"
+    )
+    adjusted = f"((({base} + {rush_fee}) + {premium_amt}) + {referral_amt})"
+    if price_override:
+        ov = f"CAST({ident(price_override)} AS DOUBLE)"
+        adjusted = f"(CASE WHEN {ov} IS NOT NULL AND {ov} > 0 THEN {ov} ELSE {adjusted} END)"
+    return (("rush_fee", rush_fee), ("final_quote", rounder(rounding)(adjusted, 2)))
 
 
 def apply_adjustments(
@@ -334,20 +358,10 @@ def apply_adjustments(
     rounding: str = "python",
 ) -> DataFrame:
     """F11 adjustment stack (service/calculator_adapter.py:60-95)."""
-    rnd = py_round if rounding == "python" else F.round
-    base = F.col(base_quote)
-    rush_fee = map_chain(F.col(rush), RUSH_FEES, 0.0)
-    premium_amt = F.when(F.col(premium) == "Yes", base * 0.05).otherwise(F.lit(0.0))
-    referral_amt = F.when(F.col(referral) == "No", F.lit(0.0)).otherwise(base * referral_uplift)
-    adjusted = base + rush_fee + premium_amt + referral_amt
-    if price_override:
-        ov = F.col(price_override).cast("double")
-        adjusted = F.when(ov.isNotNull() & (ov > 0), ov).otherwise(adjusted)
-    return df.select(
-        "*",
-        rush_fee.alias("rush_fee"),
-        rnd(adjusted, 2).alias("final_quote"),
-    )
+    return with_sql(df, _adjustments_sql(
+        base_quote, rush, premium, referral, price_override or None,
+        float(referral_uplift), rounding,
+    ))
 
 
 # ----------------------------------------------------------------------

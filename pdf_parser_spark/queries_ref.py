@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from . import depreciation as dep
 from . import pricing, sqlgen
 from .fields import format_date, format_number, format_zipcode, record_map_typed, typed_field
-from .functions.rounding import py_round
+from .functions.sqltext import sql_str
 from .validate import with_validation
 
 # ----------------------------------------------------------------------
@@ -181,19 +181,25 @@ def q_whitetext_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("||SqFt_Building: "), (k % 50000).cast("string"),
         F.lit("||no_colon_noise"),
     )
-    base = c.select(k.alias("c_custkey"), record_map_typed(meta).alias("_m"))
-    m = F.col("_m")
-    return base.select(
+    base = c.select(k.alias("c_custkey"), meta.alias("_meta")).selectExpr(
+        "c_custkey", f"{record_map_typed('_meta')} AS _m"
+    )
+    return base.selectExpr(
         "c_custkey",
-        typed_field(m, "Name_of_Prospect", "text").alias("name_of_prospect"),
-        typed_field(m, "Address_of_Property", "text").alias("address_of_property"),
-        typed_field(m, "Zip_Code", "zipcode").alias("zip_code"),
-        typed_field(m, "Purchase_Price", "currency").alias("purchase_price"),
-        typed_field(m, "Know_Land_Value", "currency").alias("know_land_value"),
-        typed_field(m, "Date_of_Purchase", "date").alias("date_of_purchase"),
-        typed_field(m, "Tax_Deadline_Quote", "text").alias("tax_deadline_quote"),
-        typed_field(m, "Tax_Year", "number").alias("tax_year"),
-        typed_field(m, "SqFt_Building", "number").alias("sqft_building"),
+        *(
+            f"{typed_field('_m', key, kind)} AS {alias}"
+            for key, kind, alias in [
+                ("Name_of_Prospect", "text", "name_of_prospect"),
+                ("Address_of_Property", "text", "address_of_property"),
+                ("Zip_Code", "zipcode", "zip_code"),
+                ("Purchase_Price", "currency", "purchase_price"),
+                ("Know_Land_Value", "currency", "know_land_value"),
+                ("Date_of_Purchase", "date", "date_of_purchase"),
+                ("Tax_Deadline_Quote", "text", "tax_deadline_quote"),
+                ("Tax_Year", "number", "tax_year"),
+                ("SqFt_Building", "number", "sqft_building"),
+            ]
+        ),
     )
 
 
@@ -226,13 +232,16 @@ def q_field_formatters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(k % 3 == 1, F.concat(F.lit("07/"), F.lpad(day.cast("string"), 2, "0"), F.lit("/2024")))
         .otherwise(F.concat(F.lit("July "), day.cast("string"), F.lit(", 2024")))
     )
-    return c.select(
+    raw = c.select(
+        "c_custkey", zip_raw.alias("zip_raw"), num_raw.alias("num_raw"), date_raw.alias("date_raw")
+    )
+    return raw.selectExpr(
         "c_custkey",
-        format_zipcode(zip_raw).alias("zip_fmt"),
-        format_number(num_raw, 2).alias("num2_fmt"),
-        format_number(num_raw, 0).alias("num0_fmt"),
-        format_date(date_raw).alias("date_fmt"),
-        format_number(F.lit("not a number"), 2).alias("nan_fmt"),
+        f"{format_zipcode('zip_raw')} AS zip_fmt",
+        f"{format_number('num_raw', 2)} AS num2_fmt",
+        f"{format_number('num_raw', 0)} AS num0_fmt",
+        f"{format_date('date_raw')} AS date_fmt",
+        f"{format_number(sql_str('not a number'), 2)} AS nan_fmt",
     )
 
 
@@ -580,14 +589,11 @@ def _legacy_inputs(spark: SparkSession, sf_dir: str, api_form: bool = False) -> 
         F.when(k % 2 == 0, "Yes").otherwise("No").alias("capex"),
         _ptype_col().alias("property_type"),
     )
-    return df.select(
-        "*",
-        dep.legacy_building_value(
-            F.col("purchase_price"), F.col("land_value"), F.col("known_land_value"),
-            F.col("capex_amount"),
-            capex_yes=None if api_form else F.col("capex"),
-        ).alias("building_value"),
+    bv = dep.legacy_building_value(
+        "purchase_price", "land_value", "known_land_value", "capex_amount",
+        capex_yes=None if api_form else "capex",
     )
+    return df.selectExpr("*", f"{bv} AS building_value")
 
 
 _LEGACY_BV_SQL = """
@@ -1089,17 +1095,23 @@ def q_whitetext_record_legacy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("||Zip_Code: 85260"),
         F.lit("||Acres_Land: 2.5x"),
     )
-    base = c.select(k.alias("c_custkey"), record_map_legacy(marker).alias("_m"))
-    m = F.col("_m")
-    return base.select(
+    base = c.select(k.alias("c_custkey"), marker.alias("_marker")).selectExpr(
+        "c_custkey", f"{record_map_legacy('_marker')} AS _m"
+    )
+    return base.selectExpr(
         "c_custkey",
-        legacy_field(m, "Name_of_Prospect", "text").alias("name_of_prospect"),
-        legacy_field(m, "Purchase_Price", "currency").alias("purchase_price"),
-        legacy_field(m, "SqFt_Building", "number").alias("sqft_building"),
-        legacy_field(m, "Zip_Code", "zipcode").alias("zip_code"),
-        legacy_field(m, "Acres_Land", "number").alias("acres_land"),
-        legacy_field(m, "Building_Value", "currency").alias("building_value"),
-        legacy_field(m, "CapEx_Date", "date").alias("capex_date"),
+        *(
+            f"{legacy_field('_m', key, kind)} AS {alias}"
+            for key, kind, alias in [
+                ("Name_of_Prospect", "text", "name_of_prospect"),
+                ("Purchase_Price", "currency", "purchase_price"),
+                ("SqFt_Building", "number", "sqft_building"),
+                ("Zip_Code", "zipcode", "zip_code"),
+                ("Acres_Land", "number", "acres_land"),
+                ("Building_Value", "currency", "building_value"),
+                ("CapEx_Date", "date", "capex_date"),
+            ]
+        ),
     )
 
 

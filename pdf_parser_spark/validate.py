@@ -1,4 +1,4 @@
-"""Validation battery as native ``F.when`` predicates (P6/P7, SURVEY §2.2).
+"""Validation battery as native ``CASE WHEN`` predicates (P6/P7, SURVEY §2.2).
 
 Builds an ``errors: array<struct<field,message>>`` column plus an
 ``is_valid`` flag instead of throwing — the Spark-shaped equivalent of
@@ -12,14 +12,19 @@ the record schema (the real key is ``Type_of_Property_Quote``,
 error — with ``throwOnMissingFields`` every page fails and parsePDF
 default options can never succeed. ``strict_quirk=True`` preserves
 this observable behavior; ``False`` checks the real key.
+
+Like ``fields``, the battery is Spark-SQL text, cached per mode.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from functools import lru_cache
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .fields import format_zipcode
+from .functions.sqltext import ident, sql_str
 
 # JS-falsy test per field type: strings '' / null, numbers 0 / null
 _REQUIRED_TYPED = [
@@ -42,74 +47,75 @@ _NUMERIC_FIELDS = [
 _REQUIRED_LEGACY = ["Name_of_Prospect", "Address_of_Property", "Purchase_Price"]
 
 
-def _err(field: str, message: str) -> Column:
-    return F.struct(F.lit(field).alias("field"), F.lit(message).alias("message"))
+_NO_ERRORS = "CAST(array() AS ARRAY<STRUCT<field: STRING, message: STRING>>)"
 
 
-def _falsy(col: Column) -> Column:
+def _err(field: str, message: str) -> str:
+    return f"array(named_struct('field', {sql_str(field)}, 'message', {sql_str(message)}))"
+
+
+def _check(cond: str, field: str, message: str) -> str:
+    """One error when ``cond`` holds, else none."""
+    return f"(CASE WHEN {cond} THEN {_err(field, message)} ELSE {_NO_ERRORS} END)"
+
+
+def _falsy(col: str) -> str:
     # typed-mode fields are already NULL when JS-falsy (fields.py), but
     # accept raw '' / 0 too so this works on any record source
-    return col.isNull() | (col.cast("string") == "") | (col.try_cast("double") == 0.0)
+    return f"({col} IS NULL OR CAST({col} AS STRING) = '' OR TRY_CAST({col} AS DOUBLE) = 0.0D)"
 
 
-def validation_errors(mode: str = "typed", strict_quirk: bool = True) -> Column:
-    """Column expression: array of validation errors for a record row."""
+@lru_cache(maxsize=None)
+def validation_errors(mode: str = "typed", strict_quirk: bool = True) -> str:
+    """SQL text: array of validation errors for a record row."""
     errs = []
     if mode == "legacy":
         # pdfParser.ts:127-133
         for f in _REQUIRED_LEGACY:
-            errs.append(
-                F.when(_falsy(F.col(f)), F.array(_err(f, f"Required fields missing: {f}")))
-                .otherwise(F.array().cast("array<struct<field:string,message:string>>"))
-            )
+            errs.append(_check(_falsy(ident(f)), f, f"Required fields missing: {f}"))
     else:
         # validateRequiredFields (validators.ts:5-26)
         for f in _REQUIRED_TYPED:
-            errs.append(
-                F.when(_falsy(F.col(f)), F.array(_err(f, f"{f} is required")))
-                .otherwise(F.array().cast("array<struct<field:string,message:string>>"))
-            )
+            errs.append(_check(_falsy(ident(f)), f, f"{f} is required"))
         if strict_quirk:
             # 'Type_of_Property' is not a record key → always required-error
-            errs.append(F.array(_err("Type_of_Property", "Type_of_Property is required")))
+            errs.append(_err("Type_of_Property", "Type_of_Property is required"))
         else:
             errs.append(
-                F.when(
-                    _falsy(F.col("Type_of_Property_Quote")),
-                    F.array(_err("Type_of_Property_Quote", "Type_of_Property_Quote is required")),
-                ).otherwise(F.array().cast("array<struct<field:string,message:string>>"))
+                _check(
+                    _falsy(ident("Type_of_Property_Quote")),
+                    "Type_of_Property_Quote",
+                    "Type_of_Property_Quote is required",
+                )
             )
         # validateFieldFormats (validators.ts:28-77)
-        zip_col = F.col("Zip_Code")
+        zip_col = ident("Zip_Code")
         errs.append(
-            F.when(
-                zip_col.isNotNull() & (zip_col != "") & (format_zipcode(zip_col) != zip_col),
-                F.array(_err("Zip_Code", "Invalid zip code format")),
-            ).otherwise(F.array().cast("array<struct<field:string,message:string>>"))
+            _check(
+                f"{zip_col} IS NOT NULL AND {zip_col} != ''"
+                f" AND {format_zipcode(zip_col)} != {zip_col}",
+                "Zip_Code",
+                "Invalid zip code format",
+            )
         )
         for f in _NUMERIC_FIELDS:
-            errs.append(
-                F.when(
-                    F.col(f).isNotNull() & (F.col(f) < 0),
-                    F.array(_err(f, f"{f} cannot be negative")),
-                ).otherwise(F.array().cast("array<struct<field:string,message:string>>"))
-            )
-        capex = F.col("CapEx_Date")
-        capex_parsed = F.coalesce(
-            F.try_to_timestamp(capex, F.lit("MM/dd/yyyy")),
-            F.try_to_timestamp(capex),
+            c = ident(f)
+            errs.append(_check(f"{c} IS NOT NULL AND {c} < 0", f, f"{f} cannot be negative"))
+        capex = ident("CapEx_Date")
+        capex_parsed = (
+            f"coalesce(try_to_timestamp({capex}, 'MM/dd/yyyy'), try_to_timestamp({capex}))"
         )
         errs.append(
-            F.when(
-                capex.isNotNull() & (capex != "") & capex_parsed.isNull(),
-                F.array(_err("CapEx_Date", "Invalid date format for CapEx_Date")),
-            ).otherwise(F.array().cast("array<struct<field:string,message:string>>"))
+            _check(
+                f"{capex} IS NOT NULL AND {capex} != '' AND {capex_parsed} IS NULL",
+                "CapEx_Date",
+                "Invalid date format for CapEx_Date",
+            )
         )
-    return F.flatten(F.array(*errs))
+    return f"flatten(array({', '.join(errs)}))"
 
 
 def with_validation(records: DataFrame, mode: str = "typed", strict_quirk: bool = True) -> DataFrame:
-    errs = validation_errors(mode, strict_quirk)
-    return records.withColumn("validation_errors", errs).withColumn(
-        "is_valid", F.size(F.col("validation_errors")) == 0
-    )
+    return records.withColumn(
+        "validation_errors", F.expr(validation_errors(mode, strict_quirk))
+    ).withColumn("is_valid", F.expr("size(validation_errors) = 0"))

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from conftest import reference_path
 from pdf_parser_spark import depreciation as dep
+from pdf_parser_spark.functions.sqltext import sqld
 
 
 @pytest.fixture(scope="module")
@@ -252,7 +253,7 @@ def _reconcile_schedule(schedule, keys, tolerance=0.01):
         F.max("accumulated_total").alias("acc_at_horizon"),
         F.max("year").alias("horizon"),
     )
-    tol = dep._sqld(tolerance)
+    tol = sqld(tolerance)
     trad_at_horizon = dep._sql_sum(dep._class_sqls("horizon", "0.0D", accumulated=True).values())
     return tot.select(
         *keys,

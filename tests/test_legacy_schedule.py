@@ -43,10 +43,10 @@ def legacy_df(spark):
     df = spark.createDataFrame(CASES)
     return df.withColumn(
         "building_value",
-        legacy_building_value(
-            F.col("purchase_price"), F.col("land_value"), F.col("known_land_value"),
-            F.col("capex_amount"), capex_yes=F.col("capex"),
-        ),
+        F.expr(legacy_building_value(
+            "purchase_price", "land_value", "known_land_value", "capex_amount",
+            capex_yes="capex",
+        )),
     ).cache()
 
 
@@ -119,10 +119,10 @@ def legacy_df_api(spark):
     df = spark.createDataFrame(CASES)
     return df.withColumn(
         "building_value",
-        legacy_building_value(
-            F.col("purchase_price"), F.col("land_value"), F.col("known_land_value"),
-            F.col("capex_amount"), capex_yes=None,
-        ),
+        F.expr(legacy_building_value(
+            "purchase_price", "land_value", "known_land_value", "capex_amount",
+            capex_yes=None,
+        )),
     ).cache()
 
 

@@ -302,3 +302,40 @@ def test_gif_frame_stats_stage(spark):
     assert rows[(1, 0)].first_pixel == 100 and rows[(1, 0)].pixel_sum == 400
     assert rows[(1, 1)].first_pixel == 0 and rows[(1, 1)].pixel_sum == 400
     assert rows[(2, None)].error == "not a GIF container"
+
+
+def _short_mp4(mvhd_body=None, tkhd_body=None):
+    """_make_mp4's layout with one box body replaced."""
+    import struct as st
+
+    def box(tag, body):
+        return st.pack(">I", len(body) + 8) + tag + body
+
+    good = _make_mp4(640, 360, 30000, 90000)
+    ftyp = good[: st.unpack(">I", good[:4])[0]]
+    if mvhd_body is not None:
+        return ftyp + box(b"moov", box(b"mvhd", mvhd_body))
+    return ftyp + box(b"moov", box(b"trak", box(b"tkhd", tkhd_body)))
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        None,  # a NULL media value
+        _short_mp4(mvhd_body=b"\x00\x00\x00\x00" + b"\x00" * 8),  # short mvhd
+        _short_mp4(mvhd_body=b"\x01"),  # version-1 mvhd cut after its version
+        # a largesize header cut before its 8 bytes
+        b"\x00\x00\x00\x10ftypisom\x00\x00\x02\x00" + b"\x00\x00\x00\x01moov\x00\x00\x00",
+        _short_mp4(tkhd_body=b"\x00" * 4),  # a tkhd shorter than 8 bytes
+    ],
+    ids=["null", "short-mvhd", "mvhd-v1-cut", "cut-largesize", "short-tkhd"],
+)
+def test_bad_media_row_is_one_error_row_next_to_a_good_row(spark, bad):
+    good = _make_mp4(640, 360, 30000, 90000)
+    df = spark.createDataFrame([(1, good), (2, bad)], "doc_id long, media binary")
+    got = sorted(mm.media_metadata(df).collect(), key=lambda r: r["doc_id"])
+    assert [r["doc_id"] for r in got] == [1, 2]
+    ok, err = got
+    assert ok["error"] is None and ok["kind"] == "video"
+    assert (ok["width"], ok["height"], ok["sample_rate"], ok["n_frames"]) == (640, 360, 30000, 90000)
+    assert err["error"] and err["kind"] == "unknown", err

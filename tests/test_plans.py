@@ -386,15 +386,53 @@ def test_signature_plan_cost_flat_in_width(spark):
 
 
 def test_depreciation_plan_cost_is_sql_text(spark):
-    """The depreciation chain the audited_quotes workload runs builds its
-    MACRS lookups as SQL text: building the plan takes a few thousand
-    py4j commands at most (as Column trees it took ~12,000)."""
+    """The audited_quotes chain, from the record fold to the schedule,
+    builds as cached SQL text, one select per stage: building its plan
+    takes at most 1,000 py4j commands (as Column trees the record,
+    validation, pricing and engine-input stages alone sent over 10,000)."""
     from pdf_parser_spark import depreciation as dep
+    from pdf_parser_spark.fields import extract_record
+    from pdf_parser_spark.pricing import compute_pricing
+    from pdf_parser_spark.schema import EXTRACT_SCHEMA
+    from pdf_parser_spark.validate import with_validation
 
-    inp = qr._depr_inputs(spark, SF, 101, 0)
-    n = _plan_build_commands(
-        lambda: dep.depreciation_schedule(
-            dep.with_481a(dep.with_engine_inputs(inp)), full_horizon=True
+    ext = spark.createDataFrame([], EXTRACT_SCHEMA)
+
+    def build():
+        rec = with_validation(extract_record(ext), mode="typed", strict_quirk=False)
+        inp = rec.drop("Pay_Upfront", "Pay_Over_Time").selectExpr(
+            "*",
+            "1.0D AS _floors",
+            "0.0D AS _zero",
+            "to_date(Date_of_Purchase, 'MM/dd/yyyy') AS _acq",
+            "make_date(CAST(Tax_Year AS INT), 12, 31) AS _css",
         )
-    )
-    assert n <= 3000, n
+        priced = compute_pricing(
+            inp,
+            purchase_price="Purchase_Price",
+            land_value="Know_Land_Value",
+            capex="Capital_Improvements_Amount",
+            zip_code="Zip_Code",
+            property_type="Type_of_Property_Quote",
+            sqft_building="SqFt_Building",
+            acres_land="Acres_Land",
+            floors="_floors",
+            num_properties="Multiple_Properties_Quote",
+            rounding="python",
+        )
+        staged = dep.with_engine_inputs(
+            priced,
+            purchase_price="Purchase_Price",
+            land_value="Know_Land_Value",
+            capex="Capital_Improvements_Amount",
+            pad="_zero",
+            deferred_gain="_zero",
+            acquisition_date="_acq",
+            css_date="_css",
+            property_type="Type_of_Property_Quote",
+            year_built="Year_Built",
+        )
+        return dep.depreciation_schedule(dep.with_481a(staged), full_horizon=True)
+
+    n = _plan_build_commands(build)
+    assert n <= 1000, n

@@ -199,7 +199,7 @@ def test_land_coercion_parity_vs_engine(spark):
     got = {
         r["case_id"]: r["land_amt"]
         for r in df.select(
-            "case_id", coerce_land(F.col("pp"), F.col("land"), F.col("known")).alias("land_amt")
+            "case_id", F.expr(coerce_land("pp", "land", "known")).alias("land_amt")
         ).collect()
     }
     for i, (pp, land, known) in enumerate(LAND_CASES):
@@ -275,3 +275,44 @@ def test_land_coercion_in_compute_pricing_vs_engine_quote(spark):
             row["purchase_price"], row["land_value"], row["known_land"]
         )
         assert out[row["case_id"]]["land_amount"] == pytest.approx(exp_land, abs=0.0)
+
+
+def _py_round_cases():
+    """Values where rounding is easy to get wrong: decimal ties that are
+    not binary ties, a negative tie, magnitudes near 2^52 / 10^d and
+    2^53 / 10^d (where the scaled value's spacing reaches 0.5 and 1),
+    and a seeded grid of random magnitudes and near-ties."""
+    import math
+    import random
+
+    xs = [0.125, 2.675, 818.135, -0.5, 1e15, -0.049999999999999996, None]
+    for d in range(5):
+        for bound in (4.5e15, 2.0**52, 2.0**53):
+            b = bound / 10**d
+            xs += [b, math.nextafter(b, 0.0), math.nextafter(b, math.inf), -b]
+    rng = random.Random(2675)
+    for _ in range(4000):
+        d = rng.randrange(5)
+        x = rng.choice([-1, 1]) * 10 ** rng.uniform(-6, 17)
+        if rng.random() < 0.4:  # a decimal tie at d places, or a neighbour
+            q = 10.0**-d
+            x = (math.floor(x / q) + 0.5) * q
+            x = rng.choice([x, math.nextafter(x, math.inf), math.nextafter(x, -math.inf)])
+        xs.append(x)
+    return xs
+
+
+def test_py_round_matches_cpython_round(spark):
+    """``py_round``'s SQL text gives CPython's ``round(x, d)`` for
+    d = 0..4, bit for bit (repr keeps -0.0 apart), and NULL for NULL."""
+    from pdf_parser_spark.functions.rounding import py_round
+
+    xs = _py_round_cases()
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    rows = df.selectExpr("i", *(f"{py_round('x', d)} AS r{d}" for d in range(5))).collect()
+    assert len(rows) == len(xs)
+    for r in rows:
+        x = xs[r["i"]]
+        for d in range(5):
+            expected = None if x is None else round(x, d)
+            assert repr(r[f"r{d}"]) == repr(expected), (x, d)
