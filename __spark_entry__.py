@@ -18,7 +18,6 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
-from typing import Iterator
 
 # make the package importable regardless of the caller's CWD
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -27,46 +26,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_parser_spark import pricing
-from pdf_parser_spark.extract import extract_documents, salted
+from pdf_parser_spark.extract import extract_documents, map_documents, salted
 from pdf_parser_spark.fields import extract_record
+from pdf_parser_spark.functions.sqltext import lit, with_sql
 from pdf_parser_spark.queries_capex import capex_oracle_sql, capex_queries
 from pdf_parser_spark.queries_data import data_oracle_sql, data_queries
 from pdf_parser_spark.queries_ref import ref_oracle_sql, ref_queries
 from pdf_parser_spark.validate import with_validation
 
 
-def _pages_mapper(batches):
+def _quote_page(doc_id: int) -> list:
+    """One synthesized quote PDF as a ``pages`` row."""
     import datetime
-
-    import pandas as pd
 
     from pdf_parser_spark.synth.pdfgen import make_quote_pdf
 
-    epoch = datetime.datetime(2024, 1, 1)
-    for b in batches:
-        rows = []
-        for doc_id in b["doc_id"]:
-            i = int(doc_id)
-            blob, golden_text, golden_wt = make_quote_pdf(i)
-            rows.append(
-                {
-                    "url": f"https://example{i % 97}.test/doc/{i}",
-                    "warc_ts": epoch + datetime.timedelta(seconds=i),
-                    "html": blob,
-                    "text": golden_text,
-                    "lang": "en",
-                }
-            )
-        yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
+    i = int(doc_id)
+    blob, golden_text, _golden_wt = make_quote_pdf(i)
+    return [(
+        f"https://example{i % 97}.test/doc/{i}",
+        datetime.datetime(2024, 1, 1) + datetime.timedelta(seconds=i),
+        blob,
+        golden_text,
+        "en",
+    )]
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id")
-    pages = docs.mapInPandas(
-        _pages_mapper,
-        schema="url string, warc_ts timestamp_ntz, html binary, text string, lang string",
+    pages = map_documents(
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), ["doc_id"],
+        "url string, warc_ts timestamp_ntz, html binary, text string, lang string",
+        _quote_page,
     )
     golden = pages.select("url", F.col("text").alias("golden_text"))
     ext = extract_documents(salted(pages, parallelism=8))
@@ -76,14 +68,16 @@ def entry(spark: SparkSession) -> DataFrame:
     # pricing's computed pay_* outputs under the default resolver
     rec = rec.drop("Pay_Upfront", "Pay_Over_Time")
     priced = pricing.compute_pricing(
-        rec.withColumn("_pp", F.coalesce(F.col("Purchase_Price"), F.lit(0.0)))
-        .withColumn("_lv", F.coalesce(F.col("Know_Land_Value"), F.lit(0.0)))
-        .withColumn("_cx", F.coalesce(F.col("Capital_Improvements_Amount"), F.lit(0.0)))
-        .withColumn("_zip", F.coalesce(F.col("Zip_Code").cast("int"), F.lit(85260)))
-        .withColumn("_sqft", F.coalesce(F.col("SqFt_Building"), F.lit(0.0)))
-        .withColumn("_acres", F.coalesce(F.col("Acres_Land"), F.lit(0.0)))
-        .withColumn("_floors", F.lit(1.0))
-        .withColumn("_nprop", F.coalesce(F.col("Multiple_Properties_Quote"), F.lit(1.0))),
+        with_sql(rec, [
+            ("_pp", f"coalesce(Purchase_Price, {lit(0.0)})"),
+            ("_lv", f"coalesce(Know_Land_Value, {lit(0.0)})"),
+            ("_cx", f"coalesce(Capital_Improvements_Amount, {lit(0.0)})"),
+            ("_zip", f"coalesce(CAST(Zip_Code AS INT), {lit(85260)})"),
+            ("_sqft", f"coalesce(SqFt_Building, {lit(0.0)})"),
+            ("_acres", f"coalesce(Acres_Land, {lit(0.0)})"),
+            ("_floors", lit(1.0)),
+            ("_nprop", f"coalesce(Multiple_Properties_Quote, {lit(1.0)})"),
+        ]),
         purchase_price="_pp",
         land_value="_lv",
         capex="_cx",

@@ -14,23 +14,24 @@ Scale design (north rule):
 - Arrow batches are row-capped (session.py ARROW_BATCH_ROWS) because a
   batch of binaries can be GBs;
 - failures NEVER throw: they become ``error_code`` rows, mirroring the
-  page-loop error swallowing of the reference (``index.ts:65-68``);
+  page-loop error swallowing of the reference (``index.ts:65-68``) —
+  :func:`map_documents` owns that contract for every per-document stage;
 - per-doc decode fallbacks are counted for the audit table.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from operator import itemgetter
+from typing import Callable, List, Optional, Sequence, Tuple, Union
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .htmlcore import extract_main_text
 from .pdfcore import PdfError, parse_pdf
-from pyspark.sql.types import StructType
-
 from .schema import EXTRACT_SCHEMA
 
 # the first page whose white-text concat contains this marker holds the
@@ -52,16 +53,65 @@ def sniff_doc_type(blob: Optional[bytes]) -> str:
     return "unknown"
 
 
-def _extract_one(blob: Optional[bytes], mode: str, want_text: bool = True,
-                 decrypt: bool = False, password: bytes = b"") -> dict:
-    """Extract a single document. Never raises.
+def map_documents(
+    df: DataFrame,
+    in_cols: Sequence[Union[str, Column]],
+    schema: Union[str, StructType],
+    rows_of: Callable[..., List[tuple]],
+    error_row: Optional[Callable[[tuple, Exception], tuple]] = None,
+) -> DataFrame:
+    """The one per-document ``mapInPandas`` stage: select ``in_cols``
+    and call ``rows_of(*inputs)`` once per document, with the inputs in
+    ``in_cols`` order. It returns that document's output rows as a list
+    of tuples in ``schema`` order. Each batch is built as one list per
+    output column: a ``pd.DataFrame`` from a list of dicts re-infers
+    every cell (slow with nested spans), per-column lists keep batch
+    overhead flat.
 
-    ``want_text=False`` skips assembling the heavy output fields
-    (text/spans/meta_string) — the PARSE work is identical, but nothing
-    string-shaped is built or shipped. Used by the ``meta`` output mode
-    for metrics/audit-only scans.
-    """
-    out = {
+    Production form, ``error_row`` given — the typed-row contract:
+    every ``Exception`` out of ``rows_of``, also one part-way through a
+    document's rows, gives the one row ``error_row(inputs, exc)``
+    instead, so no document fails the job and none silently
+    disappears (at corpus scale a dropped row makes "no output"
+    indistinguishable from a decoder bug in the audit metrics).
+    ``error_row`` keeps a typed error's code and message and marks
+    anything else ``internal`` (:func:`typed_error`).
+
+    Fixture form, ``error_row=None``: nothing is caught. An oracle
+    fixture that fails must fail the run (``queries_data._oracle_bytes``
+    says why)."""
+    if isinstance(schema, StructType):
+        names = schema.fieldNames()
+    else:
+        names = [c.split()[0] for c in schema.split(",")]
+    caught = Exception if error_row is not None else ()
+
+    def mapper(batches):
+        for b in batches:
+            rows: List[tuple] = []
+            for inputs in zip(*(col.tolist() for _, col in b.items())):
+                try:
+                    rows += rows_of(*inputs)
+                except caught as e:  # noqa: BLE001 — the contract above
+                    rows.append(error_row(inputs, e))
+            cols = list(zip(*rows)) or [()] * len(names)
+            yield pd.DataFrame({n: list(c) for n, c in zip(names, cols)}, columns=names)
+
+    return df.select(*in_cols).mapInPandas(mapper, schema=schema)
+
+
+def typed_error(exc: Exception, typed) -> Tuple[Optional[str], str]:
+    """(code, message) of a failed document: an instance of the stage's
+    ``typed`` classes keeps its own ``code`` (None without one) and
+    message; anything else is ``("internal", "Type: message")``."""
+    if isinstance(exc, typed):
+        return getattr(exc, "code", None), str(exc)
+    return "internal", f"{type(exc).__name__}: {exc}"
+
+
+def _blank(blob: Optional[bytes]) -> dict:
+    """A document's output fields before any parsing."""
+    return {
         "doc_type": sniff_doc_type(blob),
         "text": None,
         "spans": None,
@@ -74,17 +124,21 @@ def _extract_one(blob: Optional[bytes], mode: str, want_text: bool = True,
         "n_bytes": len(blob) if blob else 0,
         "decrypted": False,
     }
+
+
+def _extract_one(blob: Optional[bytes], mode: str, want_text: bool = True,
+                 decrypt: bool = False, password: bytes = b"") -> dict:
+    """Extract a single document. A failure raises; the stage turns it
+    into the document's error row (:func:`_failed`).
+
+    ``want_text=False`` skips assembling the heavy output fields
+    (text/spans/meta_string) — the PARSE work is identical, but nothing
+    string-shaped is built or shipped. Used by the ``meta`` output mode
+    for metrics/audit-only scans.
+    """
+    out = _blank(blob)
     if out["doc_type"] == "pdf":
-        try:
-            doc = parse_pdf(blob, decrypt=decrypt, password=password)
-        except PdfError as e:
-            out["error_code"] = e.code
-            out["error_message"] = str(e)[:500]
-            return out
-        except Exception as e:  # noqa: BLE001 — any parser bug degrades, never kills the task
-            out["error_code"] = "internal"
-            out["error_message"] = f"{type(e).__name__}: {e}"[:500]
-            return out
+        doc = parse_pdf(blob, decrypt=decrypt, password=password)
         out["n_pages"] = doc.num_pages
         out["decode_fallbacks"] = doc.decode_fallbacks
         out["decrypted"] = doc.decrypted
@@ -114,18 +168,26 @@ def _extract_one(blob: Optional[bytes], mode: str, want_text: bool = True,
             metas = (m for m in (p.whitetext_metadata() for p in doc.pages) if _META_MARKER in m)
         out["meta_string"] = next(metas, None)
     elif out["doc_type"] == "html":
-        try:
-            text, spans = extract_main_text(blob.decode("utf-8", errors="replace"))
-            out["n_pages"] = 1
-            if want_text:
-                out["text"] = text
-                out["spans"] = [x for pair in spans for x in pair]
-        except Exception as e:  # noqa: BLE001
-            out["error_code"] = "html_error"
-            out["error_message"] = f"{type(e).__name__}: {e}"[:500]
+        text, spans = extract_main_text(blob.decode("utf-8", errors="replace"))
+        out["n_pages"] = 1
+        if want_text:
+            out["text"] = text
+            out["spans"] = [x for pair in spans for x in pair]
     else:
         out["error_code"] = "unknown_type"
         out["error_message"] = "not a PDF or HTML document"
+    return out
+
+
+def _failed(blob: Optional[bytes], exc: Exception) -> dict:
+    """The fields of a document whose extraction raised ``exc``: a
+    ``PdfError`` keeps its code, any failure on an HTML document is
+    ``html_error``, anything else ``internal``; all with the message."""
+    out = _blank(blob)
+    html = out["doc_type"] == "html"
+    code, message = typed_error(exc, () if html else PdfError)
+    out["error_code"] = "html_error" if html else code
+    out["error_message"] = message[:500]
     return out
 
 
@@ -134,37 +196,6 @@ _OUT_COLS = [f.name for f in EXTRACT_SCHEMA.fields]
 _HEAVY_COLS = {"text", "spans", "meta_string"}
 _META_COLS = [c for c in _OUT_COLS if c not in _HEAVY_COLS]
 META_SCHEMA = StructType([f for f in EXTRACT_SCHEMA.fields if f.name in _META_COLS])
-
-
-def _make_mapper(mode: str, want_text: bool = True, decrypt: bool = False,
-                 password: bytes = b""):
-    out_cols = _OUT_COLS if want_text else _META_COLS
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            # columnar assembly: list-of-dicts → pd.DataFrame re-infers
-            # every cell (slow with nested spans); building
-            # per-column lists keeps batch overhead flat
-            cols = {name: [] for name in out_cols}
-            for url, warc_ts, blob, lang in zip(
-                pdf_batch["url"].tolist(),
-                pdf_batch["warc_ts"].tolist(),
-                pdf_batch["html"].tolist(),
-                pdf_batch["lang"].tolist(),
-            ):
-                rec = _extract_one(
-                    bytes(blob) if blob is not None else None, mode, want_text,
-                    decrypt=decrypt,
-                    password=password,
-                )
-                rec["url"] = url
-                rec["warc_ts"] = warc_ts
-                rec["lang"] = lang
-                for name in out_cols:
-                    cols[name].append(rec[name])
-            yield pd.DataFrame(cols, columns=out_cols)
-
-    return mapper
 
 
 def extract_documents(
@@ -188,15 +219,23 @@ def extract_documents(
     Column pruning inbound: only (url, warc_ts, html, lang) are read —
     the golden ``text`` column never ships to Python.
     """
-    needed = pages.select("url", "warc_ts", "html", "lang")
-    if output == "meta":
-        return needed.mapInPandas(
-            _make_mapper(mode, want_text=False, decrypt=decrypt, password=password),
-            schema=META_SCHEMA,
-        )
-    return needed.mapInPandas(
-        _make_mapper(mode, decrypt=decrypt, password=password), schema=EXTRACT_SCHEMA
-    )
+    want_text = output != "meta"
+    row = itemgetter(*(_OUT_COLS if want_text else _META_COLS))
+
+    def finish(rec: dict, url, warc_ts, lang) -> tuple:
+        rec.update(url=url, warc_ts=warc_ts, lang=lang)
+        return row(rec)
+
+    def rows_of(url, warc_ts, blob, lang):
+        blob = None if blob is None else bytes(blob)
+        return [finish(_extract_one(blob, mode, want_text, decrypt, password), url, warc_ts, lang)]
+
+    def error_row(inputs, exc):
+        url, warc_ts, blob, lang = inputs
+        return finish(_failed(None if blob is None else bytes(blob), exc), url, warc_ts, lang)
+
+    return map_documents(pages, ["url", "warc_ts", "html", "lang"],
+                         EXTRACT_SCHEMA if want_text else META_SCHEMA, rows_of, error_row)
 
 
 def salted(pages: DataFrame, parallelism: int, factor: int = 2) -> DataFrame:

@@ -9,10 +9,12 @@ Scope (typed :class:`GifError` outside it):
 - decode: 87a/89a, global/local color tables, interlaced row order,
   sub-block stitching. One block walk (``_walk``) serves both
   decoders: decode_gif decodes the first frame and only counts the
-  rest; decode_gif_frames composes every frame with GIF89a Graphic
-  Control semantics — transparency index, disposal 0/1 (leave) / 2
-  (restore rect to background color — documented convention, output
-  has no alpha) / 3 (restore to previous canvas).
+  rest; compose_gif_frames composes the frames one at a time with
+  GIF89a Graphic Control semantics — transparency index, disposal 0/1
+  (leave) / 2 (restore rect to background color — documented
+  convention, output has no alpha) / 3 (restore to previous canvas).
+  Palette expansion is C-level (``bytes.translate``), so decode cost
+  follows the canvas, never a per-pixel Python loop.
 - encode: single- and multi-frame GIF89a with a caller palette and
   NON-compressed LZW emission (clear code before every symbol keeps
   the table empty — legal per the spec, simple, and exercises the
@@ -26,7 +28,7 @@ from __future__ import annotations
 
 import struct
 from functools import partial
-from typing import Dict, List, Tuple
+from typing import Dict, Iterator, List, Tuple
 
 __all__ = ["GifError", "decode_gif", "encode_gif", "parse_gif_header"]
 
@@ -198,6 +200,22 @@ def _images(data: bytes, pos: int, gct: bytes):
         gce = None  # a GCE applies to exactly one following image
 
 
+def _rgb(indices: bytes, palette: bytes) -> bytearray:
+    """RGB bytes of palette ``indices``: one C-level ``translate`` per
+    channel, no per-pixel Python.  The caller range-checks the indices
+    (an index past a short palette maps to 0 here)."""
+    table = palette[: len(palette) // 3 * 3].ljust(768, b"\x00")
+    out = bytearray(3 * len(indices))
+    for c in range(3):
+        out[c::3] = indices.translate(table[c::3])
+    return out
+
+
+def _check_range(indices: bytes, palette: bytes) -> None:
+    if indices and max(indices) >= len(palette) // 3:
+        raise GifError("palette_range", "palette index out of range")
+
+
 def decode_gif(data: bytes) -> Dict:
     """→ {width, height, channels=3, pixels (RGB), n_frames}: the FIRST
     frame on a background-index-0 canvas, expanded through its palette;
@@ -216,69 +234,63 @@ def decode_gif(data: bytes) -> Dict:
                 break
             span = idx[row * iw : (row + 1) * iw][: max(0, w - ix)]
             canvas[(iy + row) * w + ix : (iy + row) * w + ix + len(span)] = span
-        rgb = bytearray()
-        for i in canvas:
-            off = i * 3
-            if off + 3 > len(palette):
-                raise GifError("palette_range", "palette index out of range")
-            rgb += palette[off : off + 3]
-        pixels = bytes(rgb)
+        _check_range(canvas, palette)
+        pixels = bytes(_rgb(canvas, palette))
     if pixels is None:
         raise GifError("no_image", "no image descriptor found")
     return {"width": w, "height": h, "channels": 3, "pixels": pixels,
             "n_frames": n_frames}
 
 
-def decode_gif_frames(data: bytes, max_frames: int = None) -> Dict:
-    """Decode ALL frames of a (possibly animated) GIF with GIF89a
-    Graphic Control semantics: transparency index, disposal methods
-    0/1 (leave), 2 (restore rect to background color) and 3 (restore
-    rect to the previous canvas).  Output frames are fully COMPOSED
-    RGB canvases.  Since the output has no alpha channel, "background"
-    restores paint the global background color (GCT[bg], black when
-    absent) — the documented convention of this pipeline.
+def compose_gif_frames(data: bytes) -> Iterator[Tuple[bytearray, int]]:
+    """Compose the frames of a (possibly animated) GIF one at a time
+    with GIF89a Graphic Control semantics: transparency index, disposal
+    methods 0/1 (leave), 2 (restore rect to background color) and 3
+    (restore rect to the previous canvas).  Since the output has no
+    alpha channel, "background" restores paint the global background
+    color (GCT[bg], black when absent) — the documented convention of
+    this pipeline.
 
-    → {width, height, channels=3, frames: [bytes], delays: [centisec],
-       n_frames}."""
+    Yields ``(canvas, delay in centiseconds)`` per frame.  ``canvas`` is
+    the live RGB canvas, valid until the next frame is requested: copy
+    a frame to keep it.  Memory is the canvas plus, for a disposal-3
+    frame, a copy of that frame's rect."""
     w, h, gct, bg_idx, images = _walk(data)
     bg_rgb = gct[3 * bg_idx : 3 * bg_idx + 3] if len(gct) >= 3 * bg_idx + 3 else b"\x00\x00\x00"
     canvas = bytearray(bg_rgb * (w * h))
-    frames, delays = [], []
+    n_frames = 0
     for (ix, iy, iw, ih), palette, gce, indices in images:
         idx = indices()
         disp, tidx, delay = gce or (0, None, 0)
-        snapshot = bytes(canvas) if disp == 3 else None
-        for row in range(ih):
-            y = iy + row
-            if y >= h:
-                break
-            for col in range(min(iw, max(0, w - ix))):
-                i = idx[row * iw + col]
-                if tidx is not None and i == tidx:
-                    continue  # transparent: previous canvas shows through
-                off = i * 3
-                if off + 3 > len(palette):
-                    raise GifError("palette_range", "palette index out of range")
-                o = (y * w + ix + col) * 3
-                canvas[o : o + 3] = palette[off : off + 3]
-        frames.append(bytes(canvas))
-        delays.append(delay)
-        if max_frames is not None and len(frames) >= max_frames:
-            break
+        # the frame's rect clipped to the canvas: (index offset, canvas
+        # byte offset) per row, cw pixels each
+        cw = min(iw, max(0, w - ix))
+        rows = [(r * iw, ((iy + r) * w + ix) * 3) for r in range(min(ih, max(0, h - iy)))]
+        clip = b"".join(idx[i : i + cw] for i, _ in rows)
+        clear = b"" if tidx is None else bytes([tidx])
+        _check_range(clip.replace(clear, b"") if clear else clip, palette)
+        rgb = _rgb(clip, palette)
+        snapshot = [canvas[o : o + 3 * cw] for _, o in rows] if disp == 3 else None
+        for r, (_, o) in enumerate(rows):
+            src = 3 * cw * r
+            if not clear:
+                canvas[o : o + 3 * cw] = rgb[src : src + 3 * cw]
+                continue
+            x = 0  # transparent: previous canvas shows through
+            for run in clip[cw * r : cw * (r + 1)].split(clear):
+                n = 3 * len(run)
+                canvas[o + 3 * x : o + 3 * x + n] = rgb[src + 3 * x : src + 3 * x + n]
+                x += len(run) + 1
+        n_frames += 1
+        yield canvas, delay
         if disp == 2:  # restore rect to background color
-            for row in range(ih):
-                y = iy + row
-                if y >= h:
-                    break
-                for col in range(min(iw, max(0, w - ix))):
-                    o = (y * w + ix + col) * 3
-                    canvas[o : o + 3] = bg_rgb
-        elif disp == 3 and snapshot is not None:  # restore to previous
-            canvas = bytearray(snapshot)
-    if not frames:
+            for _, o in rows:
+                canvas[o : o + 3 * cw] = bg_rgb * cw
+        elif disp == 3:  # restore rect to the previous canvas
+            for (_, o), old in zip(rows, snapshot):
+                canvas[o : o + 3 * cw] = old
+    if not n_frames:
         raise GifError("no_image", "no image descriptor found")
-    return {"width": w, "height": h, "channels": 3, "frames": frames,
-            "delays": delays, "n_frames": len(frames)}
 
 
 # ----------------------------------------------------------------------

@@ -34,12 +34,12 @@ structure for resize/frame-sample to have verifiable semantics.
 from __future__ import annotations
 
 import struct
+from contextlib import contextmanager
 from typing import Iterator, List, Tuple
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .extract import map_documents, typed_error
 
 MEDIA_SCHEMA = (
     "doc_id long, kind string, width int, height int, sample_rate int,"
@@ -84,6 +84,7 @@ def decode_media(blob: bytes) -> dict:
     if blob[:4] == b"GIF8":
         from . import gifcore
 
+        _check_gif_canvas(blob)
         img = gifcore.decode_gif(blob)  # real LZW decode (frame count too)
         return {
             "kind": "image", "width": img["width"], "height": img["height"],
@@ -91,21 +92,14 @@ def decode_media(blob: bytes) -> dict:
             "n_bytes": len(img["pixels"]),
         }
     if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-        # REAL PCM WAV decode via the stdlib wave module
-        import io
-        import wave
-
-        try:
-            with wave.open(io.BytesIO(blob)) as wf:
-                return {
-                    "kind": "audio", "width": 0, "height": 0,
-                    "sample_rate": wf.getframerate(),
-                    "channels": wf.getnchannels(),
-                    "n_frames": wf.getnframes(),
-                    "n_bytes": wf.getnframes() * wf.getnchannels() * wf.getsampwidth(),
-                }
-        except wave.Error as e:  # corrupt WAV → error ROW, not a crash
-            raise ValueError(f"corrupt WAV: {e}") from None
+        with _wav(blob) as wf:  # REAL PCM WAV decode (stdlib wave)
+            return {
+                "kind": "audio", "width": 0, "height": 0,
+                "sample_rate": wf.getframerate(),
+                "channels": wf.getnchannels(),
+                "n_frames": wf.getnframes(),
+                "n_bytes": wf.getnframes() * wf.getnchannels() * wf.getsampwidth(),
+            }
     if len(blob) >= 12 and blob[4:8] == b"ftyp":
         # REAL ISO-BMFF metadata walk (frame decode needs real codecs)
         return decode_mp4_metadata(blob)
@@ -159,6 +153,7 @@ def _decoded_image(blob: bytes):
     if blob[:4] == b"GIF8":
         from . import gifcore
 
+        _check_gif_canvas(blob)
         img = gifcore.decode_gif(blob)
         img["color_type"] = 2
         return img
@@ -204,12 +199,25 @@ def resize_image(blob: bytes, out_w: int, out_h: int) -> bytes:
     return encode_fake(0, out_w, out_h, 1, pay[idx].tobytes())
 
 
-def wav_samples(blob: bytes) -> bytes:
-    """Raw PCM frame bytes of a real WAV (for sample-level features)."""
+@contextmanager
+def _wav(blob: bytes):
+    """The stdlib ``wave`` reader over ``blob``.  A cut or corrupt WAV
+    raises ``ValueError('corrupt WAV: ...')``: ``wave`` itself raises
+    ``wave.Error``, ``EOFError`` on a cut header and ``RuntimeError``
+    from its chunk ``seek`` on a chunk size past the end."""
     import io
     import wave
 
-    with wave.open(io.BytesIO(blob)) as wf:
+    try:
+        with wave.open(io.BytesIO(blob)) as wf:
+            yield wf
+    except (wave.Error, EOFError, RuntimeError) as e:
+        raise ValueError(f"corrupt WAV: {str(e) or type(e).__name__}") from None
+
+
+def wav_samples(blob: bytes) -> bytes:
+    """Raw PCM frame bytes of a real WAV (for sample-level features)."""
+    with _wav(blob) as wf:
         return wf.readframes(wf.getnframes())
 
 
@@ -222,9 +230,26 @@ def thumb_pixel_sum(thumb: bytes) -> int:
     return int(sum(thumb[11:]))
 
 
-# Executor-side safety cap for animated-GIF compositing: beyond this a
-# blob yields a typed error row, never an unbounded pure-Python decode.
+# Executor-side safety caps for GIF decoding: beyond them a blob yields
+# a typed error row, never an unbounded pure-Python decode.  A decode
+# allocates the whole canvas the header claims (RGB: 3 bytes a pixel),
+# so the pixel cap keeps its cost from following a 10-byte header.
 _MAX_GIF_FRAMES = 4096
+_MAX_GIF_PIXELS = 1 << 24
+
+
+def _check_gif_canvas(blob: bytes) -> None:
+    """A typed ``GifError('too_large')`` for a canvas over
+    ``_MAX_GIF_PIXELS``, before any decode allocates it."""
+    from . import gifcore
+
+    hdr = gifcore.parse_gif_header(blob)
+    if hdr["width"] * hdr["height"] > _MAX_GIF_PIXELS:
+        raise gifcore.GifError(
+            "too_large",
+            f"GIF canvas {hdr['width']}x{hdr['height']} exceeds the "
+            f"{_MAX_GIF_PIXELS}-pixel decode cap",
+        )
 
 
 def sample_frames(blob: bytes, every: int) -> List[Tuple[int, int]]:
@@ -255,21 +280,23 @@ def _decoded_frames(blob: bytes, every: int) -> Iterator[Tuple[int, bytes]]:
 
     GIF frames are fully COMPOSED canvases per GIF89a disposal and
     transparency semantics.  Compositing is sequential (disposal
-    state), so every frame up to the last sampled one is decoded, and a
-    GIF past ``_MAX_GIF_FRAMES`` raises a typed error instead of pinning
-    an executor in pure Python.  AVI frames are the ``movi`` chunks of
-    the first video stream, each decoded by :mod:`.jpegcore`; any other
-    stream codec raises the typed gate."""
+    state): every frame is composed, one at a time, and only the
+    sampled ones are copied out.  A GIF past ``_MAX_GIF_FRAMES``
+    raises a typed error instead of pinning an executor in pure
+    Python.  AVI frames are the ``movi`` chunks of the first video
+    stream, each decoded by :mod:`.jpegcore`; any other stream codec
+    raises the typed gate."""
     if blob[:4] == b"GIF8":
         from . import gifcore
 
-        dec = gifcore.decode_gif_frames(blob, max_frames=_MAX_GIF_FRAMES + 1)
-        if dec["n_frames"] > _MAX_GIF_FRAMES:
-            raise ValueError(
-                f"animated GIF exceeds the {_MAX_GIF_FRAMES}-frame decode cap"
-            )
-        for i in range(0, dec["n_frames"], every):
-            yield i, dec["frames"][i]
+        _check_gif_canvas(blob)
+        for i, (canvas, _delay) in enumerate(gifcore.compose_gif_frames(blob)):
+            if i == _MAX_GIF_FRAMES:
+                raise ValueError(
+                    f"animated GIF exceeds the {_MAX_GIF_FRAMES}-frame decode cap"
+                )
+            if i % every == 0:
+                yield i, bytes(canvas)
         return
     idx, handler = _avi_video_stream(blob)
     if handler not in (b"MJPG", b"mjpg"):
@@ -365,34 +392,27 @@ def encode_avi_mjpeg(width: int, height: int, frames: List[bytes], fps: int = 25
 # Spark stages
 # ----------------------------------------------------------------------
 def _media_stage(df: DataFrame, media_col: str, schema: str, rows_of, error_row: tuple) -> DataFrame:
-    """One ``mapInPandas`` stage over (doc_id, media).  ``schema`` is
+    """One per-document stage over (doc_id, media) under the typed-row
+    contract of :func:`.extract.map_documents`.  ``schema`` is
     ``doc_id long, <value columns>, error string``; ``rows_of(blob)``
-    gives a document's value rows.  A failure — ``ValueError``, the
-    typed codec errors included, or ``NotImplementedError`` for a gated
-    codec — gives the one row ``error_row + (message,)`` instead, also
-    when it comes part-way through a document's rows.  A NULL media
-    value is such a failure too.  Failures are
-    rows, not absences: at corpus scale a silently dropped row makes
-    "no output" indistinguishable from a decoder bug in the audit
-    metrics (same principle as extract.py's error_code rows)."""
-    names = [c.split()[0] for c in schema.split(",")]
+    gives a document's value rows.  Any failure gives the one row
+    ``error_row + (message,)`` instead: a ``ValueError`` (the typed
+    codec errors included) or a ``NotImplementedError`` gate with its
+    message, a NULL media value as ``no media: NULL value``, anything
+    else as ``internal: Type: message``."""
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for doc_id, blob in zip(b["doc_id"].tolist(), b["media"].tolist()):
-                try:
-                    if blob is None:
-                        raise ValueError("no media: NULL value")
-                    rows = [r + (None,) for r in rows_of(bytes(blob))]
-                except (ValueError, NotImplementedError) as e:
-                    rows = [error_row + (str(e)[:200],)]
-                out += [(int(doc_id),) + r for r in rows]
-            yield pd.DataFrame({n: [r[i] for r in out] for i, n in enumerate(names)})
+    def doc_rows(doc_id, blob):
+        if blob is None:
+            raise ValueError("no media: NULL value")
+        return [(int(doc_id),) + r + (None,) for r in rows_of(bytes(blob))]
 
-    return df.select("doc_id", F.col(media_col).alias("media")).mapInPandas(
-        mapper, schema=schema
-    )
+    def failed(inputs, exc):
+        code, message = typed_error(exc, (ValueError, NotImplementedError))
+        if code == "internal":
+            message = f"internal: {message}"
+        return (int(inputs[0]),) + error_row + (message[:200],)
+
+    return map_documents(df, ["doc_id", media_col], schema, doc_rows, failed)
 
 
 _META_KEYS = [c.split()[0] for c in MEDIA_SCHEMA.split(",")][1:-1]

@@ -12,14 +12,13 @@ partition-order nondeterministic on BOTH engines.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+from typing import List
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import simsearch, textops
+from .extract import map_documents
 
 _EN = textops.STOPWORDS["en"]
 
@@ -866,36 +865,30 @@ FROM r WHERE rank <= {k}
 # ----------------------------------------------------------------------
 # multimodal plumbing: opaque binary column → metadata via mapInPandas
 # ----------------------------------------------------------------------
-def _mm_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _mm_meta(doc_id: int, blob) -> List[tuple]:
     import hashlib
 
-    for b in batches:
-        rows = []
-        for doc_id, blob in zip(b["doc_id"], b["blob"]):
-            data = bytes(blob)
-            # deterministic fake decode — a real deployment swaps this
-            # for PIL/ffmpeg; the Spark-side plumbing (binary column,
-            # Arrow batching, schema) is identical either way
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "n_bytes": len(data),
-                    "digest": hashlib.md5(data).hexdigest(),
-                    "width": int(data[0]) % 64 + 1 if data else 0,
-                    "height": int(data[1]) % 64 + 1 if len(data) > 1 else 0,
-                }
-            )
-        yield pd.DataFrame(rows, columns=["doc_id", "n_bytes", "digest", "width", "height"])
+    data = bytes(blob)
+    # deterministic fake decode — a real deployment swaps this for
+    # PIL/ffmpeg; the Spark-side plumbing (binary column, Arrow
+    # batching, schema) is identical either way
+    return [(
+        int(doc_id),
+        len(data),
+        hashlib.md5(data).hexdigest(),
+        int(data[0]) % 64 + 1 if data else 0,
+        int(data[1]) % 64 + 1 if len(data) > 1 else 0,
+    )]
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column decode plumbing: documents.text → bytes (stand-in
     for image/audio payloads) → Arrow-batched metadata extraction."""
-    d = _read(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("blob")
-    )
-    return d.mapInPandas(
-        _mm_mapper, schema="doc_id long, n_bytes int, digest string, width int, height int"
+    return map_documents(
+        _read(spark, sf_dir, "documents"),
+        ["doc_id", F.encode("text", "UTF-8").alias("blob")],
+        "doc_id long, n_bytes int, digest string, width int, height int",
+        _mm_meta,
     )
 
 
@@ -1170,27 +1163,18 @@ def _oracle_bytes(doc_id: int, text) -> bytes:
 
 
 
-def _png_roundtrip_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _png_roundtrip(doc_id: int, text) -> List[tuple]:
     from .pngcore import decode_png, encode_png, resize_nearest
 
-    for b in batches:
-        cols = {k: [] for k in ("doc_id", "width", "height", "channels",
-                                "pixel_sum", "thumb_sum")}
-        for doc_id, text in zip(b["doc_id"].tolist(), b["text"].tolist()):
-            i = int(doc_id)
-            data = _oracle_bytes(i, text)
-            w, h, ch = 4 + i % 8, 3 + i % 5, 3
-            px = bytes(data[j % len(data)] for j in range(w * h * ch))
-            blob = encode_png(w, h, px, color_type=2, filter_type=i % 5)
-            img = decode_png(blob)  # REAL decode; sums prove pixel identity
-            thumb = resize_nearest(img, 2, 2)
-            cols["doc_id"].append(i)
-            cols["width"].append(img["width"])
-            cols["height"].append(img["height"])
-            cols["channels"].append(img["channels"])
-            cols["pixel_sum"].append(int(sum(img["pixels"])))
-            cols["thumb_sum"].append(int(sum(thumb["pixels"])))
-        yield pd.DataFrame(cols)
+    i = int(doc_id)
+    data = _oracle_bytes(i, text)
+    w, h, ch = 4 + i % 8, 3 + i % 5, 3
+    px = bytes(data[j % len(data)] for j in range(w * h * ch))
+    blob = encode_png(w, h, px, color_type=2, filter_type=i % 5)
+    img = decode_png(blob)  # REAL decode; sums prove pixel identity
+    thumb = resize_nearest(img, 2, 2)
+    return [(i, img["width"], img["height"], img["channels"],
+             int(sum(img["pixels"])), int(sum(thumb["pixels"])))]
 
 
 def q_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1199,11 +1183,10 @@ def q_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     → decode → nearest-neighbor 2×2 thumbnail. The oracle never touches
     PNG — it derives the identical sums straight from the text bytes,
     so any codec defect breaks the hash."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return d.mapInPandas(
-        _png_roundtrip_mapper,
-        schema="doc_id long, width int, height int, channels int,"
-        " pixel_sum long, thumb_sum long",
+    return map_documents(
+        _docs(spark, sf_dir), ["doc_id", "text"],
+        "doc_id long, width int, height int, channels int, pixel_sum long, thumb_sum long",
+        _png_roundtrip,
     )
 
 
@@ -1236,40 +1219,32 @@ FROM d
 # real-JPEG round trip: flat-block encode from text bytes → baseline
 # huffman decode → metadata + pixel sums (round-3 addition)
 # ----------------------------------------------------------------------
-def _jpeg_roundtrip_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _jpeg_roundtrip(doc_id: int, text) -> List[tuple]:
     import numpy as np
 
     from .jpegcore import decode_jpeg, encode_jpeg, encode_jpeg_progressive
     from .pngcore import resize_nearest
 
-    for b in batches:
-        cols = {k: [] for k in ("doc_id", "width", "height", "channels",
-                                "pixel_sum", "thumb_sum")}
-        for doc_id, text in zip(b["doc_id"].tolist(), b["text"].tolist()):
-            i = int(doc_id)
-            data = _oracle_bytes(i, text)
-            wb, hb = 2 + i % 3, 1 + i % 2
-            px = np.zeros((hb * 8, wb * 8), dtype=np.uint8)
-            for j in range(wb * hb):
-                by, bx = divmod(j, wb)
-                px[by * 8 : (by + 1) * 8, bx * 8 : (bx + 1) * 8] = data[j % len(data)]
-            if i % 2:  # PROGRESSIVE (SOF2, multi-scan successive approx)
-                blob = encode_jpeg_progressive(wb * 8, hb * 8, px.tobytes(), channels=1)
-            else:  # baseline with live RSTn resync
-                blob = encode_jpeg(
-                    wb * 8, hb * 8, px.tobytes(), channels=1,
-                    restart_interval=1 + i % 3,
-                )
-            img = decode_jpeg(blob)  # REAL marker+huffman+IDCT decode
-            img["color_type"] = 0
-            thumb = resize_nearest(img, 2, 2)
-            cols["doc_id"].append(i)
-            cols["width"].append(img["width"])
-            cols["height"].append(img["height"])
-            cols["channels"].append(img["channels"])
-            cols["pixel_sum"].append(int(np.frombuffer(img["pixels"], np.uint8).sum()))
-            cols["thumb_sum"].append(int(sum(thumb["pixels"])))
-        yield pd.DataFrame(cols)
+    i = int(doc_id)
+    data = _oracle_bytes(i, text)
+    wb, hb = 2 + i % 3, 1 + i % 2
+    px = np.zeros((hb * 8, wb * 8), dtype=np.uint8)
+    for j in range(wb * hb):
+        by, bx = divmod(j, wb)
+        px[by * 8 : (by + 1) * 8, bx * 8 : (bx + 1) * 8] = data[j % len(data)]
+    if i % 2:  # PROGRESSIVE (SOF2, multi-scan successive approx)
+        blob = encode_jpeg_progressive(wb * 8, hb * 8, px.tobytes(), channels=1)
+    else:  # baseline with live RSTn resync
+        blob = encode_jpeg(
+            wb * 8, hb * 8, px.tobytes(), channels=1,
+            restart_interval=1 + i % 3,
+        )
+    img = decode_jpeg(blob)  # REAL marker+huffman+IDCT decode
+    img["color_type"] = 0
+    thumb = resize_nearest(img, 2, 2)
+    return [(i, img["width"], img["height"], img["channels"],
+             int(np.frombuffer(img["pixels"], np.uint8).sum()),
+             int(sum(thumb["pixels"])))]
 
 
 def q_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1283,11 +1258,10 @@ def q_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACs quantize to 0), so ONE oracle derived straight from the text
     bytes covers both decoders — any marker/huffman/zigzag/scan-logic/
     IDCT defect in either path breaks the hash."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return d.mapInPandas(
-        _jpeg_roundtrip_mapper,
-        schema="doc_id long, width int, height int, channels int,"
-        " pixel_sum long, thumb_sum long",
+    return map_documents(
+        _docs(spark, sf_dir), ["doc_id", "text"],
+        "doc_id long, width int, height int, channels int, pixel_sum long, thumb_sum long",
+        _jpeg_roundtrip,
     )
 
 
@@ -1321,32 +1295,21 @@ FROM d
 # holds for any pixels, so the whole predictor/extend/mod-2^16 chain
 # is oracle-live on unconstrained data.
 # ----------------------------------------------------------------------
-def _jpeg_lossless_roundtrip_mapper(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _jpeg_lossless_roundtrip(doc_id: int, text) -> List[tuple]:
     from .jpegcore import decode_jpeg, encode_jpeg_lossless
 
-    for b in batches:
-        cols = {k: [] for k in ("doc_id", "width", "height", "channels",
-                                "pixel_sum")}
-        for doc_id, text in zip(b["doc_id"].tolist(), b["text"].tolist()):
-            i = int(doc_id)
-            data = _oracle_bytes(i, text)
-            w, h = 3 + i % 6, 2 + i % 5
-            ch = 1 if i % 2 else 3
-            px = bytes(data[j % len(data)] for j in range(w * h * ch))
-            blob = encode_jpeg_lossless(
-                w, h, px, ch,
-                predictor=1 + i % 7,  # every T.81 H.1 selector oracle-live
-                restart_interval=i % 4,
-            )
-            img = decode_jpeg(blob)  # REAL SOF3 predictor-chain decode
-            cols["doc_id"].append(i)
-            cols["width"].append(img["width"])
-            cols["height"].append(img["height"])
-            cols["channels"].append(img["channels"])
-            cols["pixel_sum"].append(int(sum(img["pixels"])))
-        yield pd.DataFrame(cols)
+    i = int(doc_id)
+    data = _oracle_bytes(i, text)
+    w, h = 3 + i % 6, 2 + i % 5
+    ch = 1 if i % 2 else 3
+    px = bytes(data[j % len(data)] for j in range(w * h * ch))
+    blob = encode_jpeg_lossless(
+        w, h, px, ch,
+        predictor=1 + i % 7,  # every T.81 H.1 selector oracle-live
+        restart_interval=i % 4,
+    )
+    img = decode_jpeg(blob)  # REAL SOF3 predictor-chain decode
+    return [(i, img["width"], img["height"], img["channels"], int(sum(img["pixels"])))]
 
 
 def q_jpeg_lossless_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1354,10 +1317,10 @@ def q_jpeg_lossless_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     → arbitrary gray/RGB pixels → SOF3 encode (predictor selector and
     restart interval vary per doc) → exact decode → pixel sum.  The
     oracle reduces every decoded byte straight to the text bytes."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return d.mapInPandas(
-        _jpeg_lossless_roundtrip_mapper,
-        schema="doc_id long, width int, height int, channels int, pixel_sum long",
+    return map_documents(
+        _docs(spark, sf_dir), ["doc_id", "text"],
+        "doc_id long, width int, height int, channels int, pixel_sum long",
+        _jpeg_lossless_roundtrip,
     )
 
 
@@ -1380,26 +1343,19 @@ FROM d
 # real-GIF round trip: palette indices from text bytes → LSB-first LZW
 # encode → decode (interlace live on odd docs) → RGB pixel sum
 # ----------------------------------------------------------------------
-def _gif_roundtrip_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+_GIF_PALETTE = bytes(b for k in range(8) for b in (k * 9, k * 17, k * 33))
+
+
+def _gif_roundtrip(doc_id: int, text) -> List[tuple]:
     from .gifcore import decode_gif, encode_gif
 
-    palette = bytes(b for k in range(8) for b in (k * 9, k * 17, k * 33))
-
-    for b in batches:
-        cols = {k: [] for k in ("doc_id", "width", "height", "n_frames", "pixel_sum")}
-        for doc_id, text in zip(b["doc_id"].tolist(), b["text"].tolist()):
-            i = int(doc_id)
-            data = _oracle_bytes(i, text)
-            w, h = 3 + i % 5, 2 + i % 4
-            idx = bytes(data[j % len(data)] % 8 for j in range(w * h))
-            blob = encode_gif(w, h, idx, palette, interlace=bool(i % 2))
-            img = decode_gif(blob)  # REAL LSB-first LZW + palette expand
-            cols["doc_id"].append(i)
-            cols["width"].append(img["width"])
-            cols["height"].append(img["height"])
-            cols["n_frames"].append(img["n_frames"])
-            cols["pixel_sum"].append(int(sum(img["pixels"])))
-        yield pd.DataFrame(cols)
+    i = int(doc_id)
+    data = _oracle_bytes(i, text)
+    w, h = 3 + i % 5, 2 + i % 4
+    idx = bytes(data[j % len(data)] % 8 for j in range(w * h))
+    blob = encode_gif(w, h, idx, _GIF_PALETTE, interlace=bool(i % 2))
+    img = decode_gif(blob)  # REAL LSB-first LZW + palette expand
+    return [(i, img["width"], img["height"], img["n_frames"], int(sum(img["pixels"])))]
 
 
 def q_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1408,10 +1364,10 @@ def q_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the row-reorder path is oracle-live) → decode → RGB pixel sum.
     Palette entry k is (9k, 17k, 33k) — all < 256 for k ≤ 7, so the
     oracle reduces each pixel to 59·(byte % 8) and never touches GIF."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return d.mapInPandas(
-        _gif_roundtrip_mapper,
-        schema="doc_id long, width int, height int, n_frames int, pixel_sum long",
+    return map_documents(
+        _docs(spark, sf_dir), ["doc_id", "text"],
+        "doc_id long, width int, height int, n_frames int, pixel_sum long",
+        _gif_roundtrip,
     )
 
 
@@ -1434,33 +1390,24 @@ FROM d
 # with per-doc option mix → full huffman/transform/LZ77/cache decode →
 # RGBA pixel sum + 2×2 nearest thumbnail sum (round-4 addition)
 # ----------------------------------------------------------------------
-def _webp_roundtrip_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _webp_roundtrip(doc_id: int, text) -> List[tuple]:
     from .pngcore import resize_nearest
     from .webpcore import decode_webp, encode_webp_lossless
 
-    for b in batches:
-        cols = {k: [] for k in ("doc_id", "width", "height", "channels",
-                                "pixel_sum", "thumb_sum")}
-        for doc_id, text in zip(b["doc_id"].tolist(), b["text"].tolist()):
-            i = int(doc_id)
-            data = _oracle_bytes(i, text)
-            w, h = 2 + i % 6, 1 + i % 4
-            rgb = bytes(data[j % len(data)] for j in range(w * h * 3))
-            blob = encode_webp_lossless(
-                w, h, rgb, 3,
-                subtract_green=bool(i % 2),
-                cache_bits=3 if i % 3 == 0 else 0,
-                use_lz77=i % 5 == 0,
-            )
-            img = decode_webp(blob)  # REAL VP8L prefix-code decode
-            thumb = resize_nearest(img, 2, 2)
-            cols["doc_id"].append(i)
-            cols["width"].append(img["width"])
-            cols["height"].append(img["height"])
-            cols["channels"].append(img["channels"])
-            cols["pixel_sum"].append(int(sum(img["pixels"])))
-            cols["thumb_sum"].append(int(sum(thumb["pixels"])))
-        yield pd.DataFrame(cols)
+    i = int(doc_id)
+    data = _oracle_bytes(i, text)
+    w, h = 2 + i % 6, 1 + i % 4
+    rgb = bytes(data[j % len(data)] for j in range(w * h * 3))
+    blob = encode_webp_lossless(
+        w, h, rgb, 3,
+        subtract_green=bool(i % 2),
+        cache_bits=3 if i % 3 == 0 else 0,
+        use_lz77=i % 5 == 0,
+    )
+    img = decode_webp(blob)  # REAL VP8L prefix-code decode
+    thumb = resize_nearest(img, 2, 2)
+    return [(i, img["width"], img["height"], img["channels"],
+             int(sum(img["pixels"])), int(sum(thumb["pixels"])))]
 
 
 def q_webp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1472,11 +1419,10 @@ def q_webp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces every decoded byte straight to the text bytes (alpha is a
     constant 255), so any prefix-code/transform/cache/LZ77 defect in
     either direction breaks the hash."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return d.mapInPandas(
-        _webp_roundtrip_mapper,
-        schema="doc_id long, width int, height int, channels int,"
-        " pixel_sum long, thumb_sum long",
+    return map_documents(
+        _docs(spark, sf_dir), ["doc_id", "text"],
+        "doc_id long, width int, height int, channels int, pixel_sum long, thumb_sum long",
+        _webp_roundtrip,
     )
 
 
@@ -1511,44 +1457,36 @@ FROM d
 # ----------------------------------------------------------------------
 # real-WAV round trip: encode PCM from text bytes → decode → sums
 # ----------------------------------------------------------------------
-def _wav_roundtrip_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _wav_roundtrip(doc_id: int, text) -> List[tuple]:
     import io
     import wave
 
     from .multimodal import decode_media, wav_samples
 
-    for b in batches:
-        cols = {k: [] for k in ("doc_id", "sample_rate", "channels",
-                                "n_frames", "sample_sum")}
-        for doc_id, text in zip(b["doc_id"].tolist(), b["text"].tolist()):
-            i = int(doc_id)
-            data = _oracle_bytes(i, text)
-            n = 64 + i % 64
-            samples = bytes(data[j % len(data)] for j in range(n))
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as wf:
-                wf.setnchannels(1)
-                wf.setsampwidth(1)  # 8-bit PCM: samples ARE the bytes
-                wf.setframerate(8000 + (i % 4) * 4000)
-                wf.writeframes(samples)
-            blob = buf.getvalue()
-            meta = decode_media(blob)  # REAL stdlib WAV decode
-            cols["doc_id"].append(i)
-            cols["sample_rate"].append(meta["sample_rate"])
-            cols["channels"].append(meta["channels"])
-            cols["n_frames"].append(meta["n_frames"])
-            cols["sample_sum"].append(int(sum(wav_samples(blob))))
-        yield pd.DataFrame(cols)
+    i = int(doc_id)
+    data = _oracle_bytes(i, text)
+    n = 64 + i % 64
+    samples = bytes(data[j % len(data)] for j in range(n))
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(1)  # 8-bit PCM: samples ARE the bytes
+        wf.setframerate(8000 + (i % 4) * 4000)
+        wf.writeframes(samples)
+    blob = buf.getvalue()
+    meta = decode_media(blob)  # REAL stdlib WAV decode
+    return [(i, meta["sample_rate"], meta["channels"], meta["n_frames"],
+             int(sum(wav_samples(blob))))]
 
 
 def q_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real audio codec end to end: text bytes → 8-bit mono PCM WAV →
     stdlib decode → metadata + sample sum. The oracle derives the
     identical values straight from the text bytes."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return d.mapInPandas(
-        _wav_roundtrip_mapper,
-        schema="doc_id long, sample_rate int, channels int, n_frames int, sample_sum long",
+    return map_documents(
+        _docs(spark, sf_dir), ["doc_id", "text"],
+        "doc_id long, sample_rate int, channels int, n_frames int, sample_sum long",
+        _wav_roundtrip,
     )
 
 
@@ -1570,7 +1508,7 @@ FROM d
 # ----------------------------------------------------------------------
 # real-MP4 metadata round trip: ISO-BMFF box tree → walk → fields
 # ----------------------------------------------------------------------
-def _mp4_roundtrip_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _mp4_roundtrip(doc_id: int) -> List[tuple]:
     import struct as st
 
     from .multimodal import decode_media
@@ -1578,28 +1516,20 @@ def _mp4_roundtrip_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     def box(tag: bytes, body: bytes) -> bytes:
         return st.pack(">I", len(body) + 8) + tag + body
 
-    for b in batches:
-        cols = {k: [] for k in ("doc_id", "width", "height", "timescale", "duration")}
-        for doc_id in b["doc_id"].tolist():
-            i = int(doc_id)
-            w, h = 320 + (i % 16) * 16, 180 + (i % 9) * 30
-            ts, dur = 1000 + (i % 30) * 1000, (i % 100) * 500
-            if i % 2:  # version-1 mvhd (64-bit duration)
-                mvhd = box(b"mvhd", b"\x01" + b"\x00" * 3 + b"\x00" * 16
-                           + st.pack(">IQ", ts, dur) + b"\x00" * 80)
-            else:
-                mvhd = box(b"mvhd", b"\x00" * 4 + b"\x00" * 8
-                           + st.pack(">II", ts, dur) + b"\x00" * 80)
-            tkhd = box(b"tkhd", b"\x00" * 76 + st.pack(">II", w << 16, h << 16))
-            blob = (box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
-                    + box(b"moov", mvhd + box(b"trak", tkhd)))
-            meta = decode_media(blob)  # REAL box walk
-            cols["doc_id"].append(i)
-            cols["width"].append(meta["width"])
-            cols["height"].append(meta["height"])
-            cols["timescale"].append(meta["sample_rate"])
-            cols["duration"].append(meta["n_frames"])
-        yield pd.DataFrame(cols)
+    i = int(doc_id)
+    w, h = 320 + (i % 16) * 16, 180 + (i % 9) * 30
+    ts, dur = 1000 + (i % 30) * 1000, (i % 100) * 500
+    if i % 2:  # version-1 mvhd (64-bit duration)
+        mvhd = box(b"mvhd", b"\x01" + b"\x00" * 3 + b"\x00" * 16
+                   + st.pack(">IQ", ts, dur) + b"\x00" * 80)
+    else:
+        mvhd = box(b"mvhd", b"\x00" * 4 + b"\x00" * 8
+                   + st.pack(">II", ts, dur) + b"\x00" * 80)
+    tkhd = box(b"tkhd", b"\x00" * 76 + st.pack(">II", w << 16, h << 16))
+    blob = (box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
+            + box(b"moov", mvhd + box(b"trak", tkhd)))
+    meta = decode_media(blob)  # REAL box walk
+    return [(i, meta["width"], meta["height"], meta["sample_rate"], meta["n_frames"])]
 
 
 def q_mp4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1607,10 +1537,10 @@ def q_mp4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     trees (alternating mvhd version 0/1 per doc), decode via the real
     walker, and hash the extracted fields against the oracle's
     closed-form expectations."""
-    d = _docs(spark, sf_dir).select("doc_id")
-    return d.mapInPandas(
-        _mp4_roundtrip_mapper,
-        schema="doc_id long, width int, height int, timescale int, duration long",
+    return map_documents(
+        _docs(spark, sf_dir), ["doc_id"],
+        "doc_id long, width int, height int, timescale int, duration long",
+        _mp4_roundtrip,
     )
 
 
@@ -1624,65 +1554,54 @@ FROM documents
 """
 
 
-def _avi_mjpeg_mapper(batches):
+def _avi_mjpeg(doc_id: int) -> List[tuple]:
     import numpy as np
-    import pandas as pd
 
     from pdf_parser_spark import jpegcore
     from pdf_parser_spark import multimodal as mm
 
-    for b in batches:
-        ids, blobs = [], []
-        for doc_id in b["doc_id"].tolist():
-            d = int(doc_id)
-            n = 3 + d % 5
-            frames = []
-            for i in range(n):
-                b0 = (d * 7 + i * 13) % 256
-                b1 = (d * 7 + i * 13 + 31) % 256
-                px = np.empty((8, 16), np.uint8)
-                px[:, :8] = b0  # two flat 8x8 blocks — jpegcore's
-                px[:, 8:] = b1  # quant=1 flat-block decode is EXACT
-                frames.append(jpegcore.encode_jpeg(16, 8, px.tobytes(), channels=1))
-            blob = mm.encode_avi_mjpeg(16, 8, frames)
-            if d % 7 == 0:  # plant a non-MJPEG stream → typed error row
-                blob = blob.replace(b"MJPG", b"XVID", 1)  # strh handler
-            ids.append(d)
-            blobs.append(blob)
-        yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    d = int(doc_id)
+    n = 3 + d % 5
+    frames = []
+    for i in range(n):
+        b0 = (d * 7 + i * 13) % 256
+        b1 = (d * 7 + i * 13 + 31) % 256
+        px = np.empty((8, 16), np.uint8)
+        px[:, :8] = b0  # two flat 8x8 blocks — jpegcore's
+        px[:, 8:] = b1  # quant=1 flat-block decode is EXACT
+        frames.append(jpegcore.encode_jpeg(16, 8, px.tobytes(), channels=1))
+    blob = mm.encode_avi_mjpeg(16, 8, frames)
+    if d % 7 == 0:  # plant a non-MJPEG stream → typed error row
+        blob = blob.replace(b"MJPG", b"XVID", 1)  # strh handler
+    return [(d, blob)]
 
 
-def _gif_anim_mapper(batches):
+def _gif_anim(doc_id: int) -> List[tuple]:
     from pdf_parser_spark import gifcore
 
-    for b in batches:
-        ids, blobs = [], []
-        for doc_id in b["doc_id"].tolist():
-            d = int(doc_id)
-            w, h, nf = 2 + d % 6, 2 + d % 4, 6 + d % 18
-            pal = bytes(
-                v for c in range(4)
-                for v in (37 * c + 11, 53 * c + 7, 11 * c + 3)
-            )
-            frames, rects, disps = [], [], []
-            for g in range(nf):
-                x, j = g % w, g // w
-                frames.append(bytes([(d + g) % 4]) * h)
-                rects.append((x, 0, 1, h))
-                if j == 0 and g > 0 and (d + g) % 2 == 1:
-                    disps.append(3)  # restore-previous (column untouched → bg)
-                elif (d + j) % 2 == 1:
-                    disps.append(1)  # leave
-                else:
-                    disps.append(2)  # restore rect to background
-            blob = gifcore.encode_gif_animated(
-                w, h, frames, pal, rects=rects, disposals=disps, background=3
-            )
-            if d % 11 == 0:  # plant a non-GIF blob → typed error row
-                blob = b"X" + blob[1:]
-            ids.append(d)
-            blobs.append(blob)
-        yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    d = int(doc_id)
+    w, h, nf = 2 + d % 6, 2 + d % 4, 6 + d % 18
+    pal = bytes(
+        v for c in range(4)
+        for v in (37 * c + 11, 53 * c + 7, 11 * c + 3)
+    )
+    frames, rects, disps = [], [], []
+    for g in range(nf):
+        x, j = g % w, g // w
+        frames.append(bytes([(d + g) % 4]) * h)
+        rects.append((x, 0, 1, h))
+        if j == 0 and g > 0 and (d + g) % 2 == 1:
+            disps.append(3)  # restore-previous (column untouched → bg)
+        elif (d + j) % 2 == 1:
+            disps.append(1)  # leave
+        else:
+            disps.append(2)  # restore rect to background
+    blob = gifcore.encode_gif_animated(
+        w, h, frames, pal, rects=rects, disposals=disps, background=3
+    )
+    if d % 11 == 0:  # plant a non-GIF blob → typed error row
+        blob = b"X" + blob[1:]
+    return [(d, blob)]
 
 
 def q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1697,8 +1616,7 @@ def q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     container → typed error row."""
     from pdf_parser_spark import multimodal as mm
 
-    d = _docs(spark, sf_dir).select("doc_id")
-    media = d.mapInPandas(_gif_anim_mapper, schema="doc_id long, media binary")
+    media = map_documents(_docs(spark, sf_dir), ["doc_id"], "doc_id long, media binary", _gif_anim)
     return mm.gif_frame_stats(media, every=2)
 
 
@@ -1754,8 +1672,7 @@ def q_avi_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo's codec rule."""
     from pdf_parser_spark import multimodal as mm
 
-    d = _docs(spark, sf_dir).select("doc_id")
-    media = d.mapInPandas(_avi_mjpeg_mapper, schema="doc_id long, media binary")
+    media = map_documents(_docs(spark, sf_dir), ["doc_id"], "doc_id long, media binary", _avi_mjpeg)
     return mm.avi_frame_stats(media, every=2)
 
 
@@ -2140,26 +2057,17 @@ def _fake_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     images carry the text bytes as pixels, videos as frame data."""
     from . import multimodal as mm
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    def media(doc_id, text):
+        i = int(doc_id)
+        payload = str(text).encode("utf-8")
+        kind = i % 3
+        if kind == 0:
+            return [(i, mm.encode_fake(0, 8 + i % 8, 4 + i % 4, 1, payload))]
+        if kind == 1:
+            return [(i, mm.encode_fake(1, 8000 + (i % 4) * 4000, 1 + i % 2, 1 + i % 5, payload))]
+        return [(i, mm.encode_fake(2, 8 + i % 8, 4 + i % 4, 5 + i % 20, payload))]
 
-    def mapper(batches):
-        for b in batches:
-            ids, blobs = [], []
-            for doc_id, text in zip(b["doc_id"].tolist(), b["text"].tolist()):
-                i = int(doc_id)
-                payload = str(text).encode("utf-8")
-                kind = i % 3
-                if kind == 0:
-                    blob = mm.encode_fake(0, 8 + i % 8, 4 + i % 4, 1, payload)
-                elif kind == 1:
-                    blob = mm.encode_fake(1, 8000 + (i % 4) * 4000, 1 + i % 2, 1 + i % 5, payload)
-                else:
-                    blob = mm.encode_fake(2, 8 + i % 8, 4 + i % 4, 5 + i % 20, payload)
-                ids.append(i)
-                blobs.append(blob)
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
-
-    return d.mapInPandas(mapper, schema="doc_id long, media binary")
+    return map_documents(_docs(spark, sf_dir), ["doc_id", "text"], "doc_id long, media binary", media)
 
 
 def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:

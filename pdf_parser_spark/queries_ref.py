@@ -28,15 +28,14 @@ Operator coverage (SURVEY.md §2 ids in brackets):
 
 from __future__ import annotations
 
-from typing import Iterator, List
-
-import pandas as pd
+from typing import List
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import depreciation as dep
 from . import pricing, sqlgen
+from .extract import map_documents
 from .fields import format_date, format_number, format_zipcode, record_map_typed, typed_field
 from .functions.sqltext import sql_str
 from .validate import with_validation
@@ -86,26 +85,16 @@ _ACQ_SQL = "make_date(year(o_orderdate) + 25, month(o_orderdate), least(day(o_or
 # ----------------------------------------------------------------------
 # flagship: PDF build → parse round-trip (byte-identical text per url)
 # ----------------------------------------------------------------------
-def _pdf_roundtrip_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _pdf_roundtrip(doc_id: int, text) -> List[tuple]:
     # imports inside: ships to executors via --py-files
     from .pdfcore import parse_pdf
     from .synth.pdfgen import PdfBuilder
 
-    for b in batches:
-        ids: List[int] = []
-        texts: List[str] = []
-        pages: List[int] = []
-        for doc_id, text in zip(b["doc_id"], b["text"]):
-            builder = PdfBuilder(
-                compress=(doc_id % 2 == 0), xref_stream=(doc_id % 3 == 0)
-            )
-            pg = builder.new_page()
-            pg.text(72, 720, str(text))
-            doc = parse_pdf(builder.build())
-            texts.append("\f".join(p.text() for p in doc.pages))
-            ids.append(int(doc_id))
-            pages.append(doc.num_pages)
-        yield pd.DataFrame({"doc_id": ids, "extracted_text": texts, "n_pages": pages})
+    builder = PdfBuilder(compress=(doc_id % 2 == 0), xref_stream=(doc_id % 3 == 0))
+    pg = builder.new_page()
+    pg.text(72, 720, str(text))
+    doc = parse_pdf(builder.build())
+    return [(doc_id, "\f".join(p.text() for p in doc.pages), doc.num_pages)]
 
 
 def q_extract_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,9 +102,9 @@ def q_extract_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted text. Oracle = the input text: the parse must be
     byte-identical (north rule). Exercises classic xref AND xref-stream
     layouts, raw AND FlateDecode streams."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
-        _pdf_roundtrip_mapper, schema="doc_id long, extracted_text string, n_pages int"
+    return map_documents(
+        _read(spark, sf_dir, "documents"), ["doc_id", "text"],
+        "doc_id long, extracted_text string, n_pages int", _pdf_roundtrip,
     )
 
 
@@ -124,32 +113,26 @@ SQL_EXTRACT_PDF_ROUNDTRIP = (
 )
 
 
-def _html_roundtrip_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _html_roundtrip(doc_id: int, text) -> List[tuple]:
     from .htmlcore import extract_main_text
 
-    for b in batches:
-        ids, texts, nblocks = [], [], []
-        for doc_id, text in zip(b["doc_id"], b["text"]):
-            html = (
-                "<html><head><title>doc</title><style>p{color:red}</style></head>"
-                "<body><nav><a href='/'>Home</a> <a href='/about'>About us</a></nav>"
-                "<div id='main'><p>" + str(text) + "</p></div>"
-                "<footer><a href='#'>Contact</a> <a href='#'>Terms</a></footer>"
-                "</body></html>"
-            )
-            main, spans = extract_main_text(html)
-            ids.append(int(doc_id))
-            texts.append(main)
-            nblocks.append(len(spans))
-        yield pd.DataFrame({"doc_id": ids, "extracted_text": texts, "n_blocks": nblocks})
+    html = (
+        "<html><head><title>doc</title><style>p{color:red}</style></head>"
+        "<body><nav><a href='/'>Home</a> <a href='/about'>About us</a></nav>"
+        "<div id='main'><p>" + str(text) + "</p></div>"
+        "<footer><a href='#'>Contact</a> <a href='#'>Terms</a></footer>"
+        "</body></html>"
+    )
+    main, spans = extract_main_text(html)
+    return [(doc_id, main, len(spans))]
 
 
 def q_extract_html_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boilerplate-strip round-trip: nav/footer/style dropped, the main
     block returned byte-identical."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
-        _html_roundtrip_mapper, schema="doc_id long, extracted_text string, n_blocks int"
+    return map_documents(
+        _read(spark, sf_dir, "documents"), ["doc_id", "text"],
+        "doc_id long, extracted_text string, n_blocks int", _html_roundtrip,
     )
 
 

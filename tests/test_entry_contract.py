@@ -220,3 +220,37 @@ def test_every_package_name_has_a_reader():
     assert not missing, f"package names without a reader: {missing}"
     stale = sorted(set(READER_EXEMPT) - unread)
     assert not stale, f"exempt names that are gone or now have a reader: {stale}"
+
+
+def test_every_map_in_pandas_stage_goes_through_map_documents():
+    """One per-document stage: ``extract.map_documents`` holds the only
+    ``mapInPandas`` call and the only ``for … in batches`` loop of the
+    package and ``__spark_entry__.py``; every stage, production or
+    fixture, passes it a per-row function."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    loops, calls = [], []
+    for path in [root / "__spark_entry__.py", *sorted((root / "pdf_parser_spark").rglob("*.py"))]:
+        where = str(path.relative_to(root))
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"), where)):
+            if isinstance(node, (ast.For, ast.comprehension)) and isinstance(node.iter, ast.Name) \
+                    and node.iter.id == "batches":
+                loops.append(f"{where}:{node.iter.lineno}")
+            if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
+                calls.append(f"{where}:{node.lineno}")
+    assert len(loops) == 1 and loops[0].startswith("pdf_parser_spark/extract.py:"), loops
+    assert len(calls) == 1 and calls[0].startswith("pdf_parser_spark/extract.py:"), calls
+
+
+def test_fixture_stage_fails_the_run(spark, tmp_path):
+    """The fixture form of map_documents catches nothing: an oracle
+    fixture whose input breaks its invariant (``_oracle_bytes``: empty
+    text) fails the collect instead of becoming a row."""
+    from pdf_parser_spark.queries_data import q_png_roundtrip
+
+    spark.createDataFrame([(1, "abc"), (2, "")], "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    with pytest.raises(Exception, match="empty text unsupported by roundtrip oracle"):
+        q_png_roundtrip(spark, str(tmp_path)).collect()

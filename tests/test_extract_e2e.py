@@ -324,3 +324,38 @@ def test_record_fold_trims_js_whitespace(spark):
     legacy = extract_record(extract_documents(pages, mode="legacy"), mode="legacy").collect()[0]
     assert legacy["Name_of_Prospect"] == "A LLC"
     assert legacy["Purchase_Price"] == 12.0
+
+
+def test_null_and_untyped_failure_are_one_error_row_each(spark, monkeypatch):
+    """The typed-row contract of extract.map_documents through
+    extract_documents, both output modes: a NULL blob is one
+    ``unknown_type`` row, an untyped exception out of the per-row
+    function one ``internal`` row with ``Type: message``, and the good
+    row next to them is unchanged."""
+    from pdf_parser_spark import extract
+    from pdf_parser_spark.synth.pdfgen import make_quote_pdf
+
+    good, _text, _wt = make_quote_pdf(3)
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    rows = [("u1", None, good, None, "en"), ("u2", None, None, None, "en"),
+            ("u3", None, good + b"BOOM", None, "en")]
+    df = spark.createDataFrame(rows, schema)
+    want = {out: extract_documents(df.filter("url = 'u1'"), output=out).collect() for out in ("full", "meta")}
+    real = extract._extract_one
+
+    def raising_on_boom(blob, *args):  # nested: the stage's pickled closure carries it
+        if blob is not None and blob.endswith(b"BOOM"):
+            raise RuntimeError("boom")
+        return real(blob, *args)
+
+    monkeypatch.setattr(extract, "_extract_one", raising_on_boom)
+    for out in ("full", "meta"):
+        got = {r["url"]: r for r in extract_documents(df, output=out).collect()}
+        assert sorted(got) == ["u1", "u2", "u3"]
+        assert [got["u1"]] == want[out] and want[out][0]["error_code"] is None
+        null, boom = got["u2"].asDict(), got["u3"].asDict()
+        assert (null["doc_type"], null["error_code"], null["error_message"], null["n_bytes"]) == (
+            "unknown", "unknown_type", "not a PDF or HTML document", 0)
+        assert (boom["doc_type"], boom["error_code"], boom["error_message"], boom["n_bytes"]) == (
+            "pdf", "internal", "RuntimeError: boom", len(good) + 4)
+        assert boom["n_pages"] == 0 and boom.get("text") is None

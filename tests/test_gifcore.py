@@ -122,8 +122,20 @@ def _expect_compose(w, h, pal, bg_rgb, steps):
     return out
 
 
+def decode_gif_frames(blob):
+    """Every frame compose_gif_frames composes, copied out, with its
+    delay: {frames, delays, n_frames}."""
+    from pdf_parser_spark.gifcore import compose_gif_frames
+
+    frames, delays = [], []
+    for canvas, delay in compose_gif_frames(blob):
+        frames.append(bytes(canvas))
+        delays.append(delay)
+    return {"frames": frames, "delays": delays, "n_frames": len(frames)}
+
+
 def test_animated_roundtrip_disposals_and_transparency():
-    from pdf_parser_spark.gifcore import decode_gif_frames, encode_gif_animated
+    from pdf_parser_spark.gifcore import encode_gif_animated
 
     w, h = 4, 3
     pal = bytes([10, 10, 10,  200, 0, 0,  0, 200, 0,  0, 0, 200])  # 4 colors
@@ -153,7 +165,7 @@ def test_animated_roundtrip_disposals_and_transparency():
 
 
 def test_animated_restore_to_previous():
-    from pdf_parser_spark.gifcore import decode_gif_frames, encode_gif_animated
+    from pdf_parser_spark.gifcore import encode_gif_animated
 
     w, h = 3, 1
     pal = bytes([5, 5, 5,  250, 0, 0,  0, 250, 0,  9, 9, 9])
@@ -174,7 +186,7 @@ def test_animated_restore_to_previous():
 
 
 def test_animated_single_frame_matches_decode_gif():
-    from pdf_parser_spark.gifcore import decode_gif, decode_gif_frames, encode_gif
+    from pdf_parser_spark.gifcore import decode_gif, encode_gif
 
     pal = bytes(b for k in range(8) for b in (k * 9, k * 17, k * 33))
     idx = bytes([k % 8 for k in range(12)])
@@ -187,9 +199,9 @@ def test_animated_single_frame_matches_decode_gif():
 
 def test_decode_gif_counts_later_frames_without_decoding_them():
     """decode_gif decodes only the first frame: a second frame whose LZW
-    payload is corrupt is still counted, while decode_gif_frames, which
+    payload is corrupt is still counted, while compose_gif_frames, which
     composes every frame, raises the typed LZW error."""
-    from pdf_parser_spark.gifcore import decode_gif_frames, encode_gif_animated
+    from pdf_parser_spark.gifcore import encode_gif_animated
 
     f0 = _indices(2, 2, 4)
     blob = bytearray(encode_gif_animated(2, 2, [f0, bytes(4)], PAL4))

@@ -318,19 +318,38 @@ def _short_mp4(mvhd_body=None, tkhd_body=None):
     return ftyp + box(b"moov", box(b"trak", box(b"tkhd", tkhd_body)))
 
 
+def _wav(n_samples=100):
+    import io
+    import wave
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(1)
+        wf.setframerate(8000)
+        wf.writeframes(bytes(range(n_samples)))
+    return buf.getvalue()
+
+
 @pytest.mark.parametrize(
-    "bad",
+    "bad, message",
     [
-        None,  # a NULL media value
-        _short_mp4(mvhd_body=b"\x00\x00\x00\x00" + b"\x00" * 8),  # short mvhd
-        _short_mp4(mvhd_body=b"\x01"),  # version-1 mvhd cut after its version
+        (None, "no media: NULL value"),
+        (_short_mp4(mvhd_body=b"\x00\x00\x00\x00" + b"\x00" * 8), "short mvhd"),
+        (_short_mp4(mvhd_body=b"\x01"), "short mvhd"),  # version-1 mvhd cut after its version
         # a largesize header cut before its 8 bytes
-        b"\x00\x00\x00\x10ftypisom\x00\x00\x02\x00" + b"\x00\x00\x00\x01moov\x00\x00\x00",
-        _short_mp4(tkhd_body=b"\x00" * 4),  # a tkhd shorter than 8 bytes
+        (b"\x00\x00\x00\x10ftypisom\x00\x00\x02\x00" + b"\x00\x00\x00\x01moov\x00\x00\x00",
+         "truncated largesize"),
+        (_short_mp4(tkhd_body=b"\x00" * 4), "short tkhd"),  # a tkhd shorter than 8 bytes
+        # a WAV cut after 20 bytes: the stdlib reader raises EOFError
+        (_wav()[:20], "corrupt WAV"),
+        # a fmt chunk size past the end: the stdlib reader's chunk seek
+        # raises RuntimeError
+        (_wav()[:16] + (0x9A0010).to_bytes(4, "little") + _wav()[20:], "corrupt WAV"),
     ],
-    ids=["null", "short-mvhd", "mvhd-v1-cut", "cut-largesize", "short-tkhd"],
+    ids=["null", "short-mvhd", "mvhd-v1-cut", "cut-largesize", "short-tkhd", "cut-wav", "wav-seek"],
 )
-def test_bad_media_row_is_one_error_row_next_to_a_good_row(spark, bad):
+def test_bad_media_row_is_one_error_row_next_to_a_good_row(spark, bad, message):
     good = _make_mp4(640, 360, 30000, 90000)
     df = spark.createDataFrame([(1, good), (2, bad)], "doc_id long, media binary")
     got = sorted(mm.media_metadata(df).collect(), key=lambda r: r["doc_id"])
@@ -339,3 +358,167 @@ def test_bad_media_row_is_one_error_row_next_to_a_good_row(spark, bad):
     assert ok["error"] is None and ok["kind"] == "video"
     assert (ok["width"], ok["height"], ok["sample_rate"], ok["n_frames"]) == (640, 360, 30000, 90000)
     assert err["error"] and err["kind"] == "unknown", err
+    assert message in err["error"] and "internal" not in err["error"], err
+
+
+# ----------------------------------------------------------------------
+# hostile GIFs: decode cost follows the bytes read, not the header
+# ----------------------------------------------------------------------
+_PAL4 = bytes([9, 9, 9, 200, 0, 0, 0, 200, 0, 0, 0, 200])  # bg + 3 colors
+
+
+def _hostile_gifs():
+    """A 41-byte one-pixel GIF whose logical screen claims 20000x20000,
+    the same claiming 6000x6000, and a 9 KB GIF of 400 one-pixel frames
+    (frame g paints (g, 0) with color 1 + g % 3) on a 1000x1000
+    screen."""
+    import struct as st
+
+    from pdf_parser_spark.gifcore import encode_gif, encode_gif_animated
+
+    tiny = encode_gif(1, 1, b"\x01", _PAL4)
+    anim = encode_gif_animated(
+        1000, 1000, [bytes([1 + g % 3]) for g in range(400)], _PAL4,
+        rects=[(g, 0, 1, 1) for g in range(400)],
+    )
+    return {
+        "screen-20000": tiny[:6] + st.pack("<HH", 20000, 20000) + tiny[10:],
+        "screen-6000": tiny[:6] + st.pack("<HH", 6000, 6000) + tiny[10:],
+        "frames-400": anim,
+    }
+
+
+def _anim_pixel_sum(i):
+    """Closed form of the 400-frame GIF's composed canvas after frame i."""
+    colors = [sum(_PAL4[3 * c : 3 * c + 3]) for c in range(4)]
+    return colors[0] * (1000 * 1000 - (i + 1)) + sum(colors[1 + g % 3] for g in range(i + 1))
+
+
+def test_hostile_gifs_are_typed_rows_or_their_rows_next_to_a_good_row(spark):
+    from pdf_parser_spark.gifcore import encode_gif_animated
+
+    good = encode_gif_animated(2, 2, [bytes([1] * 4), bytes([2] * 4)], _PAL4)
+    blobs = [good] + list(_hostile_gifs().values())
+    df = spark.createDataFrame(list(enumerate(blobs, 1)), "doc_id long, media binary")
+    meta = {r["doc_id"]: r for r in mm.media_metadata(df).collect()}
+    assert meta[1]["error"] is None and meta[1]["n_frames"] == 2
+    for doc_id in (2, 3):
+        assert "pixel decode cap" in meta[doc_id]["error"], meta[doc_id]
+    assert meta[4]["error"] is None
+    assert (meta[4]["width"], meta[4]["height"], meta[4]["n_frames"]) == (1000, 1000, 400)
+    frames = {}
+    for r in mm.gif_frame_stats(df, every=50).collect():
+        frames.setdefault(r["doc_id"], []).append(r)
+    assert [(r["frame_idx"], r["pixel_sum"]) for r in frames[1]] == [(0, 800)]
+    for doc_id in (2, 3):
+        [err] = frames[doc_id]
+        assert err["frame_idx"] is None and "pixel decode cap" in err["error"]
+    assert sorted((r["frame_idx"], r["first_pixel"], r["pixel_sum"]) for r in frames[4]) == [
+        (i, 200, _anim_pixel_sum(i)) for i in range(0, 400, 50)
+    ]
+
+
+def test_hostile_gifs_decode_in_bounded_time_and_memory(tmp_path):
+    """Each hostile GIF through every GIF path of the stages (metadata,
+    frame sampling, resize) in a fresh interpreter: under 2 s and under
+    200 MB of RSS growth."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    paths = []
+    for name, blob in _hostile_gifs().items():
+        (tmp_path / name).write_bytes(blob)
+        paths.append(str(tmp_path / name))
+    probe = """
+import json, resource, sys, time
+from pdf_parser_spark import multimodal as mm
+
+def rss_mb():
+    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+
+base = rss_mb()
+out = {}
+for path in sys.argv[1:]:
+    blob = open(path, "rb").read()
+    t = time.perf_counter()
+    for call in (mm.decode_media, lambda b: mm.sample_frames(b, 50),
+                 lambda b: mm.resize_image(b, 4, 3)):
+        try:
+            call(blob)
+        except ValueError:
+            pass
+    out[path] = (time.perf_counter() - t, rss_mb() - base)
+print(json.dumps(out))
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", probe, *paths], cwd=root, capture_output=True,
+        text=True, timeout=300, env=dict(os.environ, PYTHONPATH=root),
+    )
+    assert res.returncode == 0, res.stderr
+    for path, (seconds, grown_mb) in json.loads(res.stdout).items():
+        assert seconds < 2 and grown_mb < 200, (path, seconds, grown_mb)
+
+
+# ----------------------------------------------------------------------
+# the typed-row contract of every media stage (extract.map_documents)
+# ----------------------------------------------------------------------
+def _avi():
+    from pdf_parser_spark import jpegcore
+
+    return mm.encode_avi_mjpeg(
+        16, 8, [jpegcore.encode_jpeg(16, 8, bytes([v]) * 128, channels=1) for v in (9, 40)]
+    )
+
+
+def _gif():
+    from pdf_parser_spark.gifcore import encode_gif_animated
+
+    return encode_gif_animated(2, 2, [bytes([1] * 4), bytes([2] * 4)], _PAL4)
+
+
+# stage → (run it, the module function its per-row function calls, a
+# good blob, the value columns of its error row)
+_STAGES = {
+    "media_metadata": (mm.media_metadata, "decode_media",
+                       lambda: mm.encode_fake(0, 4, 4, 1, b"abcd"),
+                       ("unknown", 0, 0, 0, 0, 0, 0)),
+    "resized_thumbnails": (lambda df: mm.resized_thumbnails(df, 2, 2), "resize_image",
+                           lambda: mm.encode_fake(0, 4, 4, 1, b"abcd"), (None, None)),
+    "sampled_frames": (lambda df: mm.sampled_frames(df, every=10), "sample_frames",
+                       lambda: mm.encode_fake(2, 3, 2, 25, bytes(range(100))), (None, None)),
+    "avi_frame_stats": (mm.avi_frame_stats, "_decoded_frames", _avi, (None, None, None)),
+    "gif_frame_stats": (mm.gif_frame_stats, "_decoded_frames", _gif, (None, None, None)),
+}
+
+
+def _raising_on_boom(real):
+    """``real``, but raising an untyped RuntimeError for a blob ending in
+    ``BOOM`` (nested, so the stage's pickled closure carries it)."""
+
+    def patched(blob, *args):
+        if blob.endswith(b"BOOM"):
+            raise RuntimeError("boom")
+        return real(blob, *args)
+
+    return patched
+
+
+@pytest.mark.parametrize("stage", sorted(_STAGES))
+def test_media_stage_null_and_untyped_failure_are_one_error_row_each(spark, monkeypatch, stage):
+    run, called, make_good, error_values = _STAGES[stage]
+    good = make_good()
+    schema = "doc_id long, media binary"
+    want = sorted(tuple(r) for r in run(spark.createDataFrame([(1, good)], schema)).collect())
+    monkeypatch.setattr(mm, called, _raising_on_boom(getattr(mm, called)))
+    df = spark.createDataFrame([(1, good), (2, None), (3, good + b"BOOM")], schema)
+    by_doc = {}
+    for r in run(df).collect():
+        by_doc.setdefault(r["doc_id"], []).append(tuple(r))
+    assert want and sorted(by_doc[1]) == want
+    [null] = by_doc[2]
+    [boom] = by_doc[3]
+    assert null[1:] == error_values + ("no media: NULL value",)
+    assert boom[1:] == error_values + ("internal: RuntimeError: boom",)

@@ -8,10 +8,11 @@ Contract under test: ``parse_pdf`` on ANY mutation either succeeds or
 raises a typed ``PdfError`` — never a bare IndexError / KeyError /
 struct.error / zlib.error / RecursionError / OverflowError, and never
 a hang (the /Pages walk has an explicit cycle cap,
-``document.py`` ``pages_cycle``).  ``extract._extract_one``'s
-``internal`` catch-all is a SAFETY NET for the row contract, not the
-contract itself — a mutation that escapes as a bare exception is a
-parser bug even though the Spark stage would degrade it to a row.
+``document.py`` ``pages_cycle``).  The extraction stage's
+``internal`` row (``extract.map_documents`` catches, ``extract._failed``
+names it) is a SAFETY NET for the row contract, not the contract
+itself — a mutation that escapes as a bare exception is a parser bug
+even though the Spark stage would degrade it to a row.
 
 All Spark-free pure-Python, so hundreds of cases are cheap.
 """
@@ -23,22 +24,25 @@ import re
 from hypothesis import example, given, settings, strategies as st
 
 from pdf_parser_spark.pdfcore.document import PdfError, parse_pdf
-from pdf_parser_spark.extract import _extract_one
+from pdf_parser_spark.extract import _extract_one, _failed
 from pdf_parser_spark.synth.pdfgen import make_quote_pdf
 
 
 def _assert_typed(blob: bytes) -> None:
     """parse_pdf: success or typed PdfError; nothing else escapes.
-    Then the same blob through _extract_one must yield the row
-    contract: error_code None (success) or a non-'internal' code —
-    'internal' here means a bare exception slipped past the typed
-    layer."""
+    Then the same blob through _extract_one, with the stage's error row
+    for what it raises, must yield the row contract: error_code None
+    (success) or a non-'internal' code — 'internal' here means a bare
+    exception slipped past the typed layer."""
     try:
         doc = parse_pdf(blob)
         assert doc.num_pages >= 0
     except PdfError as e:
         assert e.code, "PdfError without a machine-readable code"
-    out = _extract_one(blob, mode="typed")
+    try:
+        out = _extract_one(blob, mode="typed")
+    except Exception as e:  # noqa: BLE001 — what the extraction stage does
+        out = _failed(blob, e)
     assert out["error_code"] != "internal", out["error_message"]
 
 
