@@ -404,13 +404,15 @@ def _media_stage(df: DataFrame, media_col: str, schema: str, rows_of, error_row:
     def doc_rows(doc_id, blob):
         if blob is None:
             raise ValueError("no media: NULL value")
-        return [(int(doc_id),) + r + (None,) for r in rows_of(bytes(blob))]
+        return [(doc_id,) + r + (None,) for r in rows_of(bytes(blob))]
 
     def failed(inputs, exc):
         code, message = typed_error(exc, (ValueError, NotImplementedError))
         if code == "internal":
             message = f"internal: {message}"
-        return (int(inputs[0]),) + error_row + (message[:200],)
+        # doc_id passes through as pandas gave it: NaN for a NULL id,
+        # which int() would turn into a failed job
+        return (inputs[0],) + error_row + (message[:200],)
 
     return map_documents(df, ["doc_id", media_col], schema, doc_rows, failed)
 

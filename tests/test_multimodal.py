@@ -513,12 +513,15 @@ def test_media_stage_null_and_untyped_failure_are_one_error_row_each(spark, monk
     schema = "doc_id long, media binary"
     want = sorted(tuple(r) for r in run(spark.createDataFrame([(1, good)], schema)).collect())
     monkeypatch.setattr(mm, called, _raising_on_boom(getattr(mm, called)))
-    df = spark.createDataFrame([(1, good), (2, None), (3, good + b"BOOM")], schema)
+    df = spark.createDataFrame(
+        [(1, good), (2, None), (3, good + b"BOOM"), (None, None)], schema
+    )
     by_doc = {}
     for r in run(df).collect():
         by_doc.setdefault(r["doc_id"], []).append(tuple(r))
     assert want and sorted(by_doc[1]) == want
     [null] = by_doc[2]
     [boom] = by_doc[3]
-    assert null[1:] == error_values + ("no media: NULL value",)
+    [null_id] = by_doc[None]  # a NULL doc_id too is a row, not a failed job
+    assert null[1:] == null_id[1:] == error_values + ("no media: NULL value",)
     assert boom[1:] == error_values + ("internal: RuntimeError: boom",)
